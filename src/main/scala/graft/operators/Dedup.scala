@@ -134,12 +134,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  /** MinHash signatures: (id, sig array<long>). */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        numHashes: Int): DataFrame =
-    fanOut(df).withColumn("__sh", Text.shingleHashes(col(textCol)))
-      .select(col(idCol), Text.minhashSignature(col("__sh"), numHashes).as("sig"))
-
   /** `dedup_minhash_lsh`: band the signature (numBands bands of rowsPerBand),
     * explode one row per band, equi-join on (band index, band slice) →
     * candidate pairs, then verify candidates with exact shingle-hash

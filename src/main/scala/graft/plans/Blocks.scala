@@ -26,6 +26,13 @@ import org.apache.spark.storage.StorageLevel
   * checkpointed frame is precisely the checkpoint RDD. Calling it on a
   * frame whose plan reads persisted state it does not own would
   * unpersist that state too — only hand it frames you checkpointed.
+  *
+  * Callers: the iterative operators that supersede one checkpoint per
+  * round (connected components, pagerank, BFS, HITS, k-core,
+  * modularity, Borůvka) and the streaming dedup admission's corpus
+  * frame. The stepwise executors and the streaming index views go
+  * through [[StepChain]], whose scope holds each checkpoint RDD itself
+  * and unpersists it directly.
   */
 object Blocks {
   def free(df: DataFrame): Unit = {
@@ -37,17 +44,4 @@ object Blocks {
     try walk(df.queryExecution.toRdd, 0)
     catch { case _: Throwable => () } // hygiene must never fail a query
   }
-
-  /** Drop checkpoint-backed temp views AND release their blocks — the
-    * `finally`-block discipline for the stepwise-chain executors
-    * (logistic Newton, GBT stumps, the NSW beam): dropping the view
-    * alone left the checkpointed blocks pinned for the session's
-    * lifetime in non-Bench callers (ADVICE r16). Only hand this views
-    * registered over frames the caller checkpointed. */
-  def dropViewsAndFree(s: org.apache.spark.sql.SparkSession,
-                       views: Iterable[String]): Unit =
-    views.foreach { v =>
-      try free(s.table(v)) catch { case _: Throwable => () }
-      try { s.catalog.dropTempView(v); () } catch { case _: Throwable => () }
-    }
 }

@@ -7,6 +7,8 @@ import graft.Tables
 import graft.functions.Text
 import graft.ml.Models
 import graft.operators.{Dedup, Relational, Similarity}
+import graft.plans.StepChain
+import graft.plans.StepChain.Step
 
 /** Training-data-pipeline queries over the `documents` and `embeddings`
   * tables (BASELINE north-star scope: dedup, similarity search, text
@@ -231,7 +233,7 @@ object Docs {
   /** The IVF expression fragments, shared by the monolithic
     * [[ivfProbeSql]] template AND the streaming serving pieces
     * ([[ivfSampSql]]/[[ivfAssignSql]]/[[ivfServeSql]]) so the live path
-    * cannot drift from the hash-checked one (the `nswBeamSql` lesson:
+    * cannot drift from the hash-checked one (the `nswBeamChain` lesson:
     * ONE source for every expression tree). */
   private[graft] val IvfNlist = 16
   private[graft] val IvfNprobe = 4
@@ -661,20 +663,14 @@ object Docs {
     * serving result and recall audit in one hash-checked row set. All
     * cosines are identical left-associated 64-term double chains;
     * every selection is a row_number with id tiebreaks; the flag is a
-    * set-membership integer. `mat` marks the multi-consumer CTEs
-    * MATERIALIZED on DuckDB (graph/beams are re-read per hop). */
+    * set-membership integer. The graph and every beam are steps of
+    * [[nswBeamChain]]: materialized once, re-read per hop. */
   private def nswDist64(ix: (String, String) => String)(
       a: String, b: String): String =
     (1 to 64).map { j =>
       val t = s"(CAST(${ix(a, j.toString)} AS DOUBLE) - CAST(${ix(b, j.toString)} AS DOUBLE))"
       s"$t * $t"
     }.mkString("(", " + ", ")")
-
-  private def nswDot64(ix: (String, String) => String)(
-      a: String, b: String): String =
-    (1 to 64).map(j =>
-      s"CAST(${ix(a, j.toString)} AS DOUBLE) * CAST(${ix(b, j.toString)} AS DOUBLE)")
-      .mkString("(", " + ", ")")
 
   /** cos(query, node) over the joined aliases qe/ve — ONE fragment
     * shared by the monolithic oracle text and the Spark hop loop. Both
@@ -688,19 +684,6 @@ object Docs {
        |      (sqrt(${dotF("qe", "qe")}) * sqrt(${dotF("ve", "ve")}))"""
       .stripMargin
 
-  /** The kNN-graph build (2-nearest-list blocking, per-src top-6) —
-    * ends as `SELECT src, dst`. Shared by the oracle monolith (as its
-    * CTE prefix) and the Spark path (as a standalone checkpointed
-    * frame). */
-  /** `nlist` gates the graph-build cost: the blocked pair frame is
-    * Σ|block|² ≈ nlist·(2n/nlist)² = 4n²/nlist, so a FIXED nlist is
-    * corpus²-class. The Spark path grows it as √n past the test scale
-    * (`Similarity.nlistForCorpus` — block size 2√n, build cost
-    * 4n^1.5, the standard blocked-NSW compromise); 16 below 2k vectors
-    * keeps blocks comfortably above the M=6 neighborhood AND pins the
-    * oracle hash at the gate SFs (the GraphLayout broadcast-gate
-    * pattern: scale posture in the code, test-scale constant in the
-    * hash-checked text). */
   /** The oracle's static SQL pins this list count; the Spark path may
     * only take the adaptive `nlistForCorpus` branch past
     * [[NswOracleMaxN]] vectors. One shared constant pair so a testdata
@@ -709,202 +692,141 @@ object Docs {
   private[queries] val NswOracleNlist = 16
   private[graft] val NswOracleMaxN = 2000L
 
-  /** `standalone = false` emits only the CTE chain (no final SELECT) for
-    * the oracle monolith to keep chaining — a flag, not post-hoc text
-    * surgery on the emitted SQL (ADVICE r12/r13). */
-  /** `pairHint` (r17, engine-only — the ts_spectral_entropy class): the
-    * blocked pair frame inherits the tiny assign2 shuffle's AQE-coalesced
-    * layout (~1 task), and the stage then pays 3 graft_dot 64-term folds
-    * PER PAIR near-serial. The engine passes an explicit-width
-    * `REPARTITION(n, src, dst)` hint on the distinct pair set so the
-    * dot-scoring runs at the session's shuffle width; the pair SET and
-    * every score are unchanged, and the oracle text keeps the default
-    * empty hint. */
-  private def nswGraphSql(emb: String, ix: (String, String) => String,
-                          dotF: (String, String) => String,
-                          castArr: String => String,
-                          mat: String = "", nlist: Int = NswOracleNlist,
-                          standalone: Boolean = true,
-                          pairHint: String = ""): String = {
+  /** The NSW build and search as one [[graft.plans.StepChain]] over the
+    * embeddings table `emb` — the DuckDB oracle text and the Spark steps
+    * are the same strings. Steps:
+    *  - `g0`: the kNN graph — each vector blocked into its two nearest
+    *    of the `nlist` sampled centroids, then per-src top-6 by exact
+    *    cosine among block-mates;
+    *  - `beam0`: every audit query starts at the global entry;
+    *  - `beam1`..`beam4`: one hop each — candidates = beam ∪
+    *    neighbors(beam), keep ef=8 by cos(query, node) with id tiebreaks;
+    *  - `truth`: the brute-force exact top-10 per audit query;
+    * the tail is the final top-5 with the `in_exact_top10` flag. As one
+    * plain CTE chain Spark re-expands the graph build 2^hops times
+    * (measured 62.5 s at sf0.1 vs ~4 s stepwise).
+    *
+    * `nlist` gates the graph-build cost: the blocked pair frame is
+    * Σ|block|² ≈ nlist·(2n/nlist)² = 4n²/nlist, so a FIXED nlist is
+    * corpus²-class. The Spark path grows it as √n past the test scale
+    * (`Similarity.nlistForCorpus` — block size 2√n, build cost 4n^1.5,
+    * the standard blocked-NSW compromise); 16 below 2k vectors keeps
+    * blocks comfortably above the M=6 neighborhood AND pins the oracle
+    * hash at the gate SFs (the GraphLayout broadcast-gate pattern: scale
+    * posture in the code, test-scale constant in the hash-checked text).
+    *
+    * `pairHint` (engine-only — the ts_spectral_entropy class): the
+    * blocked pair frame inherits the tiny assign2 layout (~1 task), and
+    * the stage then pays 3 graft_dot 64-term folds PER PAIR near-serial.
+    * The engine passes an explicit-width `REPARTITION(n, src, dst)` hint
+    * on the distinct pair set so the dot-scoring runs at the session's
+    * shuffle width; the pair SET and every score are unchanged, and the
+    * oracle keeps the default empty hint. */
+  private def nswBeamChain(emb: String, ix: (String, String) => String,
+                           dotF: (String, String) => String,
+                           castArr: String => String,
+                           nlist: Int = NswOracleNlist,
+                           pairHint: String = ""): StepChain = {
     val dist64 = nswDist64(ix) _
-    s"""WITH corpus AS $mat(SELECT vec_id, ${castArr("embedding")} AS ve FROM $emb),
-       |samp AS $mat(
-       |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c,
-       |    ${castArr("embedding")} AS ce
-       |  FROM (SELECT vec_id, embedding FROM $emb
-       |        ORDER BY vec_id LIMIT $nlist) s0),
-       |assign2 AS $mat(
-       |  SELECT vec_id, c AS list_id FROM (
-       |    SELECT corpus.vec_id, samp.c,
-       |      row_number() OVER (PARTITION BY corpus.vec_id
-       |        ORDER BY ${dist64("ve", "ce")} ASC, samp.c ASC) AS rn
-       |    FROM corpus CROSS JOIN samp) r WHERE rn <= 2),
-       |scored AS $mat(
-       |  SELECT pr.src, pr.dst,
-       |    ${dotF("sv", "dv")} /
-       |      (sqrt(${dotF("sv", "sv")}) * sqrt(${dotF("dv", "dv")})) AS pcos
-       |  FROM (
-       |    SELECT $pairHint DISTINCT a.vec_id AS src, b.vec_id AS dst
-       |    FROM assign2 a JOIN assign2 b
-       |      ON a.list_id = b.list_id AND a.vec_id <> b.vec_id) pr
-       |  JOIN (SELECT vec_id, ve AS sv FROM corpus) ca ON ca.vec_id = pr.src
-       |  JOIN (SELECT vec_id, ve AS dv FROM corpus) cb ON cb.vec_id = pr.dst),
-       |g0 AS $mat(
-       |  SELECT src, dst FROM (
-       |    SELECT src, dst,
-       |      row_number() OVER (PARTITION BY src
-       |        ORDER BY pcos DESC, dst ASC) AS rn
-       |    FROM scored) r WHERE rn <= 6)""".stripMargin +
-      (if (standalone) "\nSELECT src, dst FROM g0" else "")
-  }
-
-  /** One beam hop over table refs: candidates = beam ∪ neighbors(beam),
-    * keep ef=8 by cos(query, node) with id tiebreaks. The SAME template
-    * serves both consumers (ADVICE r12 — no post-hoc text surgery):
-    * `asCtes = None` emits the standalone form the Spark hop loop runs
-    * per checkpointed beam (a plain CTE chain re-expands the whole
-    * graph build 2^hops times in Spark: measured 62.5 s at sf0.1 vs
-    * ~4 s looped — the gbtStumpsSpark/ml_threshold_sweep precedent);
-    * `asCtes = Some((candName, beamName))` emits the named-CTE pair the
-    * oracle monolith chains. */
-  private def nswHopSql(prevRef: String, graphRef: String, emb: String,
-                        dotF: (String, String) => String,
-                        castArr: String => String,
-                        asCtes: Option[(String, String)] = None,
-                        mat: String = ""): String = {
-    val candBody =
-      s"""  SELECT query_id, node FROM $prevRef
-         |  UNION
-         |  SELECT p.query_id, g.dst AS node
-         |  FROM $prevRef p JOIN $graphRef g ON g.src = p.node""".stripMargin
-    def keepEf(candRef: String): String =
-      s"""SELECT query_id, node FROM (
-         |  SELECT c.query_id, c.node,
-         |    row_number() OVER (PARTITION BY c.query_id
-         |      ORDER BY ${nswCosQN(dotF)} DESC, c.node ASC) AS rn
-         |  FROM $candRef c
-         |  JOIN (SELECT vec_id AS query_id, ${castArr("embedding")} AS qe FROM $emb
-         |        WHERE vec_id % 50 = 0) q ON q.query_id = c.query_id
-         |  JOIN (SELECT vec_id, ${castArr("embedding")} AS ve FROM $emb) corpus
-         |    ON corpus.vec_id = c.node) r
-         |WHERE rn <= 8""".stripMargin
-    asCtes match {
-      case None =>
-        s"WITH cand AS (\n$candBody)\n${keepEf("cand")}"
-      case Some((candName, beamName)) =>
-        s"$candName AS $mat(\n$candBody),\n$beamName AS $mat(\n${keepEf(candName)})"
+    val corpus = s"SELECT vec_id, ${castArr("embedding")} AS ve FROM $emb"
+    val queries =
+      s"""SELECT vec_id AS query_id, ${castArr("embedding")} AS qe FROM $emb
+         |        WHERE vec_id % 50 = 0""".stripMargin
+    val build = Seq(
+      Step("g0", _ =>
+        s"""WITH corpus AS ($corpus),
+           |samp AS (
+           |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c,
+           |    ${castArr("embedding")} AS ce
+           |  FROM (SELECT vec_id, embedding FROM $emb
+           |        ORDER BY vec_id LIMIT $nlist) s0),
+           |assign2 AS (
+           |  SELECT vec_id, c AS list_id FROM (
+           |    SELECT corpus.vec_id, samp.c,
+           |      row_number() OVER (PARTITION BY corpus.vec_id
+           |        ORDER BY ${dist64("ve", "ce")} ASC, samp.c ASC) AS rn
+           |    FROM corpus CROSS JOIN samp) r WHERE rn <= 2),
+           |scored AS (
+           |  SELECT pr.src, pr.dst,
+           |    ${dotF("sv", "dv")} /
+           |      (sqrt(${dotF("sv", "sv")}) * sqrt(${dotF("dv", "dv")})) AS pcos
+           |  FROM (
+           |    SELECT $pairHint DISTINCT a.vec_id AS src, b.vec_id AS dst
+           |    FROM assign2 a JOIN assign2 b
+           |      ON a.list_id = b.list_id AND a.vec_id <> b.vec_id) pr
+           |  JOIN (SELECT vec_id, ve AS sv FROM corpus) ca ON ca.vec_id = pr.src
+           |  JOIN (SELECT vec_id, ve AS dv FROM corpus) cb ON cb.vec_id = pr.dst)
+           |SELECT src, dst FROM (
+           |  SELECT src, dst,
+           |    row_number() OVER (PARTITION BY src
+           |      ORDER BY pcos DESC, dst ASC) AS rn
+           |  FROM scored) r WHERE rn <= 6""".stripMargin),
+      // the entry point rides a 1-row cross join, never a driver `.head()`
+      Step("beam0", _ =>
+        s"""SELECT q.vec_id AS query_id, CAST(e.v AS BIGINT) AS node
+           |FROM $emb q, (SELECT min(vec_id) AS v FROM $emb) e
+           |WHERE q.vec_id % 50 = 0""".stripMargin))
+    val hops = (1 to 4).map { h =>
+      Step(s"beam$h", r =>
+        s"""WITH cand AS (
+           |  SELECT query_id, node FROM ${r(s"beam${h - 1}")}
+           |  UNION
+           |  SELECT p.query_id, g.dst AS node
+           |  FROM ${r(s"beam${h - 1}")} p JOIN ${r("g0")} g ON g.src = p.node)
+           |SELECT query_id, node FROM (
+           |  SELECT c.query_id, c.node,
+           |    row_number() OVER (PARTITION BY c.query_id
+           |      ORDER BY ${nswCosQN(dotF)} DESC, c.node ASC) AS rn
+           |  FROM cand c
+           |  JOIN ($queries) q ON q.query_id = c.query_id
+           |  JOIN ($corpus) corpus ON corpus.vec_id = c.node) r
+           |WHERE rn <= 8""".stripMargin)
     }
+    val truth = Step("truth", _ =>
+      s"""SELECT query_id, neighbor_id FROM (
+         |  SELECT q.query_id, corpus.vec_id AS neighbor_id,
+         |    row_number() OVER (PARTITION BY q.query_id
+         |      ORDER BY ${nswCosQN(dotF)} DESC,
+         |        corpus.vec_id ASC) AS rank
+         |  FROM ($queries) q
+         |  CROSS JOIN ($corpus) corpus
+         |  WHERE corpus.vec_id <> q.query_id) t WHERE rank <= 10""".stripMargin)
+    StepChain(build ++ hops :+ truth, r =>
+      s"""SELECT query_id, rank, neighbor_id, cos,
+         |  CAST(CASE WHEN EXISTS (SELECT 1 FROM ${r("truth")} tr
+         |    WHERE tr.query_id = f.query_id
+         |      AND tr.neighbor_id = f.neighbor_id) THEN 1 ELSE 0 END
+         |    AS BIGINT) AS in_exact_top10
+         |FROM (
+         |  SELECT b.query_id, b.node AS neighbor_id,
+         |    row_number() OVER (PARTITION BY b.query_id
+         |      ORDER BY ${nswCosQN(dotF)} DESC, b.node ASC) AS rank,
+         |    round(${nswCosQN(dotF)}, 6) + 0.0 AS cos
+         |  FROM ${r("beam4")} b
+         |  JOIN ($queries) q ON q.query_id = b.query_id
+         |  JOIN ($corpus) corpus ON corpus.vec_id = b.node
+         |  WHERE b.node <> b.query_id) f
+         |WHERE rank <= 5
+         |ORDER BY query_id, rank""".stripMargin)
   }
 
-  /** Final top-5 + the `in_exact_top10` audit flag over a beam ref.
-    * `asCte = true` emits `truth AS (...)` for the oracle monolith to
-    * append to its own CTE chain instead of opening a new `WITH`. */
-  private def nswFinalSql(beamRef: String, emb: String,
-                          dotF: (String, String) => String,
-                          castArr: String => String,
-                          mat: String = "", asCte: Boolean = false): String = {
-    s"""${if (asCte) "" else "WITH "}truth AS $mat(
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT q.query_id, corpus.vec_id AS neighbor_id,
-       |      row_number() OVER (PARTITION BY q.query_id
-       |        ORDER BY ${nswCosQN(dotF)} DESC,
-       |          corpus.vec_id ASC) AS rank
-       |    FROM (SELECT vec_id AS query_id, ${castArr("embedding")} AS qe FROM $emb
-       |          WHERE vec_id % 50 = 0) q
-       |    CROSS JOIN (SELECT vec_id, ${castArr("embedding")} AS ve FROM $emb) corpus
-       |    WHERE corpus.vec_id <> q.query_id) t WHERE rank <= 10)
-       |SELECT query_id, rank, neighbor_id, cos,
-       |  CAST(CASE WHEN EXISTS (SELECT 1 FROM truth tr
-       |    WHERE tr.query_id = f.query_id
-       |      AND tr.neighbor_id = f.neighbor_id) THEN 1 ELSE 0 END
-       |    AS BIGINT) AS in_exact_top10
-       |FROM (
-       |  SELECT b.query_id, b.node AS neighbor_id,
-       |    row_number() OVER (PARTITION BY b.query_id
-       |      ORDER BY ${nswCosQN(dotF)} DESC, b.node ASC) AS rank,
-       |    round(${nswCosQN(dotF)}, 6) + 0.0 AS cos
-       |  FROM $beamRef b
-       |  JOIN (SELECT vec_id AS query_id, ${castArr("embedding")} AS qe FROM $emb
-       |        WHERE vec_id % 50 = 0) q ON q.query_id = b.query_id
-       |  JOIN (SELECT vec_id, ${castArr("embedding")} AS ve FROM $emb) corpus
-       |    ON corpus.vec_id = b.node
-       |  WHERE b.node <> b.query_id) f
-       |WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** The monolithic DuckDB oracle text: graph prefix + unrolled hops +
-    * final, every stage MATERIALIZED (DuckDB re-expands plain CTEs per
-    * consumer — the r12 allocation-lean doctrine). Built from the SAME
-    * fragments as the Spark hop loop. */
-  private def nswBeamSql(emb: String, ix: (String, String) => String,
-                         dotF: (String, String) => String,
-                         castArr: String => String,
-                         mat: String = ""): String = {
-    val graphPrefix = nswGraphSql(emb, ix, dotF, castArr, mat,
-      standalone = false)
-    val hopCtes = (1 to 4).map { h =>
-      nswHopSql(s"beam${h - 1}", "g0", emb, dotF, castArr,
-        asCtes = Some((s"cand$h", s"beam$h")), mat = mat)
-    }.mkString(",\n")
-    val fin = nswFinalSql("beam4", emb, dotF, castArr, mat, asCte = true)
-    s"""$graphPrefix,
-       |entry AS $mat(SELECT min(vec_id) AS v FROM corpus),
-       |beam0 AS $mat(
-       |  SELECT q.query_id, entry.v AS node
-       |  FROM (SELECT vec_id AS query_id FROM $emb WHERE vec_id % 50 = 0) q,
-       |    entry),
-       |$hopCtes,
-       |$fin""".stripMargin
-  }
-
-  /** Spark execution path: graph checkpointed once, 4 hop queries over
-    * checkpointed beams (byte-identical hop SQL), final audit select —
-    * all views dropped and checkpoints released in `finally`. */
+  /** Spark execution path: the embeddings checkpointed once (read by
+    * every hop), the list count chosen from their size, then the chain's
+    * steps over checkpointed views — all released before returning. */
   def nswBeamSpark(s: SparkSession, d: String): DataFrame = {
     // idempotent: the query contract is (SparkSession, dir) => DataFrame
     // for ANY session, and the hop texts need graft_dot resolvable
     graft.plans.GraftExtensions.register(s)
-    val ix = (e: String, i: String) => s"element_at($e, $i)"
-    val dotF = (a: String, b: String) => s"graft_dot($a, $b)"
-    val castArr = (e: String) => s"CAST($e AS ARRAY<DOUBLE>)"
-    val tag = s"nsw_v${sqlRuns.incrementAndGet()}"
-    val views = scala.collection.mutable.ArrayBuffer.empty[String]
-    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def mkView(n: String, df: DataFrame): String = {
-      val v = s"${tag}_$n"
-      val cp = df.localCheckpoint()
-      frames += cp
-      cp.createOrReplaceTempView(v)
-      views += v
-      v
-    }
-    try {
-      val emb = mkView("emb", Tables.embeddings(s, d))
+    StepChain.scoped(s) { sc =>
+      val emb = sc.checkpoint("emb", Tables.embeddings(s, d))
       val n = s.table(emb).count()
       val nlist = if (n <= NswOracleMaxN) NswOracleNlist
         else graft.operators.Similarity.nlistForCorpus(n)
-      val g = mkView("graph",
-        s.sql(nswGraphSql(emb, ix, dotF, castArr, "", nlist,
-          pairHint = s"/*+ REPARTITION(" +
-            s"${s.sessionState.conf.numShufflePartitions}, src, dst) */")))
-      // the entry point rides a 1-row cross join instead of a blocking
-      // driver `.head()` (r17) — same min(vec_id), one less round-trip
-      var beam = mkView("beam0",
-        s.sql(s"SELECT q.vec_id AS query_id, CAST(e.v AS BIGINT) AS node " +
-          s"FROM $emb q, (SELECT min(vec_id) AS v FROM $emb) e " +
-          s"WHERE q.vec_id % 50 = 0"))
-      for (h <- 1 to 4)
-        beam = mkView(s"beam$h", s.sql(nswHopSql(beam, g, emb, dotF, castArr)))
-      val out = s.sql(nswFinalSql(beam, emb, dotF, castArr))
-      val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-      out.collect().foreach(rows.add)
-      s.createDataFrame(rows, out.schema)
-    } finally {
-      views.foreach(v => { s.catalog.dropTempView(v); () })
-      // real block release — Dataset.unpersist is a no-op for
-      // localCheckpoints (see graft.plans.Blocks)
-      frames.foreach(graft.plans.Blocks.free)
+      nswBeamChain(emb, (e, i) => s"element_at($e, $i)",
+        (a, b) => s"graft_dot($a, $b)", e => s"CAST($e AS ARRAY<DOUBLE>)",
+        nlist, pairHint = s"/*+ REPARTITION(" +
+          s"${s.sessionState.conf.numShufflePartitions}, src, dst) */")
+        .runIn(sc)
     }
   }
 
@@ -2079,7 +2001,7 @@ object Docs {
       withEmbView(s, d)(v =>
         s.sql(recallCurveSql(v, (e, i) => s"element_at($e, $i)")))),
 
-    /** The GRAPH-ANN SERVING PATH (`nswBeamSql` — one shared template):
+    /** The GRAPH-ANN SERVING PATH (`nswBeamChain` — one step chain):
       * 2-list-blocked kNN-graph build, fixed-entry 4-hop ef=8 beam
       * search, top-5 per audit query with the `in_exact_top10` recall
       * flag. Completes the index triptych (LSH/IVF/PQ → graph). */
@@ -2839,10 +2761,9 @@ object Docs {
         "MATERIALIZED "),
 
     "similarity_nsw_beam" ->
-      nswBeamSql("embeddings", (e, i) => s"list_extract($e, $i)",
+      nswBeamChain("embeddings", (e, i) => s"list_extract($e, $i)",
         (a, b) => s"list_dot_product($a, $b)",
-        e => s"$e::DOUBLE[]",
-        "MATERIALIZED "),
+        e => s"$e::DOUBLE[]").oracleSql,
 
     "similarity_pq_retrain" ->
       pqRetrainSql("embeddings", (e, i) => s"list_extract($e, $i)",

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.plans.StepChain
+import graft.plans.StepChain.Step
 
 /** Round-10 wave registry: the grouped (per-series) forecasting ensemble,
   * the GMV-portfolio optimality audit, and real video-kind decode through
@@ -27,6 +29,27 @@ object R10 {
       Tables.events(s, d).createOrReplaceTempView(v)
       f(v)
     } finally { s.catalog.dropTempView(v); () }
+  }
+
+  // ---- SQL fragments shared by the bucket-frame models ---------------------
+
+  /** Grid-6 mean of one event type's values within the current group —
+    * the per-bucket feature every bucket-frame model reads. */
+  private def typeMean(t: String): String =
+    s"""round(CAST(sum(CAST(CASE WHEN event_type = '$t' THEN value END
+       |        AS DECIMAL(18,6))) AS DOUBLE)
+       |      / count(CASE WHEN event_type = '$t' THEN value END), 6)"""
+      .stripMargin
+
+  /** Per-term-rounded DECIMAL sum `Σ round(term, 9)` surfaced as DOUBLE:
+    * order-free across engines, unlike a double sum. */
+  private def dsum(term: String, name: String): String =
+    s"CAST(sum(CAST(round($term, 9) AS DECIMAL(28,9))) AS DOUBLE) AS $name"
+
+  /** det of a row-major 3×3 given as 9 expression strings. */
+  private def det3(m: String*): String = {
+    val Seq(a, b, c, d, e, f, g, h, i) = m
+    s"($a * ($e * $i - $f * $h) - $b * ($d * $i - $f * $g) + $c * ($d * $h - $e * $g))"
   }
 
   // ---- grouped ensemble (shared SQL template) -----------------------------
@@ -217,13 +240,6 @@ object R10 {
     * 0 IS the OLS fit, so the robustification is visible in the result.
     * The MLlib huber-loss `ml_huber` stays as the library surface;
     * R10Spec pins the planted-outlier law on this implementation. */
-  private def huberDsum(term: String, name: String) =
-    s"CAST(sum(CAST(round($term, 9) AS DECIMAL(28,9))) AS DOUBLE) AS $name"
-  private def huberMc(t: String) =
-    s"""round(CAST(sum(CAST(CASE WHEN event_type = '$t' THEN value END
-       |        AS DECIMAL(18,6))) AS DOUBLE)
-       |      / count(CASE WHEN event_type = '$t' THEN value END), 6)"""
-      .stripMargin
   private val huberBetaExpr =
     "CASE WHEN sw * swxx - swx * swx = 0.0 THEN 0.0 ELSE " +
       "round((sw * swxy - swx * swy) / (sw * swxx - swx * swx), 9) END"
@@ -237,8 +253,6 @@ object R10 {
     // DuckDB 1.0's per-reference re-expansion costs 682 MB / 0.9 s vs
     // 10 MB / 0.03 s materialized (identical result) — the r11
     // map-exhaustion class.
-    def dsum(term: String, name: String) = huberDsum(term, name)
-    def mc(t: String) = huberMc(t)
     val betaExpr = huberBetaExpr
     val iters = (1 to 4).map { i =>
       val p = i - 1
@@ -274,8 +288,8 @@ object R10 {
     s"""WITH b AS $mat(
        |  SELECT bucket, x, y FROM (
        |    SELECT $bucket AS bucket,
-       |      ${mc("purchase")} AS x,
-       |      ${mc("click")} AS y
+       |      ${typeMean("purchase")} AS x,
+       |      ${typeMean("click")} AS y
        |    FROM $events WHERE event_type IN ('click', 'purchase')
        |    GROUP BY 1) t
        |  WHERE x IS NOT NULL AND y IS NOT NULL),
@@ -346,8 +360,8 @@ object R10 {
     val base = s.sql(
       s"""SELECT x, y FROM (
          |  SELECT $bucket AS bucket,
-         |    ${huberMc("purchase")} AS x,
-         |    ${huberMc("click")} AS y
+         |    ${typeMean("purchase")} AS x,
+         |    ${typeMean("click")} AS y
          |  FROM $events WHERE event_type IN ('click', 'purchase')
          |  GROUP BY 1) t
          |WHERE x IS NOT NULL AND y IS NOT NULL""".stripMargin)
@@ -412,198 +426,50 @@ object R10 {
       .orderBy("iter")
   }
 
-  // ---- logistic regression by Newton-Raphson (shared SQL template) --------
+  // ---- logistic regression by Newton-Raphson (step chain) ---------------
 
-  /** LOGISTIC REGRESSION as a FULL oracle row — the classification
-    * counterpart the registry lacked (`ml_naive_bayes`/`ml_knn_classify`
-    * cover counting/metric classifiers; nothing fit a discriminative
-    * GLM). Binary label y = [purchase mean > its median] over 30-min
-    * buckets, features (click mean, view mean), fitted by 4 unrolled
-    * Newton-Raphson steps — each iteration is ONE scan: gridded logits
-    * z = round(α + β₁x₁ + β₂x₂, 6), probabilities p = round(σ(z), 9),
-    * IRLS weights w = round(p(1−p), 9), then the 3×3 weighted Gram and
-    * gradient as per-term-rounded DECIMAL sums (the `ml_huber_irls`
-    * discipline) and the Newton step solved CLOSED-FORM by Cramer's rule
-    * on 3×3 determinants — fixed expression trees over identical
-    * doubles, so both engines agree bit-for-bit away from libm; the one
-    * libm exposure (exp/ln of a GRIDDED argument, ≤1 ulp apart) is
-    * blunted by the 1e-9 re-grid, the same posture as every ln-based
-    * query (COVERAGE.md decision table). Output: the per-iteration
-    * coefficient trajectory with training accuracy (exact integer) and
-    * log-loss — iteration 0 is the null model, so the fit's progress is
-    * in the result. R10Spec pins the planted-separation law. */
-  /** The fit chain shared by `ml_logistic_newton` (trajectory tail) and
-    * `ml_threshold_sweep` (confusion-matrix tail): everything from the
-    * bucket frame through the 4 Newton steps and the final scoring pass
-    * `p5` (per-row y and p under the converged coefficients). One text,
-    * two queries — the sweep audits the SAME model the trajectory row
-    * hash-checks. */
-  private[graft] def logisticPrefix(events: String, bucket: String,
-                                    median: String, mat: String): String = {
-    def dsum(term: String, name: String) =
-      s"CAST(sum(CAST(round($term, 9) AS DECIMAL(28,9))) AS DOUBLE) AS $name"
-    def mc(t: String) =
-      s"""round(CAST(sum(CAST(CASE WHEN event_type = '$t' THEN value END
-         |        AS DECIMAL(18,6))) AS DOUBLE)
-         |      / count(CASE WHEN event_type = '$t' THEN value END), 6)"""
-        .stripMargin
-    // det3 of a row-major 3x3 given as 9 expression strings
-    def det3(m: Seq[String]): String = {
-      val Seq(a, b, c, d, e, f, g, h, i) = m
-      s"($a * ($e * $i - $f * $h) - $b * ($d * $i - $f * $g) + $c * ($d * $h - $e * $g))"
-    }
-    val hDet = det3(Seq("sw", "s1", "s2", "s1", "s11", "s12", "s2", "s12", "s22"))
-    val d0 = det3(Seq("g0", "s1", "s2", "g1", "s11", "s12", "g2", "s12", "s22"))
-    val d1 = det3(Seq("sw", "g0", "s2", "s1", "g1", "s12", "s2", "g2", "s22"))
-    val d2 = det3(Seq("sw", "s1", "g0", "s1", "s11", "g1", "s2", "s12", "g2"))
-    // evaluation pass k scores coefficients c{k-1}; update pass c{k}
-    // applies the Newton step from the same moments
-    val stages = (1 to 5).map { k =>
+  /** The fit chain shared by `ml_logistic_newton` (trajectory tail),
+    * `ml_threshold_sweep` (confusion-matrix tail) and `ml_auc_roc` (rank
+    * tail): the bucket frame `b`, its median-labelled copy `bl`, then per
+    * Newton step k the moment frame `m{k}` (scoring the coefficients
+    * c{k-1} inside its own plan) and the update `c{k}`; `m5` scores the
+    * converged c4. The three consumers read the SAME model the
+    * trajectory row hash-checks. As a [[StepChain]] the DuckDB oracle
+    * text and the Spark steps are the same strings, so the text identity
+    * the hash gate relies on holds by construction; stepwise, Catalyst
+    * plans one small step at a time instead of paying ~5 s of fixed
+    * analysis + optimization for the ~25-CTE unrolled text per consumer
+    * (tracker phases: optimization 3.6 s, analysis 1.3 s). */
+  private[graft] def logisticSteps(events: String, bucket: String,
+                                   median: String): Seq[Step] = {
+    val hDet = det3("sw", "s1", "s2", "s1", "s11", "s12", "s2", "s12", "s22")
+    val d0 = det3("g0", "s1", "s2", "g1", "s11", "s12", "g2", "s12", "s22")
+    val d1 = det3("sw", "g0", "s2", "s1", "g1", "s12", "s2", "g2", "s22")
+    val d2 = det3("sw", "s1", "g0", "s1", "s11", "g1", "s2", "s12", "g2")
+    val frame = Seq(
+      Step("b", _ =>
+        s"""SELECT bucket, x1, x2, p_raw FROM (
+           |  SELECT $bucket AS bucket,
+           |    ${typeMean("click")} AS x1,
+           |    ${typeMean("view")} AS x2,
+           |    ${typeMean("purchase")} AS p_raw
+           |  FROM $events
+           |  WHERE event_type IN ('click', 'view', 'purchase')
+           |  GROUP BY 1) t
+           |WHERE x1 IS NOT NULL AND x2 IS NOT NULL AND p_raw IS NOT NULL""".stripMargin),
+      Step("bl", r =>
+        s"""WITH med AS (SELECT round($median, 6) AS m FROM ${r("b")})
+           |SELECT b.bucket, b.x1, b.x2,
+           |  CASE WHEN b.p_raw > med.m THEN 1 ELSE 0 END AS y
+           |FROM ${r("b")} b, med""".stripMargin),
+      Step("c0", _ =>
+        """SELECT CAST(0.0 AS DOUBLE) AS a, CAST(0.0 AS DOUBLE) AS b1,
+          |  CAST(0.0 AS DOUBLE) AS b2""".stripMargin))
+    // evaluation step m{k} scores c{k-1}; update step c{k} applies the
+    // Newton step from the same moments
+    val newton = (1 to 5).flatMap { k =>
       val p = k - 1
-      val upd =
-        if (k == 5) ""
-        else
-          s""",
-             |c$k AS $mat (
-             |  SELECT
-             |    CASE WHEN m$k.det = 0.0 THEN c$p.a
-             |         ELSE round(c$p.a + m$k.dd0 / m$k.det, 9) END AS a,
-             |    CASE WHEN m$k.det = 0.0 THEN c$p.b1
-             |         ELSE round(c$p.b1 + m$k.dd1 / m$k.det, 9) END AS b1,
-             |    CASE WHEN m$k.det = 0.0 THEN c$p.b2
-             |         ELSE round(c$p.b2 + m$k.dd2 / m$k.det, 9) END AS b2
-             |  FROM m$k, c$p)""".stripMargin
-      s"""p$k AS $mat (
-         |  SELECT y, x1, x2, p, round(p * (1.0 - p), 9) AS w
-         |  FROM (
-         |    SELECT bl.y, bl.x1, bl.x2,
-         |      round(1.0 / (1.0 + exp(-round(c.a + c.b1 * bl.x1 + c.b2 * bl.x2, 6))), 9) AS p
-         |    FROM bl, c$p c) pp),
-         |m$k AS $mat (
-         |  SELECT det, dd0, dd1, dd2, n_correct, ll, nn FROM (
-         |    SELECT $hDet AS det, $d0 AS dd0, $d1 AS dd1, $d2 AS dd2,
-         |      n_correct, ll, nn
-         |    FROM (
-         |      SELECT
-         |        ${dsum("w", "sw")}, ${dsum("w * x1", "s1")},
-         |        ${dsum("w * x2", "s2")}, ${dsum("w * x1 * x1", "s11")},
-         |        ${dsum("w * x1 * x2", "s12")}, ${dsum("w * x2 * x2", "s22")},
-         |        ${dsum("y - p", "g0")}, ${dsum("(y - p) * x1", "g1")},
-         |        ${dsum("(y - p) * x2", "g2")},
-         |        CAST(sum(CASE WHEN (p >= 0.5) = (y = 1) THEN 1 ELSE 0 END)
-         |          AS BIGINT) AS n_correct,
-         |        ${dsum(
-              "-(y * ln(least(greatest(p, 0.000000001), 0.999999999)) " +
-                "+ (1 - y) * ln(least(greatest(1.0 - p, 0.000000001), 0.999999999)))",
-              "ll")},
-         |        count(*) AS nn
-         |      FROM p$k) mm) md)$upd""".stripMargin
-    }.mkString(",\n")
-    s"""WITH b AS $mat (
-       |  SELECT bucket, x1, x2, p_raw FROM (
-       |    SELECT $bucket AS bucket,
-       |      ${mc("click")} AS x1,
-       |      ${mc("view")} AS x2,
-       |      ${mc("purchase")} AS p_raw
-       |    FROM $events
-       |    WHERE event_type IN ('click', 'view', 'purchase')
-       |    GROUP BY 1) t
-       |  WHERE x1 IS NOT NULL AND x2 IS NOT NULL AND p_raw IS NOT NULL),
-       |med AS (SELECT round($median, 6) AS m FROM b),
-       |bl AS $mat (
-       |  SELECT b.bucket, b.x1, b.x2,
-       |    CASE WHEN b.p_raw > med.m THEN 1 ELSE 0 END AS y
-       |  FROM b, med),
-       |c0 AS (SELECT CAST(0.0 AS DOUBLE) AS a, CAST(0.0 AS DOUBLE) AS b1,
-       |  CAST(0.0 AS DOUBLE) AS b2),
-       |$stages""".stripMargin
-  }
-
-  def logisticNewtonSql(events: String, bucket: String, median: String,
-                        mat: String): String = {
-    val arms = (0 to 4).map { i =>
-      s"""SELECT $i AS iter, c$i.a + 0.0 AS alpha, c$i.b1 + 0.0 AS beta1,
-         |    c$i.b2 + 0.0 AS beta2, m${i + 1}.n_correct AS n_correct,
-         |    round(m${i + 1}.ll / m${i + 1}.nn, 6) AS log_loss
-         |  FROM c$i, m${i + 1}""".stripMargin
-    }.mkString("\n  UNION ALL ")
-    s"""${logisticPrefix(events, bucket, median, mat)}
-       |SELECT iter, alpha, beta1, beta2, n_correct, log_loss
-       |FROM (
-       |  $arms) u
-       |ORDER BY iter""".stripMargin
-  }
-
-  /** Spark-side executor of the SAME Newton arithmetic as
-    * [[logisticPrefix]], run as a per-step MATERIALIZED loop instead of
-    * the one unrolled text (r16; the `gbtStumpsSpark` pattern): the
-    * monolith's ~25-CTE chain cost ~5 s of FIXED Catalyst analysis +
-    * optimization per consumer query (tracker phases: optimization
-    * 3.6 s, analysis 1.3 s, execution 0.5 s of task time), ×3 consumers
-    * (`ml_logistic_newton`, `ml_threshold_sweep`, `ml_auc_roc`).
-    * Stepwise, Catalyst plans ONE small step at a time; the moment (m)
-    * and coefficient (c) frames are 1-row localCheckpoints and the
-    * scored pass stays lazy inside each step's plan. Every expression
-    * below is textually the template's (modulo view-name references),
-    * so the hash gate is unchanged.
-    *
-    * Returns the view names (bl, c0..c4, m1..m5) and registers them in
-    * `views` for the caller's `finally` cleanup; the final scored pass
-    * `p5` is the lazy [[lgScoreSql]] over (bl, c4) — callers that need
-    * it materialize it themselves. */
-  private def lgScoreSql(blV: String, cV: String): String =
-    s"""SELECT y, x1, x2, p, round(p * (1.0 - p), 9) AS w
-       |FROM (
-       |  SELECT bl.y, bl.x1, bl.x2,
-       |    round(1.0 / (1.0 + exp(-round(c.a + c.b1 * bl.x1 + c.b2 * bl.x2, 6))), 9) AS p
-       |  FROM $blV bl, $cV c) pp""".stripMargin
-
-  private[graft] def logisticChainSpark(
-      s: SparkSession, events: String, bucket: String, median: String,
-      tag: String,
-      views: scala.collection.mutable.ArrayBuffer[String]): Unit = {
-    def dsum(term: String, name: String) =
-      s"CAST(sum(CAST(round($term, 9) AS DECIMAL(28,9))) AS DOUBLE) AS $name"
-    def mc(t: String) =
-      s"""round(CAST(sum(CAST(CASE WHEN event_type = '$t' THEN value END
-         |        AS DECIMAL(18,6))) AS DOUBLE)
-         |      / count(CASE WHEN event_type = '$t' THEN value END), 6)"""
-        .stripMargin
-    def det3(m: Seq[String]): String = {
-      val Seq(a, b, c, d, e, f, g, h, i) = m
-      s"($a * ($e * $i - $f * $h) - $b * ($d * $i - $f * $g) + $c * ($d * $h - $e * $g))"
-    }
-    val hDet = det3(Seq("sw", "s1", "s2", "s1", "s11", "s12", "s2", "s12", "s22"))
-    val d0 = det3(Seq("g0", "s1", "s2", "g1", "s11", "s12", "g2", "s12", "s22"))
-    val d1 = det3(Seq("sw", "g0", "s2", "s1", "g1", "s12", "s2", "g2", "s22"))
-    val d2 = det3(Seq("sw", "s1", "g0", "s1", "s11", "g1", "s2", "s12", "g2"))
-    def mkView(n: String, sql: String): String = {
-      val v = s"${tag}_$n"
-      s.sql(sql).localCheckpoint().createOrReplaceTempView(v)
-      views += v
-      v
-    }
-    val bV = mkView("b",
-      s"""SELECT bucket, x1, x2, p_raw FROM (
-         |  SELECT $bucket AS bucket,
-         |    ${mc("click")} AS x1,
-         |    ${mc("view")} AS x2,
-         |    ${mc("purchase")} AS p_raw
-         |  FROM $events
-         |  WHERE event_type IN ('click', 'view', 'purchase')
-         |  GROUP BY 1) t
-         |WHERE x1 IS NOT NULL AND x2 IS NOT NULL AND p_raw IS NOT NULL""".stripMargin)
-    mkView("bl",
-      s"""WITH med AS (SELECT round($median, 6) AS m FROM $bV)
-         |SELECT b.bucket, b.x1, b.x2,
-         |  CASE WHEN b.p_raw > med.m THEN 1 ELSE 0 END AS y
-         |FROM $bV b, med""".stripMargin)
-    mkView("c0",
-      """SELECT CAST(0.0 AS DOUBLE) AS a, CAST(0.0 AS DOUBLE) AS b1,
-        |  CAST(0.0 AS DOUBLE) AS b2""".stripMargin)
-    for (k <- 1 to 5) {
-      val p = k - 1
-      val mV = mkView(s"m$k",
+      val m = Step(s"m$k", r =>
         s"""SELECT det, dd0, dd1, dd2, n_correct, ll, nn FROM (
            |  SELECT $hDet AS det, $d0 AS dd0, $d1 AS dd1, $d2 AS dd2,
            |    n_correct, ll, nn
@@ -621,9 +487,9 @@ object R10 {
                   "+ (1 - y) * ln(least(greatest(1.0 - p, 0.000000001), 0.999999999)))",
                 "ll")},
            |      count(*) AS nn
-           |    FROM (${lgScoreSql(s"${tag}_bl", s"${tag}_c$p")}) pk) mm) md"""
+           |    FROM (${lgScoreSql(r("bl"), r(s"c$p"))}) pk) mm) md"""
           .stripMargin)
-      if (k < 5) mkView(s"c$k",
+      val c = Step(s"c$k", r =>
         s"""SELECT
            |  CASE WHEN m.det = 0.0 THEN c.a
            |       ELSE round(c.a + m.dd0 / m.det, 9) END AS a,
@@ -631,130 +497,110 @@ object R10 {
            |       ELSE round(c.b1 + m.dd1 / m.det, 9) END AS b1,
            |  CASE WHEN m.det = 0.0 THEN c.b2
            |       ELSE round(c.b2 + m.dd2 / m.det, 9) END AS b2
-           |FROM $mV m, ${tag}_c$p c""".stripMargin)
+           |FROM ${r(s"m$k")} m, ${r(s"c$p")} c""".stripMargin)
+      if (k < 5) Seq(m, c) else Seq(m)
     }
+    frame ++ newton
   }
 
-  /** `ml_logistic_newton` through the stepwise chain — same arms text as
-    * [[logisticNewtonSql]] over the materialized step views; the
-    * aggregate-sized result is collected eagerly so the views can drop. */
-  def logisticNewtonSpark(s: SparkSession, events: String, bucket: String,
-                          median: String, tag: String): DataFrame = {
-    val views = scala.collection.mutable.ArrayBuffer.empty[String]
-    try {
-      logisticChainSpark(s, events, bucket, median, tag, views)
+  /** Per-row (y, p) under coefficients `cV` — the scoring pass inside
+    * every moment step, and the `p5` step over the converged c4. */
+  private def lgScoreSql(blV: String, cV: String): String =
+    s"""SELECT y, x1, x2, p, round(p * (1.0 - p), 9) AS w
+       |FROM (
+       |  SELECT bl.y, bl.x1, bl.x2,
+       |    round(1.0 / (1.0 + exp(-round(c.a + c.b1 * bl.x1 + c.b2 * bl.x2, 6))), 9) AS p
+       |  FROM $blV bl, $cV c) pp""".stripMargin
+
+  /** [[logisticSteps]] plus `p5`, the model-sized scored frame the
+    * sweep and AUC tails read. */
+  private[graft] def logisticScoredSteps(events: String, bucket: String,
+                                         median: String): Seq[Step] =
+    logisticSteps(events, bucket, median) :+
+      Step("p5", r => lgScoreSql(r("bl"), r("c4")))
+
+  /** LOGISTIC REGRESSION as a FULL oracle row — the classification
+    * counterpart the registry lacked (`ml_naive_bayes`/`ml_knn_classify`
+    * cover counting/metric classifiers; nothing fit a discriminative
+    * GLM). Binary label y = [purchase mean > its median] over 30-min
+    * buckets, features (click mean, view mean), fitted by 4 Newton-Raphson
+    * steps ([[logisticSteps]]) — each iteration is ONE scan: gridded
+    * logits z = round(α + β₁x₁ + β₂x₂, 6), probabilities p = round(σ(z),
+    * 9), IRLS weights w = round(p(1−p), 9), then the 3×3 weighted Gram
+    * and gradient as per-term-rounded DECIMAL sums (the `ml_huber_irls`
+    * discipline) and the Newton step solved CLOSED-FORM by Cramer's rule
+    * on 3×3 determinants — fixed expression trees over identical
+    * doubles, so both engines agree bit-for-bit away from libm; the one
+    * libm exposure (exp/ln of a GRIDDED argument, ≤1 ulp apart) is
+    * blunted by the 1e-9 re-grid, the same posture as every ln-based
+    * query (COVERAGE.md decision table). Output: the per-iteration
+    * coefficient trajectory with training accuracy (exact integer) and
+    * log-loss — iteration 0 is the null model, so the fit's progress is
+    * in the result. R10Spec pins the planted-separation law. */
+  def logisticNewtonChain(events: String, bucket: String,
+                          median: String): StepChain =
+    StepChain(logisticSteps(events, bucket, median), r => {
       val arms = (0 to 4).map { i =>
         s"""SELECT $i AS iter, c.a + 0.0 AS alpha, c.b1 + 0.0 AS beta1,
            |    c.b2 + 0.0 AS beta2, m.n_correct AS n_correct,
            |    round(m.ll / m.nn, 6) AS log_loss
-           |  FROM ${tag}_c$i c, ${tag}_m${i + 1} m""".stripMargin
+           |  FROM ${r(s"c$i")} c, ${r(s"m${i + 1}")} m""".stripMargin
       }.mkString("\n  UNION ALL ")
-      val out = s.sql(
-        s"""SELECT iter, alpha, beta1, beta2, n_correct, log_loss
-           |FROM (
-           |  $arms) u
-           |ORDER BY iter""".stripMargin)
-      val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-      out.collect().foreach(rows.add)
-      s.createDataFrame(rows, out.schema)
-    } finally graft.plans.Blocks.dropViewsAndFree(s, views)
-  }
-
-  /** `ml_auc_roc` through the stepwise chain — the [[aucRocSql]] tail
-    * over one materialized scored pass. */
-  def aucRocSpark(s: SparkSession, events: String, bucket: String,
-                  median: String, tag: String): DataFrame = {
-    val views = scala.collection.mutable.ArrayBuffer.empty[String]
-    try {
-      logisticChainSpark(s, events, bucket, median, tag, views)
-      val p5 = s"${tag}_p5"
-      s.sql(lgScoreSql(s"${tag}_bl", s"${tag}_c4")).localCheckpoint()
-        .createOrReplaceTempView(p5)
-      views += p5
-      val out = s.sql(
-        s"""WITH ranked AS (
-           |  SELECT y,
-           |    rank() OVER (ORDER BY p ASC) AS rmin,
-           |    count(*) OVER (PARTITION BY p) AS tie_n
-           |  FROM $p5),
-           |ag AS (
-           |  SELECT
-           |    CAST(sum(CASE WHEN y = 1 THEN 2 * rmin + tie_n - 1 ELSE 0 END)
-           |      AS BIGINT) AS r2,
-           |    CAST(sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-           |    CAST(sum(CASE WHEN y = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_neg
-           |  FROM ranked)
-           |SELECT n_pos, n_neg,
-           |  r2 - n_pos * (n_pos + 1) AS u2,
-           |  round((r2 - n_pos * (n_pos + 1)) / (2 * n_pos * n_neg), 6) AS auc,
-           |  round((r2 - n_pos * (n_pos + 1)) / (n_pos * n_neg) - 1, 6) AS gini
-           |FROM ag""".stripMargin)
-      val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-      out.collect().foreach(rows.add)
-      s.createDataFrame(rows, out.schema)
-    } finally graft.plans.Blocks.dropViewsAndFree(s, views)
-  }
+      s"""SELECT iter, alpha, beta1, beta2, n_correct, log_loss
+         |FROM (
+         |  $arms) u
+         |ORDER BY iter""".stripMargin
+    })
 
   /** CLASSIFICATION THRESHOLD OPERATING SWEEP (`ml_threshold_sweep`,
     * r11 — the deployment decision the trajectory row leaves open): a
     * fitted classifier ships with a THRESHOLD, and the τ choice is an
     * operating-point trade a confusion sweep makes visible — the
     * classification analog of `dedup_threshold_sweep` / the ANN
-    * `similarity_recall_curve`. Reuses [[logisticPrefix]] verbatim (the
-    * sweep audits the SAME converged model `ml_logistic_newton`
-    * hash-checks; scores p are grid-9 per-row probabilities under the
-    * final coefficients). Thresholds are the score DECILES, not a fixed
-    * 0.1-grid — calibration verified on data (the Gopher lesson): the
-    * weakly-separable harness fit concentrates p in (0.39, 0.60), so a
-    * fixed grid yields 7 degenerate rows out of 9; decile thresholds
-    * put ~10 % of the frame between consecutive operating points BY
-    * CONSTRUCTION, at any SF and any model. The nine `percentile(p,
-    * i/10)` aggregates ride the same (higher−pos)·lk + (pos−lower)·hk
-    * interpolation both engines (the `ml_huber_irls` median class, here
-    * over identical grid-9 doubles); each τ is re-gridded 1e-6 before
-    * ANY comparison, so TP/FP/FN/TN are EXACT integer counts over
-    * identical double compares, and precision/recall/F1 are output-only
-    * grid-6 divisions with NULLIF zero guards. 9 rows; cost = one
-    * 9-row sweep attach over the already-model-sized score frame. */
-  /** The sweep tail over an already-scored (y, p) frame `src` — shared
-    * text for both consumers: the DuckDB single query reads the
-    * MATERIALIZED `p5` CTE twice for free; the Spark entry materializes
-    * the scored frame ONCE (localCheckpoint, the `gbtStumpsSpark`
-    * precedent) because a twice-consumed CTE re-expands the whole
-    * Newton chain in Catalyst — measured 15.6 s vs ~5 s. */
-  private def sweepBody(src: String, qfun: String): String = {
-    val qcols = (1 to 9)
-      .map(i => s"round($qfun(p, CAST($i AS DOUBLE) / 10), 6) AS q$i")
-      .mkString(",\n       ")
-    val arms = (1 to 9).map(i => s"SELECT $i AS i, q$i AS tau FROM qs")
-      .mkString("\n  UNION ALL ")
-    s"""qs AS (
-       |  SELECT $qcols
-       |  FROM $src),
-       |tsw AS (
-       |  $arms),
-       |conf AS (
-       |  SELECT tsw.i, tsw.tau,
-       |    CAST(sum(CASE WHEN sc.p >= tsw.tau AND sc.y = 1
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-       |    CAST(sum(CASE WHEN sc.p >= tsw.tau AND sc.y = 0
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-       |    CAST(sum(CASE WHEN sc.p < tsw.tau AND sc.y = 1
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-       |    CAST(sum(CASE WHEN sc.p < tsw.tau AND sc.y = 0
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS tn
-       |  FROM tsw CROSS JOIN $src sc GROUP BY tsw.i, tsw.tau)
-       |SELECT i AS decile, tau + 0.0 AS threshold, tp, fp, fn, tn,
-       |  round(tp / NULLIF(tp + fp, 0), 6) AS prec,
-       |  round(tp / NULLIF(tp + fn, 0), 6) AS recall,
-       |  round(2 * tp / NULLIF(2 * tp + fp + fn, 0), 6) AS f1
-       |FROM conf ORDER BY decile""".stripMargin
-  }
-
-  def thresholdSweepSql(events: String, bucket: String, median: String,
-                        qfun: String, mat: String): String =
-    s"""${logisticPrefix(events, bucket, median, mat)},
-       |${sweepBody("p5", qfun)}""".stripMargin
+    * `similarity_recall_curve`. Reads the `p5` scores of
+    * [[logisticScoredSteps]] (the sweep audits the SAME converged model
+    * `ml_logistic_newton` hash-checks; scores p are grid-9 per-row
+    * probabilities under the final coefficients). Thresholds are the
+    * score DECILES, not a fixed 0.1-grid — calibration verified on data
+    * (the Gopher lesson): the weakly-separable harness fit concentrates
+    * p in (0.39, 0.60), so a fixed grid yields 7 degenerate rows out of
+    * 9; decile thresholds put ~10 % of the frame between consecutive
+    * operating points BY CONSTRUCTION, at any SF and any model. The nine
+    * `percentile(p, i/10)` aggregates ride the same (higher−pos)·lk +
+    * (pos−lower)·hk interpolation both engines (the `ml_huber_irls`
+    * median class, here over identical grid-9 doubles); each τ is
+    * re-gridded 1e-6 before ANY comparison, so TP/FP/FN/TN are EXACT
+    * integer counts over identical double compares, and
+    * precision/recall/F1 are output-only grid-6 divisions with NULLIF
+    * zero guards. 9 rows; cost = one 9-row sweep attach over the
+    * already-model-sized score frame. `qfun` is the dialect's
+    * interpolating percentile. */
+  def thresholdSweepChain(events: String, bucket: String, median: String,
+                          qfun: String): StepChain =
+    StepChain(logisticScoredSteps(events, bucket, median), r => {
+      val arms = (1 to 9).map(i =>
+        s"SELECT $i AS i, round($qfun(p, CAST($i AS DOUBLE) / 10), 6) AS tau " +
+          s"FROM ${r("p5")}")
+        .mkString("\n    UNION ALL ")
+      s"""SELECT i AS decile, tau + 0.0 AS threshold, tp, fp, fn, tn,
+         |  round(tp / NULLIF(tp + fp, 0), 6) AS prec,
+         |  round(tp / NULLIF(tp + fn, 0), 6) AS recall,
+         |  round(2 * tp / NULLIF(2 * tp + fp + fn, 0), 6) AS f1
+         |FROM (
+         |  SELECT tsw.i, tsw.tau,
+         |    CAST(sum(CASE WHEN sc.p >= tsw.tau AND sc.y = 1
+         |      THEN 1 ELSE 0 END) AS BIGINT) AS tp,
+         |    CAST(sum(CASE WHEN sc.p >= tsw.tau AND sc.y = 0
+         |      THEN 1 ELSE 0 END) AS BIGINT) AS fp,
+         |    CAST(sum(CASE WHEN sc.p < tsw.tau AND sc.y = 1
+         |      THEN 1 ELSE 0 END) AS BIGINT) AS fn,
+         |    CAST(sum(CASE WHEN sc.p < tsw.tau AND sc.y = 0
+         |      THEN 1 ELSE 0 END) AS BIGINT) AS tn
+         |  FROM (
+         |    $arms) tsw
+         |  CROSS JOIN ${r("p5")} sc GROUP BY tsw.i, tsw.tau) conf
+         |ORDER BY decile""".stripMargin
+    })
 
   /** LEARNING CURVE (`ml_learning_curve`, r11): the "do we need more
     * data" audit — held-out error as a function of TRAINING-SET SIZE,
@@ -768,7 +614,7 @@ object R10 {
     * prefix decided by INTEGER cross-multiplication `10·rn ≤ f·n` — no
     * percentage ever computed. Per fraction, one ridge (λ = 1, intercept
     * unpenalized) via per-term-rounded DECIMAL Gram sums and the
-    * closed-form 3×3 Cramer solve (the `logisticPrefix` discipline);
+    * closed-form 3×3 Cramer solve (the `logisticSteps` discipline);
     * held-out RMSE from grid-6 predictions through DECIMAL residual
     * sums, the single sqrt IEEE-exact. Cost: a 10-row fraction attach
     * over the bucket-grain frame (grows with time span, not event
@@ -776,34 +622,23 @@ object R10 {
   def learningCurveSql(events: String, bucket: String,
                        hash: String => String, mstr: String => String,
                        mat: String): String = {
-    def dsum(term: String, name: String) =
-      s"CAST(sum(CAST(round($term, 9) AS DECIMAL(28,9))) AS DOUBLE) AS $name"
-    def mc(t: String) =
-      s"""round(CAST(sum(CAST(CASE WHEN event_type = '$t' THEN value END
-         |        AS DECIMAL(18,6))) AS DOUBLE)
-         |      / count(CASE WHEN event_type = '$t' THEN value END), 6)"""
-        .stripMargin
-    def det3(m: Seq[String]): String = {
-      val Seq(a, b, c, d, e, f, g, h, i) = m
-      s"($a * ($e * $i - $f * $h) - $b * ($d * $i - $f * $g) + $c * ($d * $h - $e * $g))"
-    }
     // ridge normal matrix: intercept row unpenalized, +1 on the
     // feature diagonal (double + integer literal — no decimal literal)
-    val hDet = det3(Seq("sw", "s1", "s2",
-      "s1", "(s11 + 1)", "s12", "s2", "s12", "(s22 + 1)"))
-    val d0 = det3(Seq("sy", "s1", "s2",
-      "s1y", "(s11 + 1)", "s12", "s2y", "s12", "(s22 + 1)"))
-    val d1 = det3(Seq("sw", "sy", "s2",
-      "s1", "s1y", "s12", "s2", "s2y", "(s22 + 1)"))
-    val d2 = det3(Seq("sw", "s1", "sy",
-      "s1", "(s11 + 1)", "s1y", "s2", "s12", "s2y"))
+    val hDet = det3("sw", "s1", "s2",
+      "s1", "(s11 + 1)", "s12", "s2", "s12", "(s22 + 1)")
+    val d0 = det3("sy", "s1", "s2",
+      "s1y", "(s11 + 1)", "s12", "s2y", "s12", "(s22 + 1)")
+    val d1 = det3("sw", "sy", "s2",
+      "s1", "s1y", "s12", "s2", "s2y", "(s22 + 1)")
+    val d2 = det3("sw", "s1", "sy",
+      "s1", "(s11 + 1)", "s1y", "s2", "s12", "s2y")
     val fracs = (1 to 10).map(f => s"SELECT $f AS f").mkString(" UNION ALL ")
     s"""WITH b AS $mat (
        |  SELECT bucket, x1, x2, y FROM (
        |    SELECT $bucket AS bucket,
-       |      ${mc("click")} AS x1,
-       |      ${mc("view")} AS x2,
-       |      ${mc("purchase")} AS y
+       |      ${typeMean("click")} AS x1,
+       |      ${typeMean("view")} AS x2,
+       |      ${typeMean("purchase")} AS y
        |    FROM $events
        |    WHERE event_type IN ('click', 'view', 'purchase')
        |    GROUP BY 1) t
@@ -865,31 +700,20 @@ object R10 {
     * One row out. */
   def residualDiagnosticsSql(events: String, bucket: String,
                              mat: String): String = {
-    def dsum(term: String, name: String) =
-      s"CAST(sum(CAST(round($term, 9) AS DECIMAL(28,9))) AS DOUBLE) AS $name"
-    def mc(t: String) =
-      s"""round(CAST(sum(CAST(CASE WHEN event_type = '$t' THEN value END
-         |        AS DECIMAL(18,6))) AS DOUBLE)
-         |      / count(CASE WHEN event_type = '$t' THEN value END), 6)"""
-        .stripMargin
-    def det3(m: Seq[String]): String = {
-      val Seq(a, b, c, d, e, f, g, h, i) = m
-      s"($a * ($e * $i - $f * $h) - $b * ($d * $i - $f * $g) + $c * ($d * $h - $e * $g))"
-    }
-    val hDet = det3(Seq("sw", "s1", "s2",
-      "s1", "(s11 + 1)", "s12", "s2", "s12", "(s22 + 1)"))
-    val d0 = det3(Seq("sy", "s1", "s2",
-      "s1y", "(s11 + 1)", "s12", "s2y", "s12", "(s22 + 1)"))
-    val d1 = det3(Seq("sw", "sy", "s2",
-      "s1", "s1y", "s12", "s2", "s2y", "(s22 + 1)"))
-    val d2 = det3(Seq("sw", "s1", "sy",
-      "s1", "(s11 + 1)", "s1y", "s2", "s12", "s2y"))
+    val hDet = det3("sw", "s1", "s2",
+      "s1", "(s11 + 1)", "s12", "s2", "s12", "(s22 + 1)")
+    val d0 = det3("sy", "s1", "s2",
+      "s1y", "(s11 + 1)", "s12", "s2y", "s12", "(s22 + 1)")
+    val d1 = det3("sw", "sy", "s2",
+      "s1", "s1y", "s12", "s2", "s2y", "(s22 + 1)")
+    val d2 = det3("sw", "s1", "sy",
+      "s1", "(s11 + 1)", "s1y", "s2", "s12", "s2y")
     s"""WITH b AS $mat (
        |  SELECT bucket, x1, x2, y FROM (
        |    SELECT $bucket AS bucket,
-       |      ${mc("click")} AS x1,
-       |      ${mc("view")} AS x2,
-       |      ${mc("purchase")} AS y
+       |      ${typeMean("click")} AS x1,
+       |      ${typeMean("view")} AS x2,
+       |      ${typeMean("purchase")} AS y
        |    FROM $events
        |    WHERE event_type IN ('click', 'view', 'purchase')
        |    GROUP BY 1) t
@@ -930,7 +754,7 @@ object R10 {
   }
 
   /** EXACT AUC-ROC (`ml_auc_roc`, r11): the threshold-free companion of
-    * [[thresholdSweepSql]] — the single number a model report leads
+    * [[thresholdSweepChain]] — the single number a model report leads
     * with, computed EXACTLY via the Mann–Whitney rank identity
     * AUC = (R₁ − n₁(n₁+1)/2)/(n₁n₀) over the same converged logistic
     * scores. Ties (grid-9 scores CAN collide) take average ranks; the
@@ -939,57 +763,26 @@ object R10 {
     * discipline applied to model scores. The one window is an
     * unpartitioned rank over the model-sized score frame (bounded —
     * the huber class); AUC and Gini are output-only grid-6 divisions
-    * of exact integers. Single consumer of `p5`, so one shared text
-    * serves both engines (no re-expansion — contrast the sweep). */
-  def aucRocSql(events: String, bucket: String, median: String,
-                mat: String): String =
-    s"""${logisticPrefix(events, bucket, median, mat)},
-       |ranked AS (
-       |  SELECT y,
-       |    rank() OVER (ORDER BY p ASC) AS rmin,
-       |    count(*) OVER (PARTITION BY p) AS tie_n
-       |  FROM p5),
-       |ag AS (
-       |  SELECT
-       |    CAST(sum(CASE WHEN y = 1 THEN 2 * rmin + tie_n - 1 ELSE 0 END)
-       |      AS BIGINT) AS r2,
-       |    CAST(sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-       |    CAST(sum(CASE WHEN y = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_neg
-       |  FROM ranked)
-       |SELECT n_pos, n_neg,
-       |  r2 - n_pos * (n_pos + 1) AS u2,
-       |  round((r2 - n_pos * (n_pos + 1)) / (2 * n_pos * n_neg), 6) AS auc,
-       |  round((r2 - n_pos * (n_pos + 1)) / (n_pos * n_neg) - 1, 6) AS gini
-       |FROM ag""".stripMargin
+    * of exact integers. */
+  def aucRocChain(events: String, bucket: String, median: String): StepChain =
+    StepChain(logisticScoredSteps(events, bucket, median), r =>
+      s"""SELECT n_pos, n_neg,
+         |  r2 - n_pos * (n_pos + 1) AS u2,
+         |  round((r2 - n_pos * (n_pos + 1)) / (2 * n_pos * n_neg), 6) AS auc,
+         |  round((r2 - n_pos * (n_pos + 1)) / (n_pos * n_neg) - 1, 6) AS gini
+         |FROM (
+         |  SELECT
+         |    CAST(sum(CASE WHEN y = 1 THEN 2 * rmin + tie_n - 1 ELSE 0 END)
+         |      AS BIGINT) AS r2,
+         |    CAST(sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
+         |    CAST(sum(CASE WHEN y = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_neg
+         |  FROM (
+         |    SELECT y,
+         |      rank() OVER (ORDER BY p ASC) AS rmin,
+         |      count(*) OVER (PARTITION BY p) AS tie_n
+         |    FROM ${r("p5")}) ranked) ag""".stripMargin)
 
-  /** Spark execution path: score once through [[logisticPrefix]],
-    * localCheckpoint the model-sized (y, p) frame, sweep over the view.
-    * The decile-sized sweep result is collected EAGERLY so the temp
-    * view and the checkpointed frame can be released in `finally` — a
-    * long-lived session invoking this repeatedly must not accumulate
-    * catalog entries or persisted blocks (the gbtStumpsSpark
-    * discipline; the Bench unpersist sweep exists for strays, not as
-    * license to leak). */
-  def thresholdSweepSpark(s: SparkSession, events: String, bucket: String,
-                          median: String, view: String): DataFrame = {
-    val views = scala.collection.mutable.ArrayBuffer.empty[String]
-    try {
-      // stepwise chain (r16) instead of the one unrolled prefix text —
-      // same arithmetic, ~5 s less Catalyst per invocation
-      logisticChainSpark(s, events, bucket, median, view, views)
-      val scored = s.sql(
-          s"SELECT y, p FROM (${lgScoreSql(s"${view}_bl", s"${view}_c4")}) sc")
-        .localCheckpoint()
-      scored.createOrReplaceTempView(view)
-      views += view
-      val out = s.sql(s"WITH ${sweepBody(view, "percentile")}")
-      val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-      out.collect().foreach(rows.add)
-      s.createDataFrame(rows, out.schema)
-    } finally graft.plans.Blocks.dropViewsAndFree(s, views)
-  }
-
-  // ---- gradient-boosted stumps (shared SQL template) ----------------------
+  // ---- gradient-boosted stumps (step chain) -------------------------------
 
   /** GRADIENT BOOSTING as a FULL oracle row — the tree family the
     * registry could only ship rows-only (`ml_random_forest`/`ml_gbt`
@@ -1005,136 +798,51 @@ object R10 {
     * are grid means and the residual update r ← round(r − ν·leaf, 6)
     * with ν = 0.5. Output: per-round (threshold, leaf values, training
     * SSE) — SSE is non-increasing by construction, pinned in R10Spec.
-    * The seeded-MLlib `ml_gbt` stays the library surface. */
-  private def gbtMc(t: String) =
-    s"""round(CAST(sum(CAST(CASE WHEN event_type = '$t' THEN value END
-       |        AS DECIMAL(18,6))) AS DOUBLE)
-       |      / count(CASE WHEN event_type = '$t' THEN value END), 6)"""
-      .stripMargin
-  // r lives on the exact 1e-7 grid as DECIMAL(15,7) (leaves are grid-6,
-  // nu = 0.5 makes every increment scale-7): the update NEVER rounds, so
-  // no midpoint ever meets an engine-specific round(). r^2 at scale 14
-  // stays inside DECIMAL(31,14)/sum(38,14) exactly on both engines.
-  private def gbtSse(src: String) =
-    "round(CAST(sum(CAST(CAST(r AS DECIMAL(19,7)) * CAST(r AS DECIMAL(19,7))" +
-      s" AS DECIMAL(38,14))) AS DOUBLE), 6) AS sse FROM $src"
-
-  def gbtStumpsSql(events: String, bucket: String, mat: String): String = {
-    def mc(t: String) = gbtMc(t)
-    def sse(src: String) = gbtSse(src)
-    val iters = (1 to 6).map { i =>
-      val p = i - 1
-      s"""cum$i AS $mat (
-         |  SELECT bucket, x, r,
-         |    count(*) OVER (ORDER BY x, bucket
-         |      ROWS UNBOUNDED PRECEDING) AS cn,
-         |    sum(r) OVER (ORDER BY x, bucket
-         |      ROWS UNBOUNDED PRECEDING) AS cs,
-         |    row_number() OVER (PARTITION BY x ORDER BY bucket DESC) AS lastx
-         |  FROM s$p),
-         |agg$i AS $mat (
-         |  SELECT count(*) AS n, sum(r) AS s,
-         |    max(x) AS mx
-         |  FROM s$p),
-         |best$i AS $mat (
-         |  SELECT x AS thr,
-         |    round(CAST(cs AS DOUBLE) / cn, 6) + 0.0 AS lm,
-         |    round(CAST(s - cs AS DOUBLE) / (n - cn), 6) + 0.0 AS rm
-         |  FROM (
-         |    SELECT c.x, c.cn, c.cs, a.n, a.s,
-         |      row_number() OVER (ORDER BY
-         |        (CAST(c.cs AS DOUBLE) * CAST(c.cs AS DOUBLE)) / c.cn
-         |          + (CAST(a.s - c.cs AS DOUBLE) * CAST(a.s - c.cs AS DOUBLE))
-         |            / (a.n - c.cn) DESC,
-         |        c.x ASC) AS rk
-         |    FROM cum$i c, agg$i a
-         |    WHERE c.lastx = 1 AND c.x < a.mx) t
-         |  WHERE rk = 1),
-         |s$i AS $mat (
-         |  SELECT s.bucket, s.x,
-         |    CAST(s.r - CAST(CAST((CASE WHEN s.x <= b.thr THEN b.lm
-         |        ELSE b.rm END) AS DECIMAL(18,6)) * CAST(0.5 AS DECIMAL(2,1))
-         |      AS DECIMAL(19,7)) AS DECIMAL(15,7)) AS r
-         |  FROM s$p s, best$i b),
-         |met$i AS $mat (SELECT ${sse(s"s$i")})""".stripMargin
-    }.mkString(",\n")
-    val arms = (1 to 6).map(i =>
-      s"SELECT $i AS iter, b.thr AS threshold, b.lm AS left_val, " +
-        s"b.rm AS right_val, m.sse AS train_sse FROM best$i b, met$i m")
-      .mkString("\n  UNION ALL ")
-    s"""WITH base AS $mat (
-       |  SELECT bucket, x, y FROM (
-       |    SELECT $bucket AS bucket,
-       |      ${mc("click")} AS x,
-       |      ${mc("purchase")} AS y
-       |    FROM $events WHERE event_type IN ('click', 'purchase')
-       |    GROUP BY 1) t
-       |  WHERE x IS NOT NULL AND y IS NOT NULL),
-       |f0 AS $mat (
-       |  SELECT round(CAST(sum(CAST(y AS DECIMAL(18,6))) AS DOUBLE)
-       |    / count(*), 6) AS f FROM base),
-       |s0 AS $mat (
-       |  SELECT base.bucket, base.x,
-       |    CAST(CAST(base.y AS DECIMAL(18,6)) - CAST(f0.f AS DECIMAL(18,6))
-       |      AS DECIMAL(15,7)) AS r
-       |  FROM base, f0),
-       |met0 AS $mat (SELECT ${sse("s0")}),
-       |$iters
-       |SELECT iter, threshold, left_val, right_val, train_sse FROM (
-       |  SELECT 0 AS iter, CAST(0.0 AS DOUBLE) AS threshold,
-       |    f0.f AS left_val, f0.f AS right_val, met0.sse AS train_sse
-       |  FROM f0, met0
-       |  UNION ALL $arms) u
-       |ORDER BY iter""".stripMargin
-  }
-
-  /** Spark-side executor of the SAME boosting arithmetic as
-    * `gbtStumpsSql`, run as a per-round MATERIALIZED loop instead of the
-    * one unrolled text: each round's residual frame is localCheckpoint-ed
-    * and re-exposed as a temp view, so Catalyst plans ONE round at a
-    * time. The single text references each s_i from three sibling CTEs
-    * (cum/agg/step); Spark has no MATERIALIZED hint and re-expands the
-    * chain into a plan tree exponential in rounds (~350 s of planning at
-    * sf0.1 — the round-9 chained-CTE lesson, which DuckDB's
-    * `AS MATERIALIZED` sidesteps on the oracle side). Every expression
-    * below is textually the template's, so the hash gate is unchanged;
-    * only the final 7-row result is collected (aggregate-sized). */
-  def gbtStumpsSpark(s: SparkSession, events: String,
-                     bucket: String): DataFrame = {
-    val tag = s"gbt_v${sqlRuns.incrementAndGet()}"
-    val views = scala.collection.mutable.ArrayBuffer.empty[String]
-    def mkView(n: String, sql: String): String = {
-      val v = s"${tag}_$n"
-      s.sql(sql).localCheckpoint().createOrReplaceTempView(v)
-      views += v
-      v
-    }
-    try {
-      val b = mkView("base",
+    * When no split candidate is left (every x equal), `best{i}` is empty
+    * and so is every later round: only the rounds before it are
+    * emitted. The seeded-MLlib `ml_gbt` stays the library surface.
+    *
+    * Each round's residual frame `s{i}` is read by three consumers (the
+    * prefix window, the totals and the update), so as one unrolled text
+    * Spark re-expands the chain into a plan tree exponential in rounds
+    * (~350 s of planning at sf0.1); as
+    * a [[StepChain]] each round is planned over checkpointed views. */
+  def gbtStumpsChain(events: String, bucket: String): StepChain = {
+    // r lives on the exact 1e-7 grid as DECIMAL(15,7) (leaves are grid-6,
+    // nu = 0.5 makes every increment scale-7): the update NEVER rounds, so
+    // no midpoint ever meets an engine-specific round(). r^2 at scale 14
+    // stays inside DECIMAL(31,14)/sum(38,14) exactly on both engines.
+    def sse(src: String) =
+      "SELECT round(CAST(sum(CAST(CAST(r AS DECIMAL(19,7)) * CAST(r AS DECIMAL(19,7))" +
+        s" AS DECIMAL(38,14))) AS DOUBLE), 6) AS sse FROM $src"
+    // one output row per round, so the tail is a plain union
+    def row(i: Int, leaf: String, src: String, resid: String) =
+      s"""SELECT $i AS iter, $leaf, m.sse AS train_sse
+         |FROM $src, (${sse(resid)}) m""".stripMargin
+    val start = Seq(
+      Step("base", _ =>
         s"""SELECT bucket, x, y FROM (
            |  SELECT $bucket AS bucket,
-           |    ${gbtMc("click")} AS x,
-           |    ${gbtMc("purchase")} AS y
+           |    ${typeMean("click")} AS x,
+           |    ${typeMean("purchase")} AS y
            |  FROM $events WHERE event_type IN ('click', 'purchase')
            |  GROUP BY 1) t
-           |WHERE x IS NOT NULL AND y IS NOT NULL""".stripMargin)
-      val f0v = mkView("f0",
+           |WHERE x IS NOT NULL AND y IS NOT NULL""".stripMargin),
+      Step("f0", r =>
         s"""SELECT round(CAST(sum(CAST(y AS DECIMAL(18,6))) AS DOUBLE)
-           |  / count(*), 6) AS f FROM $b""".stripMargin)
-      var sv = mkView("s0",
-        s"""SELECT $b.bucket, $b.x,
-           |  CAST(CAST($b.y AS DECIMAL(18,6)) - CAST($f0v.f AS DECIMAL(18,6))
+           |  / count(*), 6) AS f FROM ${r("base")}""".stripMargin),
+      Step("s0", r =>
+        s"""SELECT b.bucket, b.x,
+           |  CAST(CAST(b.y AS DECIMAL(18,6)) - CAST(f.f AS DECIMAL(18,6))
            |    AS DECIMAL(15,7)) AS r
-           |FROM $b, $f0v""".stripMargin)
-      def sseOf(src: String): Double =
-        s.sql(s"SELECT ${gbtSse(src)}").collect()(0).getDouble(0)
-      val f = s.table(f0v).collect()(0).getDouble(0)
-      val rows = scala.collection.mutable.ArrayBuffer(
-        (0, 0.0, f, f, sseOf(sv)))
-      var i = 1
-      var stop = false
-      while (i <= 6 && !stop) {
-        val bestV = mkView(s"best$i",
+           |FROM ${r("base")} b, ${r("f0")} f""".stripMargin),
+      Step("row0", r => row(0,
+        "CAST(0.0 AS DOUBLE) AS threshold, f.f AS left_val, f.f AS right_val",
+        s"${r("f0")} f", r("s0"))))
+    val rounds = (1 to 6).flatMap { i =>
+      val p = i - 1
+      Seq(
+        Step(s"best$i", r =>
           s"""WITH cum AS (
              |  SELECT bucket, x, r,
              |    count(*) OVER (ORDER BY x, bucket
@@ -1142,11 +850,11 @@ object R10 {
              |    sum(r) OVER (ORDER BY x, bucket
              |      ROWS UNBOUNDED PRECEDING) AS cs,
              |    row_number() OVER (PARTITION BY x ORDER BY bucket DESC) AS lastx
-             |  FROM $sv),
+             |  FROM ${r(s"s$p")}),
              |agg AS (
              |  SELECT count(*) AS n, sum(r) AS s,
              |    max(x) AS mx
-             |  FROM $sv)
+             |  FROM ${r(s"s$p")})
              |SELECT x AS thr,
              |  round(CAST(cs AS DOUBLE) / cn, 6) + 0.0 AS lm,
              |  round(CAST(s - cs AS DOUBLE) / (n - cn), 6) + 0.0 AS rm
@@ -1159,27 +867,25 @@ object R10 {
              |      c.x ASC) AS rk
              |  FROM cum c, agg a
              |  WHERE c.lastx = 1 AND c.x < a.mx) t
-             |WHERE rk = 1""".stripMargin)
-        val best = s.table(bestV).collect()
-        if (best.isEmpty) stop = true
-        else {
-          val sNew = mkView(s"s$i",
-            s"""SELECT s.bucket, s.x,
-               |  CAST(s.r - CAST(CAST((CASE WHEN s.x <= b.thr THEN b.lm
-               |      ELSE b.rm END) AS DECIMAL(18,6)) * CAST(0.5 AS DECIMAL(2,1))
-               |    AS DECIMAL(19,7)) AS DECIMAL(15,7)) AS r
-               |FROM $sv s, $bestV b""".stripMargin)
-          rows += ((i, best(0).getDouble(0), best(0).getDouble(1),
-            best(0).getDouble(2), sseOf(sNew)))
-          sv = sNew
-          i += 1
-        }
-      }
-      import s.implicits._
-      rows.toSeq
-        .toDF("iter", "threshold", "left_val", "right_val", "train_sse")
-        .orderBy("iter")
-    } finally graft.plans.Blocks.dropViewsAndFree(s, views)
+             |WHERE rk = 1""".stripMargin),
+        Step(s"s$i", r =>
+          s"""SELECT s.bucket, s.x,
+             |  CAST(s.r - CAST(CAST((CASE WHEN s.x <= b.thr THEN b.lm
+             |      ELSE b.rm END) AS DECIMAL(18,6)) * CAST(0.5 AS DECIMAL(2,1))
+             |    AS DECIMAL(19,7)) AS DECIMAL(15,7)) AS r
+             |FROM ${r(s"s$p")} s, ${r(s"best$i")} b""".stripMargin),
+        Step(s"row$i", r => row(i,
+          "b.thr AS threshold, b.lm AS left_val, b.rm AS right_val",
+          s"${r(s"best$i")} b", r(s"s$i"))))
+    }
+    StepChain(start ++ rounds, r => {
+      val arms = (0 to 6).map(i =>
+        s"SELECT iter, threshold, left_val, right_val, train_sse FROM ${r(s"row$i")}")
+        .mkString("\n  UNION ALL ")
+      s"""SELECT iter, threshold, left_val, right_val, train_sse FROM (
+         |  $arms) u
+         |ORDER BY iter""".stripMargin
+    })
   }
 
   // ---- online SGD (executor fold + recursive-CTE twin) ---------------------
@@ -1616,115 +1322,53 @@ object R10 {
 
   /** COX PROPORTIONAL HAZARDS as a FULL oracle row — the regression
     * counterpart of `stat_logrank` on the SAME session-survival frame
-    * (covariate x = weekend start, Breslow tie handling): 4 unrolled
-    * Newton steps on the partial likelihood. With a binary covariate
-    * every risk-set sum collapses onto the integer (n1, n0, d1, d0)
-    * frame — S0 = n0 + n1·e^β, S1 = S2 = n1·e^β — so the score
-    * U(β) = Σ_t [d1 − d·S1/S0] and information I(β) = Σ_t d·(S1/S0)·
-    * (1 − S1/S0) are fixed expressions over identical doubles (e^β of a
-    * GRIDDED argument; per-term 1e-9 rounds + DECIMAL sums; I=0 guard).
-    * Iteration 0's (score, info) ARE the log-rank test's (O−E, V) — the
-    * score-test identity R10Spec pins against `stat_logrank`'s output.
-    * Output: per-iteration β, hazard ratio e^β, score, info, SE(β) —
-    * the final score ≈ 0 is the convergence evidence in the row. */
-  /** Standalone query emitting the (t, d1, d0, n1, n0) risk frame —
-    * the Spark side materializes it ONCE (localCheckpoint + temp view)
-    * before the Newton chain; the twin wraps it as a MATERIALIZED CTE.
-    * Without this, the c-chain's double reference per step would
-    * re-inline the whole session pipeline 2^steps times in BOTH
-    * engines (the r9 CTE-re-evaluation lesson, preempted). */
-  def sessionRiskFrameSql(events: String, epochUs: String,
-                          idiv: String, mat: String = ""): String =
-    s"""${sessionRiskSql(events, epochUs, idiv, mat)}
-       |SELECT t, d1, d0, n1, n0 FROM rk""".stripMargin
-
-  /** The Newton chain over a pre-materialized risk frame `rkRef`;
-    * `prefix` lets the twin prepend `rk AS MATERIALIZED (…),`. */
-  def coxPhSql(rkRef: String, prefix: String): String = {
-    def dsum(term: String, name: String) =
+    * (covariate x = weekend start, Breslow tie handling): 4 Newton steps
+    * on the partial likelihood. With a binary covariate every risk-set
+    * sum collapses onto the integer (n1, n0, d1, d0) frame — S0 = n0 +
+    * n1·e^β, S1 = S2 = n1·e^β — so the score U(β) = Σ_t [d1 − d·S1/S0]
+    * and information I(β) = Σ_t d·(S1/S0)·(1 − S1/S0) are fixed
+    * expressions over identical doubles (e^β of a GRIDDED argument;
+    * per-term 1e-9 rounds + DECIMAL sums; I=0 guard). Iteration 0's
+    * (score, info) ARE the log-rank test's (O−E, V) — the score-test
+    * identity R10Spec pins against `stat_logrank`'s output. Output:
+    * per-iteration β, hazard ratio e^β, score, info, SE(β) — the final
+    * score ≈ 0 is the convergence evidence in the row.
+    *
+    * The risk frame is the chain's first step `rk`, so it is computed
+    * once and every Newton step reads it materialized (inlined, each
+    * step's double reference would re-expand the session pipeline
+    * 2^steps times); the 1-row moment
+    * (m) and coefficient (c) steps keep Catalyst's plans small. */
+  def coxPhChain(events: String, epochUs: String, idiv: String): StepChain = {
+    // the per-term rounding happens inside u_t / i_t
+    def decSum(term: String, name: String) =
       s"CAST(sum(CAST($term AS DECIMAL(28,9))) AS DOUBLE) AS $name"
-    val stages = (1 to 5).map { k =>
+    val start = Seq(
+      Step("rk", _ =>
+        s"""${sessionRiskSql(events, epochUs, idiv)}
+           |SELECT t, d1, d0, n1, n0 FROM rk""".stripMargin),
+      Step("c0", _ => "SELECT CAST(0.0 AS DOUBLE) AS b"))
+    val newton = (1 to 5).flatMap { k =>
       val p = k - 1
-      val upd =
-        if (k == 5) ""
-        else
-          s""",
-             |c$k AS (
-             |  SELECT CASE WHEN m$k.info = 0.0 THEN c$p.b
-             |    ELSE round(c$p.b + m$k.score / m$k.info, 9) END AS b
-             |  FROM m$k, c$p)""".stripMargin
-      s"""t$k AS (
-         |  SELECT
-         |    round(d1 - (d1 + d0) * s1 / s0, 9) AS u_t,
-         |    round((d1 + d0) * (s1 / s0) * (1.0 - s1 / s0), 9) AS i_t
-         |  FROM (
-         |    SELECT r.d1, r.d0,
-         |      r.n0 + r.n1 * round(exp(c.b), 9) AS s0,
-         |      r.n1 * round(exp(c.b), 9) AS s1
-         |    FROM $rkRef r, c$p c WHERE r.d1 + r.d0 > 0) q),
-         |m$k AS (
-         |  SELECT ${dsum("u_t", "score")}, ${dsum("i_t", "info")}
-         |  FROM t$k)$upd""".stripMargin
-    }.mkString(",\n")
-    val arms = (0 to 4).map { i =>
-      s"""SELECT $i AS iter, c$i.b + 0.0 AS beta,
-         |    round(exp(c$i.b), 6) AS hazard_ratio,
-         |    round(m${i + 1}.score, 6) + 0.0 AS score,
-         |    round(m${i + 1}.info, 6) AS info,
-         |    CASE WHEN m${i + 1}.info = 0.0 THEN 0.0
-         |         ELSE round(1.0 / sqrt(m${i + 1}.info), 6) END AS se_beta
-         |  FROM c$i, m${i + 1}""".stripMargin
-    }.mkString("\n  UNION ALL ")
-    s"""WITH $prefix c0 AS (SELECT CAST(0.0 AS DOUBLE) AS b),
-       |$stages
-       |SELECT iter, beta, hazard_ratio, score, info, se_beta
-       |FROM (
-       |  $arms) u
-       |ORDER BY iter""".stripMargin
-  }
-
-  /** Spark-side executor of the SAME Cox Newton arithmetic as
-    * [[coxPhSql]], run stepwise (r17; the `logisticChainSpark` pattern,
-    * VERDICT r16 #7): the monolith's 15-CTE chain references each c/m
-    * frame from multiple sibling CTEs, so Catalyst re-expands the tree
-    * per consumer and the query pays seconds of FIXED analysis +
-    * optimization on a risk frame whose actual task time is tens of ms.
-    * Stepwise, each step's moment (m) and coefficient (c) frames are
-    * 1-row localCheckpoint views and the risk-frame scan stays lazy
-    * inside its step's small plan. Every expression below is textually
-    * [[coxPhSql]]'s (modulo view-name references), so the result — and
-    * the DuckDB oracle, which keeps the monolith — is unchanged. */
-  def coxPhSpark(s: SparkSession, rkRef: String, tag: String): DataFrame = {
-    val views = scala.collection.mutable.ArrayBuffer.empty[String]
-    def mkView(n: String, sql: String): String = {
-      val v = s"${tag}_$n"
-      s.sql(sql).localCheckpoint().createOrReplaceTempView(v)
-      views += v
-      v
+      val m = Step(s"m$k", r =>
+        s"""SELECT ${decSum("u_t", "score")}, ${decSum("i_t", "info")}
+           |FROM (
+           |  SELECT
+           |    round(d1 - (d1 + d0) * s1 / s0, 9) AS u_t,
+           |    round((d1 + d0) * (s1 / s0) * (1.0 - s1 / s0), 9) AS i_t
+           |  FROM (
+           |    SELECT r.d1, r.d0,
+           |      r.n0 + r.n1 * round(exp(c.b), 9) AS s0,
+           |      r.n1 * round(exp(c.b), 9) AS s1
+           |    FROM ${r("rk")} r, ${r(s"c$p")} c WHERE r.d1 + r.d0 > 0) q) t$k"""
+          .stripMargin)
+      val c = Step(s"c$k", r =>
+        s"""SELECT CASE WHEN m.info = 0.0 THEN c.b
+           |  ELSE round(c.b + m.score / m.info, 9) END AS b
+           |FROM ${r(s"m$k")} m, ${r(s"c$p")} c""".stripMargin)
+      if (k < 5) Seq(m, c) else Seq(m)
     }
-    def dsum(term: String, name: String) =
-      s"CAST(sum(CAST($term AS DECIMAL(28,9))) AS DOUBLE) AS $name"
-    try {
-      mkView("c0", "SELECT CAST(0.0 AS DOUBLE) AS b")
-      for (k <- 1 to 5) {
-        val p = k - 1
-        val mV = mkView(s"m$k",
-          s"""SELECT ${dsum("u_t", "score")}, ${dsum("i_t", "info")}
-             |FROM (
-             |  SELECT
-             |    round(d1 - (d1 + d0) * s1 / s0, 9) AS u_t,
-             |    round((d1 + d0) * (s1 / s0) * (1.0 - s1 / s0), 9) AS i_t
-             |  FROM (
-             |    SELECT r.d1, r.d0,
-             |      r.n0 + r.n1 * round(exp(c.b), 9) AS s0,
-             |      r.n1 * round(exp(c.b), 9) AS s1
-             |    FROM $rkRef r, ${tag}_c$p c WHERE r.d1 + r.d0 > 0) q) t$k"""
-            .stripMargin)
-        if (k < 5) mkView(s"c$k",
-          s"""SELECT CASE WHEN m.info = 0.0 THEN c.b
-             |  ELSE round(c.b + m.score / m.info, 9) END AS b
-             |FROM $mV m, ${tag}_c$p c""".stripMargin)
-      }
+    StepChain(start ++ newton, r => {
       val arms = (0 to 4).map { i =>
         s"""SELECT $i AS iter, c.b + 0.0 AS beta,
            |    round(exp(c.b), 6) AS hazard_ratio,
@@ -1732,17 +1376,13 @@ object R10 {
            |    round(m.info, 6) AS info,
            |    CASE WHEN m.info = 0.0 THEN 0.0
            |         ELSE round(1.0 / sqrt(m.info), 6) END AS se_beta
-           |  FROM ${tag}_c$i c, ${tag}_m${i + 1} m""".stripMargin
+           |  FROM ${r(s"c$i")} c, ${r(s"m${i + 1}")} m""".stripMargin
       }.mkString("\n  UNION ALL ")
-      val out = s.sql(
-        s"""SELECT iter, beta, hazard_ratio, score, info, se_beta
-           |FROM (
-           |  $arms) u
-           |ORDER BY iter""".stripMargin)
-      val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-      out.collect().foreach(rows.add)
-      s.createDataFrame(rows, out.schema)
-    } finally graft.plans.Blocks.dropViewsAndFree(s, views)
+      s"""SELECT iter, beta, hazard_ratio, score, info, se_beta
+         |FROM (
+         |  $arms) u
+         |ORDER BY iter""".stripMargin
+    })
   }
 
   // ---- Gaussian mixture by EM (shared SQL template) -----------------------
@@ -1767,8 +1407,6 @@ object R10 {
     * `ml_gmm_clusters` stays the library surface. */
   def gmmEmSql(events: String, bucket: String, pct: String,
                mat: String): String = {
-    def dsum(term: String, name: String) =
-      s"CAST(sum(CAST(round($term, 9) AS DECIMAL(28,9))) AS DOUBLE) AS $name"
     val ln2pi = "1.8378770664093453"
     val stages = (1 to 5).map { k =>
       val p = k - 1
@@ -2357,24 +1995,24 @@ object R10 {
     }),
 
     "ml_logistic_newton" -> ((s, d) => withEventsView(s, d) { v =>
-      logisticNewtonSpark(s, v, "ts_ns div 1800000000000",
-        "percentile(p_raw, 0.5)", s"lognt_v${sqlRuns.incrementAndGet()}")
+      logisticNewtonChain(v, "ts_ns div 1800000000000",
+        "percentile(p_raw, 0.5)").run(s)
     }),
 
     /** The τ OPERATING SWEEP over the same converged logistic model —
-      * see `thresholdSweepSql`: per-threshold exact confusion counts +
+      * see `thresholdSweepChain`: per-threshold exact confusion counts +
       * output-only precision/recall/F1. */
     "ml_threshold_sweep" -> ((s, d) => withEventsView(s, d) { v =>
-      thresholdSweepSpark(s, v, "ts_ns div 1800000000000",
-        "percentile(p_raw, 0.5)", s"sweep_sc_v${sqlRuns.incrementAndGet()}")
+      thresholdSweepChain(v, "ts_ns div 1800000000000",
+        "percentile(p_raw, 0.5)", "percentile").run(s)
     }),
 
     /** EXACT Mann–Whitney AUC over the same converged logistic scores —
-      * see `aucRocSql`: 2·R₁ integer rank carry, ties averaged,
+      * see `aucRocChain`: 2·R₁ integer rank carry, ties averaged,
       * AUC/Gini output-only. */
     "ml_auc_roc" -> ((s, d) => withEventsView(s, d) { v =>
-      aucRocSpark(s, v, "ts_ns div 1800000000000",
-        "percentile(p_raw, 0.5)", s"aucroc_v${sqlRuns.incrementAndGet()}")
+      aucRocChain(v, "ts_ns div 1800000000000",
+        "percentile(p_raw, 0.5)").run(s)
     }),
 
     /** Held-out error vs training-set size — see `learningCurveSql`:
@@ -2393,7 +2031,7 @@ object R10 {
     }),
 
     "ml_gbt_stumps" -> ((s, d) => withEventsView(s, d) { v =>
-      gbtStumpsSpark(s, v, "ts_ns div 1800000000000")
+      gbtStumpsChain(v, "ts_ns div 1800000000000").run(s)
     }),
 
     /** The watermark-GATED left-outer stream-stream join — see
@@ -2410,24 +2048,10 @@ object R10 {
       s.sql(logrankSql(v, "ts_ns div 1000", "div"))
     }),
 
-    /** Cox PH over the session frame: the risk frame is materialized
-      * ONCE (localCheckpoint + temp view) before the Newton chain — see
-      * `coxPhSql`'s Scaladoc for why inlining it would be 2^steps. */
+    /** Cox PH over the session frame — see `coxPhChain`: the risk
+      * frame is the chain's first step, materialized once. */
     "ml_cox_ph" -> ((s, d) => withEventsView(s, d) { v =>
-      val n = sqlRuns.incrementAndGet()
-      val rkv = s"cox_rk_v$n"
-      val rk = s.sql(sessionRiskFrameSql(v, "ts_ns div 1000", "div"))
-        .localCheckpoint()
-      try {
-        rk.createOrReplaceTempView(rkv)
-        // stepwise chain (r17) instead of the one unrolled monolith —
-        // same arithmetic, the Catalyst re-expansion tax gone; the
-        // DuckDB oracle keeps the monolith (coxPhSql)
-        coxPhSpark(s, rkv, s"cox_ch_v$n")
-      } finally {
-        s.catalog.dropTempView(rkv)
-        graft.plans.Blocks.free(rk)
-      }
+      coxPhChain(v, "ts_ns div 1000", "div").run(s)
     }),
 
     "ml_gmm_em" -> ((s, d) => withEventsView(s, d) { v =>
@@ -3271,10 +2895,7 @@ object R10 {
     val types = Seq("click", "error", "purchase", "signup", "view")
     val vars = types :+ "y"
     val cases = types.map { t =>
-      s"""round(CAST(sum(CAST(CASE WHEN event_type = '$t' THEN value END
-         |        AS DECIMAL(18,6))) AS DOUBLE)
-         |      / count(CASE WHEN event_type = '$t' THEN value END), 6) AS $t"""
-        .stripMargin
+      s"${typeMean(t)} AS $t"
     }.mkString(",\n    ")
     val notNull = vars.map(v => s"$v IS NOT NULL").mkString(" AND ")
     val sums = vars.zipWithIndex.map { case (v, i) =>
@@ -3363,17 +2984,13 @@ object R10 {
     * windowed argmin INSIDE the recursive term (ts_lttb precedent);
     * md5-rank seeding, grid means, centroid-id tiebreak. */
   private def kmeansLloydSql: String = {
-    def mc(t: String) =
-      s"""round(CAST(sum(CAST(CASE WHEN event_type = '$t' THEN value END
-         |        AS DECIMAL(18,6))) AS DOUBLE)
-         |      / count(CASE WHEN event_type = '$t' THEN value END), 6)""".stripMargin
     val d = "round((p.x - rec.cx) * (p.x - rec.cx) + (p.y - rec.cy) * (p.y - rec.cy), 9)"
     val df = "round((p.x - f.cx) * (p.x - f.cx) + (p.y - f.cy) * (p.y - f.cy), 9)"
     s"""WITH RECURSIVE pts AS MATERIALIZED (
        |  SELECT bucket, x, y FROM (
        |    SELECT epoch_ns(ts) // 1800000000000 AS bucket,
-       |      ${mc("click")} AS x,
-       |      ${mc("purchase")} AS y
+       |      ${typeMean("click")} AS x,
+       |      ${typeMean("purchase")} AS y
        |    FROM events WHERE event_type IN ('click', 'purchase')
        |    GROUP BY 1) t
        |  WHERE x IS NOT NULL AND y IS NOT NULL),
@@ -3412,10 +3029,7 @@ object R10 {
   private def pcaPowerSql: String = {
     val types = Seq("click", "error", "purchase", "signup", "view")
     val cases = types.map { t =>
-      s"""round(CAST(sum(CAST(CASE WHEN event_type = '$t' THEN value END
-         |        AS DECIMAL(18,6))) AS DOUBLE)
-         |      / count(CASE WHEN event_type = '$t' THEN value END), 6) AS $t"""
-        .stripMargin
+      s"${typeMean(t)} AS $t"
     }.mkString(",\n    ")
     val notNull = types.map(v => s"$v IS NOT NULL").mkString(" AND ")
     val sums = types.zipWithIndex.map { case (v, i) =>
@@ -3838,17 +3452,17 @@ object R10 {
       "events", "epoch_ns(ts) // 21600000000000", "quantile_cont(abs(r), 0.5)",
       "MATERIALIZED "),
 
-    "ml_logistic_newton" -> logisticNewtonSql(
-      "events", "epoch_ns(ts) // 1800000000000", "quantile_cont(p_raw, 0.5)",
-      "MATERIALIZED"),
+    "ml_logistic_newton" -> logisticNewtonChain(
+      "events", "epoch_ns(ts) // 1800000000000",
+      "quantile_cont(p_raw, 0.5)").oracleSql,
 
-    "ml_threshold_sweep" -> thresholdSweepSql(
+    "ml_threshold_sweep" -> thresholdSweepChain(
       "events", "epoch_ns(ts) // 1800000000000", "quantile_cont(p_raw, 0.5)",
-      "quantile_cont", "MATERIALIZED"),
+      "quantile_cont").oracleSql,
 
-    "ml_auc_roc" -> aucRocSql(
-      "events", "epoch_ns(ts) // 1800000000000", "quantile_cont(p_raw, 0.5)",
-      "MATERIALIZED"),
+    "ml_auc_roc" -> aucRocChain(
+      "events", "epoch_ns(ts) // 1800000000000",
+      "quantile_cont(p_raw, 0.5)").oracleSql,
 
     "ml_learning_curve" -> learningCurveSql(
       "events", "epoch_ns(ts) // 1800000000000",
@@ -3858,8 +3472,8 @@ object R10 {
     "ml_residual_diagnostics" -> residualDiagnosticsSql(
       "events", "epoch_ns(ts) // 1800000000000", "MATERIALIZED"),
 
-    "ml_gbt_stumps" -> gbtStumpsSql(
-      "events", "epoch_ns(ts) // 1800000000000", "MATERIALIZED"),
+    "ml_gbt_stumps" -> gbtStumpsChain(
+      "events", "epoch_ns(ts) // 1800000000000").oracleSql,
 
     /** Final watermark = min of the two sides' (max event time − delay);
       * matched pairs emit eagerly, unmatched clicks only once evicted
@@ -3896,10 +3510,7 @@ object R10 {
     "stat_logrank" -> logrankSql("events", "epoch_us(ts)", "//",
       "MATERIALIZED "),
 
-    "ml_cox_ph" -> coxPhSql("rk",
-      "rk AS MATERIALIZED (" +
-        sessionRiskFrameSql("events", "epoch_us(ts)", "//",
-          "MATERIALIZED ") + "),"),
+    "ml_cox_ph" -> coxPhChain("events", "epoch_us(ts)", "//").oracleSql,
 
     "ml_gmm_em" -> gmmEmSql(
       "events", "epoch_ns(ts) // 1800000000000", "quantile_cont",

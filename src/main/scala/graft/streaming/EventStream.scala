@@ -819,8 +819,6 @@ object EventStream {
     reader.parquet(s"$dir/embeddings*.parquet")
   }
 
-  private val annRuns = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** STREAMING ANN SERVING (`stream_ann_serving`, 24th live entry) — the
     * `similarity_ivf_probe` serving scan run the way a deployed vector
     * index actually runs it: the INDEX (16-row sampled coarse quantizer +
@@ -842,20 +840,9 @@ object EventStream {
   def runAnnServingOnce(spark: SparkSession, dir: String,
                         scratch: String,
                         maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val tag = s"ann_serve_v${annRuns.incrementAndGet()}"
     val ix = (e: String, i: String) => s"element_at($e, $i)"
-    val views = scala.collection.mutable.ArrayBuffer.empty[String]
-    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def mkView(n: String, df: DataFrame): String = {
-      val v = s"${tag}_$n"
-      val cp = df.localCheckpoint()
-      frames += cp
-      cp.createOrReplaceTempView(v)
-      views += v
-      v
-    }
-    try {
-      val corpus = mkView("corpus", graft.Tables.embeddings(spark, dir))
+    graft.plans.StepChain.scoped(spark) { sc =>
+      val corpus = sc.checkpoint("corpus", graft.Tables.embeddings(spark, dir))
       // the oracle's pinned nlist=16 below the shared gate; √n lists past
       // it (the nswBeamSpark posture) so serve-join candidates stay
       // ≈ nprobe·n/√n per query instead of nprobe·n/16
@@ -870,9 +857,9 @@ object EventStream {
       val nprobe =
         if (n <= graft.queries.Docs.NswOracleMaxN) graft.queries.Docs.IvfNprobe
         else graft.operators.Similarity.nprobeForNlist(nlist)
-      val samp = mkView("samp",
+      val samp = sc.checkpoint("samp",
         spark.sql(graft.queries.Docs.ivfSampSql(corpus, nlist)))
-      val assign = mkView("assign",
+      val assign = sc.checkpoint("assign",
         spark.sql(graft.queries.Docs.ivfAssignSql(corpus, samp, ix)))
       val wroteAny = new java.util.concurrent.atomic.AtomicBoolean(false)
       withDisposableCheckpointIo(spark) {
@@ -884,7 +871,7 @@ object EventStream {
             // query view must register there, and the serve SQL must run
             // there (the clone carries the index views, copied at .start())
             val bs = batch.sparkSession
-            val qv = s"${tag}_q$bid"
+            val qv = sc.ref(s"q$bid")
             batch.createOrReplaceTempView(qv)
             // exactly-once per micro-batch (ADVICE r13): each batch owns a
             // batch-id-named subdirectory written with OVERWRITE, so a
@@ -907,13 +894,8 @@ object EventStream {
       spark.read.parquet(s"$scratch/served")
         .select("query_id", "neighbor_id", "rank", "cos")
         .orderBy("query_id", "rank")
-    } finally {
-      views.foreach(v => { spark.catalog.dropTempView(v); () })
-      frames.foreach(graft.plans.Blocks.free)
     }
   }
-
-  private val pqRuns = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** STREAMING PQ INDEX WRITE + RETRAIN AUDIT (`stream_pq_retrain`,
     * r14 — the VERDICT ask-#5 index-MAINTENANCE twin, completing the
@@ -939,21 +921,10 @@ object EventStream {
   def runPqRetrainOnce(spark: SparkSession, dir: String,
                        scratch: String,
                        maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val tag = s"pq_retrain_v${pqRuns.incrementAndGet()}"
     val ix = (e: String, i: String) => s"element_at($e, $i)"
-    val views = scala.collection.mutable.ArrayBuffer.empty[String]
-    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def mkView(n: String, df: DataFrame): String = {
-      val v = s"${tag}_$n"
-      val cp = df.localCheckpoint()
-      frames += cp
-      cp.createOrReplaceTempView(v)
-      views += v
-      v
-    }
-    try {
-      val corpus = mkView("corpus", graft.Tables.embeddings(spark, dir))
-      val samp = mkView("samp",
+    graft.plans.StepChain.scoped(spark) { sc =>
+      val corpus = sc.checkpoint("corpus", graft.Tables.embeddings(spark, dir))
+      val samp = sc.checkpoint("samp",
         spark.sql(graft.queries.Docs.pqSampSql(corpus)))
       val wroteAny = new java.util.concurrent.atomic.AtomicBoolean(false)
       withDisposableCheckpointIo(spark) {
@@ -961,7 +932,7 @@ object EventStream {
           .writeStream
           .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
             val bs = batch.sparkSession
-            val qv = s"${tag}_q$bid"
+            val qv = sc.ref(s"q$bid")
             batch.createOrReplaceTempView(qv)
             try bs.sql(graft.queries.Docs.pqIndexSql(qv, samp, ix))
               .write.mode("overwrite").parquet(s"$scratch/index/bid=$bid")
@@ -975,15 +946,11 @@ object EventStream {
       }
       require(wroteAny.get(),
         s"PQ index write produced no micro-batches — no input under $dir")
-      val idx = mkView("pidx", spark.read.parquet(s"$scratch/index")
+      val idx = sc.checkpoint("pidx", spark.read.parquet(s"$scratch/index")
         .select("vec_id", "label", "sv", "c", "dist", "dj", "x"))
-      // eager: the audit must materialize BEFORE the finally drops the
-      // views its plan references
-      spark.sql(s"WITH ${graft.queries.Docs.pqAuditSql(idx)}")
-        .localCheckpoint(eager = true)
-    } finally {
-      views.foreach(v => { spark.catalog.dropTempView(v); () })
-      frames.foreach(graft.plans.Blocks.free)
+      // collected now: the audit must not read the scope's views after
+      // they drop
+      sc.collect(spark.sql(s"WITH ${graft.queries.Docs.pqAuditSql(idx)}"))
     }
   }
 

@@ -249,9 +249,9 @@ class R10Spec extends SparkSpec {
     val df = rows.toDF("event_type", "ts_ns", "value")
     df.createOrReplaceTempView("r10_logit_planted")
     try {
-      val out = spark.sql(graft.queries.R10.logisticNewtonSql(
+      val out = graft.queries.R10.logisticNewtonChain(
           "r10_logit_planted", "ts_ns div 1800000000000",
-          "percentile(p_raw, 0.5)", ""))
+          "percentile(p_raw, 0.5)").run(spark)
         .orderBy("iter").collect()
       assert(out.length == 5)
       val first = out.head; val last = out.last
@@ -274,13 +274,13 @@ class R10Spec extends SparkSpec {
     val sweep = SparkEntry.queries("ml_threshold_sweep")(spark, dir)
       .orderBy("decile").collect()
     assert(sweep.length == 9)
-    // pull the scored frame through the SAME prefix the sweep uses
+    // pull the scored frame through the SAME steps the sweep uses
     graft.Tables.events(spark, dir).createOrReplaceTempView("r10_sweep_ev")
     try {
-      val scored = spark.sql(
-          graft.queries.R10.logisticPrefix("r10_sweep_ev",
-            "ts_ns div 1800000000000", "percentile(p_raw, 0.5)", "") +
-            "\nSELECT y, p FROM p5")
+      val scored = graft.plans.StepChain(
+          graft.queries.R10.logisticScoredSteps("r10_sweep_ev",
+            "ts_ns div 1800000000000", "percentile(p_raw, 0.5)"),
+          r => s"SELECT y, p FROM ${r("p5")}").run(spark)
         .collect().map(r => (r.getAs[Int]("y"), r.getAs[Double]("p")))
       val n = scored.length
       val ps = scored.map(_._2).sorted
@@ -321,10 +321,10 @@ class R10Spec extends SparkSpec {
     assert(row.length == 1)
     graft.Tables.events(spark, dir).createOrReplaceTempView("r10_auc_ev")
     try {
-      val scored = spark.sql(
-          graft.queries.R10.logisticPrefix("r10_auc_ev",
-            "ts_ns div 1800000000000", "percentile(p_raw, 0.5)", "") +
-            "\nSELECT y, p FROM p5")
+      val scored = graft.plans.StepChain(
+          graft.queries.R10.logisticScoredSteps("r10_auc_ev",
+            "ts_ns div 1800000000000", "percentile(p_raw, 0.5)"),
+          r => s"SELECT y, p FROM ${r("p5")}").run(spark)
         .collect().map(r => (r.getAs[Int]("y"), r.getAs[Double]("p")))
       val sorted = scored.sortBy(_._2)
       // average ranks with ties, carried as 2x to stay integer
@@ -478,8 +478,8 @@ class R10Spec extends SparkSpec {
     val df = rows.toDF("event_type", "ts_ns", "value")
     df.createOrReplaceTempView("r10_gbt_planted")
     try {
-      val out = spark.sql(graft.queries.R10.gbtStumpsSql(
-          "r10_gbt_planted", "ts_ns div 1800000000000", ""))
+      val out = graft.queries.R10.gbtStumpsChain(
+          "r10_gbt_planted", "ts_ns div 1800000000000").run(spark)
         .orderBy("iter").collect()
       assert(out.length == 7)
       val sses = out.map(_.getAs[Double]("train_sse"))
@@ -612,17 +612,13 @@ class R10Spec extends SparkSpec {
     val df = rows.toDF("user_id", "event_id", "ts_ns")
     df.createOrReplaceTempView("r10_cox_planted")
     try {
-      val rk = spark.sql(graft.queries.R10.sessionRiskFrameSql(
-        "r10_cox_planted", "ts_ns div 1000", "div")).localCheckpoint()
-      rk.createOrReplaceTempView("r10_cox_rk")
-      try {
-        val out = spark.sql(graft.queries.R10.coxPhSql("r10_cox_rk", ""))
-          .orderBy("iter").collect()
-        val hr = out.last.getAs[Double]("hazard_ratio")
-        assert(hr < 0.5,
-          s"weekend sessions survive 9× longer — hazard ratio $hr must be ≪ 1")
-        assert(out.last.getAs[Double]("beta") < -0.5)
-      } finally { spark.catalog.dropTempView("r10_cox_rk"); () }
+      val out = graft.queries.R10.coxPhChain(
+          "r10_cox_planted", "ts_ns div 1000", "div").run(spark)
+        .orderBy("iter").collect()
+      val hr = out.last.getAs[Double]("hazard_ratio")
+      assert(hr < 0.5,
+        s"weekend sessions survive 9× longer — hazard ratio $hr must be ≪ 1")
+      assert(out.last.getAs[Double]("beta") < -0.5)
     } finally { spark.catalog.dropTempView("r10_cox_planted"); () }
   }
 
