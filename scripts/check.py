@@ -242,6 +242,9 @@ def n_maps() -> int:
 
 def main():
     import os
+    # line-buffered: a gate log redirected to a file shows each verdict
+    # as it is printed, not whole oracles later
+    sys.stdout.reconfigure(line_buffering=True)
     # GRAFT_CHECK_NO_RECYCLE=1 reproduces the driver harness's posture:
     # one long-lived connection for the whole run, no gc/arrow release.
     # Use it to prove the allocation-heavy oracles survive a map-starved

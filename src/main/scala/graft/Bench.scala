@@ -129,15 +129,8 @@ object Bench {
       if (sys.env.contains("SPARK_GRAFT_GC_SWEEP")) System.gc()
       (name, t, err)
     }
-    // JSON escape incl. ALL control chars (exception messages are
-    // routinely multi-line); Locale.ROOT so a comma-decimal JVM locale
-    // cannot corrupt the numbers
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '\\' => "\\\\"
-      case '"' => "\\\""
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // Locale.ROOT so a comma-decimal JVM locale cannot corrupt the numbers
+    import Verify.{jsonString => jstr}
     val qs = results.map { case (k, v, err) =>
       jstr(k) + ":" + (if (err.isDefined) "-1"
         else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))) }

@@ -8,6 +8,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * harness tables (TESTDATA.md); `oracleSql` carries the DuckDB twin for
   * each SQL-expressible one. Registries live in `graft.queries.*`, grouped
   * by SURVEY section.
+  *
+  * Adding a shared-template key (one SQL text for the engine and its
+  * oracle): write the template over its table references with one
+  * `dl: graft.queries.Dialect` for every engine-specific spelling, and
+  * list the key once in its module's `shared` map (`Shared.sql`, or
+  * `Shared.chain` for a step chain). The module's `qs` and `sql` pick it
+  * up through `Shared.engines`/`Shared.oracles`, and a module's first
+  * `shared` map joins [[shared]] below, where `DialectSpec` checks both
+  * renderings for the other engine's tokens.
   */
 object SparkEntry {
 
@@ -28,6 +37,12 @@ object SparkEntry {
       graft.queries.Ml.sql ++ graft.queries.Pipe.sqlAll ++ graft.queries.Corpus.sql ++
       graft.queries.Reshape.sql ++ graft.queries.Fin.sql ++ graft.queries.Feat.sql ++
       graft.queries.R9.sql ++ graft.queries.R10.sql
+
+  /** The keys served by one SQL template on both engines. */
+  private[graft] def shared: Map[String, graft.queries.Shared] =
+    graft.queries.Rel.shared ++ graft.queries.Docs.shared ++
+      graft.queries.Corpus.shared ++ graft.queries.Feat.shared ++
+      graft.queries.R9.shared ++ graft.queries.R10.shared
 
   /** Rows-only entries whose output hash is deterministic per host but
     * NOT across hosts: seeded MLlib training (KMeans‖ init, online-VB

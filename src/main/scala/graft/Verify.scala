@@ -61,6 +61,21 @@ object Verify {
     case other => other.toString
   }
 
+  /** `s` as a JSON string literal — the one escaper of every JSON
+    * artifact (oracle_sql.json, the Bench line, the profile records).
+    * Backslash, quote and ALL control chars (<0x20) are escaped: a tab
+    * or CR in an oracle text, or a multi-line exception message, would
+    * otherwise make the reader's json.load fail. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def canonicalHash(df: org.apache.spark.sql.DataFrame): (String, Long) = {
     val cols = df.columns.sorted
     val rows = df.select(cols.map(org.apache.spark.sql.functions.col).toSeq: _*)
@@ -113,20 +128,9 @@ object Verify {
       scala.concurrent.Future.sequence(futures),
       scala.concurrent.duration.Duration.Inf)
     pool.shutdown()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
     val hashJson = {
@@ -135,13 +139,15 @@ object Verify {
         case (k, (h, n)) =>
           val scope =
             if (SparkEntry.sameHostDeterministic(k))
-              s""", ${q("determinism")}: ${q("same-host")}"""
+              s""", ${jsonString("determinism")}: ${jsonString("same-host")}"""
             else if (SparkEntry.crossLayoutDeterministic(k))
-              s""", ${q("determinism")}: ${q("cross-layout")}"""
+              s""", ${jsonString("determinism")}: ${jsonString("cross-layout")}"""
             else ""
-          s"${q(k)}: {${q("hash")}: ${q(h)}, ${q("rows")}: $n$scope}"
+          s"${jsonString(k)}: {${jsonString("hash")}: ${jsonString(h)}, " +
+            s"${jsonString("rows")}: $n$scope}"
       }.mkString(", ")
-      s"""{${q("spark_version")}: ${q(spark.version)}, ${q("queries")}: {$entries}}"""
+      s"""{${jsonString("spark_version")}: ${jsonString(spark.version)}, """ +
+        s"""${jsonString("queries")}: {$entries}}"""
     }
     Files.writeString(Paths.get(s"$outDir/engine_hashes.json"), hashJson)
     // Best-effort repo mirror so the DRIVER's own run leaves the

@@ -276,61 +276,4 @@ object Joins {
       .withColumn("dist", levenshtein(col(leftStr), col(rightStr)))
       .filter(col("dist") <= maxDist)
   }
-
-  /** Prefix-filtered fuzzy join — same result as [[fuzzyJoinQgram]] on
-    * strings meeting the q-gram guarantee length, at a fraction of the
-    * candidates. Plain q-gram blocking collapses on clustered
-    * vocabularies (strings built from a small shared word set): common
-    * grams pair almost everything with almost everything and the
-    * candidate set degenerates toward |L|×|R|.
-    *
-    * The prefix filter (the ED-Join idea) keeps, per string, only its
-    * `q·maxDist + 1` globally RAREST positional grams under a total
-    * order (df, gram, position). Completeness: d edits destroy ≤ q·d
-    * positional grams, so two strings within distance d share, as a bag,
-    * at least `max(|A|,|B|) − q·d` positional grams; by the prefix-filter
-    * principle the first `|A| − t + 1 ≤ q·d + 1` elements of each bag
-    * under any consistent total order must then share an element. Rare
-    * grams also have few partners, so surviving candidates are the
-    * near-matches, not the vocabulary cross product.
-    *
-    * Shape at 100 TB: gram document frequency is a wordcount (map-side
-    * combine, one small shuffle); the per-string top-(qd+1) is a window
-    * over ≤ len rows per string; the candidate join carries ≤ qd+1 rows
-    * per string keyed by RARE grams — bounded fan-in by construction,
-    * where the unfiltered join's fan-in was the corpus gram frequency. */
-  def fuzzyJoinQgramPrefix(left: DataFrame, leftId: String, leftStr: String,
-                           right: DataFrame, rightId: String, rightStr: String,
-                           q: Int, maxDist: Int): DataFrame = {
-    require(q >= 1 && maxDist >= 0, s"need q >= 1, maxDist >= 0; got q=$q maxDist=$maxDist")
-    val keep = q * maxDist + 1
-    def pgrams(df: DataFrame, id: String, s: String) = df.select(
-        col(id), col(s),
-        posexplode(expr(
-          s"transform(sequence(1, greatest(length($s) - ${q - 1}, 1)), " +
-            s"i -> substring($s, i, $q))")))
-      .withColumnRenamed("pos", "__gpos").withColumnRenamed("col", "__g")
-    val lg = pgrams(left, leftId, leftStr)
-    val rg = pgrams(right, rightId, rightStr)
-    // document frequency = number of distinct strings (either side)
-    // containing the gram; the L/R tag keeps cross-side ids distinct
-    val gdf = lg.select(col("__g"), concat(lit("L"), col(leftId).cast("string")).as("__sid"))
-      .union(rg.select(col("__g"), concat(lit("R"), col(rightId).cast("string")).as("__sid")))
-      .distinct()
-      .groupBy("__g").agg(count(lit(1)).as("__gdf"))
-    def prefix(g: DataFrame, id: String) = {
-      val w = Window.partitionBy(col(id))
-        .orderBy(col("__gdf"), col("__g"), col("__gpos"))
-      g.join(gdf, "__g")
-        .withColumn("__rk", row_number().over(w))
-        .filter(col("__rk") <= keep)
-    }
-    val cand = prefix(lg, leftId).select(col(leftId), col(leftStr), col("__g"))
-      .join(prefix(rg, rightId).select(col(rightId), col(rightStr), col("__g")), "__g")
-      .select(col(leftId), col(leftStr), col(rightId), col(rightStr))
-      .distinct()
-    cand
-      .withColumn("dist", levenshtein(col(leftStr), col(rightStr)))
-      .filter(col("dist") <= maxDist)
-  }
 }

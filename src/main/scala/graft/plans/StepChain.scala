@@ -8,6 +8,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
+import graft.queries.Dialect
+
 /** A stepwise query: named SQL steps, each reading the steps before it
   * through a resolver `ref`, then one tail query over the finished steps.
   * The one value has two renderings:
@@ -35,9 +37,13 @@ import org.apache.spark.sql.execution.LogicalRDD
   * the function assembling the chain captures. */
 final case class StepChain(steps: Seq[StepChain.Step], tail: StepChain.Sql) {
 
-  def oracleSql: String =
-    steps.map(st => s"${st.name} AS MATERIALIZED (\n${st.sql(identity)})")
+  /** The whole chain as one `WITH` text in `dl` — on DuckDB each step
+    * `MATERIALIZED`. */
+  def sql(dl: Dialect): String =
+    steps.map(st => s"${st.name} AS ${dl.mat}(\n${st.sql(identity)})")
       .mkString("WITH ", ",\n", "\n") + tail(identity)
+
+  def oracleSql: String = sql(Dialect.DuckDb)
 
   def run(s: SparkSession): DataFrame = StepChain.scoped(s)(runIn)
 

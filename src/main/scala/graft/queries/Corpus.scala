@@ -139,7 +139,13 @@ object Corpus {
   /** Merge budget for `corpus_bpe_train`. */
   private val BPE_MERGES = 20
 
-  val qs: Map[String, Q] = Map(
+  private[graft] lazy val shared: Map[String, Shared] = Map(
+    /** TOKEN-BUDGET MIX PLAN (`tokenBudgetSql` — one shared template):
+      * the water-filling allocation under per-source epoch caps, every
+      * saturation decision integer cross-multiplied. */
+    "corpus_token_budget_plan" -> Shared.sql((_, t) => tokenBudgetSql(t("documents"))))
+
+  val qs: Map[String, Q] = Map[String, Q](
     /** JENSEN–SHANNON drift between corpus halves — the mixture-shift
       * alarm of an LLM data pipeline (a changed source mix silently
       * changes the model; `drift_psi` watches a VALUE distribution,
@@ -321,13 +327,6 @@ object Corpus {
         .orderBy("lang")
     }),
 
-    /** TOKEN-BUDGET MIX PLAN (`tokenBudgetSql` — one shared template):
-      * the water-filling allocation under per-source epoch caps, every
-      * saturation decision integer cross-multiplied. */
-    "corpus_token_budget_plan" -> ((s, d) => {
-      Tables.documents(s, d).createOrReplaceTempView("graft_budget_docs")
-      s.sql(tokenBudgetSql("graft_budget_docs"))
-    }),
 
     /** Multi-granularity corpus profile in ONE pass: (lang, source),
       * per-lang subtotals, grand total via rollup — no union of three
@@ -461,7 +460,7 @@ object Corpus {
           round(target / col("token_share"), 6).as("weight"))
         .orderBy("source")
     }),
-  )
+  ) ++ Shared.engines(shared)
 
   // ---- DuckDB oracle twins ----------------------------------------------
 
@@ -653,7 +652,6 @@ object Corpus {
          |             ELSE 10 END)
          |ORDER BY doc_id""".stripMargin,
 
-    "corpus_token_budget_plan" -> tokenBudgetSql("documents"),
 
     "corpus_temperature_mix" ->
       """WITH c AS (
@@ -763,5 +761,5 @@ object Corpus {
          |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
          |FROM p GROUP BY lang, source, shard_id
          |ORDER BY lang, source, shard_id""".stripMargin),
-  )
+  ) ++ Shared.oracles(shared)
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.Tables
 import graft.functions.Text
@@ -148,21 +149,9 @@ object Docs {
   private val ANN_PLANES = 8
   private val ANN_DIM = 64
 
-  /** The per-invocation temp-view front door (the `Rel.sqlFrontDoor`
-    * discipline, private there). */
-  private val sqlRuns = new java.util.concurrent.atomic.AtomicLong(0)
-  private def withEmbView[T](s: SparkSession, d: String)(f: String => T): T = {
-    val v = s"embeddings_docs_v${sqlRuns.incrementAndGet()}"
-    try {
-      Tables.embeddings(s, d).createOrReplaceTempView(v)
-      f(v)
-    } finally { s.catalog.dropTempView(v); () }
-  }
-
   /** Shared SQL template for the PQ ASYMMETRIC-DISTANCE SCAN
     * (`similarity_pq_adc`) — ONE text for both engines, so the two sides
-    * cannot drift; the only dialect knob is 1-based list indexing
-    * (Spark `element_at` / DuckDB `list_extract`). The codebook here is
+    * cannot drift. The codebook here is
     * the SAMPLED one (the 16 lowest-vec_id corpus vectors act as the
     * per-subspace centroids — k-means++-style init without Lloyd
     * rounds), which keeps codebook construction inside SQL; the
@@ -171,13 +160,13 @@ object Docs {
     * (identical trees both engines); the cross-subspace ADC sum rides
     * DECIMAL on the 1e-9 grid so the 8-row aggregation is exact under
     * any order. */
-  private def pqAdcSql(emb: String, ix: (String, String) => String,
-                       mat: String = ""): String = {
+  private def pqAdcSql(emb: String, dl: Dialect): String = {
+    val mat = dl.mat
     val m = 8; val ksub = 16
     def dist8(a: String, b: String): String =
       (1 to m).map { j =>
         val i = s"sv * 8 + $j"
-        val t = s"(CAST(${ix(a, i)} AS DOUBLE) - CAST(${ix(b, i)} AS DOUBLE))"
+        val t = s"(CAST(${dl.ix(a, i)} AS DOUBLE) - CAST(${dl.ix(b, i)} AS DOUBLE))"
         s"$t * $t"
       }.mkString("(", " + ", ")")
     val subRows = (0 until m).map(v => s"SELECT $v AS sv").mkString(" UNION ALL ")
@@ -237,14 +226,14 @@ object Docs {
     * ONE source for every expression tree). */
   private[graft] val IvfNlist = 16
   private[graft] val IvfNprobe = 4
-  private def ivfDist64(ix: (String, String) => String)(a: String, b: String): String =
+  private def ivfDist64(dl: Dialect)(a: String, b: String): String =
     (1 to 64).map { j =>
-      val t = s"(CAST(${ix(a, j.toString)} AS DOUBLE) - CAST(${ix(b, j.toString)} AS DOUBLE))"
+      val t = s"(CAST(${dl.ix(a, j.toString)} AS DOUBLE) - CAST(${dl.ix(b, j.toString)} AS DOUBLE))"
       s"$t * $t"
     }.mkString("(", " + ", ")")
-  private def ivfDot64(ix: (String, String) => String)(a: String, b: String): String =
+  private def ivfDot64(dl: Dialect)(a: String, b: String): String =
     (1 to 64).map(j =>
-      s"CAST(${ix(a, j.toString)} AS DOUBLE) * CAST(${ix(b, j.toString)} AS DOUBLE)")
+      s"CAST(${dl.ix(a, j.toString)} AS DOUBLE) * CAST(${dl.ix(b, j.toString)} AS DOUBLE)")
       .mkString("(", " + ", ")")
 
   /** `nlist`/`nprobe` default to the oracle's pinned 16/4; the Spark
@@ -253,11 +242,11 @@ object Docs {
     * shared-constant gate as `nswBeamSpark` and the streaming serving
     * runner, so all three engine paths agree at every scale and the
     * static oracle text stays exact at gate SFs (ADVICE r13). */
-  private def ivfProbeSql(emb: String, ix: (String, String) => String,
-                          mat: String = "", nlist: Int = IvfNlist,
+  private def ivfProbeSql(emb: String, dl: Dialect, nlist: Int = IvfNlist,
                           nprobe: Int = IvfNprobe): String = {
-    def dist64(a: String, b: String): String = ivfDist64(ix)(a, b)
-    def dot64(a: String, b: String): String = ivfDot64(ix)(a, b)
+    val mat = dl.mat
+    def dist64(a: String, b: String): String = ivfDist64(dl)(a, b)
+    def dot64(a: String, b: String): String = ivfDot64(dl)(a, b)
     s"""WITH corpus AS $mat(SELECT vec_id, embedding AS ve FROM $emb),
        |q AS $mat(SELECT vec_id AS query_id, embedding AS qe FROM $emb
        |  WHERE vec_id % 50 = 0),
@@ -316,11 +305,11 @@ object Docs {
 
   /** Corpus → list assignment (argmin over the quantizer attach). */
   private[graft] def ivfAssignSql(emb: String, samp: String,
-                                  ix: (String, String) => String): String =
+                                  dl: Dialect): String =
     s"""SELECT vec_id, c AS list_id FROM (
        |  SELECT corpus.vec_id, samp.c,
        |    row_number() OVER (PARTITION BY corpus.vec_id
-       |      ORDER BY ${ivfDist64(ix)("ve", "ce")} ASC, samp.c ASC) AS rn
+       |      ORDER BY ${ivfDist64(dl)("ve", "ce")} ASC, samp.c ASC) AS rn
        |  FROM (SELECT vec_id, embedding AS ve FROM $emb) corpus
        |  CROSS JOIN $samp samp) r WHERE rn = 1""".stripMargin
 
@@ -329,10 +318,10 @@ object Docs {
     * append to a sink and the final read sorts. */
   private[graft] def ivfServeSql(qView: String, sampView: String,
                                  assignView: String, corpusView: String,
-                                 ix: (String, String) => String,
+                                 dl: Dialect,
                                  nprobe: Int = IvfNprobe): String = {
-    def dist64(a: String, b: String): String = ivfDist64(ix)(a, b)
-    def dot64(a: String, b: String): String = ivfDot64(ix)(a, b)
+    def dist64(a: String, b: String): String = ivfDist64(dl)(a, b)
+    def dot64(a: String, b: String): String = ivfDot64(dl)(a, b)
     s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM $qView),
        |probes AS (
        |  SELECT query_id, c AS list_id FROM (
@@ -375,12 +364,12 @@ object Docs {
     * identical 8-term double chains; means ride grid-9 DECIMAL sums.
     * 8×10 = 80 rows; cost = corpus × (16·8) bounded codebook attach —
     * never corpus², the [[pqAdcSql]] encode shape. */
-  private def pqDriftSql(emb: String, ix: (String, String) => String): String = {
+  private def pqDriftSql(emb: String, dl: Dialect): String = {
     val m = 8; val ksub = 16
     def dist8(a: String, b: String): String =
       (1 to m).map { j =>
         val i = s"sv * 8 + $j"
-        val t = s"(CAST(${ix(a, i)} AS DOUBLE) - CAST(${ix(b, i)} AS DOUBLE))"
+        val t = s"(CAST(${dl.ix(a, i)} AS DOUBLE) - CAST(${dl.ix(b, i)} AS DOUBLE))"
         s"$t * $t"
       }.mkString("(", " + ", ")")
     val subRows = (0 until m).map(v => s"SELECT $v AS sv").mkString(" UNION ALL ")
@@ -428,17 +417,17 @@ object Docs {
     * (posting-list sizes × probe membership, again integers); recall
     * and scan_frac divisions are output-only grid-6 (int/int promotes
     * to DOUBLE in both engines). nprobe=16 anchors recall = 1. */
-  private def recallCurveSql(emb: String, ix: (String, String) => String,
-                             mat: String = ""): String = {
+  private def recallCurveSql(emb: String, dl: Dialect): String = {
+    val mat = dl.mat
     val dim = 64; val nlist = 16; val k = 10
     def dist64(a: String, b: String): String =
       (1 to dim).map { j =>
-        val t = s"(CAST(${ix(a, j.toString)} AS DOUBLE) - CAST(${ix(b, j.toString)} AS DOUBLE))"
+        val t = s"(CAST(${dl.ix(a, j.toString)} AS DOUBLE) - CAST(${dl.ix(b, j.toString)} AS DOUBLE))"
         s"$t * $t"
       }.mkString("(", " + ", ")")
     def dot64(a: String, b: String): String =
       (1 to dim).map(j =>
-        s"CAST(${ix(a, j.toString)} AS DOUBLE) * CAST(${ix(b, j.toString)} AS DOUBLE)")
+        s"CAST(${dl.ix(a, j.toString)} AS DOUBLE) * CAST(${dl.ix(b, j.toString)} AS DOUBLE)")
         .mkString("(", " + ", ")")
     val sweepRows = Seq(1, 2, 4, 8, 16).map(p => s"SELECT $p AS nprobe")
       .mkString(" UNION ALL ")
@@ -518,12 +507,12 @@ object Docs {
     * output-only grid-6 recall divisions. d=64 anchors recall = 1.
     * Cost: 4 × corpus × n_queries — linear in the corpus on the fixed
     * audit sample. */
-  private def truncationRecallSql(emb: String, ix: (String, String) => String,
-                                  mat: String = ""): String = {
+  private def truncationRecallSql(emb: String, dl: Dialect): String = {
+    val mat = dl.mat
     val k = 10
     def dotD(a: String, b: String, d: Int): String =
       (1 to d).map(j =>
-        s"CAST(${ix(a, j.toString)} AS DOUBLE) * CAST(${ix(b, j.toString)} AS DOUBLE)")
+        s"CAST(${dl.ix(a, j.toString)} AS DOUBLE) * CAST(${dl.ix(b, j.toString)} AS DOUBLE)")
         .mkString("(", " + ", ")")
     def truncCte(d: Int): String =
       s"""trunc_$d AS $mat(
@@ -589,16 +578,15 @@ object Docs {
     * sane production re-shard point AND discriminates on harness data
     * (verified in-wave: 2 of 16 lists trip at sf0.01). 16 rows at ANY
     * corpus scale. */
-  private def ivfIncrementalSql(emb: String, ix: (String, String) => String,
-                                md5mod: String => String): String = {
+  private def ivfIncrementalSql(emb: String, dl: Dialect): String = {
     val dim = 64; val nlist = 16
     def dist64(a: String, b: String): String =
       (1 to dim).map { j =>
-        val t = s"(CAST(${ix(a, j.toString)} AS DOUBLE) - CAST(${ix(b, j.toString)} AS DOUBLE))"
+        val t = s"(CAST(${dl.ix(a, j.toString)} AS DOUBLE) - CAST(${dl.ix(b, j.toString)} AS DOUBLE))"
         s"$t * $t"
       }.mkString("(", " + ", ")")
     s"""WITH corpus AS (
-       |  SELECT vec_id, embedding AS ve, ${md5mod("vec_id")} % 10 AS m
+       |  SELECT vec_id, embedding AS ve, ${dl.md5Int(dl.str("vec_id"))} % 10 AS m
        |  FROM $emb),
        |resident AS (SELECT vec_id, ve FROM corpus WHERE m != 0),
        |newb AS (SELECT vec_id, ve FROM corpus WHERE m = 0),
@@ -665,10 +653,10 @@ object Docs {
     * every selection is a row_number with id tiebreaks; the flag is a
     * set-membership integer. The graph and every beam are steps of
     * [[nswBeamChain]]: materialized once, re-read per hop. */
-  private def nswDist64(ix: (String, String) => String)(
+  private def nswDist64(dl: Dialect)(
       a: String, b: String): String =
     (1 to 64).map { j =>
-      val t = s"(CAST(${ix(a, j.toString)} AS DOUBLE) - CAST(${ix(b, j.toString)} AS DOUBLE))"
+      val t = s"(CAST(${dl.ix(a, j.toString)} AS DOUBLE) - CAST(${dl.ix(b, j.toString)} AS DOUBLE))"
       s"$t * $t"
     }.mkString("(", " + ", ")")
 
@@ -679,9 +667,9 @@ object Docs {
     * to the unrolled left-associated chain (IEEE x + 0.0 = x seeds the
     * fold) — so the giant 64-term expression never reaches Catalyst
     * codegen (the fixed ~8 s plan/compile tax the first cut paid). */
-  private def nswCosQN(dotF: (String, String) => String): String =
-    s"""${dotF("qe", "ve")} /
-       |      (sqrt(${dotF("qe", "qe")}) * sqrt(${dotF("ve", "ve")}))"""
+  private def nswCosQN(dl: Dialect): String =
+    s"""${dl.dot("qe", "ve")} /
+       |      (sqrt(${dl.dot("qe", "qe")}) * sqrt(${dl.dot("ve", "ve")}))"""
       .stripMargin
 
   /** The oracle's static SQL pins this list count; the Spark path may
@@ -715,29 +703,26 @@ object Docs {
     * hash at the gate SFs (the GraphLayout broadcast-gate pattern: scale
     * posture in the code, test-scale constant in the hash-checked text).
     *
-    * `pairHint` (engine-only — the ts_spectral_entropy class): the
+    * The pair hint (engine-only — the ts_spectral_entropy class): the
     * blocked pair frame inherits the tiny assign2 layout (~1 task), and
     * the stage then pays 3 graft_dot 64-term folds PER PAIR near-serial.
-    * The engine passes an explicit-width `REPARTITION(n, src, dst)` hint
-    * on the distinct pair set so the dot-scoring runs at the session's
-    * shuffle width; the pair SET and every score are unchanged, and the
-    * oracle keeps the default empty hint. */
-  private def nswBeamChain(emb: String, ix: (String, String) => String,
-                           dotF: (String, String) => String,
-                           castArr: String => String,
+    * The engine's explicit-width `REPARTITION(width, src, dst)` hint on
+    * the distinct pair set runs the dot-scoring at the session's
+    * shuffle width; the pair SET and every score are unchanged. */
+  private def nswBeamChain(emb: String, dl: Dialect,
                            nlist: Int = NswOracleNlist,
-                           pairHint: String = ""): StepChain = {
-    val dist64 = nswDist64(ix) _
-    val corpus = s"SELECT vec_id, ${castArr("embedding")} AS ve FROM $emb"
+                           width: => Int): StepChain = {
+    val dist64 = nswDist64(dl) _
+    val corpus = s"SELECT vec_id, ${dl.doubles("embedding")} AS ve FROM $emb"
     val queries =
-      s"""SELECT vec_id AS query_id, ${castArr("embedding")} AS qe FROM $emb
+      s"""SELECT vec_id AS query_id, ${dl.doubles("embedding")} AS qe FROM $emb
          |        WHERE vec_id % 50 = 0""".stripMargin
     val build = Seq(
       Step("g0", _ =>
         s"""WITH corpus AS ($corpus),
            |samp AS (
            |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c,
-           |    ${castArr("embedding")} AS ce
+           |    ${dl.doubles("embedding")} AS ce
            |  FROM (SELECT vec_id, embedding FROM $emb
            |        ORDER BY vec_id LIMIT $nlist) s0),
            |assign2 AS (
@@ -748,10 +733,10 @@ object Docs {
            |    FROM corpus CROSS JOIN samp) r WHERE rn <= 2),
            |scored AS (
            |  SELECT pr.src, pr.dst,
-           |    ${dotF("sv", "dv")} /
-           |      (sqrt(${dotF("sv", "sv")}) * sqrt(${dotF("dv", "dv")})) AS pcos
+           |    ${dl.dot("sv", "dv")} /
+           |      (sqrt(${dl.dot("sv", "sv")}) * sqrt(${dl.dot("dv", "dv")})) AS pcos
            |  FROM (
-           |    SELECT $pairHint DISTINCT a.vec_id AS src, b.vec_id AS dst
+           |    SELECT ${dl.hint(s"REPARTITION($width, src, dst)")} DISTINCT a.vec_id AS src, b.vec_id AS dst
            |    FROM assign2 a JOIN assign2 b
            |      ON a.list_id = b.list_id AND a.vec_id <> b.vec_id) pr
            |  JOIN (SELECT vec_id, ve AS sv FROM corpus) ca ON ca.vec_id = pr.src
@@ -776,7 +761,7 @@ object Docs {
            |SELECT query_id, node FROM (
            |  SELECT c.query_id, c.node,
            |    row_number() OVER (PARTITION BY c.query_id
-           |      ORDER BY ${nswCosQN(dotF)} DESC, c.node ASC) AS rn
+           |      ORDER BY ${nswCosQN(dl)} DESC, c.node ASC) AS rn
            |  FROM cand c
            |  JOIN ($queries) q ON q.query_id = c.query_id
            |  JOIN ($corpus) corpus ON corpus.vec_id = c.node) r
@@ -786,7 +771,7 @@ object Docs {
       s"""SELECT query_id, neighbor_id FROM (
          |  SELECT q.query_id, corpus.vec_id AS neighbor_id,
          |    row_number() OVER (PARTITION BY q.query_id
-         |      ORDER BY ${nswCosQN(dotF)} DESC,
+         |      ORDER BY ${nswCosQN(dl)} DESC,
          |        corpus.vec_id ASC) AS rank
          |  FROM ($queries) q
          |  CROSS JOIN ($corpus) corpus
@@ -800,8 +785,8 @@ object Docs {
          |FROM (
          |  SELECT b.query_id, b.node AS neighbor_id,
          |    row_number() OVER (PARTITION BY b.query_id
-         |      ORDER BY ${nswCosQN(dotF)} DESC, b.node ASC) AS rank,
-         |    round(${nswCosQN(dotF)}, 6) + 0.0 AS cos
+         |      ORDER BY ${nswCosQN(dl)} DESC, b.node ASC) AS rank,
+         |    round(${nswCosQN(dl)}, 6) + 0.0 AS cos
          |  FROM ${r("beam4")} b
          |  JOIN ($queries) q ON q.query_id = b.query_id
          |  JOIN ($corpus) corpus ON corpus.vec_id = b.node
@@ -813,20 +798,17 @@ object Docs {
   /** Spark execution path: the embeddings checkpointed once (read by
     * every hop), the list count chosen from their size, then the chain's
     * steps over checkpointed views — all released before returning. */
-  def nswBeamSpark(s: SparkSession, d: String): DataFrame = {
+  private def nswBeamSpark(s: SparkSession, embeddings: String): DataFrame = {
     // idempotent: the query contract is (SparkSession, dir) => DataFrame
     // for ANY session, and the hop texts need graft_dot resolvable
     graft.plans.GraftExtensions.register(s)
     StepChain.scoped(s) { sc =>
-      val emb = sc.checkpoint("emb", Tables.embeddings(s, d))
+      val emb = sc.checkpoint("emb", s.table(embeddings))
       val n = s.table(emb).count()
       val nlist = if (n <= NswOracleMaxN) NswOracleNlist
         else graft.operators.Similarity.nlistForCorpus(n)
-      nswBeamChain(emb, (e, i) => s"element_at($e, $i)",
-        (a, b) => s"graft_dot($a, $b)", e => s"CAST($e AS ARRAY<DOUBLE>)",
-        nlist, pairHint = s"/*+ REPARTITION(" +
-          s"${s.sessionState.conf.numShufflePartitions}, src, dst) */")
-        .runIn(sc)
+      nswBeamChain(emb, Dialect.Spark, nlist,
+        s.sessionState.conf.numShufflePartitions).runIn(sc)
     }
   }
 
@@ -853,11 +835,11 @@ object Docs {
   private[graft] val PqM = 8
   private[graft] val PqKsub = 16
 
-  private def pqDist8(ix: (String, String) => String)(
+  private def pqDist8(dl: Dialect)(
       a: String, b: String): String =
     (1 to PqM).map { j =>
       val i = s"sv * 8 + $j"
-      val t = s"(CAST(${ix(a, i)} AS DOUBLE) - CAST(${ix(b, i)} AS DOUBLE))"
+      val t = s"(CAST(${dl.ix(a, i)} AS DOUBLE) - CAST(${dl.ix(b, i)} AS DOUBLE))"
       s"$t * $t"
     }.mkString("(", " + ", ")")
 
@@ -876,10 +858,10 @@ object Docs {
     * per-micro-batch index write (`stream_pq_retrain`), so the two
     * engine paths cannot drift. */
   private[graft] def pqIndexSql(corpusRef: String, sampRef: String,
-                                ix: (String, String) => String): String = {
+                                dl: Dialect): String = {
     val subRows = (0 until PqM).map(v => s"SELECT $v AS sv").mkString(" UNION ALL ")
     val dimRows = (1 to PqM).map(j => s"SELECT $j AS dj").mkString(" UNION ALL ")
-    val dist8 = pqDist8(ix) _
+    val dist8 = pqDist8(dl) _
     s"""WITH corpus AS (SELECT vec_id, embedding AS ve, label FROM $corpusRef),
        |sub AS ($subRows),
        |dims AS ($dimRows),
@@ -891,7 +873,7 @@ object Docs {
        |        ORDER BY ${dist8("ve", "ce")} ASC, samp.c ASC) AS rn
        |    FROM corpus CROSS JOIN $sampRef samp CROSS JOIN sub) r WHERE rn = 1)
        |SELECT e.vec_id, e.label, e.sv, e.c, e.dist, d.dj,
-       |  CAST(${ix("corpus.ve", "e.sv * 8 + d.dj")} AS DOUBLE) AS x
+       |  CAST(${dl.ix("corpus.ve", "e.sv * 8 + d.dj")} AS DOUBLE) AS x
        |FROM encd e
        |JOIN corpus ON corpus.vec_id = e.vec_id
        |CROSS JOIN dims d""".stripMargin
@@ -902,7 +884,8 @@ object Docs {
     * grid-9 DECIMAL sums), grid-6 Lloyd half-step means for flagged
     * subspaces, per-subspace QE before/after. Shared by the batch
     * monolith's tail and the streaming final assembly. */
-  private[graft] def pqAuditSql(indexRef: String, mat: String = ""): String =
+  private[graft] def pqAuditSql(indexRef: String, dl: Dialect): String = {
+    val mat = dl.mat
     s"""encd AS $mat(
        |  SELECT vec_id, label, sv, c, dist FROM $indexRef WHERE dj = 1),
        |gq AS $mat(
@@ -947,20 +930,90 @@ object Docs {
        |LEFT JOIN (SELECT sv FROM flagged) flagged ON flagged.sv = gq.sv
        |LEFT JOIN after_sv ON after_sv.sv = gq.sv
        |ORDER BY subspace""".stripMargin
+  }
 
   /** Batch monolith: codebook + the WHOLE corpus through the shared
     * [[pqIndexSql]] index form, then the shared [[pqAuditSql]] tail —
     * both fragments verbatim, so the streaming index-write twin
     * (`stream_pq_retrain`) cannot drift from this oracle. */
-  private def pqRetrainSql(emb: String, ix: (String, String) => String,
-                           mat: String = ""): String =
-    s"""WITH samp AS $mat(
+  private def pqRetrainSql(emb: String, dl: Dialect): String =
+    s"""WITH samp AS ${dl.mat}(
        |${pqSampSql(emb)}),
-       |pidx AS $mat(
-       |${pqIndexSql(emb, "samp", ix)}),
-       |${pqAuditSql("pidx", mat)}""".stripMargin
+       |pidx AS ${dl.mat}(
+       |${pqIndexSql(emb, "samp", dl)}),
+       |${pqAuditSql("pidx", dl)}""".stripMargin
 
-  val qs: Map[String, Q] = Map(
+  private[graft] lazy val shared: Map[String, Shared] = Map(
+    /** The PQ ADC SCAN PATH as a FULL ORACLE ROW (`pqAdcSql` — one
+      * shared template, `spark.sql` front door): code assignment is an
+      * argmin join against the 128-row sampled-centroid table, the
+      * asymmetric-distance top-5 is a (sv, c)-keyed join of the codes
+      * against the per-query distance tables plus an exact DECIMAL
+      * cross-subspace sum. This hash-matches the serving-scan half of
+      * PQ; the Lloyd-trained codebook (which has no SQL form) stays in
+      * `similarity_pq` with its laws pinned in SimilaritySpec. The plan
+      * shape is the production ADC shape: corpus × (m·k) bounded
+      * broadcast attach for encode — never corpus × corpus. */
+    "similarity_pq_adc" -> Shared.sql((dl, t) => pqAdcSql(t("embeddings"), dl)),
+
+    /** The IVF PROBE PATH as a full oracle row (`ivfProbeSql` — one
+      * shared template, `spark.sql` front door): sampled coarse
+      * quantizer, list assignment, nprobe=4 probed lists, exact-cosine
+      * re-rank of the probed candidates only. Hash-matches the serving
+      * half of IVF the way `similarity_pq_adc` hash-matches PQ's; the
+      * k-means-trained quantizer and its recall law stay in
+      * `similarity_ivf`/SimilaritySpec. */
+    "similarity_ivf_probe" -> Shared { (s, t) =>
+      // same adaptive gate as the streaming serving twin — the two
+      // engine paths must agree at EVERY scale, not just oracle scale
+      val v = t("embeddings")
+      val n = s.table(v).count()
+      val nlist = if (n <= NswOracleMaxN) IvfNlist
+        else graft.operators.Similarity.nlistForCorpus(n)
+      val nprobe = if (n <= NswOracleMaxN) IvfNprobe
+        else graft.operators.Similarity.nprobeForNlist(nlist)
+      s.sql(ivfProbeSql(v, Dialect.Spark, nlist = nlist, nprobe = nprobe))
+    }((dl, t) => ivfProbeSql(t("embeddings"), dl)),
+
+    /** The index-MAINTENANCE path of IVF (`ivfIncrementalSql` — one
+      * shared template): admit the md5-split "new" batch against the
+      * resident quantizer, emit the 16-row per-list audit with the
+      * integer-decided needs_split flag. */
+    "similarity_ivf_incremental" -> Shared.sql((dl, t) => ivfIncrementalSql(t("embeddings"), dl)),
+
+    /** The PQ OBSERVABILITY row (`pqDriftSql` — one shared template):
+      * per-(subspace, label-cohort) quantization error vs the global
+      * mean under the serving codebook, drift at the 1.25× point. */
+    "similarity_pq_drift" -> Shared.sql((dl, t) => pqDriftSql(t("embeddings"), dl)),
+
+    /** The nprobe OPERATING-POINT CURVE (`recallCurveSql` — one shared
+      * template): recall@10 vs exact-scan fraction at nprobe ∈
+      * {1,2,4,8,16} over the serving IVF layout, every decision an
+      * integer `probe_pos <= nprobe` count. */
+    "similarity_recall_curve" -> Shared.sql((dl, t) => recallCurveSql(t("embeddings"), dl)),
+
+    /** The GRAPH-ANN SERVING PATH (`nswBeamChain` — one step chain):
+      * 2-list-blocked kNN-graph build, fixed-entry 4-hop ef=8 beam
+      * search, top-5 per audit query with the `in_exact_top10` recall
+      * flag. Completes the index triptych (LSH/IVF/PQ → graph). */
+    "similarity_nsw_beam" -> Shared((s, t) => nswBeamSpark(s, t("embeddings")))(
+      (dl, t) => nswBeamChain(t("embeddings"), dl,
+        width = SQLConf.get.numShufflePartitions).sql(dl)),
+
+    /** The PQ CODEBOOK RE-TRAIN row (`pqRetrainSql` — one shared
+      * template): drift-flagged subspaces take one exact Lloyd
+      * half-step (fixed assignments, grid-6 mean codewords), per-
+      * subspace QE before/after. The action half of
+      * `similarity_pq_drift`. */
+    "similarity_pq_retrain" -> Shared.sql((dl, t) => pqRetrainSql(t("embeddings"), dl)),
+
+    /** The MATRYOSHKA-SERVING AUDIT (`truncationRecallSql` — one shared
+      * template): recall@10 of prefix-d cosine vs the full-dim ground
+      * truth at d ∈ {8,16,32,64} on the bounded audit query sample. */
+    "embedding_truncation_recall" ->
+      Shared.sql((dl, t) => truncationRecallSql(t("embeddings"), dl)))
+
+  val qs: Map[String, Q] = Map[String, Q](
     // ---- text analysis --------------------------------------------------
     "text_token_count" -> ((s, d) =>
       toked(s, d)
@@ -1262,12 +1315,12 @@ object Docs {
     "stream_dedup_incremental" -> ((s, d) =>
       graft.streaming.EventStream.runDedupAdmissionOnce(s, d,
         graft.sources.Scratch.dir("stream_dedup_inc", d,
-          s"run${sqlRuns.incrementAndGet()}"))),
+          Shared.unique("run")))),
 
     "stream_ann_serving" -> ((s, d) =>
       graft.streaming.EventStream.runAnnServingOnce(s, d,
         graft.sources.Scratch.dir("stream_ann_serving", d,
-          s"run${sqlRuns.incrementAndGet()}"))),
+          Shared.unique("run")))),
 
     /** The PQ index WRITE path run live (`EventStream.runPqRetrainOnce`):
       * deploy-time codebook state, per-micro-batch encode into the
@@ -1276,7 +1329,7 @@ object Docs {
     "stream_pq_retrain" -> ((s, d) =>
       graft.streaming.EventStream.runPqRetrainOnce(s, d,
         graft.sources.Scratch.dir("stream_pq_retrain", d,
-          s"run${sqlRuns.incrementAndGet()}"))),
+          Shared.unique("run")))),
 
     /** CONTRASTIVE TRAINING-PAIR MINING — the data-prep step an
       * embedding model (SimCSE/E5-style) trains on: POSITIVES are the
@@ -1943,85 +1996,13 @@ object Docs {
         .orderBy("query_id", "rank")
     }),
 
-    /** The PQ ADC SCAN PATH as a FULL ORACLE ROW (`pqAdcSql` — one
-      * shared template, `spark.sql` front door): code assignment is an
-      * argmin join against the 128-row sampled-centroid table, the
-      * asymmetric-distance top-5 is a (sv, c)-keyed join of the codes
-      * against the per-query distance tables plus an exact DECIMAL
-      * cross-subspace sum. This hash-matches the serving-scan half of
-      * PQ; the Lloyd-trained codebook (which has no SQL form) stays in
-      * `similarity_pq` with its laws pinned in SimilaritySpec. The plan
-      * shape is the production ADC shape: corpus × (m·k) bounded
-      * broadcast attach for encode — never corpus × corpus. */
-    "similarity_pq_adc" -> ((s, d) =>
-      withEmbView(s, d)(v =>
-        s.sql(pqAdcSql(v, (e, i) => s"element_at($e, $i)")))),
 
-    /** The IVF PROBE PATH as a full oracle row (`ivfProbeSql` — one
-      * shared template, `spark.sql` front door): sampled coarse
-      * quantizer, list assignment, nprobe=4 probed lists, exact-cosine
-      * re-rank of the probed candidates only. Hash-matches the serving
-      * half of IVF the way `similarity_pq_adc` hash-matches PQ's; the
-      * k-means-trained quantizer and its recall law stay in
-      * `similarity_ivf`/SimilaritySpec. */
-    "similarity_ivf_probe" -> ((s, d) =>
-      withEmbView(s, d) { v =>
-        // same adaptive gate as the streaming serving twin — the two
-        // engine paths must agree at EVERY scale, not just oracle scale
-        val n = s.table(v).count()
-        val nlist = if (n <= NswOracleMaxN) IvfNlist
-          else graft.operators.Similarity.nlistForCorpus(n)
-        val nprobe = if (n <= NswOracleMaxN) IvfNprobe
-          else graft.operators.Similarity.nprobeForNlist(nlist)
-        s.sql(ivfProbeSql(v, (e, i) => s"element_at($e, $i)",
-          nlist = nlist, nprobe = nprobe))
-      }),
 
-    /** The index-MAINTENANCE path of IVF (`ivfIncrementalSql` — one
-      * shared template): admit the md5-split "new" batch against the
-      * resident quantizer, emit the 16-row per-list audit with the
-      * integer-decided needs_split flag. */
-    "similarity_ivf_incremental" -> ((s, d) =>
-      withEmbView(s, d)(v =>
-        s.sql(ivfIncrementalSql(v, (e, i) => s"element_at($e, $i)",
-          id => s"CAST(conv(substring(md5(CAST($id AS STRING)), 1, 8), 16, 10) AS BIGINT)")))),
 
-    /** The PQ OBSERVABILITY row (`pqDriftSql` — one shared template):
-      * per-(subspace, label-cohort) quantization error vs the global
-      * mean under the serving codebook, drift at the 1.25× point. */
-    "similarity_pq_drift" -> ((s, d) =>
-      withEmbView(s, d)(v =>
-        s.sql(pqDriftSql(v, (e, i) => s"element_at($e, $i)")))),
 
-    /** The nprobe OPERATING-POINT CURVE (`recallCurveSql` — one shared
-      * template): recall@10 vs exact-scan fraction at nprobe ∈
-      * {1,2,4,8,16} over the serving IVF layout, every decision an
-      * integer `probe_pos <= nprobe` count. */
-    "similarity_recall_curve" -> ((s, d) =>
-      withEmbView(s, d)(v =>
-        s.sql(recallCurveSql(v, (e, i) => s"element_at($e, $i)")))),
 
-    /** The GRAPH-ANN SERVING PATH (`nswBeamChain` — one step chain):
-      * 2-list-blocked kNN-graph build, fixed-entry 4-hop ef=8 beam
-      * search, top-5 per audit query with the `in_exact_top10` recall
-      * flag. Completes the index triptych (LSH/IVF/PQ → graph). */
-    "similarity_nsw_beam" -> ((s, d) => nswBeamSpark(s, d)),
 
-    /** The PQ CODEBOOK RE-TRAIN row (`pqRetrainSql` — one shared
-      * template): drift-flagged subspaces take one exact Lloyd
-      * half-step (fixed assignments, grid-6 mean codewords), per-
-      * subspace QE before/after. The action half of
-      * `similarity_pq_drift`. */
-    "similarity_pq_retrain" -> ((s, d) =>
-      withEmbView(s, d)(v =>
-        s.sql(pqRetrainSql(v, (e, i) => s"element_at($e, $i)")))),
 
-    /** The MATRYOSHKA-SERVING AUDIT (`truncationRecallSql` — one shared
-      * template): recall@10 of prefix-d cosine vs the full-dim ground
-      * truth at d ∈ {8,16,32,64} on the bounded audit query sample. */
-    "embedding_truncation_recall" -> ((s, d) =>
-      withEmbView(s, d)(v =>
-        s.sql(truncationRecallSql(v, (e, i) => s"element_at($e, $i)")))),
 
     /** MMR RERANKING (Carbonell & Goldstein 1998) — the diversification
       * pass between retrieval and serving: from each query's exact
@@ -2360,7 +2341,7 @@ object Docs {
             col("n_frames") === col("exp_frames")).as("params_match"))
         .orderBy("media_id")
     }),
-  )
+  ) ++ Shared.engines(shared)
 
   /** MMR twin: top-25 shortlist + pairwise candidate cosines as
     * MATERIALIZED CTEs (the mRMR re-evaluation lesson), then the greedy
@@ -2735,50 +2716,22 @@ object Docs {
     "ml_calibration_bins" -> calibrationSql,
 
     "corpus_quality_classifier" -> classifierSql,
-    "similarity_pq_adc" ->
-      pqAdcSql("embeddings", (e, i) => s"list_extract($e, $i)",
-        "MATERIALIZED "),
 
-    "similarity_ivf_probe" ->
-      ivfProbeSql("embeddings", (e, i) => s"list_extract($e, $i)",
-        "MATERIALIZED "),
 
     // the live serving twin hash-matches the SAME monolithic oracle —
     // its per-micro-batch emissions are split-invariant by construction
-    "stream_ann_serving" ->
-      ivfProbeSql("embeddings", (e, i) => s"list_extract($e, $i)",
-        "MATERIALIZED "),
+    "stream_ann_serving" -> shared("similarity_ivf_probe").oracle,
 
-    "similarity_ivf_incremental" ->
-      ivfIncrementalSql("embeddings", (e, i) => s"list_extract($e, $i)",
-        id => s"('0x' || substr(md5($id::VARCHAR), 1, 8))::BIGINT"),
 
-    "similarity_pq_drift" ->
-      pqDriftSql("embeddings", (e, i) => s"list_extract($e, $i)"),
 
-    "similarity_recall_curve" ->
-      recallCurveSql("embeddings", (e, i) => s"list_extract($e, $i)",
-        "MATERIALIZED "),
 
-    "similarity_nsw_beam" ->
-      nswBeamChain("embeddings", (e, i) => s"list_extract($e, $i)",
-        (a, b) => s"list_dot_product($a, $b)",
-        e => s"$e::DOUBLE[]").oracleSql,
 
-    "similarity_pq_retrain" ->
-      pqRetrainSql("embeddings", (e, i) => s"list_extract($e, $i)",
-        "MATERIALIZED "),
 
     // the live index-write twin hash-matches the SAME monolithic oracle
     // — its per-micro-batch index rows are split-invariant and the
     // audit runs once over the landed index
-    "stream_pq_retrain" ->
-      pqRetrainSql("embeddings", (e, i) => s"list_extract($e, $i)",
-        "MATERIALIZED "),
+    "stream_pq_retrain" -> shared("similarity_pq_retrain").oracle,
 
-    "embedding_truncation_recall" ->
-      truncationRecallSql("embeddings", (e, i) => s"list_extract($e, $i)",
-        "MATERIALIZED "),
 
     "similarity_mmr_rerank" -> mmrSql,
 
@@ -3430,5 +3383,5 @@ object Docs {
         |SELECT lang, cls AS pred_lang, count(*)::BIGINT AS n
         |FROM pred WHERE rn = 1
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-  )
+  ) ++ Shared.oracles(shared)
 }

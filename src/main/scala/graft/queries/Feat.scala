@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.Tables
 
@@ -92,12 +93,10 @@ object Feat {
     s"(CASE ${cases.mkString(" ")} ELSE $stirling END)"
   }
 
-  /** Fisher's exact test template — ONE text for both engines (the
-    * `sqlFrontDoor` discipline): only the events reference, the JSON
-    * extraction, and the integer-range enumeration clause are dialect
-    * parameters. The 2×2 table is purchase-vs-error × low-k-vs-high-k;
-    * the two-sided p-value sums hypergeometric probabilities of every
-    * table at least as extreme as the observed one (prob ≤ observed,
+  /** Fisher's exact test template — ONE text for both engines. The 2×2
+    * table is purchase-vs-error × low-k-vs-high-k; the two-sided p-value
+    * sums hypergeometric probabilities of every table at least as
+    * extreme as the observed one (prob ≤ observed,
     * the standard definition). Numerics: cell counts are exact
     * integers; log-probabilities come from [[lnFactSql]] (identical
     * trees); the mirror table's probability is ANALYTICALLY equal to
@@ -109,13 +108,17 @@ object Feat {
     * cells, then the enumeration is MARGIN-sized (min(r1,c1)+1 rows —
     * ~20k at sf0.1) and every per-table term is a narrow map; nothing
     * quadratic, nothing driver-side. */
-  private def fisherSql(events: String, kx: String, enumFrom: String,
-                        mat: String = ""): String = {
-    // `mat` ("MATERIALIZED " on DuckDB, "" on Spark): `lp` is consumed
-    // THREE times (obs/mx/terms) and each plain-CTE re-expansion
-    // re-evaluates the whole enumeration with its nine ln-factorial
-    // CASE ladders; `cells` is consumed twice. Allocation-lean oracle
-    // texts keep the driver's single-connection replay alive (r11).
+  private def fisherSql(events: String, dl: Dialect): String = {
+    // `lp` is consumed THREE times (obs/mx/terms) and each plain-CTE
+    // re-expansion re-evaluates the whole enumeration with its nine
+    // ln-factorial CASE ladders; `cells` is consumed twice.
+    // Allocation-lean oracle texts keep a single-connection replay
+    // alive (r11).
+    val mat = dl.mat
+    val kx = dl.jsonLong("props", "$.k")
+    val enumFrom = dl.seriesFrom("marg m", """
+      |    CAST(greatest(0, c1 - r2) AS BIGINT),
+      |    CAST(least(r1, c1) AS BIGINT)""".stripMargin, "ex", "x")
     val lf = lnFactSql _
     s"""WITH cells AS $mat(
        |  SELECT CAST(sum(CASE WHEN pos AND lowk THEN 1 ELSE 0 END) AS BIGINT) AS a,
@@ -161,21 +164,22 @@ object Feat {
     * triage run before any `ml_*` fit. All sums DECIMAL-exact from
     * grid-rounded centered values and trig factors; entropy terms
     * re-gridded at 1e-9 before the cross-period sum so aggregation
-    * order cannot drift. Dialect params: events ref, bucket expr,
-    * period-grid explode clause. */
-  /** `gridHint` (r16, engine-only): the (series × 95-period) DFT grid
+    * order cannot drift.
+    *
+    * The grid hint (r16, engine-only): the (series × 95-period) DFT grid
     * inherits the window stage's per-series partitioning (≤ 5 tasks at
     * any width — the ts_matrix_profile AQE-coalescing class), so the
     * trig-term evaluation ran near-serial. The engine passes a
     * `REPARTITION(g, p)` hint so the per-(series, period) cos/sin terms
     * spread across the session's shuffle width; the DECIMAL term sums
-    * are order-free, so the hint cannot move a bit. The oracle text
-    * keeps the default empty hint. */
-  private def spectralEntropySql(events: String, bucket: String,
-                                 periodExplode: String,
-                                 gridHint: String = ""): String =
+    * are order-free, so the hint cannot move a bit. `width` is the
+    * session's shuffle width: without an explicit count AQE treats the
+    * keyed repartition as coalescable and folds the tiny grid shuffle
+    * back to ~1 partition (r17). */
+  private def spectralEntropySql(events: String, dl: Dialect,
+                                 width: => Int): String =
     s"""WITH b AS (
-       |  SELECT event_type AS g, $bucket AS bucket, round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(value), 6) AS px
+       |  SELECT event_type AS g, (${dl.bucket}) AS bucket, round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(value), 6) AS px
        |  FROM $events GROUP BY 1, 2),
        |st AS (
        |  SELECT g, bucket, CAST(px AS DECIMAL(18,6)) AS pxd,
@@ -189,8 +193,8 @@ object Feat {
        |    CAST(round(CAST(pxd AS DOUBLE) - mu, 6) AS DECIMAL(18,6)) AS c
        |  FROM st JOIN mu ON st.g = mu.g),
        |grid AS (
-       |  SELECT $gridHint g, t, c, p
-       |  $periodExplode),
+       |  SELECT ${dl.hint(s"REPARTITION($width, g, p)")} g, t, c, p
+       |  ${dl.seriesFrom("cent", "2, 96", "pe", "p")}),
        |trig AS (
        |  SELECT g, p,
        |    sum(c * CAST(round(cos(CAST(6.283185307179586 AS DOUBLE)
@@ -237,14 +241,12 @@ object Feat {
     * (forecast the parts and add, or forecast the whole and split) a
     * forecasting deployment over any hierarchy must answer. Grid
     * absolute errors summed in DECIMAL. */
-  private def reconcileSql(events: String, bucket: String,
-                           mat: String = ""): String =
-    // `mat` ("MATERIALIZED " on DuckDB, "" on Spark): b/sb/tt/tr/test/
-    // ttest all have 2+ consumers — DuckDB 1.0 re-expands plain CTEs
-    // per reference (133 MB -> 22 MB materialized, identical result;
-    // the r11 map-exhaustion class)
+  private def reconcileSql(events: String, dl: Dialect): String = {
+    // b/sb/tt/tr/test/ttest all have 2+ consumers (DuckDB materialized:
+    // 133 MB -> 22 MB, identical result; the r11 map-exhaustion class)
+    val mat = dl.mat
     s"""WITH b AS $mat(
-       |  SELECT event_type AS g, $bucket AS bucket,
+       |  SELECT event_type AS g, (${dl.tsDiv(21600000000000L)}) AS bucket,
        |    CAST(round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(value), 6) AS DECIMAL(18,6)) AS px
        |  FROM $events GROUP BY 1, 2),
        |comp AS $mat(SELECT bucket FROM b GROUP BY bucket
@@ -301,6 +303,7 @@ object Feat {
        |SELECT level, method, mae FROM toterr
        |UNION ALL SELECT level, method, mae FROM serr
        |ORDER BY level, method""".stripMargin
+  }
 
   /** THETA-METHOD template (Assimakopoulos & Nikolopoulos 2000 — the
     * M3-competition winner): decompose each series into the θ=0 line
@@ -312,10 +315,10 @@ object Feat {
     * SARIMA/VAR → Croston → Theta). OLS moments are DECIMAL/integer-
     * exact; Z₂ re-grids at 1e-6 before smoothing; per-series windows
     * throughout. */
-  private def thetaSql(events: String, bucket: String): String = {
+  private def thetaSql(events: String, dl: Dialect): String = {
     val (sN, sD) = emaTruncSqlPair("z2", "w", 0.3, 40)
     s"""WITH b AS (
-       |  SELECT event_type AS g, $bucket AS bucket,
+       |  SELECT event_type AS g, (${dl.bucket}) AS bucket,
        |    CAST(round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(value), 6) AS DECIMAL(18,6)) AS x
        |  FROM $events GROUP BY 1, 2),
        |st AS (
@@ -350,9 +353,6 @@ object Feat {
        |ORDER BY event_type""".stripMargin
   }
 
-  /** The per-invocation temp-view front door (same discipline as
-    * `Rel.sqlFrontDoor`, private there). */
-  private val runs = new java.util.concurrent.atomic.AtomicLong(0)
   /** DAILY VOLUME ANOMALY CENSUS (`dq_volume_anomaly`, r11): the
     * monitoring question `dq_freshness_sla` doesn't answer — a source
     * can be FRESH yet silently half-empty (an upstream filter deployed
@@ -372,7 +372,8 @@ object Feat {
     * can run the SAME expressions over its Update-mode count snapshot;
     * the batch text below is byte-identical to the pre-split form, so
     * the hash is pinned. */
-  def volumeAssembleSql(daysRef: String, idiv: String => String): String =
+  def volumeAssembleSql(daysRef: String, dl: Dialect): String = {
+    def idiv(e: String) = s"($e) ${dl.div} 2"
     s"""st AS (
        |  SELECT day, n,
        |    row_number() OVER (ORDER BY n ASC, day ASC) AS rn,
@@ -404,24 +405,13 @@ object Feat {
        |  2 * dst.dev2 > 3 * mad.mad4 AS anomaly
        |FROM dst CROSS JOIN mad
        |ORDER BY day""".stripMargin
-
-  private def volumeAnomalySql(events: String, day: String,
-                               idiv: String => String): String =
-    s"""WITH days AS (
-       |  SELECT $day AS day, CAST(count(*) AS BIGINT) AS n
-       |  FROM $events GROUP BY 1),
-       |${volumeAssembleSql("days", idiv)}""".stripMargin
-
-  private def withTableView[T](s: SparkSession, d: String, table: String)(
-      f: String => T): T = {
-    val v = s"${table}_feat_v${runs.incrementAndGet()}"
-    try {
-      Tables.load(s, d, table).createOrReplaceTempView(v)
-      f(v)
-    } finally { s.catalog.dropTempView(v); () }
   }
-  private def withEventsView[T](s: SparkSession, d: String)(f: String => T): T =
-    withTableView(s, d, "events")(f)
+
+  private def volumeAnomalySql(events: String, dl: Dialect): String =
+    s"""WITH days AS (
+       |  SELECT ${dl.day} AS day, CAST(count(*) AS BIGINT) AS n
+       |  FROM $events GROUP BY 1),
+       |${volumeAssembleSql("days", dl)}""".stripMargin
 
   /** Null-aware truncated-EWMA term pair (numerator, denominator) — the
     * `ewma_halflife` convention generated as SHARED SQL text: depth-D
@@ -443,9 +433,9 @@ object Feat {
     (ts.map(_._1).mkString("(", " + ", ")"), ts.map(_._2).mkString("(", " + ", ")"))
   }
 
-  /** Croston template — ONE text for both engines; only the lineitem
-    * reference and the epoch-day expression differ. */
-  private def crostonSql(lineitem: String, dayExpr: String): String = {
+  /** Croston template — ONE text for both engines. */
+  private def crostonSql(lineitem: String, dl: Dialect): String = {
+    val dayExpr = dl.epochDay("CAST(l_shipdate AS DATE)")
     val (zN, zD) = emaTruncSqlPair("q", "w", 0.1, 40)
     val (pN, pD) = emaTruncSqlPair("iv", "w", 0.1, 40)
     s"""WITH d AS (
@@ -480,9 +470,9 @@ object Feat {
   /** Mahalanobis template — per-user 3-feature vectors, DECIMAL-exact
     * moment sums, population covariance, closed-form 3×3 Cramer
     * inverse, quadratic-form distances: every float op is one shared
-    * expression tree. Only the events reference and the JSON k
-    * extraction differ per engine. */
-  private def mahalanobisSql(events: String, kx: String): String =
+    * expression tree. */
+  private def mahalanobisSql(events: String, dl: Dialect): String = {
+    val kx = dl.jsonLong("props", "$.k")
     s"""WITH f AS (
        |  SELECT user_id,
        |    CAST(round(CAST(sum(CAST(round(value, 6) AS DECIMAL(18,6)))
@@ -536,13 +526,12 @@ object Feat {
        |  round(d2, 6) > 9.348404 AS is_outlier_975
        |FROM dist
        |ORDER BY round(d2, 6) DESC, user_id LIMIT 10""".stripMargin
+  }
 
   /** HALF_UP 1e-9 rounding — matches SQL `round(x, 9)` in both engines
     * (math.rint would be half-even). */
   private def r9(x: Double): Double =
     BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  private val burstRuns = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Shared DuckDB twin for BOTH the batch RANGE-window burst query and
     * its streaming CEP twin — streaming ≡ batch is the contract. */
@@ -572,7 +561,60 @@ object Feat {
 
   // ------------------------------------------------------------------
 
-  val qs: Map[String, Q] = Map(
+  private[graft] lazy val shared: Map[String, Shared] = Map(
+    /** The robust volume band — see `volumeAnomalySql` (one shared
+      * template): per-day counts vs median ± 3·MAD with every decision
+      * integer cross-multiplied. */
+    "dq_volume_anomaly" -> Shared.sql((dl, t) => volumeAnomalySql(t("events"), dl)),
+
+    /** FISHER'S EXACT TEST (2×2) — the small-cell-safe sibling of
+      * `stat_chi2_independence`: is a purchase (vs error) independent of
+      * the payload band k<50? Runs the SHARED template through
+      * `spark.sql` (see [[fisherSql]] — enumeration is margin-sized,
+      * log-factorials via the shared Stirling/lookup expression, mass
+      * sums DECIMAL-exact). */
+    "stat_fisher_exact" -> Shared.sql((dl, t) => fisherSql(t("events"), dl)),
+
+    /** CROSTON'S METHOD (Croston 1972) — the forecaster for INTERMITTENT
+      * demand, which is what per-part order streams actually look like
+      * (most parts sell on a minority of days; an SES/ARIMA fit on the
+      * zero-padded series biases toward zero): separate truncated-EWMA
+      * smoothing of nonzero demand SIZES and inter-demand INTERVALS,
+      * forecast = z/p demand per day. Runs on the top-5 most-regularly-
+      * ordered parts via ONE shared SQL template; demand collapse is one
+      * keyed DECIMAL aggregation, smoothing is per-part partitioned
+      * windows under the `ewma_halflife` lag-expansion convention. Commodity-demand planning is the
+      * reference's own domain. */
+    "ml_croston" -> Shared.sql((dl, t) => crostonSql(t("lineitem"), dl)),
+
+    /** MAHALANOBIS MULTIVARIATE OUTLIERS — the correlated-feature
+      * anomaly score `ts_outlier_hampel` (univariate) and
+      * `ml_isolation_forest` (tree-based, rows-only) bracket: per-user
+      * 3-feature vectors (mean value, ln activity, mean payload),
+      * population covariance from DECIMAL-exact moment sums, the 3×3
+      * inverse in CLOSED FORM (Cramer adjugate — no iterative solver,
+      * so the whole statistic is one shared expression tree and the
+      * query is FULL-ORACLE where the 6×6-breeze
+      * `ml_influence_diagnostics` had to stay rows-only), quadratic-form
+      * distances, χ²₃(0.975) flag decided on the 1e-6 grid. One keyed
+      * aggregation + a broadcast 1-row moment frame — nothing iterative,
+      * nothing driver-side. */
+    "ml_anomaly_mahalanobis" -> Shared.sql((dl, t) => mahalanobisSql(t("events"), dl)),
+
+    /** Theta-method forecast — see [[thetaSql]]. */
+    "ml_theta_forecast" -> Shared.sql((dl, t) => thetaSql(t("events"), dl)),
+
+    /** Spectral entropy — see [[spectralEntropySql]]; the grid hint's
+      * partition count is the session's shuffle width, which a
+      * deployment sizes. */
+    "ts_spectral_entropy" -> Shared((s, t) => s.sql(spectralEntropySql(t("events"),
+      Dialect.Spark, s.sessionState.conf.numShufflePartitions)))(
+      (dl, t) => spectralEntropySql(t("events"), dl, SQLConf.get.numShufflePartitions)),
+
+    /** Hierarchical forecast reconciliation — see [[reconcileSql]]. */
+    "ml_hierarchical_reconcile" -> Shared.sql((dl, t) => reconcileSql(t("events"), dl)))
+
+  val qs: Map[String, Q] = Map[String, Q](
 
     /** WEIGHT-OF-EVIDENCE ENCODING + information value — the credit-risk
       * categorical encoding (Siddiqi 2006) this registry's
@@ -645,18 +687,6 @@ object Feat {
           .agg(max(col("ts_ns")).as("last_ts_ns"),
             count(lit(1)).as("n_events")))),
 
-    /** The robust volume band — see `volumeAnomalySql` (one shared
-      * template): per-day counts vs median ± 3·MAD with every decision
-      * integer cross-multiplied. The view must carry the NORMALIZED
-      * `ts_ns` (Feat's plain view helper loads raw parquet without it). */
-    "dq_volume_anomaly" -> ((s, d) => {
-      val v = s"events_vol_v${runs.incrementAndGet()}"
-      try {
-        Tables.events(s, d).createOrReplaceTempView(v)
-        s.sql(volumeAnomalySql(v, "ts_ns div 86400000000000",
-          e => s"($e) div 2"))
-      } finally { s.catalog.dropTempView(v); () }
-    }),
 
     /** SNAPSHOT DRIFT AUDIT — the before/after profile diff a pipeline
       * runs when a new data drop lands (this repo lived the failure mode
@@ -752,18 +782,6 @@ object Feat {
         .orderBy(col("common").desc, col("u"), col("v")).limit(20)
     }),
 
-    /** FISHER'S EXACT TEST (2×2) — the small-cell-safe sibling of
-      * `stat_chi2_independence`: is a purchase (vs error) independent of
-      * the payload band k<50? Runs the SHARED template through
-      * `spark.sql` (see [[fisherSql]] — enumeration is margin-sized,
-      * log-factorials via the shared Stirling/lookup expression, mass
-      * sums DECIMAL-exact). */
-    "stat_fisher_exact" -> ((s, d) => withEventsView(s, d) { v =>
-      s.sql(fisherSql(v, "CAST(get_json_object(props, '$.k') AS BIGINT)",
-        """FROM marg m LATERAL VIEW explode(sequence(
-          |    CAST(greatest(0, c1 - r2) AS BIGINT),
-          |    CAST(least(r1, c1) AS BIGINT))) ex AS x""".stripMargin))
-    }),
 
     /** MATRIX PROFILE (Yeh et al. 2016) — per-series all-subsequence
       * nearest neighbors over z-normalized hourly bars (m = 24 ≅ one
@@ -1156,37 +1174,7 @@ object Feat {
         .orderBy("user_id")
     }),
 
-    /** CROSTON'S METHOD (Croston 1972) — the forecaster for INTERMITTENT
-      * demand, which is what per-part order streams actually look like
-      * (most parts sell on a minority of days; an SES/ARIMA fit on the
-      * zero-padded series biases toward zero): separate truncated-EWMA
-      * smoothing of nonzero demand SIZES and inter-demand INTERVALS,
-      * forecast = z/p demand per day. Runs on the top-5 most-regularly-
-      * ordered parts via ONE shared SQL template (`sqlFrontDoor`
-      * discipline — only the epoch-day expression differs per engine);
-      * demand collapse is one keyed DECIMAL aggregation, smoothing is
-      * per-part partitioned windows under the `ewma_halflife`
-      * lag-expansion convention. Commodity-demand planning is the
-      * reference's own domain. */
-    "ml_croston" -> ((s, d) => withTableView(s, d, "lineitem") { v =>
-      s.sql(crostonSql(v, "datediff(CAST(l_shipdate AS DATE), DATE '1970-01-01')"))
-    }),
 
-    /** MAHALANOBIS MULTIVARIATE OUTLIERS — the correlated-feature
-      * anomaly score `ts_outlier_hampel` (univariate) and
-      * `ml_isolation_forest` (tree-based, rows-only) bracket: per-user
-      * 3-feature vectors (mean value, ln activity, mean payload),
-      * population covariance from DECIMAL-exact moment sums, the 3×3
-      * inverse in CLOSED FORM (Cramer adjugate — no iterative solver,
-      * so the whole statistic is one shared expression tree and the
-      * query is FULL-ORACLE where the 6×6-breeze
-      * `ml_influence_diagnostics` had to stay rows-only), quadratic-form
-      * distances, χ²₃(0.975) flag decided on the 1e-6 grid. One keyed
-      * aggregation + a broadcast 1-row moment frame — nothing iterative,
-      * nothing driver-side. */
-    "ml_anomaly_mahalanobis" -> ((s, d) => withEventsView(s, d) { v =>
-      s.sql(mahalanobisSql(v, "CAST(get_json_object(props, '$.k') AS BIGINT)"))
-    }),
 
     /** TIME-TO-CONVERT — the timing companion of `funnel_conversion`'s
       * counts: per signup user, hours from first signup to first
@@ -1332,31 +1320,8 @@ object Feat {
             .as("assortativity"))
     }),
 
-    /** Theta-method forecast — see [[thetaSql]]. */
-    "ml_theta_forecast" -> ((s, d) => withEventsView(s, d) { v =>
-      s.sql(thetaSql(v,
-        "((unix_micros(CAST(ts AS TIMESTAMP)) * 1000) div 1800000000000)"))
-    }),
 
-    /** Spectral entropy — see [[spectralEntropySql]]. The hint carries
-      * an EXPLICIT partition count (r17): without it, AQE treats the
-      * keyed repartition as coalescable and folds the tiny (series ×
-      * 95-period) grid shuffle back to ~1 partition — exactly the
-      * single-task DFT stage the hint exists to prevent. The count is
-      * the session's shuffle width, which a deployment sizes. */
-    "ts_spectral_entropy" -> ((s, d) => withEventsView(s, d) { v =>
-      val w = s.sessionState.conf.numShufflePartitions
-      s.sql(spectralEntropySql(v,
-        "((unix_micros(CAST(ts AS TIMESTAMP)) * 1000) div 1800000000000)",
-        "FROM cent LATERAL VIEW explode(sequence(2, 96)) pe AS p",
-        s"/*+ REPARTITION($w, g, p) */"))
-    }),
 
-    /** Hierarchical forecast reconciliation — see [[reconcileSql]]. */
-    "ml_hierarchical_reconcile" -> ((s, d) => withEventsView(s, d) { v =>
-      s.sql(reconcileSql(v,
-        "((unix_micros(CAST(ts AS TIMESTAMP)) * 1000) div 21600000000000)"))
-    }),
 
     /** The REAL streaming twin of `dq_error_burst` —
       * `EventStream.burstStream`, a stateful `flatMapGroupsWithState`
@@ -1372,7 +1337,7 @@ object Feat {
       * StreamingSpec's multi-batch MemoryStream test. */
     "stream_error_burst" -> ((s, d) =>
       graft.streaming.EventStream.runBurstOnce(s, d,
-          s"stream_error_burst_v${burstRuns.incrementAndGet()}")
+          Shared.unique("stream_error_burst"))
         .orderBy("user_id")),
 
     /** LOCAL-LEVEL KALMAN FILTER per series — the state-space smoother
@@ -1415,7 +1380,7 @@ object Feat {
       out.toDF("event_type", "bucket", "y", "level", "gain")
         .orderBy("event_type", "bucket")
     })
-  )
+  ) ++ Shared.engines(shared)
 
   // ------------------------------------------------------------------
 
@@ -1494,9 +1459,6 @@ object Feat {
         |  count(*)::BIGINT AS n_features, sum(cnt)::BIGINT AS n_rows
         |FROM hashed GROUP BY bucket ORDER BY bucket""".stripMargin,
 
-    "dq_volume_anomaly" -> volumeAnomalySql(
-      "events", "epoch_ns(ts) // 86400000000000",
-      e => s"($e) // 2"),
 
     "dq_freshness_sla" ->
       """WITH a AS (
@@ -1583,12 +1545,6 @@ object Feat {
         |JOIN deg dv ON dv.src = v
         |ORDER BY common DESC, u, v LIMIT 20""".stripMargin,
 
-    "stat_fisher_exact" -> fisherSql("events",
-      "CAST(json_extract(props, '$.k') AS BIGINT)",
-      """FROM marg m, unnest(generate_series(
-        |    CAST(greatest(0, c1 - r2) AS BIGINT),
-        |    CAST(least(r1, c1) AS BIGINT))) AS ex(x)""".stripMargin,
-      "MATERIALIZED "),
 
     "ts_matrix_profile" ->
       """WITH b AS (
@@ -1750,11 +1706,7 @@ object Feat {
 
     "stream_error_burst" -> errorBurstSql,
 
-    "ml_croston" -> crostonSql("lineitem",
-      "date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE))"),
 
-    "ml_anomaly_mahalanobis" -> mahalanobisSql("events",
-      "CAST(json_extract(props, '$.k') AS BIGINT)"),
 
     "agg_time_to_convert" ->
       """WITH su AS (
@@ -1860,15 +1812,8 @@ object Feat {
         |    AS assortativity
         |FROM m""".stripMargin,
 
-    "ml_theta_forecast" -> thetaSql("events",
-      "(epoch_ns(ts) // 1800000000000)"),
 
-    "ts_spectral_entropy" -> spectralEntropySql("events",
-      "(epoch_ns(ts) // 1800000000000)",
-      "FROM cent, unnest(generate_series(2, 96)) AS pe(p)"),
 
-    "ml_hierarchical_reconcile" -> reconcileSql("events",
-      "(epoch_ns(ts) // 21600000000000)", "MATERIALIZED "),
 
     "ts_kalman_level" ->
       """WITH RECURSIVE b AS (
@@ -1894,5 +1839,5 @@ object Feat {
         |    FROM k JOIN s ON s.g = k.g AND s.rn = k.rn + 1) q)
         |SELECT g AS event_type, bucket, y, level, gain
         |FROM k ORDER BY event_type, bucket""".stripMargin
-  )
+  ) ++ Shared.oracles(shared)
 }

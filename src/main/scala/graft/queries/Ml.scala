@@ -2347,7 +2347,7 @@ object Ml {
         s"round((${pRef(i, j)} - s_$i * s_$j / n) / (n - 1), 9) + 0.0")
         .mkString("[", ", ", "]")
     }.mkString("[\n      ", ",\n      ", "]")
-    def pw(name: String, mat: String) =
+    def pw(name: String, matrix: String) =
       s"""$name(i, v) AS (
          |  SELECT 0, [${Seq.fill(k)("v0").mkString(", ")}] FROM r0
          |  UNION ALL
@@ -2362,18 +2362,18 @@ object Ml {
          |        list_transform(generate_series(1, $k), g ->
          |          list_reduce(list_transform(generate_series(1, $k), j ->
          |            m.rm[g][j] * rec.v[j]), (a, b) -> a + b)) AS w
-         |      FROM $name rec, $mat m) t0) t1
+         |      FROM $name rec, $matrix m) t0) t1
          |  WHERE i < 150)""".stripMargin
     def signFix(src: String, out: String) =
       s"""$out AS MATERIALIZED (SELECT CASE WHEN v[list_position(
          |    list_transform(v, x -> abs(x)),
          |    list_max(list_transform(v, x -> abs(x))))] < 0
          |  THEN list_transform(v, x -> -x + 0.0) ELSE v END AS v FROM $src)""".stripMargin
-    def rayleigh(vsrc: String, mat: String, out: String) =
+    def rayleigh(vsrc: String, matrix: String, out: String) =
       s"""$out AS MATERIALIZED (SELECT round(list_reduce(list_transform(generate_series(1, $k), g ->
          |    s.v[g] * list_reduce(list_transform(generate_series(1, $k), j ->
          |      m.rm[g][j] * s.v[j]), (a, b) -> a + b)), (a, b) -> a + b), 9) AS lam
-         |  FROM $vsrc s, $mat m)""".stripMargin
+         |  FROM $vsrc s, $matrix m)""".stripMargin
     def deflate(matIn: String, lsrc: String, vsrc: String, out: String) =
       s"""$out AS MATERIALIZED (
          |  SELECT list_transform(generate_series(1, $k), i ->
@@ -2389,13 +2389,13 @@ object Ml {
          |    round(l.lam / t.tr, 6) + 0.0 AS explained_ratio
          |  FROM sv$c s, l$c l, trc t, (VALUES $nmVals) nm(i, f)""".stripMargin
     val comps = (1 to k).map { c =>
-      val mat = if (c == 1) "cv" else s"dm$c"
+      val matrix = if (c == 1) "cv" else s"dm$c"
       val defl = if (c < k)
-        ",\n" + deflate(mat, s"l$c", s"sv$c", s"dm${c + 1}") else ""
-      s"""${pw(s"pw$c", mat)},
+        ",\n" + deflate(matrix, s"l$c", s"sv$c", s"dm${c + 1}") else ""
+      s"""${pw(s"pw$c", matrix)},
          |vf$c AS MATERIALIZED (SELECT v FROM pw$c WHERE i = 150),
          |${signFix(s"vf$c", s"sv$c")},
-         |${rayleigh(s"sv$c", mat, s"l$c")}$defl""".stripMargin
+         |${rayleigh(s"sv$c", matrix, s"l$c")}$defl""".stripMargin
     }.mkString(",\n")
     s"""WITH RECURSIVE ${IrlsCore.finePrelude(types)},
        |mo AS (

@@ -22,15 +22,6 @@ object R10 {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private val sqlRuns = new java.util.concurrent.atomic.AtomicLong(0)
-  private def withEventsView[T](s: SparkSession, d: String)(f: String => T): T = {
-    val v = s"events_r10_v${sqlRuns.incrementAndGet()}"
-    try {
-      Tables.events(s, d).createOrReplaceTempView(v)
-      f(v)
-    } finally { s.catalog.dropTempView(v); () }
-  }
-
   // ---- SQL fragments shared by the bucket-frame models ---------------------
 
   /** Grid-6 mean of one event type's values within the current group —
@@ -84,8 +75,8 @@ object R10 {
     * is a template parameter so the scale probe can run the SAME
     * machinery over a finer key (series × user bucket) and show cost
     * growing with series count, not rows-per-series. */
-  def groupedEnsembleSql(events: String, bucket: String, series: String,
-                         mat: String): String = {
+  def groupedEnsembleSql(events: String, dl: Dialect, series: String): String = {
+    val (bucket, mat) = (dl.bucket, dl.mat)
     def d6(e: String) = s"CAST($e AS DECIMAL(18,6))"
     // DECIMAL-exact Σ a·b over grid-6 operands, surfaced as DOUBLE
     def sprod(a: String, b: String) =
@@ -100,7 +91,7 @@ object R10 {
       s"sum(abs(CAST(${d6(a)} - ${d6(b)} AS DECIMAL(18,6))))"
     val po = "round(b0o + b1o * l1 + b2o * l2, 6) + 0.0"
     val pr = "round(b0r + b1r * l1 + b2r * l2, 6) + 0.0"
-    s"""WITH b AS $mat (
+    s"""WITH b AS $mat(
        |  SELECT $series AS g, $bucket AS bucket, ${Grid.mean6Sql("value")} AS px
        |  FROM $events GROUP BY 1, 2),
        |s0 AS (
@@ -108,13 +99,13 @@ object R10 {
        |    lag(px, 1) OVER (PARTITION BY g ORDER BY bucket) AS l1,
        |    lag(px, 2) OVER (PARTITION BY g ORDER BY bucket) AS l2
        |  FROM b),
-       |f AS $mat (
+       |f AS $mat(
        |  SELECT g, bucket, px AS y, l1, l2,
        |    row_number() OVER (PARTITION BY g ORDER BY bucket) AS rn,
        |    count(*) OVER (PARTITION BY g) AS cnt
        |  FROM s0 WHERE l1 IS NOT NULL AND l2 IS NOT NULL),
-       |tr AS $mat (SELECT * FROM f WHERE rn <= floor(cnt * 0.8)),
-       |te AS $mat (SELECT * FROM f WHERE rn > floor(cnt * 0.8)),
+       |tr AS $mat(SELECT * FROM f WHERE rn <= floor(cnt * 0.8)),
+       |te AS $mat(SELECT * FROM f WHERE rn > floor(cnt * 0.8)),
        |mo AS (
        |  SELECT g, count(*) AS n,
        |    ${ssum("l1")} AS s1, ${ssum("l2")} AS s2, ${ssum("y")} AS sy,
@@ -148,7 +139,7 @@ object R10 {
        |      ELSE round(((c11 + lam) * c2y - c1y * c12)
        |        / ((c11 + lam) * (c22 + lam) - c12 * c12), 9) END AS b2r
        |  FROM cg),
-       |cb AS $mat (
+       |cb AS $mat(
        |  SELECT g, n, ybar,
        |    round(ybar - b1o * m1 - b2o * m2, 6) AS b0o, b1o, b2o,
        |    round(ybar - b1r * m1 - b2r * m2, 6) AS b0r, b1r, b2r
@@ -244,15 +235,15 @@ object R10 {
     "CASE WHEN sw * swxx - swx * swx = 0.0 THEN 0.0 ELSE " +
       "round((sw * swxy - swx * swy) / (sw * swxx - swx * swx), 9) END"
 
-  def huberIrlsSql(events: String, bucket: String, median: String,
-                   mat: String = ""): String = {
-    // `mat` ("MATERIALIZED " on DuckDB, "" on Spark — R10Spec replays
-    // this text through spark.sql for the bit-equality pin): every
-    // per-iteration CTE has 2+ consumers (r_i feeds d_i+w_i; d_i feeds
+  def huberIrlsSql(events: String, dl: Dialect): String = {
+    // R10Spec replays this text through spark.sql for the bit-equality
+    // pin. Every per-iteration CTE has 2+ consumers (r_i feeds d_i+w_i; d_i feeds
     // w_i+c_i; c_i feeds the next round twice plus the final union), so
     // DuckDB 1.0's per-reference re-expansion costs 682 MB / 0.9 s vs
     // 10 MB / 0.03 s materialized (identical result) — the r11
     // map-exhaustion class.
+    val (bucket, mat) = (dl.tsDiv(21600000000000L), dl.mat)
+    val median = dl.median("abs(r)")
     val betaExpr = huberBetaExpr
     val iters = (1 to 4).map { i =>
       val p = i - 1
@@ -333,8 +324,7 @@ object R10 {
     * (6e47690e…) — any arithmetic drift from the template is a gate
     * failure, not a silent skew. DuckDB keeps the single monolithic
     * text — its optimizer handles multi-consumer CTEs natively. */
-  def huberIrlsSpark(s: SparkSession, events: String, bucket: String,
-                     median: String): DataFrame = {
+  def huberIrlsSpark(s: SparkSession, events: String): DataFrame = {
     import java.math.{BigDecimal => JBD, RoundingMode => RM}
     def rnd(x: Double, n: Int): Double =
       if (x.isNaN || x.isInfinite) x
@@ -355,11 +345,9 @@ object R10 {
       if (lower == higher || hk == lk) lk
       else (higher - pos) * lk + (pos - lower) * hk
     }
-    require(median == "percentile(abs(r), 0.5)",
-      s"driver replay mirrors exactly the registered median form: $median")
     val base = s.sql(
       s"""SELECT x, y FROM (
-         |  SELECT $bucket AS bucket,
+         |  SELECT ${Dialect.Spark.tsDiv(21600000000000L)} AS bucket,
          |    ${typeMean("purchase")} AS x,
          |    ${typeMean("click")} AS y
          |  FROM $events WHERE event_type IN ('click', 'purchase')
@@ -440,8 +428,8 @@ object R10 {
     * plans one small step at a time instead of paying ~5 s of fixed
     * analysis + optimization for the ~25-CTE unrolled text per consumer
     * (tracker phases: optimization 3.6 s, analysis 1.3 s). */
-  private[graft] def logisticSteps(events: String, bucket: String,
-                                   median: String): Seq[Step] = {
+  private[graft] def logisticSteps(events: String, dl: Dialect): Seq[Step] = {
+    val bucket = dl.bucket
     val hDet = det3("sw", "s1", "s2", "s1", "s11", "s12", "s2", "s12", "s22")
     val d0 = det3("g0", "s1", "s2", "g1", "s11", "s12", "g2", "s12", "s22")
     val d1 = det3("sw", "g0", "s2", "s1", "g1", "s12", "s2", "g2", "s22")
@@ -458,7 +446,7 @@ object R10 {
            |  GROUP BY 1) t
            |WHERE x1 IS NOT NULL AND x2 IS NOT NULL AND p_raw IS NOT NULL""".stripMargin),
       Step("bl", r =>
-        s"""WITH med AS (SELECT round($median, 6) AS m FROM ${r("b")})
+        s"""WITH med AS (SELECT round(${dl.median("p_raw")}, 6) AS m FROM ${r("b")})
            |SELECT b.bucket, b.x1, b.x2,
            |  CASE WHEN b.p_raw > med.m THEN 1 ELSE 0 END AS y
            |FROM ${r("b")} b, med""".stripMargin),
@@ -514,9 +502,8 @@ object R10 {
 
   /** [[logisticSteps]] plus `p5`, the model-sized scored frame the
     * sweep and AUC tails read. */
-  private[graft] def logisticScoredSteps(events: String, bucket: String,
-                                         median: String): Seq[Step] =
-    logisticSteps(events, bucket, median) :+
+  private[graft] def logisticScoredSteps(events: String, dl: Dialect): Seq[Step] =
+    logisticSteps(events, dl) :+
       Step("p5", r => lgScoreSql(r("bl"), r("c4")))
 
   /** LOGISTIC REGRESSION as a FULL oracle row — the classification
@@ -537,9 +524,8 @@ object R10 {
     * coefficient trajectory with training accuracy (exact integer) and
     * log-loss — iteration 0 is the null model, so the fit's progress is
     * in the result. R10Spec pins the planted-separation law. */
-  def logisticNewtonChain(events: String, bucket: String,
-                          median: String): StepChain =
-    StepChain(logisticSteps(events, bucket, median), r => {
+  def logisticNewtonChain(events: String, dl: Dialect): StepChain =
+    StepChain(logisticSteps(events, dl), r => {
       val arms = (0 to 4).map { i =>
         s"""SELECT $i AS iter, c.a + 0.0 AS alpha, c.b1 + 0.0 AS beta1,
            |    c.b2 + 0.0 AS beta2, m.n_correct AS n_correct,
@@ -573,13 +559,11 @@ object R10 {
     * integer counts over identical double compares, and
     * precision/recall/F1 are output-only grid-6 divisions with NULLIF
     * zero guards. 9 rows; cost = one 9-row sweep attach over the
-    * already-model-sized score frame. `qfun` is the dialect's
-    * interpolating percentile. */
-  def thresholdSweepChain(events: String, bucket: String, median: String,
-                          qfun: String): StepChain =
-    StepChain(logisticScoredSteps(events, bucket, median), r => {
+    * already-model-sized score frame. */
+  def thresholdSweepChain(events: String, dl: Dialect): StepChain =
+    StepChain(logisticScoredSteps(events, dl), r => {
       val arms = (1 to 9).map(i =>
-        s"SELECT $i AS i, round($qfun(p, CAST($i AS DOUBLE) / 10), 6) AS tau " +
+        s"SELECT $i AS i, round(${dl.percentile("p", s"CAST($i AS DOUBLE) / 10")}, 6) AS tau " +
           s"FROM ${r("p5")}")
         .mkString("\n    UNION ALL ")
       s"""SELECT i AS decile, tau + 0.0 AS threshold, tp, fp, fn, tn,
@@ -619,9 +603,10 @@ object R10 {
     * sums, the single sqrt IEEE-exact. Cost: a 10-row fraction attach
     * over the bucket-grain frame (grows with time span, not event
     * volume — the `ml_ensemble_weighted` posture). 10 rows out. */
-  def learningCurveSql(events: String, bucket: String,
-                       hash: String => String, mstr: String => String,
-                       mat: String): String = {
+  def learningCurveSql(events: String, dl: Dialect): String = {
+    val (bucket, mat) = (dl.bucket, dl.mat)
+    def hash(k: String) = dl.md5Int(dl.str(k))
+    def mstr(k: String) = s"md5(${dl.str(k)})"
     // ridge normal matrix: intercept row unpenalized, +1 on the
     // feature diagonal (double + integer literal — no decimal literal)
     val hDet = det3("sw", "s1", "s2",
@@ -633,7 +618,7 @@ object R10 {
     val d2 = det3("sw", "s1", "sy",
       "s1", "(s11 + 1)", "s1y", "s2", "s12", "s2y")
     val fracs = (1 to 10).map(f => s"SELECT $f AS f").mkString(" UNION ALL ")
-    s"""WITH b AS $mat (
+    s"""WITH b AS $mat(
        |  SELECT bucket, x1, x2, y FROM (
        |    SELECT $bucket AS bucket,
        |      ${typeMean("click")} AS x1,
@@ -643,9 +628,9 @@ object R10 {
        |    WHERE event_type IN ('click', 'view', 'purchase')
        |    GROUP BY 1) t
        |  WHERE x1 IS NOT NULL AND x2 IS NOT NULL AND y IS NOT NULL),
-       |tst AS $mat (
+       |tst AS $mat(
        |  SELECT bucket, x1, x2, y FROM b WHERE ${hash("bucket")} % 5 = 0),
-       |trn AS $mat (
+       |trn AS $mat(
        |  SELECT bucket, x1, x2, y,
        |    row_number() OVER (ORDER BY ${mstr("bucket")}, bucket) AS rn
        |  FROM b WHERE ${hash("bucket")} % 5 <> 0),
@@ -698,8 +683,8 @@ object R10 {
     * literal — identical both engines; the exact dL/dU tables are
     * n,k-indexed lookups a caller applies to the emitted statistic.
     * One row out. */
-  def residualDiagnosticsSql(events: String, bucket: String,
-                             mat: String): String = {
+  def residualDiagnosticsSql(events: String, dl: Dialect): String = {
+    val (bucket, mat) = (dl.bucket, dl.mat)
     val hDet = det3("sw", "s1", "s2",
       "s1", "(s11 + 1)", "s12", "s2", "s12", "(s22 + 1)")
     val d0 = det3("sy", "s1", "s2",
@@ -708,7 +693,7 @@ object R10 {
       "s1", "s1y", "s12", "s2", "s2y", "(s22 + 1)")
     val d2 = det3("sw", "s1", "sy",
       "s1", "(s11 + 1)", "s1y", "s2", "s12", "s2y")
-    s"""WITH b AS $mat (
+    s"""WITH b AS $mat(
        |  SELECT bucket, x1, x2, y FROM (
        |    SELECT $bucket AS bucket,
        |      ${typeMean("click")} AS x1,
@@ -764,8 +749,8 @@ object R10 {
     * unpartitioned rank over the model-sized score frame (bounded —
     * the huber class); AUC and Gini are output-only grid-6 divisions
     * of exact integers. */
-  def aucRocChain(events: String, bucket: String, median: String): StepChain =
-    StepChain(logisticScoredSteps(events, bucket, median), r =>
+  def aucRocChain(events: String, dl: Dialect): StepChain =
+    StepChain(logisticScoredSteps(events, dl), r =>
       s"""SELECT n_pos, n_neg,
          |  r2 - n_pos * (n_pos + 1) AS u2,
          |  round((r2 - n_pos * (n_pos + 1)) / (2 * n_pos * n_neg), 6) AS auc,
@@ -807,7 +792,8 @@ object R10 {
     * Spark re-expands the chain into a plan tree exponential in rounds
     * (~350 s of planning at sf0.1); as
     * a [[StepChain]] each round is planned over checkpointed views. */
-  def gbtStumpsChain(events: String, bucket: String): StepChain = {
+  def gbtStumpsChain(events: String, dl: Dialect): StepChain = {
+    val bucket = dl.bucket
     // r lives on the exact 1e-7 grid as DECIMAL(15,7) (leaves are grid-6,
     // nu = 0.5 makes every increment scale-7): the update NEVER rounds, so
     // no midpoint ever meets an engine-specific round(). r^2 at scale 14
@@ -908,9 +894,9 @@ object R10 {
     * bucket series (no driver collect); twin: recursive CTE joining the
     * indexed series per step. R10Spec plants a perfectly-correlated
     * stream (w1 → 1, w0 → 0) and pins one-pass loss improvement. */
-  def sgdZSql(events: String, day: String, mat: String): String =
-    s"""px AS $mat (
-       |  SELECT $day AS bucket,
+  def sgdZSql(events: String, dl: Dialect): String =
+    s"""px AS ${dl.mat}(
+       |  SELECT ${dl.bucket} AS bucket,
        |    round(CAST(sum(CAST(CASE WHEN event_type = 'view' THEN value END
        |        AS DECIMAL(18,6))) AS DOUBLE)
        |      / count(CASE WHEN event_type = 'view' THEN value END), 6) AS x,
@@ -919,7 +905,7 @@ object R10 {
        |      / count(CASE WHEN event_type = 'click' THEN value END), 6) AS y
        |  FROM $events WHERE event_type IN ('view', 'click')
        |  GROUP BY 1),
-       |b AS $mat (SELECT bucket, x, y FROM px
+       |b AS ${dl.mat}(SELECT bucket, x, y FROM px
        |  WHERE x IS NOT NULL AND y IS NOT NULL),
        |mom AS (
        |  SELECT count(*) AS n,
@@ -935,7 +921,7 @@ object R10 {
        |    round(sqrt((pxx - sx * sx / n) / n), 6) AS sdx,
        |    round(sqrt((pyy - sy * sy / n) / n), 6) AS sdy
        |  FROM mom),
-       |z AS $mat (
+       |z AS ${dl.mat}(
        |  SELECT row_number() OVER (ORDER BY bucket) AS i,
        |    round((x - stz.mx) / stz.sdx, 6) + 0.0 AS zx,
        |    round((y - stz.my) / stz.sdy, 6) + 0.0 AS zy
@@ -949,9 +935,9 @@ object R10 {
     graft.operators.SgdOnline.fold(rows)
 
   /** DuckDB twin: the same standardization CTEs + the SGD recursion. */
-  def sgdOnlineSql(events: String, day: String): String = {
+  def sgdOnlineSql(events: String, dl: Dialect): String = {
     val err = "(round(round(r.w0 + r.w1 * z.zx, 9) - z.zy, 9) + 0.0)"
-    s"""WITH RECURSIVE ${sgdZSql(events, day, "MATERIALIZED")},
+    s"""WITH RECURSIVE ${sgdZSql(events, dl)},
        |r AS (
        |  SELECT CAST(0 AS BIGINT) AS i, CAST(0.0 AS DOUBLE) AS w0,
        |    CAST(0.0 AS DOUBLE) AS w1, CAST(0.0 AS DOUBLE) AS sse
@@ -984,13 +970,11 @@ object R10 {
     * at its second return — a threshold the noise crosses instantly is
     * as vacuous as one nothing crosses). Windows partitioned per
     * series — bounded, scale-clean. */
-  def pageHinkleySql(events: String, bucket: String, mat: String = ""): String =
-    // `mat` marks the MULTI-CONSUMER CTEs (rr feeds tol+c; tol feeds
-    // t+s) "MATERIALIZED " on the DuckDB side — without it DuckDB 1.0
-    // re-expands the whole upstream chain per consumer, and the burst
-    // contributes to the map-count exhaustion that killed the driver
-    // harness's single-connection replay in r11. Spark passes "" (no
-    // such hint in its parser).
+  def pageHinkleySql(events: String, dl: Dialect): String = {
+    val (bucket, mat) = (dl.bucket, dl.mat)
+    // the MULTI-CONSUMER CTEs (rr feeds tol+c; tol feeds t+s) carry
+    // `mat` — re-expanded per consumer they fed the r11 map-count
+    // exhaustion of a single-connection oracle replay
     s"""WITH px AS (
        |  SELECT event_type AS series, $bucket AS b,
        |    ${Grid.mean6Sql("value")} AS x
@@ -1058,6 +1042,7 @@ object R10 {
        |  CASE WHEN alarm_up_bucket IS NOT NULL
        |    OR alarm_down_bucket IS NOT NULL THEN 1 ELSE 0 END AS alarmed
        |FROM s ORDER BY series""".stripMargin
+  }
 
   // ---- sample entropy (shared SQL template) ---------------------------------
 
@@ -1071,7 +1056,8 @@ object R10 {
     * the fact table). A/B are INTEGERS (comparisons on identical
     * grid-6-derived doubles); the single ln is output-only with
     * integer-count NULL guards. */
-  def sampleEntropySql(events: String, bucket: String): String =
+  def sampleEntropySql(events: String, dl: Dialect): String = {
+    val bucket = dl.bucket
     s"""WITH px AS (
        |  SELECT event_type AS series, $bucket AS b,
        |    ${Grid.mean6Sql("value")} AS x
@@ -1115,6 +1101,7 @@ object R10 {
        |    ELSE NULL END AS sampen
        |FROM tol t JOIN cnt c ON t.series = c.series
        |ORDER BY t.series""".stripMargin
+  }
 
   // ---- Friedman test (shared SQL template) --------------------------------
 
@@ -1132,7 +1119,8 @@ object R10 {
     * — documented). Reject at the df = k−1 = 4 χ² 95 % point; the flag
     * is NULL unless k = 5 (the literal's precondition — the Kupiec
     * guard pattern). */
-  def friedmanSql(events: String, day: String): String =
+  def friedmanSql(events: String, dl: Dialect): String = {
+    val day = dl.day
     s"""WITH px AS (
        |  SELECT event_type AS series, $day AS day,
        |    round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
@@ -1166,6 +1154,7 @@ object R10 {
        |      THEN 1 ELSE 0 END
        |  ELSE NULL END AS reject_95
        |FROM rs, tot t ORDER BY series""".stripMargin
+  }
 
   // ---- CAPM beta (shared SQL template) -------------------------------------
 
@@ -1179,7 +1168,8 @@ object R10 {
     * sufficient-statistics layout; identical doubles both engines).
     * Degenerate-variance series are excluded by an EXACT filter (same
     * arithmetic both sides). */
-  def capmSql(events: String, day: String): String =
+  def capmSql(events: String, dl: Dialect): String = {
+    val day = dl.day
     s"""WITH px AS (
        |  SELECT event_type AS series, $day AS day,
        |    round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
@@ -1219,6 +1209,7 @@ object R10 {
        |FROM mom
        |WHERE (pmm - sm * sm / n) > 0 AND (pii - si * si / n) > 0
        |ORDER BY series""".stripMargin
+  }
 
   // ---- log-rank test (shared SQL template) --------------------------------
 
@@ -1237,17 +1228,19 @@ object R10 {
     * computed as identical doubles both engines, per-term rounded 1e-9
     * and summed in DECIMAL; χ² = (O−E)²/V with a V=0 guard. Weekday
     * from exact epoch-day arithmetic (the `fin_dow_effects`
-    * convention). ONE SQL text; dialect supplies the epoch-µs
-    * expression and the integer-division token. */
+    * convention). ONE SQL text. */
   /** The session-survival frame both `stat_logrank` and `ml_cox_ph`
     * consume: 10-min-gap sessions → per-duration arrivals/deaths by
     * weekend cohort → suffix at-risk counts. Ends with the `rk`
     * (t, d1, d0, n1, n0) integer frame. */
-  private def sessionRiskSql(events: String, epochUs: String,
-                             idiv: String, mat: String = ""): String =
-    // `mat`: sgrp feeds bounds+obs and obs feeds byt+cnt, so the DuckDB
-    // side materializes both (else the whole session-window chain is
-    // re-evaluated per consumer — part of the r11 map-exhaustion class)
+  private def sessionRiskSql(events: String, dl: Dialect,
+                             materialize: Boolean): String = {
+    // sgrp feeds bounds+obs and obs feeds byt+cnt, so a standalone
+    // DuckDB text materializes both (else the whole session-window chain
+    // is re-evaluated per consumer — part of the r11 map-exhaustion
+    // class); inside a chain step the step itself is materialized
+    val (epochUs, idiv) = (dl.epochUs, dl.div)
+    val mat = if (materialize) dl.mat else ""
     s"""WITH e AS (
        |  SELECT user_id, event_id, $epochUs AS ts_us FROM $events),
        |flagged AS (
@@ -1282,10 +1275,10 @@ object R10 {
        |    sum(a1) OVER (ORDER BY t DESC ROWS UNBOUNDED PRECEDING) AS n1,
        |    sum(a0) OVER (ORDER BY t DESC ROWS UNBOUNDED PRECEDING) AS n0
        |  FROM byt)""".stripMargin
+  }
 
-  def logrankSql(events: String, epochUs: String, idiv: String,
-                 mat: String = ""): String =
-    s"""${sessionRiskSql(events, epochUs, idiv, mat)},
+  def logrankSql(events: String, dl: Dialect): String =
+    s"""${sessionRiskSql(events, dl, materialize = true)},
        |terms AS (
        |  SELECT
        |    round(CAST(d1 + d0 AS DOUBLE) * n1 / (n1 + n0), 9) AS e1,
@@ -1339,13 +1332,13 @@ object R10 {
     * step's double reference would re-expand the session pipeline
     * 2^steps times); the 1-row moment
     * (m) and coefficient (c) steps keep Catalyst's plans small. */
-  def coxPhChain(events: String, epochUs: String, idiv: String): StepChain = {
+  def coxPhChain(events: String, dl: Dialect): StepChain = {
     // the per-term rounding happens inside u_t / i_t
     def decSum(term: String, name: String) =
       s"CAST(sum(CAST($term AS DECIMAL(28,9))) AS DOUBLE) AS $name"
     val start = Seq(
       Step("rk", _ =>
-        s"""${sessionRiskSql(events, epochUs, idiv)}
+        s"""${sessionRiskSql(events, dl, materialize = false)}
            |SELECT t, d1, d0, n1, n0 FROM rk""".stripMargin),
       Step("c0", _ => "SELECT CAST(0.0 AS DOUBLE) AS b"))
     val newton = (1 to 5).flatMap { k =>
@@ -1405,8 +1398,8 @@ object R10 {
     * parameter trajectory with loglik — EM's monotone-ascent law,
     * pinned in R10Spec on a planted bimodal mixture. The seeded MLlib
     * `ml_gmm_clusters` stays the library surface. */
-  def gmmEmSql(events: String, bucket: String, pct: String,
-               mat: String): String = {
+  def gmmEmSql(events: String, dl: Dialect): String = {
+    val (bucket, mat) = (dl.bucket, dl.mat)
     val ln2pi = "1.8378770664093453"
     val stages = (1 to 5).map { k =>
       val p = k - 1
@@ -1414,7 +1407,7 @@ object R10 {
         if (k == 5) ""
         else
           s""",
-             |c$k AS $mat (
+             |c$k AS $mat(
              |  SELECT
              |    least(greatest(round(sg / n, 6), 0.000001), 0.999999) AS w2,
              |    round((sx - sgx) / (n - sg), 6) AS mu1,
@@ -1425,7 +1418,7 @@ object R10 {
              |    greatest(round(sgx2 / sg - (sgx / sg) * (sgx / sg), 6),
              |      0.000001) AS v2
              |  FROM m$k)""".stripMargin
-      s"""g$k AS $mat (
+      s"""g$k AS $mat(
          |  SELECT x,
          |    least(greatest(round(1.0 / (1.0 + exp(el)), 9), 0.000000001),
          |      0.999999999) AS g2,
@@ -1441,7 +1434,7 @@ object R10 {
          |        ln(c.w2) - 0.5 * $ln2pi - 0.5 * ln(c.v2)
          |          - (b.x - c.mu2) * (b.x - c.mu2) / (2.0 * c.v2) AS lb
          |      FROM b, c$p c) b) q),
-         |m$k AS $mat (
+         |m$k AS $mat(
          |  SELECT count(*) AS n,
          |    ${dsum("g2", "sg")}, ${dsum("g2 * x", "sgx")},
          |    ${dsum("g2 * x * x", "sgx2")}, ${dsum("llt", "ll")},
@@ -1455,7 +1448,7 @@ object R10 {
          |    c$i.v2 AS var2, round(m${i + 1}.ll / m${i + 1}.n, 6) AS loglik
          |  FROM c$i, m${i + 1}""".stripMargin
     }.mkString("\n  UNION ALL ")
-    s"""WITH b AS $mat (
+    s"""WITH b AS $mat(
        |  SELECT bucket, x FROM (
        |    SELECT $bucket AS bucket,
        |      round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
@@ -1463,13 +1456,13 @@ object R10 {
        |    FROM $events WHERE event_type = 'click'
        |    GROUP BY 1) t
        |  WHERE x IS NOT NULL),
-       |c0 AS $mat (
+       |c0 AS $mat(
        |  SELECT CAST(0.5 AS DOUBLE) AS w2,
        |    round(q1, 6) AS mu1, round(q3, 6) AS mu2,
        |    greatest(round(vx, 6), 0.000001) AS v1,
        |    greatest(round(vx, 6), 0.000001) AS v2
        |  FROM (
-       |    SELECT $pct(x, 0.25) AS q1, $pct(x, 0.75) AS q3,
+       |    SELECT ${dl.percentile("x", "0.25")} AS q1, ${dl.percentile("x", "0.75")} AS q3,
        |      CAST(sum(CAST(CAST(x AS DECIMAL(18,6)) * CAST(x AS DECIMAL(18,6))
        |          AS DECIMAL(30,12))) AS DOUBLE) / count(*)
        |        - (CAST(sum(CAST(x AS DECIMAL(18,6))) AS DOUBLE) / count(*))
@@ -1500,7 +1493,8 @@ object R10 {
     * inputs echoed — put-call parity is an exact identity of the SAME
     * N() values, pinned in R10Spec. For a commodity-forecasting engine
     * this is the missing derivatives leg on top of the vol/VaR rows. */
-  def blackScholesSql(events: String, bucket: String): String = {
+  def blackScholesSql(events: String, dl: Dialect): String = {
+    val bucket = dl.day
     def poly(t: String) =
       s"$t * (0.319381530 + $t * (-0.356563782 + $t * (1.781477937 + " +
         s"$t * (-1.821255978 + $t * 1.330274429))))"
@@ -1582,10 +1576,10 @@ object R10 {
     * 20 000, path-id tiebreak — the `ts_risk_profile` no-interpolation
     * convention) with ES tails summed in DECIMAL. R10Spec pins the MC
     * estimate against the closed-form lognormal quantile. */
-  def mcVarSql(events: String, bucket: String, pathGen: String,
-               md5i: String => String): String = {
+  def mcVarSql(events: String, dl: Dialect): String = {
+    val bucket = dl.day
     def u(tag: String) =
-      s"(${md5i(s"concat(g, ':', CAST(p AS STRING), ':$tag')")} % 16777216" +
+      s"((${dl.md5Int(s"concat(g, ':', CAST(p AS STRING), ':$tag')")}) % 16777216" +
         s" + 0.5) / 16777216.0"
     s"""WITH b AS (
        |  SELECT event_type AS g, $bucket AS bucket,
@@ -1613,7 +1607,7 @@ object R10 {
        |    ON st.g = l.g
        |  WHERE st.sig > 0 AND l.s0 > 0 AND st.n > 2),
        |paths AS (
-       |  SELECT g, s0, mu, sig, p FROM base, ($pathGen) pt),
+       |  SELECT g, s0, mu, sig, p FROM base, (${dl.series("1, 20000", "p")}) pt),
        |sim AS (
        |  SELECT g, s0, p,
        |    round(s0 * (1.0 - exp(
@@ -1828,7 +1822,8 @@ object R10 {
     * decision, crossing bucket, final/extreme LLRs. On stationary data
     * the expected verdict is accept_h0/continue; R10Spec plants a
     * shifted suffix that must alarm. */
-  def sprtSql(events: String, bucket: String): String =
+  def sprtSql(events: String, dl: Dialect): String = {
+    val bucket = dl.bucket
     s"""WITH b AS (
        |  SELECT bucket, x FROM (
        |    SELECT $bucket AS bucket,
@@ -1883,6 +1878,7 @@ object R10 {
        |  llr_final, llr_max, llr_min,
        |  round(2.9444389791664403, 6) AS bound_upper
        |FROM cr""".stripMargin
+  }
 
   // ---- GMV audit ----------------------------------------------------------
 
@@ -1892,7 +1888,69 @@ object R10 {
     * bit-identical; see `fin_gmv_audit`'s Scaladoc. */
   private final val GmvIters = 400
 
-  val qs: Map[String, Q] = Map(
+  private[graft] lazy val shared: Map[String, Shared] = Map(
+    "ml_ensemble_grouped" ->
+      Shared.sql((dl, t) => groupedEnsembleSql(t("events"), dl, "event_type")),
+
+    "ml_huber_irls" -> Shared((s, t) => huberIrlsSpark(s, t("events")))(
+      (dl, t) => huberIrlsSql(t("events"), dl)),
+
+    "ml_logistic_newton" -> Shared.chain((dl, t) => logisticNewtonChain(t("events"), dl)),
+
+    /** The τ OPERATING SWEEP over the same converged logistic model —
+      * see `thresholdSweepChain`: per-threshold exact confusion counts +
+      * output-only precision/recall/F1. */
+    "ml_threshold_sweep" -> Shared.chain((dl, t) => thresholdSweepChain(t("events"), dl)),
+
+    /** EXACT Mann–Whitney AUC over the same converged logistic scores —
+      * see `aucRocChain`: 2·R₁ integer rank carry, ties averaged,
+      * AUC/Gini output-only. */
+    "ml_auc_roc" -> Shared.chain((dl, t) => aucRocChain(t("events"), dl)),
+
+    /** Held-out error vs training-set size — see `learningCurveSql`:
+      * md5-ordered training prefixes decided by integer
+      * cross-multiplication, per-fraction DECIMAL-exact ridge. */
+    "ml_learning_curve" -> Shared.sql((dl, t) => learningCurveSql(t("events"), dl)),
+
+    /** Durbin–Watson + lag-1 residual autocorrelation over the
+      * full-data ridge — see `residualDiagnosticsSql`. */
+    "ml_residual_diagnostics" -> Shared.sql((dl, t) => residualDiagnosticsSql(t("events"), dl)),
+
+    "ml_gbt_stumps" -> Shared.chain((dl, t) => gbtStumpsChain(t("events"), dl)),
+
+    "stat_logrank" -> Shared.sql((dl, t) => logrankSql(t("events"), dl)),
+
+    /** Cox PH over the session frame — see `coxPhChain`: the risk
+      * frame is the chain's first step, materialized once. */
+    "ml_cox_ph" -> Shared.chain((dl, t) => coxPhChain(t("events"), dl)),
+
+    "ml_gmm_em" -> Shared.sql((dl, t) => gmmEmSql(t("events"), dl)),
+
+    "fin_black_scholes" -> Shared.sql((dl, t) => blackScholesSql(t("events"), dl)),
+
+    "fin_mc_var" -> Shared.sql((dl, t) => mcVarSql(t("events"), dl)),
+
+    "stat_sprt" -> Shared.sql((dl, t) => sprtSql(t("events"), dl)),
+
+    "stat_friedman" -> Shared.sql((dl, t) => friedmanSql(t("events"), dl)),
+
+    "stat_page_hinkley" -> Shared.sql((dl, t) => pageHinkleySql(t("events"), dl)),
+
+    "ts_sample_entropy" -> Shared.sql((dl, t) => sampleEntropySql(t("events"), dl)),
+
+    "fin_capm_beta" -> Shared.sql((dl, t) => capmSql(t("events"), dl)),
+
+    "ml_sgd_online" -> Shared { (s, t) =>
+      import s.implicits._
+      s.sql("WITH " + sgdZSql(t("events"), Dialect.Spark) +
+          "\nSELECT i, zx, zy FROM z")
+        .as[(Long, Double, Double)]
+        .groupByKey(_ => 1)
+        .flatMapGroups((_, it) => Iterator(sgdFold(it.toArray)))
+        .toDF("n_steps", "w0", "w1", "rmse")
+    }((dl, t) => sgdOnlineSql(t("events"), dl)))
+
+  val qs: Map[String, Q] = Map[String, Q](
 
     /** GMV-PORTFOLIO OPTIMALITY AUDIT — the verification half of
       * `fin_min_variance_portfolio` as a FULL ORACLE row (VERDICT r9 ask
@@ -1985,54 +2043,13 @@ object R10 {
         .orderBy("series")
     }),
 
-    "ml_ensemble_grouped" -> ((s, d) => withEventsView(s, d) { v =>
-      s.sql(groupedEnsembleSql(v, "ts_ns div 1800000000000", "event_type", ""))
-    }),
 
-    "ml_huber_irls" -> ((s, d) => withEventsView(s, d) { v =>
-      huberIrlsSpark(s, v, "ts_ns div 21600000000000",
-        "percentile(abs(r), 0.5)")
-    }),
 
-    "ml_logistic_newton" -> ((s, d) => withEventsView(s, d) { v =>
-      logisticNewtonChain(v, "ts_ns div 1800000000000",
-        "percentile(p_raw, 0.5)").run(s)
-    }),
 
-    /** The τ OPERATING SWEEP over the same converged logistic model —
-      * see `thresholdSweepChain`: per-threshold exact confusion counts +
-      * output-only precision/recall/F1. */
-    "ml_threshold_sweep" -> ((s, d) => withEventsView(s, d) { v =>
-      thresholdSweepChain(v, "ts_ns div 1800000000000",
-        "percentile(p_raw, 0.5)", "percentile").run(s)
-    }),
 
-    /** EXACT Mann–Whitney AUC over the same converged logistic scores —
-      * see `aucRocChain`: 2·R₁ integer rank carry, ties averaged,
-      * AUC/Gini output-only. */
-    "ml_auc_roc" -> ((s, d) => withEventsView(s, d) { v =>
-      aucRocChain(v, "ts_ns div 1800000000000",
-        "percentile(p_raw, 0.5)").run(s)
-    }),
 
-    /** Held-out error vs training-set size — see `learningCurveSql`:
-      * md5-ordered training prefixes decided by integer
-      * cross-multiplication, per-fraction DECIMAL-exact ridge. */
-    "ml_learning_curve" -> ((s, d) => withEventsView(s, d) { v =>
-      s.sql(learningCurveSql(v, "ts_ns div 1800000000000",
-        k => s"CAST(conv(substring(md5(CAST($k AS STRING)), 1, 8), 16, 10) AS BIGINT)",
-        k => s"md5(CAST($k AS STRING))", ""))
-    }),
 
-    /** Durbin–Watson + lag-1 residual autocorrelation over the
-      * full-data ridge — see `residualDiagnosticsSql`. */
-    "ml_residual_diagnostics" -> ((s, d) => withEventsView(s, d) { v =>
-      s.sql(residualDiagnosticsSql(v, "ts_ns div 1800000000000", ""))
-    }),
 
-    "ml_gbt_stumps" -> ((s, d) => withEventsView(s, d) { v =>
-      gbtStumpsChain(v, "ts_ns div 1800000000000").run(s)
-    }),
 
     /** The watermark-GATED left-outer stream-stream join — see
       * `EventStream.leftOuterAttribution`: unmatched clicks emit only
@@ -2041,36 +2058,14 @@ object R10 {
       * computes the final watermark in SQL. */
     "stream_join_left_outer" -> ((s, d) =>
       graft.streaming.EventStream.runLeftOuterOnce(s, d,
-          s"stream_ljoin_v${sqlRuns.incrementAndGet()}")
+          Shared.unique("stream_ljoin"))
         .orderBy("user_id")),
 
-    "stat_logrank" -> ((s, d) => withEventsView(s, d) { v =>
-      s.sql(logrankSql(v, "ts_ns div 1000", "div"))
-    }),
 
-    /** Cox PH over the session frame — see `coxPhChain`: the risk
-      * frame is the chain's first step, materialized once. */
-    "ml_cox_ph" -> ((s, d) => withEventsView(s, d) { v =>
-      coxPhChain(v, "ts_ns div 1000", "div").run(s)
-    }),
 
-    "ml_gmm_em" -> ((s, d) => withEventsView(s, d) { v =>
-      s.sql(gmmEmSql(v, "ts_ns div 1800000000000", "percentile", ""))
-    }),
 
-    "fin_black_scholes" -> ((s, d) => withEventsView(s, d) { v =>
-      s.sql(blackScholesSql(v, "ts_ns div 86400000000000"))
-    }),
 
-    "fin_mc_var" -> ((s, d) => withEventsView(s, d) { v =>
-      s.sql(mcVarSql(v, "ts_ns div 86400000000000",
-        "SELECT explode(sequence(1, 20000)) AS p",
-        e => s"CAST(conv(substring(md5($e), 1, 8), 16, 10) AS BIGINT)"))
-    }),
 
-    "stat_sprt" -> ((s, d) => withEventsView(s, d) { v =>
-      s.sql(sprtSql(v, "ts_ns div 1800000000000"))
-    }),
 
     /** MINIMUM SPANNING FOREST by distributed Borůvka — the graph
       * suite's first OPTIMIZATION operator (everything else measures or
@@ -2525,13 +2520,7 @@ object R10 {
       } finally { edges.unpersist(); () }
     }),
 
-    "stat_friedman" -> ((s, d) => withEventsView(s, d) { v =>
-      s.sql(friedmanSql(v, "ts_ns div 86400000000000"))
-    }),
 
-    "stat_page_hinkley" -> ((s, d) => withEventsView(s, d) { v =>
-      s.sql(pageHinkleySql(v, "ts_ns div 1800000000000"))
-    }),
 
     /** REAL STREAMING twin of `stat_page_hinkley` — see
       * `EventStream.phStream`: the drift detector run as a per-series
@@ -2540,7 +2529,7 @@ object R10 {
       * hash-matching the same oracle. */
     "stream_page_hinkley" -> ((s, d) =>
       graft.streaming.EventStream.runPhOnce(s, d,
-        s"stream_ph_v${sqlRuns.incrementAndGet()}")),
+        Shared.unique("stream_ph"))),
 
     /** REAL STREAMING twin of `drift_psi` — see
       * `EventStream.runPsiOnce`: frozen batch-side reference profile
@@ -2549,7 +2538,7 @@ object R10 {
       * snapshot hash-matching the SAME `drift_psi` oracle. */
     "stream_drift_psi" -> ((s, d) =>
       graft.streaming.EventStream.runPsiOnce(s, d,
-        s"stream_psi_v${sqlRuns.incrementAndGet()}")),
+        Shared.unique("stream_psi"))),
 
     /** REAL STREAMING twin of `drift_ks` — see `EventStream.runKsOnce`:
       * frozen batch-side reference value counts (the deployed click
@@ -2560,7 +2549,7 @@ object R10 {
       * SAME `drift_ks` oracle. */
     "stream_drift_ks" -> ((s, d) =>
       graft.streaming.EventStream.runKsOnce(s, d,
-        s"stream_ks_v${sqlRuns.incrementAndGet()}")),
+        Shared.unique("stream_ks"))),
 
     /** STREAMING SCHEMA-DRIFT CENSUS — see
       * `EventStream.runSchemaDriftOnce`: frozen batch-side before
@@ -2570,7 +2559,7 @@ object R10 {
       * `dq_schema_drift` oracle. */
     "stream_schema_drift" -> ((s, d) =>
       graft.streaming.EventStream.runSchemaDriftOnce(s, d,
-        s"stream_sd_v${sqlRuns.incrementAndGet()}")),
+        Shared.unique("stream_sd"))),
 
     /** STREAMING VOLUME CENSUS — see `EventStream.runVolumeOnce`:
       * per-day order-free Update-mode counts, final snapshot through
@@ -2578,7 +2567,7 @@ object R10 {
       * → hash-matches the SAME `dq_volume_anomaly` oracle. */
     "stream_volume_anomaly" -> ((s, d) =>
       graft.streaming.EventStream.runVolumeOnce(s, d,
-        s"stream_vol_v${sqlRuns.incrementAndGet()}")),
+        Shared.unique("stream_vol"))),
 
     /** CONTINUOUS EXPECTATIONS GATE — see
       * `EventStream.runDqExpectationsOnce`: six data-quality rules as
@@ -2587,7 +2576,7 @@ object R10 {
       * passed) snapshot hash-matched against the DuckDB oracle. */
     "stream_dq_expectations" -> ((s, d) =>
       graft.streaming.EventStream.runDqExpectationsOnce(s, d,
-        s"stream_dqx_v${sqlRuns.incrementAndGet()}")),
+        Shared.unique("stream_dqx"))),
 
     /** STREAMING FRESHNESS CENSUS — see `EventStream.runFreshnessOnce`:
       * per-type order-free max/count state, final snapshot through the
@@ -2595,15 +2584,9 @@ object R10 {
       * `dq_freshness_sla` oracle. */
     "stream_freshness_sla" -> ((s, d) =>
       graft.streaming.EventStream.runFreshnessOnce(s, d,
-        s"stream_fresh_v${sqlRuns.incrementAndGet()}")),
+        Shared.unique("stream_fresh"))),
 
-    "ts_sample_entropy" -> ((s, d) => withEventsView(s, d) { v =>
-      s.sql(sampleEntropySql(v, "ts_ns div 1800000000000"))
-    }),
 
-    "fin_capm_beta" -> ((s, d) => withEventsView(s, d) { v =>
-      s.sql(capmSql(v, "ts_ns div 86400000000000"))
-    }),
 
     /** REAL STREAMING twin of `ml_sgd_online` — see
       * `EventStream.sgdStream`: per-bucket exact scaled-6 sums in
@@ -2613,17 +2596,8 @@ object R10 {
       * hash-matches the SAME recursive oracle as the batch scan. */
     "stream_sgd_online" -> ((s, d) =>
       graft.streaming.EventStream.runSgdOnce(s, d,
-        s"stream_sgd_v${sqlRuns.incrementAndGet()}")),
+        Shared.unique("stream_sgd"))),
 
-    "ml_sgd_online" -> ((s, d) => withEventsView(s, d) { v =>
-      import s.implicits._
-      s.sql("WITH " + sgdZSql(v, "ts_ns div 1800000000000", "") +
-          "\nSELECT i, zx, zy FROM z")
-        .as[(Long, Double, Double)]
-        .groupByKey(_ => 1)
-        .flatMapGroups((_, it) => Iterator(sgdFold(it.toArray)))
-        .toDF("n_steps", "w0", "w1", "rmse")
-    }),
 
     /** REAL video-kind decode through the production seam — the animated-
       * GIF sibling of `multimodal_decode_png`/`_wav`, closing the
@@ -2816,7 +2790,7 @@ object R10 {
       * batch scan; multi-batch sealing pinned in StreamingSpec. */
     "stream_holt_winters" -> ((s, d) =>
       graft.streaming.EventStream.runHwOnce(s, d,
-        s"stream_hw_v${sqlRuns.incrementAndGet()}")),
+        Shared.unique("stream_hw"))),
 
     /** PER-FRAME video feature extraction through the same seam —
       * `Multimodal.gifFrameStats` decodes EVERY frame of the 64 fixture
@@ -2830,7 +2804,7 @@ object R10 {
     "multimodal_frame_stats" -> ((s, d) =>
       graft.operators.Multimodal.gifFrameStats(gifMedia(s, d))
         .orderBy("media_id", "frame_idx"))
-  )
+  ) ++ Shared.engines(shared)
 
   /** Deterministic 64-GIF fixture frame (shared by the decode and
     * frame-stats queries): multi-frame GIFs encoded in-executor with the
@@ -3045,7 +3019,7 @@ object R10 {
         s"round((${pRef(i, j)} - s_$i * s_$j / n) / n / (sig_$i * sig_$j), 9)")
         .mkString("[", ", ", "]")
     }.mkString("[\n      ", ",\n      ", "]")
-    def pw(name: String, mat: String) =
+    def pw(name: String, matrix: String) =
       s"""$name(i, v) AS (
          |  SELECT 0, [v0, v0, v0, v0, v0] FROM r0
          |  UNION ALL
@@ -3060,7 +3034,7 @@ object R10 {
          |        list_transform(generate_series(1, 5), g ->
          |          list_reduce(list_transform(generate_series(1, 5), j ->
          |            m.rm[g][j] * rec.v[j]), (a, b) -> a + b)) AS w
-         |      FROM $name rec, $mat m) t0) t1
+         |      FROM $name rec, $matrix m) t0) t1
          |  WHERE i < 150)""".stripMargin
     def signFix(src: String, out: String) =
       s"""$out AS (SELECT CASE WHEN v[1] < 0 OR (v[1] = 0 AND (v[2] < 0
@@ -3378,11 +3352,7 @@ object R10 {
 
     "graph_modularity" -> modularitySql,
 
-    "stat_friedman" -> friedmanSql("events", "epoch_ns(ts) // 86400000000000"),
 
-    "stat_page_hinkley" ->
-      pageHinkleySql("events", "epoch_ns(ts) // 1800000000000",
-        "MATERIALIZED "),
 
     "stream_drift_psi" -> graft.queries.Ts.sql("drift_psi"),
 
@@ -3421,20 +3391,12 @@ object R10 {
          |  UNION ALL SELECT 'value_le_250', v_value FROM agg) t
          |ORDER BY rule""".stripMargin,
 
-    "stream_page_hinkley" ->
-      pageHinkleySql("events", "epoch_ns(ts) // 1800000000000",
-        "MATERIALIZED "),
+    "stream_page_hinkley" -> shared("stat_page_hinkley").oracle,
 
-    "ts_sample_entropy" ->
-      sampleEntropySql("events", "epoch_ns(ts) // 1800000000000"),
 
-    "fin_capm_beta" -> capmSql("events", "epoch_ns(ts) // 86400000000000"),
 
-    "ml_sgd_online" ->
-      sgdOnlineSql("events", "epoch_ns(ts) // 1800000000000"),
 
-    "stream_sgd_online" ->
-      sgdOnlineSql("events", "epoch_ns(ts) // 1800000000000"),
+    "stream_sgd_online" -> shared("ml_sgd_online").oracle,
 
     "graph_label_propagation" -> lpaSql,
 
@@ -3448,32 +3410,12 @@ object R10 {
 
     "stream_holt_winters" -> hwFilterSql,
 
-    "ml_huber_irls" -> huberIrlsSql(
-      "events", "epoch_ns(ts) // 21600000000000", "quantile_cont(abs(r), 0.5)",
-      "MATERIALIZED "),
 
-    "ml_logistic_newton" -> logisticNewtonChain(
-      "events", "epoch_ns(ts) // 1800000000000",
-      "quantile_cont(p_raw, 0.5)").oracleSql,
 
-    "ml_threshold_sweep" -> thresholdSweepChain(
-      "events", "epoch_ns(ts) // 1800000000000", "quantile_cont(p_raw, 0.5)",
-      "quantile_cont").oracleSql,
 
-    "ml_auc_roc" -> aucRocChain(
-      "events", "epoch_ns(ts) // 1800000000000",
-      "quantile_cont(p_raw, 0.5)").oracleSql,
 
-    "ml_learning_curve" -> learningCurveSql(
-      "events", "epoch_ns(ts) // 1800000000000",
-      k => s"('0x' || substr(md5($k::VARCHAR), 1, 8))::BIGINT",
-      k => s"md5($k::VARCHAR)", "MATERIALIZED"),
 
-    "ml_residual_diagnostics" -> residualDiagnosticsSql(
-      "events", "epoch_ns(ts) // 1800000000000", "MATERIALIZED"),
 
-    "ml_gbt_stumps" -> gbtStumpsChain(
-      "events", "epoch_ns(ts) // 1800000000000").oracleSql,
 
     /** Final watermark = min of the two sides' (max event time − delay);
       * matched pairs emit eagerly, unmatched clicks only once evicted
@@ -3507,24 +3449,11 @@ object R10 {
         |FROM nm FULL OUTER JOIN nu USING (user_id)
         |ORDER BY user_id""".stripMargin,
 
-    "stat_logrank" -> logrankSql("events", "epoch_us(ts)", "//",
-      "MATERIALIZED "),
 
-    "ml_cox_ph" -> coxPhChain("events", "epoch_us(ts)", "//").oracleSql,
 
-    "ml_gmm_em" -> gmmEmSql(
-      "events", "epoch_ns(ts) // 1800000000000", "quantile_cont",
-      "MATERIALIZED"),
 
-    "fin_black_scholes" -> blackScholesSql(
-      "events", "epoch_ns(ts) // 86400000000000"),
 
-    "fin_mc_var" -> mcVarSql(
-      "events", "epoch_ns(ts) // 86400000000000",
-      "SELECT unnest(generate_series(1, 20000)) AS p",
-      e => s"(('0x' || substr(md5($e), 1, 8))::BIGINT)"),
 
-    "stat_sprt" -> sprtSql("events", "epoch_ns(ts) // 1800000000000"),
 
     "graph_mst_boruvka" -> mstBoruvkaSql,
 
@@ -3639,9 +3568,6 @@ object R10 {
 
     "ts_dtw_pairs" -> dtwPairsSql,
 
-    "ml_ensemble_grouped" -> groupedEnsembleSql(
-      "events", "epoch_ns(ts) // 1800000000000", "event_type",
-      "MATERIALIZED"),
 
     /** The driver loop above, replayed: same grid constants, same
       * index-ordered folds (list ORDER BY), same per-step 1e-12 grid. */
@@ -3717,5 +3643,5 @@ object R10 {
          |    AS variance_ratio
          |FROM w JOIN sg ON w.g = sg.g, pv, ev, nn
          |ORDER BY series""".stripMargin
-  )
+  ) ++ Shared.oracles(shared)
 }

@@ -20,41 +20,7 @@ object R9 {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** The per-invocation temp-view front door (the `Rel.sqlFrontDoor`
-    * discipline) for the shared-template queries in this file. */
-  private val sqlRuns = new java.util.concurrent.atomic.AtomicLong(0)
-  private def withEventsView[T](s: SparkSession, d: String)(f: String => T): T = {
-    val v = s"events_r9_v${sqlRuns.incrementAndGet()}"
-    try {
-      Tables.events(s, d).createOrReplaceTempView(v)
-      f(v)
-    } finally { s.catalog.dropTempView(v); () }
-  }
-
   // ---- shared templates ---------------------------------------------------
-
-  /** Dialect knobs for the shared templates: everything else is ONE text
-    * both engines parse, so the sides cannot drift. */
-  private case class Dialect(
-    bucket: String,       // 30-min bucket ordinal from the event time
-    day: String,          // epoch-day ordinal
-    kJson: String,        // BIGINT k from the props JSON payload
-    median: String,       // exact interpolated median of `value`
-    reps: String => String) // 0..B-1 integer generator as `SELECT ... AS r`
-
-  private def sparkDialect = Dialect(
-    bucket = "ts_ns div 1800000000000",
-    day = "ts_ns div 86400000000000",
-    kJson = "CAST(get_json_object(props, '$.k') AS BIGINT)",
-    median = "percentile(value, 0.5)",
-    reps = b => s"SELECT explode(sequence(0, ${b})) AS r")
-
-  private def duckDialect = Dialect(
-    bucket = "epoch_ns(ts) // 1800000000000",
-    day = "epoch_ns(ts) // 86400000000000",
-    kJson = "CAST(json_extract(props, '$.k') AS BIGINT)",
-    median = "quantile_cont(value, 0.5)",
-    reps = b => s"SELECT unnest(generate_series(0, ${b})) AS r")
 
   /** RANDOMIZATION TEST + BENJAMINI–HOCHBERG FDR — multiple-testing
     * inference done the way a 100 TB engine has to do it: the "random"
@@ -78,14 +44,11 @@ object R9 {
     * order-dependent double avg. Widths: px ≤ 1e3 ⇒ s ≤ 1e3·c on a 1e-6
     * grid; with c ≤ 1e5 buckets the cross-products fit DECIMAL(38,6)
     * (Spark) / DECIMAL(37,6) (DuckDB) with 9+ digits of headroom. */
-  /** `mat` ("MATERIALIZED " on DuckDB, "" on Spark): b/types/pairs/
-    * pool/obs/reps/rep/ranked all have ≥2 consumers, and DuckDB 1.0
-    * re-expands a plain CTE per reference — the 99-replicate pool
-    * chain re-evaluated per consumer was one of the allocation bursts
-    * behind the r11 driver map-count exhaustion (188 MB → 17 MB
-    * materialized, identical result). */
-  private def permutationFdrSql(events: String, dl: Dialect,
-                                mat: String = ""): String =
+  /** b/types/pairs/pool/obs/reps/rep/ranked all have ≥2 consumers
+    * (materialized on DuckDB: the 99-replicate pool chain re-evaluated
+    * per consumer took 188 MB, 17 MB materialized). */
+  private def permutationFdrSql(events: String, dl: Dialect): String = {
+    val mat = dl.mat
     s"""WITH b AS $mat(
        |  SELECT event_type AS g, ${dl.bucket} AS bucket,
        |    CAST(round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
@@ -107,7 +70,7 @@ object R9 {
        |    CAST(sum(CASE WHEN g = gb THEN px END) AS DECIMAL(20,6)) AS sb,
        |    count(CASE WHEN g = gb THEN 1 END) AS cb
        |  FROM pool GROUP BY 1, 2),
-       |reps AS $mat(${dl.reps("99")}),
+       |reps AS $mat(${dl.series("0, 99", "r")}),
        |rep AS $mat(
        |  SELECT ga, gb, r,
        |    CAST(sum(CASE WHEN side = 0 THEN px END) AS DECIMAL(20,6)) AS s0,
@@ -116,9 +79,8 @@ object R9 {
        |    count(CASE WHEN side = 1 THEN 1 END) AS c1
        |  FROM (
        |    SELECT pool.ga, pool.gb, reps.r, pool.px,
-       |      (CAST(conv(substring(md5(concat(CAST(reps.r AS STRING), ':',
-       |        pool.g, ':', CAST(pool.bucket AS STRING))), 1, 8), 16, 10)
-       |        AS BIGINT) % 2) AS side
+       |      (${dl.md5Int(dl.concat(dl.str("reps.r"), "':'", "pool.g", "':'",
+                   "\n        " + dl.str("pool.bucket")))} % 2) AS side
        |    FROM pool CROSS JOIN reps) t
        |  GROUP BY 1, 2, 3),
        |pv AS (
@@ -148,17 +110,7 @@ object R9 {
        |  p_rank <= kmax.km AS reject_fdr10
        |FROM ranked CROSS JOIN kmax
        |ORDER BY p_rank""".stripMargin
-
-  /** The Spark-dialect md5 relabeling above uses `conv`/`substring`,
-    * which DuckDB spells differently — so the permutation template is
-    * split at ONLY that expression. */
-  private def permutationFdrSqlDuck(events: String, dl: Dialect): String =
-    permutationFdrSql(events, dl, "MATERIALIZED ").replace(
-      """(CAST(conv(substring(md5(concat(CAST(reps.r AS STRING), ':',
-        |        pool.g, ':', CAST(pool.bucket AS STRING))), 1, 8), 16, 10)
-        |        AS BIGINT) % 2) AS side""".stripMargin,
-      """(('0x' || substr(md5(reps.r::VARCHAR || ':' || pool.g || ':' ||
-        |        pool.bucket::VARCHAR), 1, 8))::BIGINT % 2) AS side""".stripMargin)
+  }
 
   /** mRMR FEATURE SELECTION (Peng et al. 2005 — max-relevance
     * min-redundancy, MID form): the feature-selection pass a modeling
@@ -183,16 +135,16 @@ object R9 {
     * view on the Spark side, a MATERIALIZED CTE on the DuckDB side,
     * because BOTH engines re-evaluate a plain CTE per reference and
     * this section references the cube ~16 times). Returns the text
-    * AFTER the `WITH` keyword. `mat` is the CTE-materialization hint
-    * for the DERIVED CTEs (rel/red are each consumed up to 5× by the
-    * greedy tail): "MATERIALIZED " on DuckDB — without it the oracle
-    * re-expands the whole MI chain per consumer (measured 2.7 GB peak /
+    * AFTER the `WITH` keyword. The DERIVED CTEs are materialized on
+    * DuckDB (rel/red are each consumed up to 5× by the greedy tail) —
+    * without it the oracle re-expands the whole MI chain per consumer
+    * (measured 2.7 GB peak /
     * 5.3 s; with it 53 MB / 0.07 s, identical result — and the 2.7 GB
     * burst was one of the allocation spikes that killed the driver
-    * harness's map-starved single-connection replay in r11) — and ""
-    * on Spark, whose parser has no such hint (the cube view is a
-    * localCheckpoint there, and rel/red are each read once). */
-  private def mrmrMiSql(cube: String, mat: String = ""): String = {
+    * harness's map-starved single-connection replay in r11); on Spark
+    * the cube view is a localCheckpoint, and rel/red are each read once. */
+  private def mrmrMiSql(cube: String, dl: Dialect): String = {
+    val mat = dl.mat
     val feats = mrmrFeats
     val fy = feats.map(f =>
       s"SELECT '$f' AS f, $f AS lv, y, sum(c) AS c FROM $cube GROUP BY 2, 3")
@@ -342,12 +294,13 @@ object R9 {
   /** DuckDB rendition: cube built inline from the events table as
     * MATERIALIZED CTEs (without the hint DuckDB re-evaluates the whole
     * fw scan per cube reference — measured 99 s → 5 s at sf0.01). */
-  private def mrmrSqlDuck(events: String, dl: Dialect): String =
-    s"""WITH med AS MATERIALIZED (SELECT ${dl.median} AS m FROM $events),
+  private def mrmrOracleSql(events: String): String = {
+    val dl = Dialect.DuckDb
+    s"""WITH med AS MATERIALIZED (SELECT ${dl.median("value")} AS m FROM $events),
        |fw AS MATERIALIZED (
        |  SELECT
        |    CAST(floor(hour(ts) / 6.0) AS BIGINT) AS f_hour,
-       |    CAST(floor(${dl.kJson} / 25.0) AS BIGINT) AS f_k,
+       |    CAST(floor(${dl.jsonLong("props", "$.k")} / 25.0) AS BIGINT) AS f_k,
        |    CASE WHEN value >= med.m THEN 1 ELSE 0 END AS f_val,
        |    user_id % 3 AS f_user,
        |    (${dl.day}) % 7 AS f_dow,
@@ -356,12 +309,17 @@ object R9 {
        |mrmr_cube AS MATERIALIZED (
        |  SELECT f_hour, f_k, f_val, f_user, f_dow, y, count(*) AS c
        |  FROM fw GROUP BY 1, 2, 3, 4, 5, 6),
-       |${mrmrMiSql("mrmr_cube", "MATERIALIZED ")},
+       |${mrmrMiSql("mrmr_cube", dl)},
        |$mrmrStepsSql""".stripMargin
+  }
 
   // ---- queries ------------------------------------------------------------
 
-  val qs: Map[String, Q] = Map(
+  private[graft] lazy val shared: Map[String, Shared] = Map(
+    "stat_permutation_fdr" -> Shared.sql((dl, t) => permutationFdrSql(t("events"), dl)),
+    "ts_haar_energy" -> Shared.sql((dl, t) => haarSql(t("events"), dl)))
+
+  val qs: Map[String, Q] = Map[String, Q](
 
     /** SEQUENTIAL PATTERN MINING, length-3 — the path generalization of
       * `seq_markov_transitions` (pairs) and `funnel` (one fixed path):
@@ -428,8 +386,6 @@ object R9 {
         .orderBy("event_type", "q")
     }),
 
-    "stat_permutation_fdr" -> ((s, d) =>
-      withEventsView(s, d)(v => s.sql(permutationFdrSql(v, sparkDialect)))),
 
     /** IRREGULAR-TIME EWMA — the time-decay smoother real event streams
       * need (bar-based EWMA assumes equal spacing; market/event data is
@@ -608,8 +564,6 @@ object R9 {
         .orderBy("series_a", "series_b")
     }),
 
-    "ts_haar_energy" -> ((s, d) =>
-      withEventsView(s, d)(v => s.sql(haarSql(v, sparkDialect)))),
 
     /** WILCOXON SIGNED-RANK TEST for every series pair — the PAIRED
       * nonparametric location test the unpaired `stat_mannwhitney_u`
@@ -1159,7 +1113,7 @@ object R9 {
       * finalization pinned in StreamingSpec. */
     "stream_ewma_irregular" -> ((s, d) =>
       graft.streaming.EventStream.runEwmaOnce(s, d,
-          s"stream_ewma_v${sqlRuns.incrementAndGet()}")
+          Shared.unique("stream_ewma"))
         .orderBy("event_type", "t", "event_id")),
 
     /** Spark side of mRMR: the fact collapses to the joint contingency
@@ -1178,24 +1132,24 @@ object R9 {
     "feature_select_mrmr" -> ((s, d) => {
       import s.implicits._
       val ev = Tables.events(s, d)
-      val med = ev.agg(expr("percentile(value, 0.5)")).head().getDouble(0)
+      val med = ev.agg(expr(Dialect.Spark.median("value"))).head().getDouble(0)
       val cube = ev.select(
           expr("CAST(floor(hour(ts) / 6.0) AS BIGINT)").as("f_hour"),
-          expr("CAST(floor(CAST(get_json_object(props, '$.k') AS BIGINT) / 25.0) AS BIGINT)")
+          expr(s"CAST(floor(${Dialect.Spark.jsonLong("props", "$.k")} / 25.0) AS BIGINT)")
             .as("f_k"),
           when(col("value") >= med, 1).otherwise(0).as("f_val"),
           (col("user_id") % 3).as("f_user"),
-          expr("(ts_ns div 86400000000000) % 7").as("f_dow"),
+          expr(s"(${Dialect.Spark.day}) % 7").as("f_dow"),
           when(col("event_type") === "purchase", 1).otherwise(0).as("y"))
         .groupBy("f_hour", "f_k", "f_val", "f_user", "f_dow", "y")
         .agg(count(lit(1)).as("c"))
         .localCheckpoint()
-      val v = s"mrmr_cube_v${sqlRuns.incrementAndGet()}"
+      val v = Shared.unique("mrmr_cube")
       val (rel, red) = try {
         cube.createOrReplaceTempView(v)
-        val rel = s.sql("WITH " + mrmrMiSql(v) + " SELECT f, mi FROM rel")
+        val rel = s.sql("WITH " + mrmrMiSql(v, Dialect.Spark) + " SELECT f, mi FROM rel")
           .as[(String, Double)].collect().toMap
-        val red = s.sql("WITH " + mrmrMiSql(v) + " SELECT fa, fb, mi FROM red")
+        val red = s.sql("WITH " + mrmrMiSql(v, Dialect.Spark) + " SELECT fa, fb, mi FROM red")
           .as[(String, String, Double)].collect()
           .map { case (a, b, m) => (a, b) -> m }.toMap
         (rel, red)
@@ -1340,7 +1294,7 @@ object R9 {
           .orderBy("series")
       } finally { wide.unpersist(); () }
     })
-  )
+  ) ++ Shared.engines(shared)
 
   // ---- DuckDB oracle twins ------------------------------------------------
 
@@ -1596,9 +1550,8 @@ object R9 {
         |FROM j CROSS JOIN ql
         |ORDER BY event_type, q""".stripMargin,
 
-    "stat_permutation_fdr" -> permutationFdrSqlDuck("events", duckDialect),
 
-    "feature_select_mrmr" -> mrmrSqlDuck("events", duckDialect),
+    "feature_select_mrmr" -> mrmrOracleSql("events"),
 
     /** The irregular-EWMA recursion replayed exactly (the
       * `ts_kalman_level` oracle shape): α and state re-round to the
@@ -1736,7 +1689,6 @@ object R9 {
         |    END AS hit_rate
         |FROM pnl GROUP BY 1, 2 ORDER BY series_a, series_b""".stripMargin,
 
-    "ts_haar_energy" -> haarSql("events", duckDialect),
 
     "graph_hits" -> hitsSql,
 
@@ -2031,5 +1983,5 @@ object R9 {
         |    / count(*), 6) AS mean_score,
         |  round(max(score), 6) AS max_score
         |FROM sc GROUP BY source ORDER BY source""".stripMargin
-  )
+  ) ++ Shared.oracles(shared)
 }

@@ -79,29 +79,6 @@ object Rel {
     s"(($e | ($e << 1)) & 1431655765)"
   }
 
-  /** Temp-view names must be unique per invocation (verify and bench run
-    * queries concurrently in one session). */
-  private val sqlRuns = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Run a shared SQL template through the `spark.sql` front door: the
-    * named tables are registered as per-invocation temp views, the
-    * template receives the table→view mapping, and the views are dropped
-    * right after eager analysis (a long-lived session invoking these
-    * repeatedly must not leak one catalog entry per call). The DuckDB
-    * oracle runs the SAME template with identity naming, so the two
-    * sides cannot drift. */
-  private def sqlFrontDoor(s: SparkSession, d: String, tables: Seq[String])(
-      template: (String => String) => String): DataFrame = {
-    val run = sqlRuns.incrementAndGet()
-    val view = tables.map(t => t -> s"${t}_v$run").toMap
-    // registration sits INSIDE the try: a failing later load must not
-    // leak the views already registered for this run
-    try {
-      view.foreach { case (t, v) => Tables.load(s, d, t).createOrReplaceTempView(v) }
-      s.sql(template(view))
-    } finally { view.values.foreach(v => s.catalog.dropTempView(v)); () }
-  }
-
   /** The shared `revenue` money expression: DECIMAL accumulation (exact
     * under any aggregation order), surfaced as a rounded double. */
   private val revenueSql =
@@ -113,7 +90,7 @@ object Rel {
     * table differs, so the two sides cannot drift. All money sums
     * accumulate DECIMAL (exact under any aggregation order); averages
     * divide the exact sums so both engines divide identical operands. */
-  private def pricingSummarySql(from: String): String =
+  private def pricingSummarySql(t: String => String): String =
     s"""SELECT l_returnflag, l_linestatus,
        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
@@ -126,7 +103,7 @@ object Rel {
        |  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / count(*), 6) AS avg_price,
        |  round(CAST(sum(CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) / count(*), 6) AS avg_disc,
        |  count(*) AS count_order
-       |FROM $from
+       |FROM ${t("lineitem")}
        |WHERE l_shipdate <= DATE '1998-09-02'
        |GROUP BY l_returnflag, l_linestatus
        |ORDER BY l_returnflag, l_linestatus""".stripMargin
@@ -337,11 +314,11 @@ object Rel {
     * next to the lineitem scan that builds it — at 100 TB that scan is
     * the whole cost and it happens once, feeding both the outer join
     * and the decorrelated min. */
-  private def q2Sql(t: String => String, mat: String = ""): String =
-    // `mat`: `offer` is consumed twice (outer join + the decorrelated
-    // min) — the DuckDB twin materializes it so the lineitem group-by
-    // runs once; Spark has no hint and handles reuse in the plan
-    s"""WITH offer AS $mat(
+  private def q2Sql(dl: Dialect, t: String => String): String =
+    // `offer` is consumed twice (outer join + the decorrelated min) —
+    // the DuckDB twin materializes it so the lineitem group-by runs
+    // once; Spark handles reuse in the plan
+    s"""WITH offer AS ${dl.mat}(
        |  SELECT l_partkey AS pk, l_suppkey AS sk,
        |    min(round(CAST(l_extendedprice AS DOUBLE)
        |      / CAST(l_quantity AS DOUBLE), 6)) AS unit_cost
@@ -551,129 +528,105 @@ object Rel {
        |GROUP BY cntrycode
        |ORDER BY cntrycode""".stripMargin
 
-  val qs: Map[String, Q] = Map(
+  /** The TPC-H front-door keys: one template per key, run by the engine
+    * through `spark.sql` and by the oracle as is ([[Shared]]). */
+  private[graft] lazy val shared: Map[String, Shared] = Map(
+    /** The `spark.sql` front door — TPC-H Q1's pricing summary verbatim
+      * ANSI SQL over a temp view, proving a reference user can drive the
+      * engine through SQL, not just the DataFrame API. The query text is
+      * `pricingSummarySql`, shared with the oracle. */
+    "sql_pricing_summary" -> Shared.sql((_, t) => pricingSummarySql(t)),
+
+    /** TPC-H Q3 through the front door — see `q3Sql` for the plan
+      * posture (broadcast filtered dim + fact-fact shuffle join). */
+    "sql_q3_shipping_priority" -> Shared.sql((_, t) => q3Sql(t)),
+
+    /** TPC-H Q5 through the front door — the 6-table join (`q5Sql`). */
+    "sql_q5_local_supplier" -> Shared.sql((_, t) => q5Sql(t)),
+
+    /** TPC-H Q6 through the front door — scan-filter-aggregate with full
+      * predicate pushdown (`q6Sql`). */
+    "sql_q6_forecast_revenue" -> Shared.sql((_, t) => q6Sql(t)),
+
+    /** TPC-H Q12 through the front door — conditional aggregation in one
+      * join pass (`q12Sql`). */
+    "sql_q12_priority_lines" -> Shared.sql((_, t) => q12Sql(t)),
+
+    /** TPC-H Q14 through the front door — conditional-slice ratio over
+      * one broadcast join pass (`q14Sql`). */
+    "sql_q14_promo_share" -> Shared.sql((_, t) => q14Sql(t)),
+
+    /** TPC-H Q17 through the front door — correlated scalar subquery,
+      * decorrelated by Catalyst into one aggregate + join (`q17Sql`). */
+    "sql_q17_small_qty_revenue" -> Shared.sql((_, t) => q17Sql(t)),
+
+    /** TPC-H Q18 through the front door — grouped-HAVING IN-subquery
+      * (`q18Sql`). */
+    "sql_q18_large_orders" -> Shared.sql((_, t) => q18Sql(t)),
+
+    /** TPC-H Q7 through the front door — double nation-dim join
+      * (`q7Sql`). */
+    "sql_q7_nation_volume" -> Shared.sql((_, t) => q7Sql(t)),
+
+    /** TPC-H Q8 through the front door — the 8-table market-share join
+      * (`q8Sql`). */
+    "sql_q8_market_share" -> Shared.sql((_, t) => q8Sql(t)),
+
+    /** TPC-H Q10 through the front door — returned-item top-20
+      * (`q10Sql`). */
+    "sql_q10_returned_items" -> Shared.sql((_, t) => q10Sql(t)),
+
+    /** TPC-H Q19 through the front door — OR-of-ANDs predicate over one
+      * broadcast join (`q19Sql`). */
+    "sql_q19_discount_revenue" -> Shared.sql((_, t) => q19Sql(t)),
+
+    /** TPC-H Q2 through the front door — correlated min-cost scalar
+      * over a derived supplier↔part catalog (`q2Sql`). */
+    "sql_q2_min_cost_supplier" -> Shared.sql(q2Sql),
+
+    /** TPC-H Q4 through the front door — correlated EXISTS planned as a
+      * left-semi join (`q4Sql`). */
+    "sql_q4_priority_check" -> Shared.sql((_, t) => q4Sql(t)),
+
+    /** TPC-H Q9 through the front door — five-table profit rollup by
+      * nation × year (`q9Sql`). */
+    "sql_q9_product_profit" -> Shared.sql((_, t) => q9Sql(t)),
+
+    /** TPC-H Q11 through the front door — HAVING against a global
+      * scalar subquery (`q11Sql`). */
+    "sql_q11_important_stock" -> Shared.sql((_, t) => q11Sql(t)),
+
+    /** TPC-H Q13 through the front door — left-outer join with the
+      * filter in the ON clause, then a histogram of counts (`q13Sql`). */
+    "sql_q13_cust_distribution" -> Shared.sql((_, t) => q13Sql(t)),
+
+    /** TPC-H Q15 through the front door — shared revenue CTE consumed
+      * by both the join and the max scalar (`q15Sql`). */
+    "sql_q15_top_supplier" -> Shared.sql((_, t) => q15Sql(t)),
+
+    /** TPC-H Q16 through the front door — NOT IN null-aware anti join +
+      * COUNT(DISTINCT) per group (`q16Sql`). */
+    "sql_q16_supplier_counts" -> Shared.sql((_, t) => q16Sql(t)),
+
+    /** TPC-H Q20 through the front door — rollup-vs-rollup threshold
+      * behind an IN probe (`q20Sql`). */
+    "sql_q20_promotion_parts" -> Shared.sql((_, t) => q20Sql(t)),
+
+    /** TPC-H Q21 through the front door — EXISTS + NOT EXISTS doubly
+      * correlated on the same fact (`q21Sql`). */
+    "sql_q21_waiting_suppliers" -> Shared.sql((_, t) => q21Sql(t)),
+
+    /** TPC-H Q22 through the front door — scalar-average threshold +
+      * NOT EXISTS anti join (`q22Sql`). */
+    "sql_q22_sales_opportunity" -> Shared.sql((_, t) => q22Sql(t))
+  )
+
+  val qs: Map[String, Q] = Map[String, Q](
     // ---- §2.1 sources -------------------------------------------------
     "scan_parquet" -> ((s, d) =>
       Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_quantity")
         .orderBy("l_orderkey", "l_linenumber")),
-
-    /** The `spark.sql` front door — TPC-H Q1's pricing summary verbatim
-      * ANSI SQL over a temp view, proving a reference user can drive the
-      * engine through SQL, not just the DataFrame API. The query text is
-      * `pricingSummarySql`, shared with the oracle. */
-    "sql_pricing_summary" -> ((s, d) =>
-      sqlFrontDoor(s, d, Seq("lineitem"))(t => pricingSummarySql(t("lineitem")))),
-
-    /** TPC-H Q3 through the front door — see `q3Sql` for the plan
-      * posture (broadcast filtered dim + fact-fact shuffle join). */
-    "sql_q3_shipping_priority" -> ((s, d) =>
-      sqlFrontDoor(s, d, Seq("customer", "orders", "lineitem"))(q3Sql)),
-
-    /** TPC-H Q5 through the front door — the 6-table join (`q5Sql`). */
-    "sql_q5_local_supplier" -> ((s, d) =>
-      sqlFrontDoor(s, d,
-        Seq("customer", "orders", "lineitem", "supplier", "nation", "region"))(q5Sql)),
-
-    /** TPC-H Q6 through the front door — scan-filter-aggregate with full
-      * predicate pushdown (`q6Sql`). */
-    "sql_q6_forecast_revenue" -> ((s, d) =>
-      sqlFrontDoor(s, d, Seq("lineitem"))(q6Sql)),
-
-    /** TPC-H Q12 through the front door — conditional aggregation in one
-      * join pass (`q12Sql`). */
-    "sql_q12_priority_lines" -> ((s, d) =>
-      sqlFrontDoor(s, d, Seq("orders", "lineitem"))(q12Sql)),
-
-    /** TPC-H Q14 through the front door — conditional-slice ratio over
-      * one broadcast join pass (`q14Sql`). */
-    "sql_q14_promo_share" -> ((s, d) =>
-      sqlFrontDoor(s, d, Seq("lineitem", "part"))(q14Sql)),
-
-    /** TPC-H Q17 through the front door — correlated scalar subquery,
-      * decorrelated by Catalyst into one aggregate + join (`q17Sql`). */
-    "sql_q17_small_qty_revenue" -> ((s, d) =>
-      sqlFrontDoor(s, d, Seq("lineitem", "part"))(q17Sql)),
-
-    /** TPC-H Q18 through the front door — grouped-HAVING IN-subquery
-      * (`q18Sql`). */
-    "sql_q18_large_orders" -> ((s, d) =>
-      sqlFrontDoor(s, d, Seq("customer", "orders", "lineitem"))(q18Sql)),
-
-    /** TPC-H Q7 through the front door — double nation-dim join
-      * (`q7Sql`). */
-    "sql_q7_nation_volume" -> ((s, d) =>
-      sqlFrontDoor(s, d,
-        Seq("supplier", "lineitem", "orders", "customer", "nation"))(q7Sql)),
-
-    /** TPC-H Q8 through the front door — the 8-table market-share join
-      * (`q8Sql`). */
-    "sql_q8_market_share" -> ((s, d) =>
-      sqlFrontDoor(s, d, Seq("part", "supplier", "lineitem", "orders",
-        "customer", "nation", "region"))(q8Sql)),
-
-    /** TPC-H Q10 through the front door — returned-item top-20
-      * (`q10Sql`). */
-    "sql_q10_returned_items" -> ((s, d) =>
-      sqlFrontDoor(s, d, Seq("customer", "orders", "lineitem", "nation"))(q10Sql)),
-
-    /** TPC-H Q19 through the front door — OR-of-ANDs predicate over one
-      * broadcast join (`q19Sql`). */
-    "sql_q19_discount_revenue" -> ((s, d) =>
-      sqlFrontDoor(s, d, Seq("lineitem", "part"))(q19Sql)),
-
-    /** TPC-H Q2 through the front door — correlated min-cost scalar
-      * over a derived supplier↔part catalog (`q2Sql`). */
-    "sql_q2_min_cost_supplier" -> ((s, d) =>
-      sqlFrontDoor(s, d,
-        Seq("lineitem", "part", "supplier", "nation", "region"))(
-        t => q2Sql(t))),
-
-    /** TPC-H Q4 through the front door — correlated EXISTS planned as a
-      * left-semi join (`q4Sql`). */
-    "sql_q4_priority_check" -> ((s, d) =>
-      sqlFrontDoor(s, d, Seq("orders", "lineitem"))(q4Sql)),
-
-    /** TPC-H Q9 through the front door — five-table profit rollup by
-      * nation × year (`q9Sql`). */
-    "sql_q9_product_profit" -> ((s, d) =>
-      sqlFrontDoor(s, d,
-        Seq("part", "supplier", "lineitem", "orders", "nation"))(q9Sql)),
-
-    /** TPC-H Q11 through the front door — HAVING against a global
-      * scalar subquery (`q11Sql`). */
-    "sql_q11_important_stock" -> ((s, d) =>
-      sqlFrontDoor(s, d, Seq("lineitem", "supplier", "nation"))(q11Sql)),
-
-    /** TPC-H Q13 through the front door — left-outer join with the
-      * filter in the ON clause, then a histogram of counts (`q13Sql`). */
-    "sql_q13_cust_distribution" -> ((s, d) =>
-      sqlFrontDoor(s, d, Seq("customer", "orders"))(q13Sql)),
-
-    /** TPC-H Q15 through the front door — shared revenue CTE consumed
-      * by both the join and the max scalar (`q15Sql`). */
-    "sql_q15_top_supplier" -> ((s, d) =>
-      sqlFrontDoor(s, d, Seq("lineitem", "supplier"))(q15Sql)),
-
-    /** TPC-H Q16 through the front door — NOT IN null-aware anti join +
-      * COUNT(DISTINCT) per group (`q16Sql`). */
-    "sql_q16_supplier_counts" -> ((s, d) =>
-      sqlFrontDoor(s, d, Seq("lineitem", "part", "supplier"))(q16Sql)),
-
-    /** TPC-H Q20 through the front door — rollup-vs-rollup threshold
-      * behind an IN probe (`q20Sql`). */
-    "sql_q20_promotion_parts" -> ((s, d) =>
-      sqlFrontDoor(s, d, Seq("lineitem", "part", "supplier", "nation"))(q20Sql)),
-
-    /** TPC-H Q21 through the front door — EXISTS + NOT EXISTS doubly
-      * correlated on the same fact (`q21Sql`). */
-    "sql_q21_waiting_suppliers" -> ((s, d) =>
-      sqlFrontDoor(s, d, Seq("supplier", "lineitem", "orders", "nation"))(q21Sql)),
-
-    /** TPC-H Q22 through the front door — scalar-average threshold +
-      * NOT EXISTS anti join (`q22Sql`). */
-    "sql_q22_sales_opportunity" -> ((s, d) =>
-      sqlFrontDoor(s, d, Seq("customer", "orders"))(q22Sql)),
 
     /** Market-basket association mining (the A-Priori first pass):
       * frequent part PAIRS across order baskets with support /
@@ -2397,7 +2350,7 @@ object Rel {
       Tables.region(s, d)
         .select(col("r_regionkey").as("key"), col("r_name").as("pair_name"))
         .orderBy("key")),
-  )
+  ) ++ Shared.engines(shared)
 
   val sql: Map[String, String] = Map(
     "scan_parquet" ->
@@ -2408,7 +2361,6 @@ object Rel {
         |       l_extendedprice, l_discount, l_tax
         |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
 
-    "sql_pricing_summary" -> pricingSummarySql("lineitem"),
     "graph_pagerank" -> {
       val iterCtes = (1 to 8).map { i =>
         s"""r$i AS MATERIALIZED (
@@ -2574,27 +2526,6 @@ object Rel {
         |FROM merged m JOIN direct d USING (event_type)
         |ORDER BY event_type""".stripMargin,
 
-    "sql_q3_shipping_priority" -> q3Sql(identity),
-    "sql_q5_local_supplier" -> q5Sql(identity),
-    "sql_q6_forecast_revenue" -> q6Sql(identity),
-    "sql_q12_priority_lines" -> q12Sql(identity),
-    "sql_q14_promo_share" -> q14Sql(identity),
-    "sql_q17_small_qty_revenue" -> q17Sql(identity),
-    "sql_q18_large_orders" -> q18Sql(identity),
-    "sql_q7_nation_volume" -> q7Sql(identity),
-    "sql_q8_market_share" -> q8Sql(identity),
-    "sql_q10_returned_items" -> q10Sql(identity),
-    "sql_q19_discount_revenue" -> q19Sql(identity),
-    "sql_q2_min_cost_supplier" -> q2Sql(identity, "MATERIALIZED "),
-    "sql_q4_priority_check" -> q4Sql(identity),
-    "sql_q9_product_profit" -> q9Sql(identity),
-    "sql_q11_important_stock" -> q11Sql(identity),
-    "sql_q13_cust_distribution" -> q13Sql(identity),
-    "sql_q15_top_supplier" -> q15Sql(identity),
-    "sql_q16_supplier_counts" -> q16Sql(identity),
-    "sql_q20_promotion_parts" -> q20Sql(identity),
-    "sql_q21_waiting_suppliers" -> q21Sql(identity),
-    "sql_q22_sales_opportunity" -> q22Sql(identity),
 
     "mba_frequent_pairs" ->
       """WITH b AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
@@ -3445,5 +3376,5 @@ object Rel {
 
     "rename_to_pair" ->
       "SELECT r_regionkey AS key, r_name AS pair_name FROM region ORDER BY key",
-  )
+  ) ++ Shared.oracles(shared)
 }

@@ -19,10 +19,6 @@ object Ts {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Memory-sink table names must be unique per invocation (verify and
-    * bench both run each query more than once in one session). */
-  private val sessionizeRuns = new java.util.concurrent.atomic.AtomicLong(0)
-
   private def userW = Window.partitionBy(col("user_id")).orderBy(col("event_id"))
 
   /** 30-minute per-type price series for the indicator pack: the
@@ -444,7 +440,7 @@ object Ts {
       * by StreamingSpec's multi-batch MemoryStream test. */
     "stream_sessionize" -> ((s, d) =>
       graft.streaming.EventStream.runSessionizeOnce(s, d,
-          s"stream_sessionize_v${sessionizeRuns.incrementAndGet()}",
+          Shared.unique("stream_sessionize"),
           watermark = "3650 days")
         .orderBy("user_id", "session_id")),
 
@@ -454,7 +450,7 @@ object Ts {
       * DuckDB oracle as its batch twin `stream_window_agg`. */
     "stream_window_agg_live" -> ((s, d) =>
       graft.streaming.EventStream.runWindowedAggOnce(s, d,
-          s"stream_window_live_v${sessionizeRuns.incrementAndGet()}")
+          Shared.unique("stream_window_live"))
         .orderBy("day", "event_type")),
 
     /** Input/output reconciliation of the live windowed aggregation
@@ -466,7 +462,7 @@ object Ts {
       * StreamingSpec via MemoryStream. */
     "stream_observe_audit" -> ((s, d) =>
       graft.streaming.EventStream.runObservedAuditOnce(s, d,
-        s"stream_observe_v${sessionizeRuns.incrementAndGet()}")),
+        Shared.unique("stream_observe"))),
 
     /** Continuous top-k users per 6-hour window
       * (`EventStream.topkWindowed`): the stream maintains watermarked
@@ -476,7 +472,7 @@ object Ts {
       * hash-compared against the DuckDB window/rank twin. */
     "stream_topk_users" -> ((s, d) =>
       graft.streaming.EventStream.runTopkOnce(s, d,
-          s"stream_topk_v${sessionizeRuns.incrementAndGet()}")
+          Shared.unique("stream_topk"))
         .orderBy("win_start_us", "rk")),
 
     /** The REAL watermarked stream-stream interval join
@@ -488,7 +484,7 @@ object Ts {
       * pairs. */
     "stream_join_attrib" -> ((s, d) =>
       graft.streaming.EventStream.runAttributionOnce(s, d,
-          s"stream_attrib_v${sessionizeRuns.incrementAndGet()}")
+          Shared.unique("stream_attrib"))
         .orderBy("user_id")),
 
     /** Spark's NATIVE session-window operator (`session_window` — the
@@ -532,7 +528,7 @@ object Ts {
       * multi-batch + late-arrival path with maxFilesPerTrigger=1. */
     "stream_upsert_cdc" -> ((s, d) => {
       val scratch = graft.sources.Scratch.dir("stream_upsert", d,
-        s"run${sessionizeRuns.incrementAndGet()}")
+        Shared.unique("run"))
       graft.streaming.EventStream.runIncrementalUpsertOnce(s, d, scratch)
         .select(col("user_id"), col("event_id"),
           expr("ts_ns div 1000").as("ts_us"),
@@ -551,7 +547,7 @@ object Ts {
       * StreamingSpec's multi-batch MemoryStream test. */
     "stream_scd2" -> ((s, d) =>
       graft.streaming.EventStream.runScd2Once(s, d,
-          s"stream_scd2_v${sessionizeRuns.incrementAndGet()}")
+          Shared.unique("stream_scd2"))
         .orderBy("user_id", "valid_from_us")),
 
     // ---- §2.10 streaming (batch-equivalent plans; the streaming jobs in

@@ -19,20 +19,6 @@ object Csv {
   def read(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.option("header", "true").schema(schema).csv(path)
 
-  /** Infer the schema once, then re-read with the schema pinned. Inference
-    * is a full extra pass over the CSV — acceptable exactly once on small
-    * reference-style inputs; at 100 TB callers must pass an explicit
-    * schema to [[read]] instead (this method exists to mirror the
-    * reference's pandas inference semantics, not for scale paths). */
-  def readInferOnce(spark: SparkSession, path: String): DataFrame = {
-    val inferred = spark.read
-      .option("header", "true")
-      .option("inferSchema", "true")
-      .csv(path)
-      .schema
-    read(spark, path, inferred)
-  }
-
   /** Dirty-data scan: PERMISSIVE mode with the corrupt-record side
     * channel. At 100 TB some CSV rows WILL be malformed; failing the job
     * (FAILFAST) or silently dropping them (DROPMALFORMED) are both wrong

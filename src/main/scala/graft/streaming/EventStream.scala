@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.queries.Dialect
+
 /** Structured Streaming over the `events` table (SURVEY.md §2.10: the
   * reference has no streams; this implements its future-work "monitoring
   * system … alerts when performance drops" README.md:89-90 as a
@@ -840,7 +842,6 @@ object EventStream {
   def runAnnServingOnce(spark: SparkSession, dir: String,
                         scratch: String,
                         maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val ix = (e: String, i: String) => s"element_at($e, $i)"
     graft.plans.StepChain.scoped(spark) { sc =>
       val corpus = sc.checkpoint("corpus", graft.Tables.embeddings(spark, dir))
       // the oracle's pinned nlist=16 below the shared gate; √n lists past
@@ -860,7 +861,7 @@ object EventStream {
       val samp = sc.checkpoint("samp",
         spark.sql(graft.queries.Docs.ivfSampSql(corpus, nlist)))
       val assign = sc.checkpoint("assign",
-        spark.sql(graft.queries.Docs.ivfAssignSql(corpus, samp, ix)))
+        spark.sql(graft.queries.Docs.ivfAssignSql(corpus, samp, Dialect.Spark)))
       val wroteAny = new java.util.concurrent.atomic.AtomicBoolean(false)
       withDisposableCheckpointIo(spark) {
         val q = readEmbeddings(spark, dir, maxFilesPerTrigger)
@@ -879,7 +880,7 @@ object EventStream {
             // instead of appending duplicate rows into the hash-checked
             // final read
             try bs.sql(graft.queries.Docs.ivfServeSql(qv, samp, assign,
-                corpus, ix, nprobe))
+                corpus, Dialect.Spark, nprobe))
               .write.mode("overwrite").parquet(s"$scratch/served/bid=$bid")
             finally { bs.catalog.dropTempView(qv); () }
             wroteAny.set(true)
@@ -921,7 +922,6 @@ object EventStream {
   def runPqRetrainOnce(spark: SparkSession, dir: String,
                        scratch: String,
                        maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val ix = (e: String, i: String) => s"element_at($e, $i)"
     graft.plans.StepChain.scoped(spark) { sc =>
       val corpus = sc.checkpoint("corpus", graft.Tables.embeddings(spark, dir))
       val samp = sc.checkpoint("samp",
@@ -934,7 +934,7 @@ object EventStream {
             val bs = batch.sparkSession
             val qv = sc.ref(s"q$bid")
             batch.createOrReplaceTempView(qv)
-            try bs.sql(graft.queries.Docs.pqIndexSql(qv, samp, ix))
+            try bs.sql(graft.queries.Docs.pqIndexSql(qv, samp, Dialect.Spark))
               .write.mode("overwrite").parquet(s"$scratch/index/bid=$bid")
             finally { bs.catalog.dropTempView(qv); () }
             wroteAny.set(true)
@@ -950,7 +950,7 @@ object EventStream {
         .select("vec_id", "label", "sv", "c", "dist", "dj", "x"))
       // collected now: the audit must not read the scope's views after
       // they drop
-      sc.collect(spark.sql(s"WITH ${graft.queries.Docs.pqAuditSql(idx)}"))
+      sc.collect(spark.sql(s"WITH ${graft.queries.Docs.pqAuditSql(idx, Dialect.Spark)}"))
     }
   }
 
@@ -1610,7 +1610,7 @@ object EventStream {
     try {
       fin.createOrReplaceTempView(v)
       spark.sql("WITH " + graft.queries.Feat.volumeAssembleSql(
-        v, e => s"($e) div 2"))
+        v, Dialect.Spark))
     } finally { spark.catalog.dropTempView(v); () }
   }
 

@@ -64,15 +64,6 @@ object Profile {
     }
   }
 
-  // full JSON string escape (ADVICE r16: quote-swapping alone let
-  // backslashes/control chars in exception text corrupt the JSONL)
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '\\' => "\\\\"
-    case '"' => "\\\""
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -129,7 +120,7 @@ object Profile {
         // a short settle keeps the counters honest for profiling purposes
         Thread.sleep(400)
         spark.sparkContext.removeSparkListener(acc)
-        val line = f"""{"key":"$name","rep":$r,"wall_s":$wall%.3f,"build_s":$buildS%.3f,"job_s":${acc.jobMs.get / 1e3}%.3f,"codegen_n":$cgN,"jobs":${acc.jobs.get},"stages":${acc.stages.get},"tasks":${acc.tasks.get},"task_time_s":${acc.taskTimeMs.get / 1e3}%.3f,"shuffle_read_mb":${acc.shuffleReadB.get / 1e6}%.2f,"shuffle_write_mb":${acc.shuffleWriteB.get / 1e6}%.2f,"input_mb":${acc.inputB.get / 1e6}%.2f,"spill_mb":${acc.spillB.get / 1e6}%.2f,"err":${err.map(jstr).getOrElse("null")}}"""
+        val line = f"""{"key":"$name","rep":$r,"wall_s":$wall%.3f,"build_s":$buildS%.3f,"job_s":${acc.jobMs.get / 1e3}%.3f,"codegen_n":$cgN,"jobs":${acc.jobs.get},"stages":${acc.stages.get},"tasks":${acc.tasks.get},"task_time_s":${acc.taskTimeMs.get / 1e3}%.3f,"shuffle_read_mb":${acc.shuffleReadB.get / 1e6}%.2f,"shuffle_write_mb":${acc.shuffleWriteB.get / 1e6}%.2f,"input_mb":${acc.inputB.get / 1e6}%.2f,"spill_mb":${acc.spillB.get / 1e6}%.2f,"err":${err.map(graft.Verify.jsonString).getOrElse("null")}}"""
         w.println(line); w.flush()
         System.err.println(s"[profile] $line")
         if (sys.env.contains("SPARK_GRAFT_PROFILE_STAGES")) {

@@ -54,14 +54,4 @@ class CsvSpec extends SparkSpec {
       s"partitionFilters = ${scan.get.partitionFilters}")
     assert(back.count() == 2)
   }
-
-  test("readInferOnce infers then pins") {
-    val dir = Files.createTempDirectory("graft-csv2").toString
-    val s = spark; import s.implicits._
-    Seq((1L, 2.5), (2L, 3.5)).toDF("k", "v").coalesce(1)
-      .write.option("header", "true").csv(s"$dir/t")
-    val back = Csv.readInferOnce(spark, s"$dir/t") // header present
-    assert(back.schema.fields.map(_.dataType).toSeq == Seq(IntegerType, DoubleType))
-    assert(back.count() == 2)
-  }
 }

@@ -214,27 +214,4 @@ class JoinsSpec extends SparkSpec {
       .select("lid", "rid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got.map(t => (t._1, t._2)) == naive)
   }
-
-  test("fuzzyJoinQgramPrefix equals the naive join on a clustered vocabulary") {
-    import spark.implicits._
-    // strings drawn from a small shared word set — the regime where
-    // unfiltered gram blocking degenerates toward the cross product and
-    // the prefix filter must still lose NO qualifying pair
-    val words = Vector("azure", "rose", "lime", "peru", "linen", "smoke")
-    def name(i: Int) =
-      Seq(words(i % 6), words((i / 2) % 6), words((i / 3 + 1) % 6)).mkString(" ")
-    val right = (0 until 40).map(i => (i.toLong, name(i))).toDF("rid", "rname")
-    val left = (0 until 40).filter(_ % 3 == 0).map { i =>
-      val n = name(i)
-      (100L + i, "z" + n.substring(1, n.length - 1))  // dist <= 2 corruption
-    }.toDF("lid", "lname")
-    def pairs(d: org.apache.spark.sql.DataFrame) =
-      d.select("lid", "rid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val naive = pairs(left.crossJoin(right)
-      .filter(levenshtein(col("lname"), col("rname")) <= 2))
-    val pref = pairs(Joins.fuzzyJoinQgramPrefix(left, "lid", "lname",
-      right, "rid", "rname", q = 3, maxDist = 2))
-    assert(naive.nonEmpty, "fixture produced no qualifying pairs")
-    assert(pref == naive, s"prefix filter lost ${naive.diff(pref)} / gained ${pref.diff(naive)}")
-  }
 }

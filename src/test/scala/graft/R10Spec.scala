@@ -123,8 +123,7 @@ class R10Spec extends SparkSpec {
     df.createOrReplaceTempView("r10_huber_planted")
     try {
       val out = spark.sql(graft.queries.R10.huberIrlsSql(
-          "r10_huber_planted", "ts_ns div 21600000000000",
-          "percentile(abs(r), 0.5)"))
+          "r10_huber_planted", graft.queries.Dialect.Spark))
         .orderBy("iter").collect()
       assert(out.length == 5)
       val b0 = out.head.getAs[Double]("beta")
@@ -137,8 +136,7 @@ class R10Spec extends SparkSpec {
       // Catalyst planning → 1.1 s); it must be BIT-identical to the
       // monolithic template on the planted frame, column by column
       val replay = graft.queries.R10.huberIrlsSpark(spark,
-          "r10_huber_planted", "ts_ns div 21600000000000",
-          "percentile(abs(r), 0.5)")
+          "r10_huber_planted")
         .orderBy("iter").collect()
       assert(replay.length == out.length)
       replay.zip(out).foreach { case (a, b) =>
@@ -222,7 +220,7 @@ class R10Spec extends SparkSpec {
     df.createOrReplaceTempView("r10_planted")
     try {
       val out = spark.sql(graft.queries.R10.groupedEnsembleSql(
-          "r10_planted", "ts_ns div 1800000000000", "event_type", ""))
+          "r10_planted", graft.queries.Dialect.Spark, "event_type"))
         .collect()
       assert(out.length == 2)
       out.foreach { r =>
@@ -250,8 +248,7 @@ class R10Spec extends SparkSpec {
     df.createOrReplaceTempView("r10_logit_planted")
     try {
       val out = graft.queries.R10.logisticNewtonChain(
-          "r10_logit_planted", "ts_ns div 1800000000000",
-          "percentile(p_raw, 0.5)").run(spark)
+          "r10_logit_planted", graft.queries.Dialect.Spark).run(spark)
         .orderBy("iter").collect()
       assert(out.length == 5)
       val first = out.head; val last = out.last
@@ -279,7 +276,7 @@ class R10Spec extends SparkSpec {
     try {
       val scored = graft.plans.StepChain(
           graft.queries.R10.logisticScoredSteps("r10_sweep_ev",
-            "ts_ns div 1800000000000", "percentile(p_raw, 0.5)"),
+            graft.queries.Dialect.Spark),
           r => s"SELECT y, p FROM ${r("p5")}").run(spark)
         .collect().map(r => (r.getAs[Int]("y"), r.getAs[Double]("p")))
       val n = scored.length
@@ -323,7 +320,7 @@ class R10Spec extends SparkSpec {
     try {
       val scored = graft.plans.StepChain(
           graft.queries.R10.logisticScoredSteps("r10_auc_ev",
-            "ts_ns div 1800000000000", "percentile(p_raw, 0.5)"),
+            graft.queries.Dialect.Spark),
           r => s"SELECT y, p FROM ${r("p5")}").run(spark)
         .collect().map(r => (r.getAs[Int]("y"), r.getAs[Double]("p")))
       val sorted = scored.sortBy(_._2)
@@ -454,7 +451,7 @@ class R10Spec extends SparkSpec {
       .createOrReplaceTempView("r10_dw_planted")
     try {
       val p = spark.sql(graft.queries.R10.residualDiagnosticsSql(
-          "r10_dw_planted", "ts_ns div 1800000000000", "")).collect().head
+          "r10_dw_planted", graft.queries.Dialect.Spark)).collect().head
       assert(p.getAs[Double]("dw_stat") < 1.0,
         s"quadratic residual arc must show DW << 2: ${p.getAs[Double]("dw_stat")}")
       assert(p.getAs[Boolean]("positive_autocorr"),
@@ -479,7 +476,7 @@ class R10Spec extends SparkSpec {
     df.createOrReplaceTempView("r10_gbt_planted")
     try {
       val out = graft.queries.R10.gbtStumpsChain(
-          "r10_gbt_planted", "ts_ns div 1800000000000").run(spark)
+          "r10_gbt_planted", graft.queries.Dialect.Spark).run(spark)
         .orderBy("iter").collect()
       assert(out.length == 7)
       val sses = out.map(_.getAs[Double]("train_sse"))
@@ -570,7 +567,7 @@ class R10Spec extends SparkSpec {
     df.createOrReplaceTempView("r10_logrank_planted")
     try {
       val out = spark.sql(graft.queries.R10.logrankSql(
-        "r10_logrank_planted", "ts_ns div 1000", "div")).head()
+        "r10_logrank_planted", graft.queries.Dialect.Spark)).head()
       assert(out.getAs[Long]("n_sessions_weekend") == 100L)
       assert(out.getAs[Long]("n_sessions_weekday") == 101L)
       assert(out.getAs[Long]("n_censored") == 1L)
@@ -613,7 +610,7 @@ class R10Spec extends SparkSpec {
     df.createOrReplaceTempView("r10_cox_planted")
     try {
       val out = graft.queries.R10.coxPhChain(
-          "r10_cox_planted", "ts_ns div 1000", "div").run(spark)
+          "r10_cox_planted", graft.queries.Dialect.Spark).run(spark)
         .orderBy("iter").collect()
       val hr = out.last.getAs[Double]("hazard_ratio")
       assert(hr < 0.5,
@@ -633,7 +630,7 @@ class R10Spec extends SparkSpec {
     df.createOrReplaceTempView("r10_gmm_planted")
     try {
       val out = spark.sql(graft.queries.R10.gmmEmSql(
-          "r10_gmm_planted", "ts_ns div 1800000000000", "percentile", ""))
+          "r10_gmm_planted", graft.queries.Dialect.Spark))
         .orderBy("iter").collect()
       assert(out.length == 5)
       val lls = out.map(_.getAs[Double]("loglik"))
@@ -775,7 +772,7 @@ class R10Spec extends SparkSpec {
       .createOrReplaceTempView("r10_sprt_planted")
     try {
       val out = spark.sql(graft.queries.R10.sprtSql(
-        "r10_sprt_planted", "ts_ns div 1800000000000")).head()
+        "r10_sprt_planted", graft.queries.Dialect.Spark)).head()
       assert(out.getAs[String]("decision") == "accept_h1",
         s"shifted suffix must alarm: $out")
       assert(out.getAs[Long]("decision_bucket") >= 80L,
@@ -799,7 +796,7 @@ class R10Spec extends SparkSpec {
       .createOrReplaceTempView("r10_sgd_planted")
     try {
       val z = spark.sql("WITH " + graft.queries.R10.sgdZSql(
-          "r10_sgd_planted", "ts_ns div 1800000000000", "") +
+          "r10_sgd_planted", graft.queries.Dialect.Spark) +
           "\nSELECT i, zx, zy FROM z").collect()
         .map(r => (r.getAs[Number](0).longValue, r.getDouble(1),
           r.getDouble(2)))
@@ -831,7 +828,7 @@ class R10Spec extends SparkSpec {
       .createOrReplaceTempView("r10_ph_planted")
     try {
       val out = spark.sql(graft.queries.R10.pageHinkleySql(
-        "r10_ph_planted", "ts_ns div 1800000000000")).collect()
+        "r10_ph_planted", graft.queries.Dialect.Spark)).collect()
         .map(r => r.getAs[String]("series") -> r).toMap
       assert(out("quiet").getAs[Int]("alarmed") == 0,
         s"periodic noise must not alarm: ${out("quiet")}")
@@ -853,7 +850,7 @@ class R10Spec extends SparkSpec {
       .createOrReplaceTempView("r10_sampen_planted")
     try {
       val out = spark.sql(graft.queries.R10.sampleEntropySql(
-        "r10_sampen_planted", "ts_ns div 1800000000000")).collect()
+        "r10_sampen_planted", graft.queries.Dialect.Spark)).collect()
         .map(r => r.getAs[String]("series") -> r).toMap
       val reg = out("regular")
       val irr = out("irregular")
@@ -884,7 +881,7 @@ class R10Spec extends SparkSpec {
       .createOrReplaceTempView("r10_friedman_planted")
     try {
       val p = spark.sql(graft.queries.R10.friedmanSql(
-        "r10_friedman_planted", "ts_ns div 86400000000000")).collect()
+        "r10_friedman_planted", graft.queries.Dialect.Spark)).collect()
       assert(p.forall(_.getAs[Int]("reject_95") == 1),
         s"dominant series must reject: ${p.mkString(";")}")
       val aRank = p.find(_.getAs[String]("series") == "a").get

@@ -70,7 +70,7 @@ class StepChainSpec extends SparkSpec {
     try {
       val before = persisted
       val out = graft.queries.R10.gbtStumpsChain(
-          "stepchain_gbt_flat", "ts_ns div 1800000000000").run(spark)
+          "stepchain_gbt_flat", graft.queries.Dialect.Spark).run(spark)
         .collect()
       assert(out.length == 1, s"expected only iteration 0, got ${out.toSeq}")
       assert(out.head.getAs[Int]("iter") == 0)
