@@ -26,8 +26,12 @@ import org.apache.spark.sql.functions._
   *    narrow transforms — no join, no per-member metric jobs);
   *  - the ensemble prediction ŷ = Σ wᵢ·ŷᵢ is a projection over those same
   *    columns — the old per-member join chain is gone entirely;
-  *  - fitted ensembles are memoized per (session, data dir, label) so
-  *    `serving_signal` and `ml_ensemble_weighted` share one set of fits.
+  *  - fitted ensembles are memoized per (session, data dir, content
+  *    fingerprint of the dir's files, label, grain, numTrees): repeat
+  *    `serving_signal` requests share one fit, as do `ml_ensemble_weighted`
+  *    and `ml_random_forest`, and a dir whose files changed is refitted.
+  *    A serving entry also holds the frame's latest feature row, so a
+  *    `serving_signal` memo hit runs no Spark job.
   */
 object Ensemble {
 
@@ -316,34 +320,89 @@ object Ensemble {
 
   // -- fit sharing -----------------------------------------------------
 
+  /** (path, length, modification time) of every file under a data dir,
+    * sorted by path: the content identity a memoized fit is keyed on. */
+  private type Fingerprint = Vector[(String, Long, Long)]
+
+  /** One memoized fit: the content it saw, the fitted members and — for
+    * entries a serving request made — the latest feature row of the
+    * frame it fitted, so a later request on the same content needs no
+    * frame at all. */
+  private final case class Entry(fingerprint: Fingerprint, fitted: Fitted,
+                                 latest: Option[Array[Double]])
+
   /** Weak-keyed by the session object: entries die with their session
     * (no leak across long-lived JVMs, no identityHashCode aliasing after
-    * a session is GC'd). The inner map is keyed by (dir, label, grain,
-    * numTrees) — every parameter that changes the fit is in the key;
-    * `grain` disambiguates WHICH modeling frame was trained on
+    * a session is GC'd). A fit is keyed by (dir, content fingerprint,
+    * label, grain, numTrees) — every input that changes the fit is in
+    * the key; `grain` disambiguates WHICH modeling frame was trained on
     * (`serving_signal` fits the day-grain reference frame,
-    * `ml_ensemble_weighted` the 30-minute one — same dir and label). */
+    * `ml_ensemble_weighted` the 30-minute one — same dir and label). The
+    * inner map holds one entry per (dir, label, grain, numTrees): a fit
+    * whose fingerprint no longer matches the dir is replaced, not kept. */
   private val cache =
-    new java.util.WeakHashMap[AnyRef, ConcurrentHashMap[(String, String, String, Int), Fitted]]()
+    new java.util.WeakHashMap[AnyRef, ConcurrentHashMap[(String, String, String, Int), Entry]]()
 
-  /** Memoized fit: callers on the same (session, dir, label, grain) share
-    * one set of fitted members instead of re-running three fits each.
-    * `train` is only evaluated on miss. */
-  def fittedCached(sessionKey: AnyRef, dir: String, label: String,
-                   train: => DataFrame, numTrees: Int = 100,
-                   grain: String = "daily", rfMaxDepth: Int = 30): Fitted = {
+  /** One Hadoop `listFiles` of `dir` (recursive). */
+  private def fingerprint(dir: String): Fingerprint = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val files = path
+      .getFileSystem(org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
+      .listFiles(path, true)
+    val out = Vector.newBuilder[(String, Long, Long)]
+    while (files.hasNext) {
+      val f = files.next()
+      out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    out.result().sortBy(_._1)
+  }
+
+  /** The memo lookup behind [[fittedCached]] and [[servingCached]]. The
+    * fingerprint is taken before `frame` is evaluated, and `frame` only
+    * on a miss; an entry without a latest row is a miss when
+    * `needLatest`. */
+  private def memo(sessionKey: AnyRef, dir: String, label: String,
+                   numTrees: Int, grain: String, rfMaxDepth: Int,
+                   needLatest: Boolean)
+                  (frame: => (DataFrame, Option[Array[Double]])): Entry = {
     val perSession = cache.synchronized {
       var m = cache.get(sessionKey)
       if (m == null) { m = new ConcurrentHashMap(); cache.put(sessionKey, m) }
       m
     }
-    perSession.computeIfAbsent((dir, label, grain, numTrees), _ => {
-      val f = fitWeighted(train, label, numTrees, rfMaxDepth)
-      // stamp the semantic key so report() can replay for ANY caller
-      // that asks about this (dir, label, grain, numTrees) frame — not
-      // just the DataFrame instance the first caller happened to pass
-      f.copy(driverEval = f.driverEval.map(
-        _.copy(fitKey = Some((dir, label, grain, numTrees)))))
-    })
+    val fp = fingerprint(dir)
+    val key = (dir, label, grain, numTrees)
+    perSession.compute(key, (_, old) =>
+      if (old != null && old.fingerprint == fp && (old.latest.isDefined || !needLatest)) old
+      else {
+        val (train, latest) = frame
+        val f = fitWeighted(train, label, numTrees, rfMaxDepth)
+        // stamp the semantic key so report() can replay for ANY caller
+        // that asks about this (dir, label, grain, numTrees) frame — not
+        // just the DataFrame instance the first caller happened to pass
+        Entry(fp, f.copy(driverEval = f.driverEval.map(_.copy(fitKey = Some(key)))),
+          latest)
+      })
+  }
+
+  /** Memoized fit: callers on the same (session, dir, label, grain,
+    * numTrees) share one set of fitted members instead of re-running
+    * three fits each, for as long as the files under `dir` keep the
+    * (path, length, modification time) fingerprint they had when the fit
+    * ran. Each call lists `dir` once; `train` is only evaluated on miss. */
+  def fittedCached(sessionKey: AnyRef, dir: String, label: String,
+                   train: => DataFrame, numTrees: Int = 100,
+                   grain: String = "daily", rfMaxDepth: Int = 30): Fitted =
+    memo(sessionKey, dir, label, numTrees, grain, rfMaxDepth, needLatest = false)(
+      (train, None)).fitted
+
+  /** [[fittedCached]] on the day-grain frame, plus the latest feature row
+    * of that frame, memoized in the same entry. `frame` (evaluated on a
+    * miss only) returns the training frame and its latest feature row. */
+  def servingCached(sessionKey: AnyRef, dir: String, label: String)
+                   (frame: => (DataFrame, Array[Double])): (Fitted, Array[Double]) = {
+    val e = memo(sessionKey, dir, label, numTrees = 100, grain = "daily",
+      rfMaxDepth = 30, needLatest = true)({ val (t, x) = frame; (t, Some(x)) })
+    (e.fitted, e.latest.get)
   }
 }

@@ -1,7 +1,10 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.ml.{Ensemble, Models, ModelingFrame}
 
@@ -18,64 +21,87 @@ object Reference {
     * point prediction → confidence + trade decision. One-row result, the
     * app's signal record (`app.py:159-189`).
     *
+    * The fit and the latest feature row are memoized together
+    * (`Ensemble.servingCached`, keyed on the files under `dir`). A miss
+    * lists `dir`, reads the day-grain frame with ONE collect (plus the
+    * events schema-inference job) and fits on a local frame of those
+    * rows — no further job on the driver-fit path. A hit lists `dir` and
+    * runs no Spark job: the members predict the memoized row on the
+    * driver and the result is a local one-row frame. Only MLlib-backed
+    * members (a frame past `Forest.driverFitLimit`) score the row with a
+    * job, through `withMemberPredictions` on a one-row local frame.
+    *
     * @param threshold     signal gate (deployed default 0.6, `app.py:218`)
     * @param minConfidence R² gate (deployed default 0.6, `app.py:224`)
     */
   def servingSignal(spark: SparkSession, dir: String,
                     threshold: Double = 0.6, minConfidence: Double = 0.6): DataFrame = {
-    import spark.implicits._
-    // coalesce(1): tiny day-level frame; iterative fits pay per-task
-    // scheduling overhead per pass otherwise (see queries.Ml.withFrame)
-    val assembled = ModelingFrame.assembled(spark, dir).coalesce(1).cache()
-    try {
-      // memoized fit on the DAY-grain reference frame (grain="daily" —
-      // distinct cache entry from ml_ensemble_weighted's 30-minute frame)
-      val fitted = Ensemble.fittedCached(spark, dir, ModelingFrame.Target, assembled)
-
+    // memoized fit on the DAY-grain reference frame (grain="daily" —
+    // distinct cache entry from ml_ensemble_weighted's 30-minute frame)
+    val (fitted, x) = Ensemble.servingCached(spark, dir, ModelingFrame.Target) {
+      val frame = ModelingFrame.assembled(spark, dir)
+        .select(col("date_id"), col(Models.FeaturesCol), col(ModelingFrame.Target))
+      val rows = frame.collect()
+      require(rows.nonEmpty,
+        s"serving_signal: the modeling frame of $dir has no rows " +
+          "(every day lacks an event type or a next-day click mean)")
       // default input = latest feature row (`app.py:242` last_row_lookup)
-      val xInput = assembled.orderBy(desc("date_id")).limit(1)
-      val localPreds = {
-        // driver-path fit: one head() fetches the feature vector and all
-        // members predict on the driver (bit-identical to the column/map
-        // scoring — Ensemble.Scorer.predictLocal), no per-member job
-        val x = xInput.select(col(Models.FeaturesCol)).head()
-          .getAs[org.apache.spark.ml.linalg.Vector](0).toArray
-        fitted.members.map(m => m.scorer.predictLocal(x))
+      val latest = rows.maxBy(_.getInt(0))
+        .getAs[org.apache.spark.ml.linalg.Vector](1).toArray
+      (spark.createDataFrame(rows.toSeq.asJava, frame.schema), latest)
+    }
+    // driver-path fit: all members predict on the driver (bit-identical
+    // to the column/map scoring — Ensemble.Scorer.predictLocal)
+    val localPreds = fitted.members.map(m => m.scorer.predictLocal(x))
+    val pointPred =
+      if (localPreds.forall(_.isDefined))
+        fitted.members.zip(localPreds)
+          .map { case (m, p) => m.weight * p.get }.sum
+      else {
+        // MLlib-backed members (past the driver gate): one chained-
+        // transform action scores all members at once
+        val xInput = spark.createDataFrame(
+          Seq(Row(org.apache.spark.ml.linalg.Vectors.dense(x))).asJava,
+          StructType(Seq(StructField(Models.FeaturesCol,
+            org.apache.spark.ml.linalg.SQLDataTypes.VectorType))))
+        val predRow = fitted.withMemberPredictions(xInput)
+          .select(fitted.members.map(m => col(s"yhat_${m.name}")): _*).head()
+        fitted.members.zipWithIndex
+          .map { case (m, i) => m.weight * predRow.getDouble(i) }.sum
       }
-      val pointPred =
-        if (localPreds.forall(_.isDefined))
-          fitted.members.zip(localPreds)
-            .map { case (m, p) => m.weight * p.get }.sum
-        else {
-          // MLlib-backed members (past the driver gate): one chained-
-          // transform action scores all members at once
-          val predRow = fitted.withMemberPredictions(xInput)
-            .select(fitted.members.map(m => col(s"yhat_${m.name}")): _*).head()
-          fitted.members.zipWithIndex
-            .map { case (m, i) => m.weight * predRow.getDouble(i) }.sum
-        }
-      val avgR2 = fitted.members.map(_.r2).sum / fitted.members.size
-      val avgMae = fitted.members.map(_.mae).sum / fitted.members.size
+    val avgR2 = fitted.members.map(_.r2).sum / fitted.members.size
+    val avgMae = fitted.members.map(_.mae).sum / fitted.members.size
 
-      // `interpret_confidence` (app.py:150-156) + decision table (159-189)
-      val confidence =
-        if (avgR2 >= 0.7) "High" else if (avgR2 >= 0.4) "Medium" else "Low"
-      val (signal, reason) =
-        if (math.abs(pointPred) < threshold || avgR2 < minConfidence)
-          ("WAIT", f"signal ${math.abs(pointPred)}%.4f below threshold $threshold%.2f " +
-            f"or confidence $avgR2%.4f below $minConfidence%.2f")
-        else if (pointPred > 0)
-          ("BUY_A_SELL_B", f"predicted rise ${pointPred}%.4f at confidence $avgR2%.4f")
-        else
-          ("SELL_A_BUY_B", f"predicted fall ${pointPred}%.4f at confidence $avgR2%.4f")
-      val strength = math.min(math.abs(pointPred) / threshold, 1.0)
+    // `interpret_confidence` (app.py:150-156) + decision table (159-189)
+    val confidence =
+      if (avgR2 >= 0.7) "High" else if (avgR2 >= 0.4) "Medium" else "Low"
+    val (signal, reason) =
+      if (math.abs(pointPred) < threshold || avgR2 < minConfidence)
+        ("WAIT", f"signal ${math.abs(pointPred)}%.4f below threshold $threshold%.2f " +
+          f"or confidence $avgR2%.4f below $minConfidence%.2f")
+      else if (pointPred > 0)
+        ("BUY_A_SELL_B", f"predicted rise ${pointPred}%.4f at confidence $avgR2%.4f")
+      else
+        ("SELL_A_BUY_B", f"predicted fall ${pointPred}%.4f at confidence $avgR2%.4f")
+    val strength = math.min(math.abs(pointPred) / threshold, 1.0)
 
-      Seq((ModelingFrame.Target, pointPred, avgR2, avgMae, confidence, signal,
-          strength, reason))
-        .toDF("target", "prediction", "avg_r2", "avg_mae", "confidence", "signal",
-          "strength", "reason")
-    } finally assembled.unpersist()
+    spark.createDataFrame(
+      Seq(Row(ModelingFrame.Target, pointPred, avgR2, avgMae, confidence, signal,
+        strength, reason)).asJava,
+      SignalSchema)
   }
+
+  /** The signal record's columns (the types and nullability a tuple
+    * `toDF` of the same record gives). */
+  private val SignalSchema = StructType(Seq(
+    StructField("target", StringType),
+    StructField("prediction", DoubleType, nullable = false),
+    StructField("avg_r2", DoubleType, nullable = false),
+    StructField("avg_mae", DoubleType, nullable = false),
+    StructField("confidence", StringType),
+    StructField("signal", StringType),
+    StructField("strength", DoubleType, nullable = false),
+    StructField("reason", StringType)))
 
   /** §3.2 — the cleaning spine on a wide frame: profile nulls → drop
     * sparse columns → ffill/bfill impute → assert no nulls → select
