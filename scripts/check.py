@@ -39,6 +39,7 @@ import json
 import math
 import struct
 import sys
+import time
 from decimal import Decimal
 
 import duckdb
@@ -232,6 +233,11 @@ def fresh_con():
     return con
 
 
+def secs(t0: float) -> str:
+    """Wall seconds since `t0`, as printed beside an oracle's verdict."""
+    return f"{time.perf_counter() - t0:.2f}s"
+
+
 def n_maps() -> int:
     try:
         with open("/proc/self/maps") as fh:
@@ -298,19 +304,21 @@ def main():
             # the oracle) from a truly failed/unreadable dump, which must
             # never "pass" against a 0-row oracle unchecked.
             if os.path.exists(f"{OUT}/{name}/_SUCCESS"):
+                t0 = time.perf_counter()
                 try:
                     want_n = len(con.execute(oracle[name]).arrow())
                 except Exception as e:  # noqa: BLE001
-                    print(f"ORACLE-ERROR {name}: {e}")
+                    print(f"ORACLE-ERROR {name}: {e} [{secs(t0)}]")
                     n_fail += 1
                     continue
                 if want_n == 0:
                     print(f"PASS {name}: EMPTY-ENGINE-DUMP (0-partition write; "
-                          f"rows-only check vs 0-row oracle, schema unchecked)")
+                          f"rows-only check vs 0-row oracle, schema unchecked) "
+                          f"[{secs(t0)}]")
                     n_pass += 1
                 else:
                     print(f"FAIL {name}: EMPTY-ENGINE-DUMP but oracle has "
-                          f"{want_n} rows")
+                          f"{want_n} rows [{secs(t0)}]")
                     n_fail += 1
             else:
                 print(f"FAIL {name}: MISSING-ENGINE-PARQUET (dump dir empty/unreadable)")
@@ -318,12 +326,14 @@ def main():
             continue
         got = got_tbl.to_pandas()
         maps_before = n_maps()
+        t0 = time.perf_counter()
         try:
             res = con.execute(oracle[name])
             want_tbl = res.arrow()
             want = want_tbl.to_pandas()
+            oracle_s = secs(t0)
         except Exception as e:  # noqa: BLE001
-            print(f"ORACLE-ERROR {name}: {e}")
+            print(f"ORACLE-ERROR {name}: {e} [{secs(t0)}]")
             n_fail += 1
             continue
         finally:
@@ -362,10 +372,10 @@ def main():
                 # hash can be blind to types on 0-row / all-NULL outputs
                 err = "TYPE-MISMATCH (hash-blind): " + "; ".join(tdiff)
         if err:
-            print(f"FAIL {name}: {err} [engine={eh} oracle={oh}]")
+            print(f"FAIL {name}: {err} [engine={eh} oracle={oh}] [{oracle_s}]")
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(got)} rows)")
+            print(f"PASS {name} ({len(got)} rows) [{oracle_s}]")
             n_pass += 1
     rows_only = dumped - set(oracle)
     for name in sorted(rows_only):

@@ -1,6 +1,15 @@
 package graft
 
+import scala.util.{Try, Using}
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterBridge
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the harness star schema (TESTDATA.md): parquet tables under
   * `/root/testdata/sf*`. Parquet-at-rest is this engine's chosen format
@@ -8,6 +17,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * projections placed on top of these scans reach the parquet reader via
   * Catalyst pushdown (`PushedFilters` / `ReadSchema`), which is the scan
   * behaviour we want at 100 TB.
+  *
+  * A table's schema comes from its own parquet footer, read on the
+  * driver at every [[read]]: no schema-inference job, and no memo, so a
+  * rewritten file never serves a stale schema. A table stored as a
+  * directory of part files keeps Spark's inference.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -15,7 +29,39 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
+
+  /** One parquet file (a path, or a glob whose first match is read) as
+    * a DataFrame, its schema taken from the file's footer
+    * ([[footerSchema]]) — Spark's inference would run a one-task job to
+    * read the same footer. A path that is not a plain file (a directory
+    * of part files, or nothing) goes to Spark's own reader, with its
+    * partition discovery and its errors. */
+  def read(spark: SparkSession, file: String): DataFrame =
+    footerSchema(spark, file) match {
+      case Some(schema) => spark.read.schema(schema).parquet(file)
+      case None => spark.read.parquet(file)
+    }
+
+  /** The Spark schema in the footer of the first file `pattern` (a path
+    * or a glob) matches, converted as Spark's inference converts it
+    * (`FooterBridge`) under the session's current conf; None when the
+    * first match is not a plain file or nothing matches. Only the
+    * footer's schema is parsed: `SKIP_ROW_GROUPS` leaves out the
+    * row-group list, as Spark's own inference tasks do. */
+  private def footerSchema(spark: SparkSession, pattern: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val path = new Path(pattern)
+    val first = Try(Option(path.getFileSystem(conf).globStatus(path))).toOption.flatten
+      .flatMap(_.sortBy(_.getPath.toString).headOption)
+    first.filter(_.isFile).map { status =>
+      val options = HadoopReadOptions.builder(conf)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
+      val footer = Using.resource(
+        ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf), options))(_.getFooter)
+      FooterBridge.schema(new Footer(status.getPath, footer), spark.sessionState.conf)
+    }
+  }
 
   /** Days since 1970-01-01 of a timestamp column — the engine-wide
     * `date_id` derivation. Every oracle pins the same epoch
@@ -68,7 +114,7 @@ object Tables {
 
   private def loadEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventTs(spark.read.parquet(s"$dir/events.parquet"))
+    normalizeEventTs(read(spark, s"$dir/events.parquet"))
   }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")

@@ -23,9 +23,9 @@ object Reference {
     *
     * The fit and the latest feature row are memoized together
     * (`Ensemble.servingCached`, keyed on the files under `dir`). A miss
-    * lists `dir`, reads the day-grain frame with ONE collect (plus the
-    * events schema-inference job) and fits on a local frame of those
-    * rows — no further job on the driver-fit path. A hit lists `dir` and
+    * lists `dir`, reads the day-grain frame with ONE collect and fits
+    * on a local frame of those rows — no further job on the driver-fit
+    * path. A hit lists `dir` and
     * runs no Spark job: the members predict the memoized row on the
     * driver and the result is a local one-row frame. Only MLlib-backed
     * members (a frame past `Forest.driverFitLimit`) score the row with a

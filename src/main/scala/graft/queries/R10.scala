@@ -3036,13 +3036,17 @@ object R10 {
          |            m.rm[g][j] * rec.v[j]), (a, b) -> a + b)) AS w
          |      FROM $name rec, $matrix m) t0) t1
          |  WHERE i < 150)""".stripMargin
-    def signFix(src: String, out: String) =
-      s"""$out AS (SELECT CASE WHEN v[1] < 0 OR (v[1] = 0 AND (v[2] < 0
+    // `hint` = "MATERIALIZED " on `rmat` and on the chain the second
+    // iteration reads: DuckDB re-expands a plain CTE once per reference,
+    // so every step of `pw2` would re-run all of `pw1` and re-aggregate
+    // the events
+    def signFix(src: String, out: String, hint: String = "") =
+      s"""$out AS ${hint}(SELECT CASE WHEN v[1] < 0 OR (v[1] = 0 AND (v[2] < 0
          |    OR (v[2] = 0 AND (v[3] < 0 OR (v[3] = 0 AND (v[4] < 0
          |    OR (v[4] = 0 AND v[5] < 0))))))) THEN
          |  list_transform(v, x -> -x + 0.0) ELSE v END AS v FROM $src)""".stripMargin
-    def rayleigh(vsrc: String, out: String) =
-      s"""$out AS (SELECT round(list_reduce(list_transform(generate_series(1, 5), g ->
+    def rayleigh(vsrc: String, out: String, hint: String = "") =
+      s"""$out AS ${hint}(SELECT round(list_reduce(list_transform(generate_series(1, 5), g ->
          |    s.v[g] * list_reduce(list_transform(generate_series(1, 5), j ->
          |      m.rm[g][j] * s.v[j]), (a, b) -> a + b)), (a, b) -> a + b), 9) AS lam
          |  FROM $vsrc s, rmat m)""".stripMargin
@@ -3068,16 +3072,16 @@ object R10 {
        |  SELECT *,
        |    $sigs
        |  FROM mo),
-       |rmat AS (
+       |rmat AS MATERIALIZED (
        |  SELECT
        |    $rmRows AS rm
        |  FROM sg),
        |r0 AS (SELECT round(1.0 / sqrt(5.0), 9) AS v0 FROM rmat),
        |${pw("pw1", "rmat")},
-       |vf1 AS (SELECT v FROM pw1 WHERE i = 150),
-       |${signFix("vf1", "sv1")},
-       |${rayleigh("sv1", "l1c")},
-       |rmat2 AS (
+       |vf1 AS MATERIALIZED (SELECT v FROM pw1 WHERE i = 150),
+       |${signFix("vf1", "sv1", "MATERIALIZED ")},
+       |${rayleigh("sv1", "l1c", "MATERIALIZED ")},
+       |rmat2 AS MATERIALIZED (
        |  SELECT list_transform(generate_series(1, 5), i ->
        |    list_transform(generate_series(1, 5), j ->
        |      round(m.rm[i][j] - l.lam * s.v[i] * s.v[j], 9) + 0.0)) AS rm

@@ -1348,13 +1348,15 @@ object R9 {
        |WHERE rk <= 10 ORDER BY role, node""".stripMargin
   }
 
-  /** Shared twin for the batch AND streaming irregular EWMA. */
+  /** Shared twin for the batch AND streaming irregular EWMA. `s` is
+    * MATERIALIZED: every recursive step joins it, and DuckDB would
+    * otherwise re-run its `row_number()` window per step. */
   private val ewmaIrregularSql =
     """WITH RECURSIVE e AS (
       |  SELECT event_type AS g, event_id, epoch_us(ts) AS t,
       |    round(value, 6) AS v
       |  FROM events),
-      |s AS (
+      |s AS MATERIALIZED (
       |  SELECT g, event_id, t, v,
       |    row_number() OVER (PARTITION BY g ORDER BY t, event_id) AS rn
       |  FROM e),

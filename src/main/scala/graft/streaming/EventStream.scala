@@ -57,27 +57,28 @@ object EventStream {
   /** Streaming scan of an events directory; emits the same columns as the
     * batch loader (`ts_ns` long + µs `ts`). The stream source needs a
     * declared schema, and `ts`'s at-rest type differs across harness
-    * generations — one batch schema probe of the directory (metadata
-    * only, no data scan) pins it, then `Tables.normalizeEventTs` applies
-    * the same contract as the batch loader.
+    * generations — the footer of the first matching file pins it
+    * (`Tables.read`, no job), then `Tables.normalizeEventTs` applies the
+    * same contract as the batch loader.
     * @param maxFilesPerTrigger bound files per micro-batch (None = all
     *                           available files in one batch) */
   def readEvents(spark: SparkSession, dir: String,
                  maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val glob = s"$dir/events*.parquet"
     // An empty watched directory is a NORMAL cold-start state for a file
     // stream source: the eager probe throws AnalysisException ("unable to
     // infer schema") when the glob matches nothing, so fall back to the
     // historical nanos-as-long schema and let the stream start empty.
     val atRestTs = scala.util.Try(
-      spark.read.parquet(s"$dir/events*.parquet").schema("ts").dataType
+      graft.Tables.read(spark, glob).schema("ts").dataType
     ).getOrElse(org.apache.spark.sql.types.LongType)
     val reader = spark.readStream.schema(eventsSchema(atRestTs))
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     graft.Tables.normalizeEventTs(reader
       // glob, not a bare file path: the file stream source requires its
       // basePath to be a directory (here: the SF dir)
-      .parquet(s"$dir/events*.parquet"))
+      .parquet(glob))
   }
 
   /** Tumbling-window aggregation with watermark — the streaming twin of

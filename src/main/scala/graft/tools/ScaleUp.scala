@@ -36,7 +36,7 @@ object ScaleUp {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String): DataFrame = graft.Tables.read(spark, s"$src/$t.parquet")
     // getAs[Number]: key columns are BIGINT today, but INT-at-rest
     // generations must not crash the probe generator
     def keyDelta(t: String, k: String): Long =
