@@ -117,16 +117,6 @@ object Bench {
       // job runs in its own executors; the sweep restores that isolation.
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       spark.catalog.clearCache()
-      // Probe-mode GC sweep (r16, opt-in): at 10×+ replica scale the
-      // long single-JVM suite accumulates dead shuffle/broadcast state
-      // faster than ContextCleaner's reference-queue drains it — the r16
-      // 10× probe measured mid-suite inflations up to 47× on keys whose
-      // FRESH-JVM ratios are linear-class (join_spatial_grid 82 s
-      // in-suite vs 16 s fresh). A forced GC per query lets the cleaner
-      // reap immediately, restoring per-job isolation at probe scale.
-      // Off by default: the sf0.1 gate's headline stays comparable to
-      // every prior round's recording discipline.
-      if (sys.env.contains("SPARK_GRAFT_GC_SWEEP")) System.gc()
       (name, t, err)
     }
     // Locale.ROOT so a comma-decimal JVM locale cannot corrupt the numbers

@@ -30,13 +30,13 @@ object SparkEntry {
     graft.queries.Rel.qs ++ graft.queries.Ts.qs ++ graft.queries.Docs.qs ++
       graft.queries.Ml.qs ++ graft.queries.Pipe.qs ++ graft.queries.Corpus.qs ++
       graft.queries.Reshape.qs ++ graft.queries.Fin.qs ++ graft.queries.Feat.qs ++
-      graft.queries.R9.qs ++ graft.queries.R10.qs
+      graft.queries.R9.qs ++ graft.queries.R10.qs ++ graft.queries.Graph.qs
 
   def oracleSql: Map[String, String] =
     graft.queries.Rel.sql ++ graft.queries.Ts.sql ++ graft.queries.Docs.sql ++
       graft.queries.Ml.sql ++ graft.queries.Pipe.sqlAll ++ graft.queries.Corpus.sql ++
       graft.queries.Reshape.sql ++ graft.queries.Fin.sql ++ graft.queries.Feat.sql ++
-      graft.queries.R9.sql ++ graft.queries.R10.sql
+      graft.queries.R9.sql ++ graft.queries.R10.sql ++ graft.queries.Graph.sql
 
   /** The keys served by one SQL template on both engines. */
   private[graft] def shared: Map[String, graft.queries.Shared] =

@@ -88,6 +88,14 @@ object Verify {
     (hash, rows.length.toLong)
   }
 
+  /** The checkout a full run mirrors its hashes into: the
+    * `graft.repo.root` system property, else `GRAFT_REPO_ROOT`, else the
+    * working directory — the checkout the run was started from. */
+  def mirrorRoot(props: Map[String, String], env: Map[String, String]): String =
+    props.get("graft.repo.root")
+      .orElse(env.get("GRAFT_REPO_ROOT"))
+      .getOrElse(props.getOrElse("user.dir", "."))
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query names (targeted local checks)
@@ -153,17 +161,11 @@ object Verify {
     // Best-effort repo mirror so the DRIVER's own run leaves the
     // engine-side hashes somewhere auditable (the driver archives
     // CORRECTNESS but not its temp dump dir). Full runs only — a
-    // targeted subset run must not clobber the full record.
+    // targeted subset run must not clobber the full record. A skip or
+    // failure is LOGGED (r10 ADVICE: a silent catch-all defeats the
+    // auditability the mirror exists for).
     if (only.isEmpty) {
-      // Repo root: system property > env > known layout > cwd — and the
-      // skip/failure is LOGGED (r10 ADVICE: a silent catch-all at a
-      // hardcoded path defeats the auditability the mirror exists for).
-      val repoRoot = sys.props.get("graft.repo.root")
-        .orElse(sys.env.get("GRAFT_REPO_ROOT"))
-        .getOrElse {
-          if (Files.exists(Paths.get("/root/repo/build.sbt"))) "/root/repo"
-          else sys.props.getOrElse("user.dir", ".")
-        }
+      val repoRoot = mirrorRoot(sys.props.toMap, sys.env)
       try Files.writeString(
         Paths.get(s"$repoRoot/VERIFY_HASHES_LATEST.json"), hashJson)
       catch { case e: Throwable => System.err.println(

@@ -3,21 +3,32 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.broadcast
 
-/** Join-strategy gate for the node-sized frames inside iterative graph
-  * algorithms (`graph_pagerank`, `graph_k_core`, `graph_bfs_distance`).
+/** Join-strategy gate for the node-sized frames of the graph family
+  * (`graft.queries.Graph`). Every join of a node-sized frame against an
+  * edge-sized one goes through [[nodeSide]]:
+  *  - per round: the rank vector of `graph_pagerank`, the estimates of
+  *    `graph_k_core`, the frontier of `graph_bfs_distance`, the hub and
+  *    authority scores of `graph_hits`, the walk frame of
+  *    `graph_random_walks`, the labels of `graph_label_propagation` and
+  *    `graph_modularity`, and the merge map of `graph_mst_boruvka`;
+  *  - once: the degree attaches of `graph_common_neighbors`,
+  *    `graph_assortativity`, `graph_triangles` and
+  *    `graph_local_clustering`, and `graph_modularity`'s label and
+  *    degree attaches.
   *
   * The zero-edge-exchange layout those queries use — cache the edge frame
-  * pre-partitioned, broadcast the node-sized rank/estimate/frontier frame
-  * every round — is optimal while the node frame actually fits a broadcast.
-  * At the 100 TB design point the node vector is 10⁸–10⁹ rows and a
-  * per-iteration full broadcast dies at the driver, so past
-  * [[broadcastNodeLimit]] nodes the queries flip to a shuffled-hash join:
-  * the edge cache is then pre-partitioned by the JOIN key, so the shuffle
-  * exchanges only the node-sized frame (pagerank/BFS) or the Pregel-minimal
-  * per-edge message frame (k-core's gather has no smaller exchange).
+  * pre-partitioned, broadcast the node-sized frame every round — is
+  * optimal while the node frame actually fits a broadcast. At the 100 TB
+  * design point the node vector is 10⁸–10⁹ rows and a per-iteration full
+  * broadcast dies at the driver, so past [[broadcastNodeLimit]] nodes the
+  * queries flip to a shuffled-hash join: the edge cache is then
+  * pre-partitioned by the JOIN key, so the shuffle exchanges only the
+  * node-sized frame (pagerank/BFS) or the Pregel-minimal per-edge message
+  * frame (k-core's gather has no smaller exchange).
   *
   * The limit is a system property so tests can force either mode on tiny
-  * data (`PlanAuditSpec` pins both plans structurally).
+  * data: `PlanAuditSpec` pins both plans structurally, on the per-round
+  * plans each round's checkpoint hands to a `QueryExecutionListener`.
   */
 object GraphLayout {
 
@@ -47,13 +58,4 @@ object GraphLayout {
     * silently re-broadcasting what the gate just refused). */
   def nodeSide(df: DataFrame, nNodes: Long): DataFrame =
     if (useBroadcast(nNodes)) broadcast(df) else df.hint("shuffle_hash")
-
-  /** Test-only plan probe: when set (PlanAuditSpec), the iterative
-    * queries leave their FINAL round un-checkpointed so the gated join
-    * is visible in the returned plan — at the cost of re-executing that
-    * round (against by-then-unpersisted caches) when the frame is
-    * collected. The default path checkpoints every round: cheapest, and
-    * what Bench measures. */
-  def keepFinalPlan: Boolean =
-    sys.props.get("graft.graph.keepFinalPlan").contains("true")
 }

@@ -10,12 +10,13 @@ import graft.Tables
 /** Feature-engineering / model-prep pack (round 8, eighth wave) — the
   * operations that sit between this engine's profiling surface
   * (`agg_describe`, `agg_skew_report`) and its model fits (`ml_*`): risk
-  * encodings, the hashing trick, snapshot drift audits, graph-derived
-  * features, an exact contingency test, and recursive state-space
-  * smoothing. The reference's pipeline hand-rolls exactly this layer in
-  * pandas between `df_transformed` and the model cells (`app.py:93-113`
-  * builds lag/spread features; the notebooks add ad-hoc encodings) — here
-  * each step is a declarative Spark plan with a DuckDB twin.
+  * encodings, the hashing trick, snapshot drift audits, an exact
+  * contingency test, and recursive state-space smoothing (its graph
+  * keys live in `Graph`). The reference's pipeline hand-rolls exactly
+  * this layer in pandas between `df_transformed` and the model cells
+  * (`app.py:93-113` builds lag/spread features; the notebooks add ad-hoc
+  * encodings) — here each step is a declarative Spark plan with a DuckDB
+  * twin.
   *
   * Cross-engine float discipline is the house convention set: inputs
   * pre-rounded to the 1e-6 grid, counts/sums that feed divisions kept
@@ -718,71 +719,6 @@ object Feat {
       schemaDriftAssemble(prof)
     }),
 
-    /** DEGREE DISTRIBUTION of the co-purchase graph (same support-≥2
-      * edge set as `graph_triangles` — parts co-ordered in ≥2 distinct
-      * orders) — the first diagnostic of any graph workload: a
-      * heavy-tailed degree histogram is WHY `graph_triangles` needs its
-      * degree orientation and `join_skew_salted` its salt. Output is
-      * degree → node count → share; the histogram frame is
-      * degree-domain-sized, so its share window is bounded. */
-    "graph_degree_distribution" -> ((s, d) => {
-      val b = Tables.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-      val edges = b.as("b1").join(b.hint("shuffle_hash").as("b2"),
-          col("b1.o") === col("b2.o") && col("b1.p") < col("b2.p"))
-        .groupBy(col("b1.p").as("pa"), col("b2.p").as("pb"))
-        .agg(count(lit(1)).as("c")).filter(col("c") >= 2)
-        .select("pa", "pb")
-      val w = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      edges.select(col("pa").as("node"))
-        .unionAll(edges.select(col("pb").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("degree"))
-        .groupBy("degree").agg(count(lit(1)).as("n_nodes"))
-        .withColumn("share", round(col("n_nodes") / sum("n_nodes").over(w), 6))
-        .orderBy("degree")
-    }),
-
-    /** COMMON-NEIGHBOR / JACCARD LINK PREDICTION (Liben-Nowell &
-      * Kleinberg 2003) — scores for node pairs NOT yet connected:
-      * wedges enumerated per center (the one pair-generating step —
-      * keyed by center node, C(deg,2) fan-out bounded by the support
-      * floor exactly as in `graph_triangles`; a production run caps or
-      * samples hub centers first, which the degree histogram above
-      * sizes), distinct-center counts per candidate pair, existing
-      * edges removed by an anti-join, degrees attached broadcast.
-      * Deterministic global top-20 by (common desc, pair). */
-    "graph_common_neighbors" -> ((s, d) => {
-      val b = Tables.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-      val edges = b.as("b1").join(b.hint("shuffle_hash").as("b2"),
-          col("b1.o") === col("b2.o") && col("b1.p") < col("b2.p"))
-        .groupBy(col("b1.p").as("pa"), col("b2.p").as("pb"))
-        .agg(count(lit(1)).as("c")).filter(col("c") >= 2)
-        .select("pa", "pb")
-      val und = edges.select(col("pa").as("src"), col("pb").as("dst"))
-        .unionAll(edges.select(col("pb").as("src"), col("pa").as("dst")))
-      // node-sized degree frame → GraphLayout gate, never an unconditional
-      // broadcast (VERDICT r12 #2); checkpoint row count = node census
-      val deg = und.groupBy("src").agg(count(lit(1)).as("deg"))
-        .localCheckpoint()
-      val nNodes = deg.count()
-      val cand = und.as("e1").join(und.hint("shuffle_hash").as("e2"),
-          col("e1.src") === col("e2.src") && col("e1.dst") < col("e2.dst"))
-        .groupBy(col("e1.dst").as("u"), col("e2.dst").as("v"))
-        .agg(count(lit(1)).as("common"))
-        .join(edges, col("u") === col("pa") && col("v") === col("pb"), "left_anti")
-      cand
-        .join(graft.operators.GraphLayout.nodeSide(
-          deg.select(col("src").as("u"), col("deg").as("deg_u")), nNodes), "u")
-        .join(graft.operators.GraphLayout.nodeSide(
-          deg.select(col("src").as("v"), col("deg").as("deg_v")), nNodes), "v")
-        .select(col("u"), col("v"), col("common"), col("deg_u"), col("deg_v"),
-          round(col("common") / (col("deg_u") + col("deg_v") - col("common")), 6)
-            .as("jaccard"))
-        .orderBy(col("common").desc, col("u"), col("v")).limit(20)
-    }),
-
-
     /** MATRIX PROFILE (Yeh et al. 2016) — per-series all-subsequence
       * nearest neighbors over z-normalized hourly bars (m = 24 ≅ one
       * day): the motif-and-discord primitive of modern time-series
@@ -1030,97 +966,6 @@ object Feat {
               lit((bB - 1).toDouble), lit(0.0))), 6).as("se_boot"))
     }),
 
-    /** K-CORE DECOMPOSITION — coreness per node of the co-purchase
-      * graph via the distributed H-INDEX fixpoint (Lü et al. 2016:
-      * start from degrees, repeatedly replace each node's estimate
-      * with the h-index of its neighbors' estimates; the sequence is
-      * non-increasing and converges to the core number — the
-      * peeling algorithm's result WITHOUT its sequential peel order).
-      * Each round is ONE edge-keyed join + ONE per-node window rank
-      * (h = max over desc-ranked neighbor values of min(rank, value)),
-      * the same cached pre-partitioned edge layout as
-      * `graph_pagerank`; convergence is a driver-checked integer sum
-      * (exact — no float tolerance), localCheckpoint per round keeps
-      * the plan shallow. Output: the coreness histogram. No SQL form
-      * (aggregation inside recursion) → ScalaTest pins equality with
-      * driver-side exact peeling. */
-    "graph_k_core" -> ((s, d) => {
-      val b = Tables.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-      val edges = b.as("b1").join(b.hint("shuffle_hash").as("b2"),
-          col("b1.o") === col("b2.o") && col("b1.p") < col("b2.p"))
-        .groupBy(col("b1.p").as("pa"), col("b2.p").as("pb"))
-        .agg(count(lit(1)).as("c")).filter(col("c") >= 2)
-        .select("pa", "pb")
-      val und0 = edges.select(col("pa").as("src"), col("pb").as("dst"))
-        .unionAll(edges.select(col("pb").as("src"), col("pa").as("dst"))).cache()
-      // Gated layout (GraphLayout): while the node-sized estimate frame
-      // fits a broadcast, partition the edge cache by src — the broadcast
-      // dst-keyed lookup preserves that partitioning, so the per-node
-      // window rank runs with NO per-round exchange. Past the limit
-      // (10⁸-node graphs, where a per-round full broadcast dies at the
-      // driver), partition by dst instead: the shuffled-hash est join then
-      // exchanges only the node-sized frame, and the src-keyed window
-      // exchanges the per-edge (src, neighbor-value) messages — the
-      // Pregel-minimal volume for an h-index gather, which has no smaller
-      // exchange than its messages.
-      // the degree frame doubles as the node census (its count IS the
-      // GraphLayout gate input, no separate countDistinct pass) and as
-      // the h-index fixpoint's seed
-      val deg = und0.groupBy("src").agg(count(lit(1)).cast("long").as("est"))
-        .localCheckpoint()
-      val nNodes = deg.count()
-      val useB = graft.operators.GraphLayout.useBroadcast(nNodes)
-      val und = und0.repartition(if (useB) col("src") else col("dst")).cache()
-      try {
-        var est = deg
-        var prevSum = -1L
-        var curSum = est.agg(sum("est")).head().getLong(0)
-        var rounds = 0
-        val keepFinal = graft.operators.GraphLayout.keepFinalPlan
-        while (curSum != prevSum && rounds < 30) {
-          val hw = Window.partitionBy("src").orderBy(col("nv").desc, col("dst"))
-          val nextRaw = und
-            .join(graft.operators.GraphLayout.nodeSide(
-                est.select(col("src").as("dst"), col("est").as("nv")), nNodes),
-              "dst")
-            .withColumn("rk", row_number().over(hw))
-            .groupBy("src")
-            .agg(max(least(col("rk").cast("long"), col("nv"))).as("h"))
-            .join(est, "src")
-            .select(col("src"), least(col("est"), col("h")).as("est"))
-          // default path: checkpoint every round (one execution, cheap
-          // convergence sum off the checkpointed frame — what Bench
-          // measures). Under GraphLayout.keepFinalPlan (PlanAuditSpec's
-          // probe) the un-truncated lineage is kept so the gated join is
-          // visible in the returned plan, at the cost of re-executing
-          // rounds — test-only.
-          val next = if (keepFinal) nextRaw else nextRaw.localCheckpoint()
-          prevSum = curSum
-          curSum = next.agg(sum("est")).head().getLong(0)
-          rounds += 1
-          // the superseded round's checkpoint (incl. the deg seed) is
-          // dead once `next` is materialized — release its blocks (guide
-          // §5; default path only: keepFinal re-executes lineages)
-          if (!keepFinal) graft.plans.Blocks.free(est)
-          est = if (keepFinal && !(curSum == prevSum || rounds >= 30))
-            nextRaw.localCheckpoint() else next
-        }
-        if (curSum != prevSum)
-          // The h-index sequence is non-increasing and integer, so it
-          // converges in ≤ max-degree rounds — but a stringier graph than
-          // the test pins could need more than the cap, and returning the
-          // partial estimates silently would hand back UPPER BOUNDS, not
-          // core numbers.
-          org.slf4j.LoggerFactory.getLogger("graft.graph_k_core").warn(
-            s"h-index fixpoint NOT converged after $rounds rounds " +
-              s"(sum moved $prevSum -> $curSum); returned values are upper bounds")
-        est.groupBy(col("est").as("coreness"))
-          .agg(count(lit(1)).as("n_nodes"))
-          .orderBy("coreness")
-      } finally { und.unpersist(); und0.unpersist(); () }
-    }),
-
     /** ROLLING MEDIAN (49-bar centered) per series — the robust smoother
       * beside `rolling_stats`' moments: a single level shift or outlier
       * run moves a rolling mean for the whole window but leaves the
@@ -1279,50 +1124,6 @@ object Feat {
         .orderBy("event_type")
     }),
 
-    /** DEGREE ASSORTATIVITY (Newman 2002) — do high-degree parts
-      * co-purchase with high-degree parts? Pearson correlation of
-      * endpoint degrees over the DIRECTED edge list (both orientations,
-      * the standard undirected convention): one broadcast degree attach
-      * + one aggregation of exact integer sums; the correlation divides
-      * exact operands. The sign is the one-number summary the degree
-      * histogram (`graph_degree_distribution`) cannot give. */
-    "graph_assortativity" -> ((s, d) => {
-      val b = Tables.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-      val edges = b.as("b1").join(b.hint("shuffle_hash").as("b2"),
-          col("b1.o") === col("b2.o") && col("b1.p") < col("b2.p"))
-        .groupBy(col("b1.p").as("pa"), col("b2.p").as("pb"))
-        .agg(count(lit(1)).as("c")).filter(col("c") >= 2)
-        .select("pa", "pb")
-      val und = edges.select(col("pa").as("src"), col("pb").as("dst"))
-        .unionAll(edges.select(col("pb").as("src"), col("pa").as("dst")))
-      // node-sized degree frame → GraphLayout gate, never an unconditional
-      // broadcast (VERDICT r12 #2); checkpoint row count = node census
-      val deg = und.groupBy("src").agg(count(lit(1)).as("deg"))
-        .localCheckpoint()
-      val nNodes = deg.count()
-      und
-        .join(graft.operators.GraphLayout.nodeSide(
-          deg.select(col("src"), col("deg").as("du")), nNodes), "src")
-        .join(graft.operators.GraphLayout.nodeSide(
-          deg.select(col("src").as("dst"), col("deg").as("dv")), nNodes), "dst")
-        .agg(count(lit(1)).as("m"), sum("du").as("su"), sum("dv").as("sv"),
-          sum(col("du") * col("dv")).as("suv"),
-          sum(col("du") * col("du")).as("suu"),
-          sum(col("dv") * col("dv")).as("svv"))
-        .select((col("m") / 2).cast("long").as("n_edges"),
-          round((col("suv").cast("double") / col("m") -
-            (col("su").cast("double") / col("m")) * (col("sv").cast("double") / col("m"))) /
-            (sqrt(col("suu").cast("double") / col("m") -
-              (col("su").cast("double") / col("m")) * (col("su").cast("double") / col("m"))) *
-              sqrt(col("svv").cast("double") / col("m") -
-                (col("sv").cast("double") / col("m")) * (col("sv").cast("double") / col("m")))), 6)
-            .as("assortativity"))
-    }),
-
-
-
-
     /** The REAL streaming twin of `dq_error_burst` —
       * `EventStream.burstStream`, a stateful `flatMapGroupsWithState`
       * CEP pattern detector (Flink-CEP territory): per-user buffered
@@ -1384,49 +1185,7 @@ object Feat {
 
   // ------------------------------------------------------------------
 
-  /** The DuckDB twin of `graph_k_core` — the h-index fixpoint unrolled
-    * 30× (the Spark loop's own round cap; converged rounds are
-    * idempotent no-ops, the `mstBoruvkaSql` unrolled-oracle precedent —
-    * VERDICT r13 ask #2). Every quantity is an INTEGER: degrees seed
-    * the estimates, each round replaces a node's estimate with
-    * min(est, h-index of its neighbors' estimates) where the h-index
-    * is max over desc-ranked neighbor values of min(rank, value) —
-    * exact arithmetic end to end, no grid discipline needed. Each
-    * round's estimate frame is MATERIALIZED (consumed twice: the
-    * neighbor gather and the least() attach). */
-  private def kCoreSql: String = {
-    val rounds = (1 to 30).map { r =>
-      val p = r - 1
-      s"""est$r AS MATERIALIZED (
-         |  SELECT h.src, least(e.est, h.h) AS est
-         |  FROM (
-         |    SELECT src, max(least(rk, nv)) AS h FROM (
-         |      SELECT u.src, l.est AS nv,
-         |        row_number() OVER (PARTITION BY u.src
-         |          ORDER BY l.est DESC, u.dst ASC) AS rk
-         |      FROM und u JOIN est$p l ON l.src = u.dst) t
-         |    GROUP BY src) h
-         |  JOIN est$p e ON e.src = h.src)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH b AS MATERIALIZED (
-       |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-       |e0 AS MATERIALIZED (
-       |  SELECT b1.p AS pa, b2.p AS pb
-       |  FROM b b1 JOIN b b2 ON b1.o = b2.o AND b1.p < b2.p
-       |  GROUP BY 1, 2 HAVING count(*) >= 2),
-       |und AS MATERIALIZED (
-       |  SELECT pa AS src, pb AS dst FROM e0
-       |  UNION ALL SELECT pb, pa FROM e0),
-       |est0 AS MATERIALIZED (
-       |  SELECT src, count(*)::BIGINT AS est FROM und GROUP BY src),
-       |$rounds
-       |SELECT est AS coreness, count(*)::BIGINT AS n_nodes
-       |FROM est30 GROUP BY 1 ORDER BY 1""".stripMargin
-  }
-
   val sql: Map[String, String] = Map(
-
-    "graph_k_core" -> kCoreSql,
 
     "feature_woe_encode" ->
       """WITH cell AS (
@@ -1504,47 +1263,6 @@ object Feat {
         |SELECT metric, "before", "after",
         |  round(("after" - "before") / "before", 6) AS rel_delta
         |FROM longf ORDER BY metric""".stripMargin,
-
-    "graph_degree_distribution" ->
-      """WITH b AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |edges AS (
-        |  SELECT b1.p AS pa, b2.p AS pb
-        |  FROM b b1 JOIN b b2 ON b1.o = b2.o AND b1.p < b2.p
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |deg AS (
-        |  SELECT node, count(*)::BIGINT AS degree FROM (
-        |    SELECT pa AS node FROM edges UNION ALL SELECT pb FROM edges)
-        |  GROUP BY node),
-        |h AS (SELECT degree, count(*)::BIGINT AS n_nodes FROM deg GROUP BY degree)
-        |SELECT degree, n_nodes,
-        |  round(n_nodes / sum(n_nodes) OVER (), 6) AS share
-        |FROM h ORDER BY degree""".stripMargin,
-
-    "graph_common_neighbors" ->
-      """WITH b AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |edges AS MATERIALIZED (
-        |  SELECT b1.p AS pa, b2.p AS pb
-        |  FROM b b1 JOIN b b2 ON b1.o = b2.o AND b1.p < b2.p
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |und AS MATERIALIZED (
-        |  SELECT pa AS src, pb AS dst FROM edges
-        |  UNION ALL SELECT pb, pa FROM edges),
-        |deg AS MATERIALIZED (SELECT src, count(*)::BIGINT AS deg FROM und GROUP BY src),
-        |cand AS (
-        |  SELECT e1.dst AS u, e2.dst AS v, count(*)::BIGINT AS common
-        |  FROM und e1 JOIN und e2 ON e1.src = e2.src AND e1.dst < e2.dst
-        |  GROUP BY 1, 2),
-        |new_pairs AS (
-        |  SELECT c.* FROM cand c
-        |  WHERE NOT EXISTS (
-        |    SELECT 1 FROM edges e WHERE e.pa = c.u AND e.pb = c.v))
-        |SELECT u, v, common, du.deg AS deg_u, dv.deg AS deg_v,
-        |  round(common / (du.deg + dv.deg - common), 6) AS jaccard
-        |FROM new_pairs
-        |JOIN deg du ON du.src = u
-        |JOIN deg dv ON dv.src = v
-        |ORDER BY common DESC, u, v LIMIT 20""".stripMargin,
-
 
     "ts_matrix_profile" ->
       """WITH b AS (
@@ -1782,38 +1500,6 @@ object Feat {
         |  round((CAST(sum(e_seas) AS DOUBLE) / count(*))
         |    / (CAST(sum(e_naive) AS DOUBLE) / count(*)), 6) AS mase
         |FROM f GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "graph_assortativity" ->
-      """WITH bk AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |edges AS MATERIALIZED (
-        |  SELECT b1.p AS pa, b2.p AS pb
-        |  FROM bk b1 JOIN bk b2 ON b1.o = b2.o AND b1.p < b2.p
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |und AS MATERIALIZED (
-        |  SELECT pa AS src, pb AS dst FROM edges
-        |  UNION ALL SELECT pb, pa FROM edges),
-        |deg AS MATERIALIZED (SELECT src, count(*)::BIGINT AS deg FROM und GROUP BY src),
-        |j AS (
-        |  SELECT du.deg AS du, dv.deg AS dv
-        |  FROM und JOIN deg du ON und.src = du.src
-        |  JOIN deg dv ON und.dst = dv.src),
-        |m AS (
-        |  SELECT count(*)::BIGINT AS m, sum(du)::BIGINT AS su, sum(dv)::BIGINT AS sv,
-        |    sum(du * dv)::BIGINT AS suv, sum(du * du)::BIGINT AS suu,
-        |    sum(dv * dv)::BIGINT AS svv
-        |  FROM j)
-        |SELECT (m // 2)::BIGINT AS n_edges,
-        |  round((CAST(suv AS DOUBLE) / m
-        |      - (CAST(su AS DOUBLE) / m) * (CAST(sv AS DOUBLE) / m))
-        |    / (sqrt(CAST(suu AS DOUBLE) / m
-        |        - (CAST(su AS DOUBLE) / m) * (CAST(su AS DOUBLE) / m))
-        |      * sqrt(CAST(svv AS DOUBLE) / m
-        |        - (CAST(sv AS DOUBLE) / m) * (CAST(sv AS DOUBLE) / m))), 6)
-        |    AS assortativity
-        |FROM m""".stripMargin,
-
-
-
 
     "ts_kalman_level" ->
       """WITH RECURSIVE b AS (

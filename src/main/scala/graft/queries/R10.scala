@@ -1633,177 +1633,6 @@ object R10 {
        |ORDER BY series""".stripMargin
   }
 
-  /** Min-label connected components over STRING node ids — the
-    * `Dedup.connectedComponents` loop with a type-agnostic convergence
-    * check (count of changed labels instead of the numeric label sum;
-    * one extra keyed join per round, same O(diameter) round count).
-    * Used by the Borůvka merge step, whose component ids are node
-    * strings — a numeric surrogate would either risk hash collisions
-    * (silently merging components) or need a global row_number. */
-  /** Close Borůvka's per-round merge pairs into (id, component=min label).
-    *
-    * Every chosen edge merges exactly two CURRENT components, so `pairs`
-    * is component-sized — it halves every round and is ≤ one row per
-    * live component. Under the measured `GraphLayout` gate that is
-    * broadcast-class data, so it is collected and closed with a
-    * path-compressed min-label union-find in one job (replacing the
-    * distributed fixpoint's ~4 jobs × O(log diameter) rounds); past the
-    * gate (the 10⁸-node first rounds of a 100 TB graph) the distributed
-    * pointer-jumped [[ccStrings]] runs instead. Both produce the same
-    * fixpoint — each id maps to the lexicographic MIN label of its merged
-    * group (ASCII labels, so Scala's String order matches Spark's
-    * UTF8String order) — so the result is bit-identical either way.
-    * Returns the map and its row count (the downstream relabel join rides
-    * the same gate). */
-  /** Max merge-pair count the driver union-find may collect. This is a
-    * DRIVER-MEMORY budget, not the executor-broadcast budget
-    * `GraphLayout.broadcastNodeLimit` gates. Honest accounting (ADVICE
-    * r13): a collected pair is not ~50 B — it is two GenericRow-boxed
-    * Strings, two String→String HashMap entries in the union-find, and
-    * an output tuple, realistically ~1 KB transient per pair — so the
-    * default budgets ~0.5 GB transient at the cap, safe on a
-    * default-sized local driver and trivial on one sized for a 100 TB
-    * job. 500k still clears every merge round the probes measured (the
-    * 10×-probe's largest round is 160k pairs; rounds halve from there);
-    * past the limit — the 10⁸-node first rounds of the design-point
-    * graph — the bit-identical distributed fixpoint runs instead.
-    * Tunable per deploy. */
-  private def mstMergeDriverLimit: Long =
-    sys.props.get("graft.graph.mstMergeDriverLimit").map(_.toLong)
-      .getOrElse(500000L)
-
-  private def boruvkaMerge(s: SparkSession, pairs: DataFrame): (DataFrame, Long) = {
-    val n = pairs.count()
-    if (n > mstMergeDriverLimit) {
-      val inner = ccStrings(pairs)
-      val cc = inner.localCheckpoint()
-      graft.plans.Blocks.free(inner) // the outer copy supersedes it
-      (cc, cc.count())
-    } else {
-      val parent = scala.collection.mutable.HashMap.empty[String, String]
-      def find(x: String): String = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-        r
-      }
-      pairs.collect().foreach { row =>
-        val x = row.getString(0); val y = row.getString(1)
-        val rx = find(x); val ry = find(y)
-        if (rx != ry) { if (rx < ry) parent(ry) = rx else parent(rx) = ry }
-      }
-      val ids = parent.keySet.toSet ++ parent.valuesIterator
-      import s.implicits._
-      val out = ids.toSeq.map(id => (id, find(id)))
-      (out.toDF("id", "component"), out.size.toLong)
-    }
-  }
-
-  private def ccStrings(pairs: DataFrame): DataFrame = {
-    val adj = pairs.toDF("x", "y")
-      .unionAll(pairs.toDF("y0", "x0").select(col("x0").as("x"), col("y0").as("y")))
-      .cache()
-    var labels = adj.select(col("x").as("id")).distinct()
-      .withColumn("component", col("id")).localCheckpoint()
-    var changed = if (labels.isEmpty) 0L else 1L
-    var it = 0
-    while (changed > 0 && it < 50) {
-      // min-label propagation PLUS pointer jumping: each round a node
-      // takes min(own, min neighbor label, label-of-its-label). The
-      // shortcut term doubles the distance the component minimum has
-      // travelled per round, so chains — Borůvka's worst merge shape —
-      // close in O(log diameter) rounds instead of O(diameter)
-      // (Shiloach–Vishkin 1982 shortcutting; same fixpoint, the
-      // component-min label, so results are bit-identical to the plain
-      // propagation this replaces). Labels only ever decrease and only
-      // to ids inside the component, so the fixpoint check is exact.
-      val nbrMin = adj
-        .join(labels.select(col("id").as("y"), col("component").as("nc")), "y")
-        .groupBy("x").agg(min("nc").as("nmin"))
-      val hop = labels.select(col("component").as("hid"), col("id"))
-        .join(labels.select(col("id").as("hid"), col("component").as("hc")), "hid")
-        .select(col("id"), col("hc"))
-      val next = labels
-        .join(nbrMin.select(col("x").as("id"), col("nmin")), Seq("id"), "left")
-        .join(hop, Seq("id"), "left")
-        .select(col("id"), col("component").as("old"),
-          least(col("component"),
-            least(coalesce(col("nmin"), col("component")),
-              coalesce(col("hc"), col("component")))).as("component"))
-        .localCheckpoint()
-      // the old label rides the checkpointed frame — the change count is
-      // a scan of materialized rows, not another keyed join
-      changed = next.filter(col("component") =!= col("old")).count()
-      // the superseded round's checkpoint is dead once `next` is
-      // materialized — release its blocks (guide §5)
-      graft.plans.Blocks.free(labels)
-      labels = next.select("id", "component")
-      it += 1
-    }
-    require(changed == 0, "ccStrings did not converge in 50 rounds")
-    adj.unpersist()
-    labels
-  }
-
-  // ---- Borůvka MST oracle (unrolled) --------------------------------------
-
-  /** The DuckDB twin of `graph_mst_boruvka`: Borůvka's rounds unrolled
-    * 12× (2^12 ≫ any component count at gate SF; converged rounds are
-    * idempotent no-ops). Every quantity is an INTEGER or a string —
-    * min-edge selection orders by (weight, a, b), merges close over the
-    * chosen component pairs with a per-round transitive-closure CTE —
-    * so the oracle is exact with no grid discipline needed at all.
-    * Every per-round CTE is MATERIALIZED: l{r} is referenced twice by
-    * e{r+1} (both endpoints), which would otherwise re-inline the whole
-    * prefix 2^rounds times. */
-  private def mstBoruvkaSql: String = {
-    val rounds = (1 to 12).map { r =>
-      val p = r - 1
-      s"""e$r AS MATERIALIZED (
-         |  SELECT we.a, we.b, we.w, la.c AS ca, lb.c AS cb
-         |  FROM we JOIN l$p la ON we.a = la.node
-         |  JOIN l$p lb ON we.b = lb.node
-         |  WHERE la.c <> lb.c),
-         |ch$r AS MATERIALIZED (
-         |  SELECT DISTINCT a, b, w, ca, cb FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY c
-         |      ORDER BY w ASC, a ASC, b ASC) AS rn
-         |    FROM (
-         |      SELECT ca AS c, a, b, w, ca, cb FROM e$r
-         |      UNION ALL SELECT cb, a, b, w, ca, cb FROM e$r) u) t
-         |  WHERE rn = 1),
-         |me$r AS MATERIALIZED (
-         |  SELECT ca AS x, cb AS y FROM ch$r
-         |  UNION ALL SELECT cb, ca FROM ch$r),
-         |reach$r(x, y) AS (
-         |  SELECT x, y FROM me$r
-         |  UNION
-         |  SELECT rr.x, e.y FROM reach$r rr JOIN me$r e ON rr.y = e.x),
-         |mm$r AS MATERIALIZED (
-         |  SELECT x AS oc, least(x, min(y)) AS nc FROM reach$r GROUP BY x),
-         |l$r AS MATERIALIZED (
-         |  SELECT l.node, coalesce(m.nc, l.c) AS c
-         |  FROM l$p l LEFT JOIN mm$r m ON l.c = m.oc)""".stripMargin
-    }.mkString(",\n")
-    val arms = (1 to 12).map(r => s"SELECT a, b, w FROM ch$r")
-      .mkString("\n  UNION ALL ")
-    s"""WITH RECURSIVE p AS MATERIALIZED (
-       |  SELECT 'c' || o_custkey AS a, 's' || l_suppkey AS b,
-       |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) * 100 AS BIGINT)
-       |      AS w
-       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-       |  GROUP BY 1, 2),
-       |we AS MATERIALIZED (SELECT a, b, w FROM p),
-       |nd AS MATERIALIZED (SELECT DISTINCT node FROM (
-       |  SELECT a AS node FROM we UNION ALL SELECT b FROM we) u),
-       |l0 AS MATERIALIZED (SELECT node, node AS c FROM nd),
-       |$rounds
-       |SELECT a, b, w AS weight FROM (
-       |  $arms) m
-       |ORDER BY a, b""".stripMargin
-  }
-
   // ---- SPRT (shared SQL template) -----------------------------------------
 
   /** WALD'S SEQUENTIAL PROBABILITY RATIO TEST as a FULL oracle row —
@@ -2061,165 +1890,6 @@ object R10 {
           Shared.unique("stream_ljoin"))
         .orderBy("user_id")),
 
-
-
-
-
-
-
-    /** MINIMUM SPANNING FOREST by distributed Borůvka — the graph
-      * suite's first OPTIMIZATION operator (everything else measures or
-      * propagates; this one SOLVES): weighted customer–supplier trade
-      * edges (weight = exact integer cents of traded value), each round every component
-      * picks its cheapest incident edge under the (weight, a, b) total
-      * order — the tie-break makes the MST UNIQUE, so Borůvka here must
-      * equal Prim/Kruskal anywhere — then chosen components merge via
-      * `Dedup.connectedComponents`. ≤ ⌈log₂ n⌉ rounds, each ONE
-      * equi-join + ONE windowed min + one bounded CC — the
-      * vertex-centric MST shape that scales (GraphFrames/Giraph run
-      * exactly this). Everything is integers and strings: the oracle
-      * (12 unrolled Borůvka rounds, per-round closure CTEs) is exact
-      * with NO numeric grid at all. Output: the forest edge list.
-      * R10Spec cross-checks against a driver Kruskal. */
-    "graph_mst_boruvka" -> ((s, d) => {
-      // the 600k-row weight aggregation groups by LONG keys and builds
-      // the endpoint strings once per GROUP (r16, guide §2.3) — the key
-      // pair is in bijection with the string pair, so the groups, the
-      // DECIMAL weight sums, and everything downstream (including the
-      // (w, a, b) string tie-break) are unchanged
-      val we = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
-        // exact integer cents: distinct real-valued weights, no grid
-        .agg((sum(col("l_extendedprice").cast("decimal(18,2)")) * 100)
-          .cast("long").as("w"))
-        .select(concat(lit("c"), col("ck")).as("a"),
-          concat(lit("s"), col("sk")).as("b"), col("w"))
-        .localCheckpoint()
-      // The MST output needs only ORIGINAL endpoints, so no node→component
-      // map is ever maintained: current component labels ride the edge
-      // frame itself, which SHRINKS every round as intra-component edges
-      // drop (labels only merge, so a dropped edge can never come back).
-      // This replaces the old per-round relabel of the FULL original edge
-      // set through two node-sized joins + a node-sized map update.
-      var edges = we.select(col("a"), col("b"), col("w"),
-        col("a").as("ca"), col("b").as("cb")).localCheckpoint()
-      graft.plans.Blocks.free(we) // superseded by the labeled copy
-      var mst = s.emptyDataFrame
-        .sparkSession.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("a",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("b",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("w",
-              org.apache.spark.sql.types.LongType))))
-      val wMin = Window.partitionBy("cpick")
-        .orderBy(col("w").asc, col("a").asc, col("b").asc)
-      var round = 0
-      var done = false
-      while (!done && round < 20) {
-        if (edges.isEmpty) done = true
-        else {
-          val cand = edges.select(col("ca").as("cpick"), col("a"), col("b"),
-              col("w"), col("ca"), col("cb"))
-            .unionAll(edges.select(col("cb").as("cpick"), col("a"), col("b"),
-              col("w"), col("ca"), col("cb")))
-          val chosen = cand.withColumn("rn", row_number().over(wMin))
-            .filter(col("rn") === 1)
-            .select(col("a"), col("b"), col("w"), col("ca"), col("cb"))
-            .distinct()
-            .localCheckpoint()
-          mst = mst.unionAll(chosen.select("a", "b", "w"))
-          // merge map is COMPONENT-sized (≤ one chosen pair per live
-          // component) — gated driver union-find / distributed CC
-          val (merge, nMerge) =
-            boruvkaMerge(s, chosen.select(col("ca"), col("cb")).distinct())
-          val prevEdges = edges
-          edges = edges
-            .join(graft.operators.GraphLayout.nodeSide(
-              merge.select(col("id").as("ca"), col("component").as("na")),
-              nMerge), Seq("ca"), "left")
-            .join(graft.operators.GraphLayout.nodeSide(
-              merge.select(col("id").as("cb"), col("component").as("nb")),
-              nMerge), Seq("cb"), "left")
-            .select(col("a"), col("b"), col("w"),
-              coalesce(col("na"), col("ca")).as("ca"),
-              coalesce(col("nb"), col("cb")).as("cb"))
-            .filter(col("ca") =!= col("cb"))
-            .localCheckpoint()
-          // the previous round's edge checkpoint and the (checkpointed
-          // or driver-local) merge map are dead once the relabeled edge
-          // frame is materialized; `chosen` stays — the lazy MST union
-          // reads every round's picks at the final action (guide §5)
-          graft.plans.Blocks.free(prevEdges)
-          graft.plans.Blocks.free(merge)
-          round += 1
-        }
-      }
-      require(done, s"Borůvka did not converge in 20 rounds")
-      mst.select(col("a"), col("b"), col("w").as("weight")).orderBy("a", "b")
-    }),
-
-    /** PER-NODE local clustering coefficient (Watts–Strogatz 1998) over
-      * the same ≥2-order co-purchase graph as `graph_triangles` — the
-      * global row reports ONE scalar (3T/wedges); ego-level cohesion
-      * (which nodes sit in tight cliques vs hub-and-spoke stars) needs
-      * the per-node ratio lcc(v) = 2·T(v)/(deg(v)·(deg(v)−1)). Same
-      * degree-ordered compact-forward enumeration (per-node wedge
-      * fan-out O(√m) — hub-safe at 100 TB), but each closed wedge now
-      * keeps its CENTER so the triangle emits all three corners; one
-      * explode + keyed count gives T(v). All counts integer-exact; the
-      * single rounded division is output-only (no decision rides it —
-      * COVERAGE doctrine); ordering on identical doubles with integer
-      * tiebreak. Top-50 by lcc. */
-    "graph_local_clustering" -> ((s, d) => {
-      val b = Tables.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-      val edges = b.as("b1").join(b.hint("shuffle_hash").as("b2"),
-          col("b1.o") === col("b2.o") && col("b1.p") < col("b2.p"))
-        .groupBy(col("b1.p").as("pa"), col("b2.p").as("pb"))
-        .agg(count(lit(1)).as("c")).filter(col("c") >= 2)
-        .select("pa", "pb")
-      // the degree frame is NODE-sized: at the 100 TB design point an
-      // unconditional broadcast is an executor OOM, so it rides the same
-      // measured GraphLayout gate as the iterative family (the checkpoint
-      // row count IS the node census — no extra pass)
-      val deg = edges.select(col("pa").as("node"))
-        .unionAll(edges.select(col("pb").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-        .localCheckpoint()
-      val nNodes = deg.count()
-      val withDeg = edges
-        .join(graft.operators.GraphLayout.nodeSide(
-          deg.select(col("node").as("pa"), col("deg").as("da")), nNodes), "pa")
-        .join(graft.operators.GraphLayout.nodeSide(
-          deg.select(col("node").as("pb"), col("deg").as("db")), nNodes), "pb")
-      val aFirst = col("da") < col("db") ||
-        (col("da") === col("db") && col("pa") < col("pb"))
-      val oriented = withDeg.select(
-        when(aFirst, col("pa")).otherwise(col("pb")).as("u"),
-        when(aFirst, col("pb")).otherwise(col("pa")).as("v"),
-        when(aFirst, col("db")).otherwise(col("da")).as("dv"))
-      val vFirst = col("w1.dv") < col("w2.dv") ||
-        (col("w1.dv") === col("w2.dv") && col("w1.v") < col("w2.v"))
-      val wedges = oriented.as("w1").join(oriented.hint("shuffle_hash").as("w2"),
-          col("w1.u") === col("w2.u") && vFirst)
-        .select(col("w1.u").as("c"), col("w1.v").as("a"), col("w2.v").as("b"))
-      val perNode = wedges
-        .join(oriented.select(col("u").as("a"), col("v").as("b")), Seq("a", "b"))
-        .select(explode(array(col("c"), col("a"), col("b"))).as("node"))
-        .groupBy("node").agg(count(lit(1)).as("n_tri"))
-      deg.join(perNode, Seq("node"), "left")
-        .filter(col("deg") >= 2)
-        .select(col("node"), col("deg"),
-          coalesce(col("n_tri"), lit(0L)).as("n_tri"))
-        .withColumn("lcc", round(
-          lit(2.0) * col("n_tri") / (col("deg") * (col("deg") - 1)), 6))
-        .orderBy(col("lcc").desc, col("node")).limit(50)
-    }),
-
     /** DENSITY CLUSTERING as a FULL oracle row — DBSCAN (Ester et al.
       * 1996) over the (click, purchase) 30-min plane, composed entirely
       * from patterns the registry has already certified at scale:
@@ -2366,161 +2036,6 @@ object R10 {
         .toDF("feature", "coef_std", "coefficient")
         .orderBy("feature")
     }),
-
-    /** LABEL PROPAGATION community detection (Raghavan et al. 2007) on
-      * the customer↔supplier trade graph — the distributed community
-      * primitive the graph suite lacked (pagerank/HITS rank, k-core
-      * peels, components connect; LPA CLUSTERS). Synchronous updates, 4
-      * rounds, each ONE equi-join + ONE keyed count + ONE windowed
-      * argmax (cnt DESC, label ASC — integer counts and a lexicographic
-      * tiebreak make every pick exact); self-loops damp the bipartite
-      * two-coloring oscillation sync-LPA is known for. The edge frame is
-      * cached and pre-partitioned ONCE on the aggregation key; the
-      * node-sized label frame rides the GraphLayout broadcast/shuffle
-      * gate; every round checkpoints (each label frame feeds BOTH the
-      * next round and the census union). Oracle: the fixpoint unrolled
-      * as chained CTEs. Output: the COARSENING TRAJECTORY — per round,
-      * community count and largest-community size (on the dense trade
-      * graph LPA collapses 1500 → 9 → 4 → 1 at sf0.01; the trajectory
-      * is the informative object, and is what a mixture-balance pipeline
-      * actually monitors). */
-    "graph_label_propagation" -> ((s, d) => {
-      val iters = 4
-      // the 600k-row distinct shuffles LONG key pairs and the display
-      // string is built once per DISTINCT pair (r16, guide §2.3) — the
-      // (custkey, suppkey) pair is in bijection with the (cn, sn) string
-      // pair, so the pair set is unchanged; labels STAY strings
-      // downstream because the per-round argmax tie-break
-      // (`cnt desc, label asc`) compares label strings and must keep
-      // doing so bit-for-bit
-      val pairs = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
-        .distinct()
-        .select(concat(lit("c"), col("ck")).as("cn"),
-          concat(lit("s"), col("sk")).as("sn"))
-      val nodes = pairs.select(col("cn").as("node"))
-        .unionAll(pairs.select(col("sn").as("node"))).distinct()
-        .localCheckpoint()
-      val n = nodes.count()
-      val useB = graft.operators.GraphLayout.useBroadcast(n)
-      val edges = pairs.select(col("cn").as("src"), col("sn").as("dst"))
-        .unionAll(pairs.select(col("sn").as("src"), col("cn").as("dst")))
-        .unionAll(nodes.select(col("node").as("src"), col("node").as("dst")))
-        .repartition(if (useB) col("src") else col("dst"))
-        .cache()
-      try {
-        var labels = nodes.select(col("node"), col("node").as("label"))
-        val wArg = Window.partitionBy("src")
-          .orderBy(col("cnt").desc, col("label").asc)
-        val perRound = (1 to iters).map { i =>
-          val counted = edges
-            .join(graft.operators.GraphLayout.nodeSide(labels, n),
-              edges("dst") === labels("node"))
-            .groupBy(col("src"), col("label"))
-            .agg(count(lit(1)).as("cnt"))
-          val next = counted
-            .withColumn("rn", row_number().over(wArg))
-            .filter(col("rn") === 1)
-            .select(col("src").as("node"), col("label"))
-          labels =
-            if (i == iters && graft.operators.GraphLayout.keepFinalPlan) next
-            else next.localCheckpoint()
-          labels.withColumn("iter", lit(i))
-        }
-        perRound.reduce(_ unionAll _)
-          .groupBy("iter", "label").agg(count(lit(1)).as("cnt"))
-          .groupBy("iter").agg(count(lit(1)).as("n_communities"),
-            max(col("cnt")).as("largest_size"))
-          .orderBy("iter")
-      } finally { edges.unpersist(); () }
-    }),
-
-    /** MODULARITY of the 2-round label-propagation partition — the
-      * QUALITY measure community detection is incomplete without
-      * (`graph_label_propagation` reports the coarsening trajectory;
-      * this scores the partition at the informative depth — round 2,
-      * before the dense trade graph collapses to one block):
-      * Q = Σ_c [L_c/m − (D_c/2m)²] computed as the EXACT integer
-      * rational (4·m·L_c − D_c²)/(4·m²) per community — internal-edge
-      * counts by joining the (checkpointed) edge list against the
-      * node-sized label frame on BOTH endpoints (each side rides the
-      * GraphLayout broadcast/shuffle gate), degree sums integer. The one
-      * division is output-only, grid-9 with the signed-zero guard (a
-      * 1-internal-edge community's q_term can round to ±0). Same
-      * propagation discipline as LPA: cached pre-partitioned edges,
-      * per-round checkpoint. */
-    "graph_modularity" -> ((s, d) => {
-      // distinct on LONG key pairs, strings built once per distinct pair
-      // (r16, guide §2.3 — the `graph_label_propagation` rewrite; labels
-      // stay strings for the argmax tie-break)
-      val pairs = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
-        .distinct()
-        .select(concat(lit("c"), col("ck")).as("cn"),
-          concat(lit("s"), col("sk")).as("sn"))
-        .localCheckpoint() // read by m, degrees, and the two-sided label join
-      val nodes = pairs.select(col("cn").as("node"))
-        .unionAll(pairs.select(col("sn").as("node"))).distinct()
-        .localCheckpoint()
-      val n = nodes.count()
-      val m = pairs.count()
-      val useB = graft.operators.GraphLayout.useBroadcast(n)
-      val edges = pairs.select(col("cn").as("src"), col("sn").as("dst"))
-        .unionAll(pairs.select(col("sn").as("src"), col("cn").as("dst")))
-        .unionAll(nodes.select(col("node").as("src"), col("node").as("dst")))
-        .repartition(if (useB) col("src") else col("dst"))
-        .cache()
-      try {
-        var labels = nodes.select(col("node"), col("node").as("label"))
-        val wArg = Window.partitionBy("src")
-          .orderBy(col("cnt").desc, col("label").asc)
-        for (r <- 1 to 2) {
-          val prev = labels
-          val counted = edges
-            .join(graft.operators.GraphLayout.nodeSide(labels, n),
-              edges("dst") === labels("node"))
-            .groupBy(col("src"), col("label"))
-            .agg(count(lit(1)).as("cnt"))
-          labels = counted
-            .withColumn("rn", row_number().over(wArg))
-            .filter(col("rn") === 1)
-            .select(col("src").as("node"), col("label"))
-            .localCheckpoint()
-          // round ≥ 2 only: round 1's prev is a projection over the
-          // shared `nodes` checkpoint, which the edge cache still needs
-          if (r > 1) graft.plans.Blocks.free(prev)
-        }
-        val deg = pairs.select(col("cn").as("node"))
-          .unionAll(pairs.select(col("sn").as("node")))
-          .groupBy("node").agg(count(lit(1)).as("deg"))
-        val la = graft.operators.GraphLayout.nodeSide(
-          labels.select(col("node").as("cn"), col("label").as("lab_a")), n)
-        val lb = graft.operators.GraphLayout.nodeSide(
-          labels.select(col("node").as("sn"), col("label").as("lab_b")), n)
-        val lin = pairs.join(la, "cn").join(lb, "sn")
-          .filter(col("lab_a") === col("lab_b"))
-          .groupBy(col("lab_a")).agg(count(lit(1)).as("internal_edges"))
-          .withColumnRenamed("lab_a", "label")
-        val dsum = labels.join(graft.operators.GraphLayout.nodeSide(deg, n)
-            .withColumnRenamed("node", "dnode"),
-            col("node") === col("dnode"))
-          .groupBy(col("label"))
-          .agg(count(lit(1)).as("n_nodes"), sum(col("deg")).as("degree_sum"))
-        dsum.join(lin, Seq("label"), "left")
-          .select(col("label").as("community"), col("n_nodes"),
-            coalesce(col("internal_edges"), lit(0L)).as("internal_edges"),
-            col("degree_sum"))
-          .withColumn("q_term", round(
-            (lit(4L) * lit(m) * col("internal_edges")
-              - col("degree_sum") * col("degree_sum")).cast("double")
-              / lit(4L * m * m).cast("double"), 9) + lit(0.0))
-          .orderBy("community")
-      } finally { edges.unpersist(); () }
-    }),
-
-
 
     /** REAL STREAMING twin of `stat_page_hinkley` — see
       * `EventStream.phStream`: the drift detector run as a per-series
@@ -3275,86 +2790,9 @@ object R10 {
        |WHERE dtw.i = pr.na AND dtw.j = pr.nb
        |ORDER BY type_a, type_b""".stripMargin
 
-  /** LPA twin: the 4-round fixpoint unrolled as chained CTEs (the
-    * pagerank-oracle trick) — integer counts, lexicographic tiebreak. */
-  private def lpaSql: String = {
-    val rounds = (1 to 4).map { i =>
-      s"""l$i AS MATERIALIZED (SELECT src AS node, label FROM (
-         |  SELECT e.src, l.label,
-         |    row_number() OVER (PARTITION BY e.src
-         |      ORDER BY count(*) DESC, l.label) AS rn
-         |  FROM e JOIN l${i - 1} l ON e.dst = l.node
-         |  GROUP BY e.src, l.label) t
-         |  WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH p AS MATERIALIZED (
-       |  SELECT DISTINCT 'c' || o_custkey AS cn, 's' || l_suppkey AS sn
-       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-       |nd AS MATERIALIZED (SELECT DISTINCT node FROM (
-       |  SELECT cn AS node FROM p UNION ALL SELECT sn FROM p) u),
-       |e AS MATERIALIZED (
-       |  SELECT cn AS src, sn AS dst FROM p
-       |  UNION ALL SELECT sn, cn FROM p
-       |  UNION ALL SELECT node, node FROM nd),
-       |l0 AS (SELECT node, node AS label FROM nd),
-       |$rounds,
-       |x AS (${(1 to 4).map(i => s"SELECT $i AS iter, label FROM l$i")
-        .mkString("\n  UNION ALL ")})
-       |SELECT iter, count(*)::BIGINT AS n_communities,
-       |  max(cnt)::BIGINT AS largest_size
-       |FROM (SELECT iter, label, count(*) AS cnt FROM x GROUP BY iter, label) c
-       |GROUP BY iter ORDER BY iter""".stripMargin
-  }
-
-  /** 2-round LPA replay + the exact integer modularity rational per
-    * community. */
-  private def modularitySql: String = {
-    val rounds = (1 to 2).map { i =>
-      s"""l$i AS MATERIALIZED (SELECT src AS node, label FROM (
-         |  SELECT e.src, l.label,
-         |    row_number() OVER (PARTITION BY e.src
-         |      ORDER BY count(*) DESC, l.label) AS rn
-         |  FROM e JOIN l${i - 1} l ON e.dst = l.node
-         |  GROUP BY e.src, l.label) t
-         |  WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH p AS MATERIALIZED (
-       |  SELECT DISTINCT 'c' || o_custkey AS cn, 's' || l_suppkey AS sn
-       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-       |nd AS MATERIALIZED (SELECT DISTINCT node FROM (
-       |  SELECT cn AS node FROM p UNION ALL SELECT sn FROM p) u),
-       |e AS MATERIALIZED (
-       |  SELECT cn AS src, sn AS dst FROM p
-       |  UNION ALL SELECT sn, cn FROM p
-       |  UNION ALL SELECT node, node FROM nd),
-       |l0 AS (SELECT node, node AS label FROM nd),
-       |$rounds,
-       |mm AS MATERIALIZED (SELECT count(*)::BIGINT AS m FROM p),
-       |degr AS MATERIALIZED (SELECT node, count(*)::BIGINT AS deg FROM (
-       |  SELECT cn AS node FROM p UNION ALL SELECT sn FROM p) u GROUP BY node),
-       |lin AS MATERIALIZED (
-       |  SELECT la.label, count(*)::BIGINT AS internal_edges
-       |  FROM p JOIN l2 la ON p.cn = la.node JOIN l2 lb ON p.sn = lb.node
-       |  WHERE la.label = lb.label GROUP BY la.label),
-       |ds AS MATERIALIZED (
-       |  SELECT l2.label, count(*)::BIGINT AS n_nodes,
-       |    CAST(sum(degr.deg) AS BIGINT) AS degree_sum
-       |  FROM l2 JOIN degr ON l2.node = degr.node GROUP BY l2.label)
-       |SELECT ds.label AS community, ds.n_nodes,
-       |  coalesce(lin.internal_edges, 0)::BIGINT AS internal_edges,
-       |  ds.degree_sum,
-       |  round(CAST(4 * mm.m * coalesce(lin.internal_edges, 0)
-       |      - ds.degree_sum * ds.degree_sum AS DOUBLE)
-       |    / CAST(4 * mm.m * mm.m AS DOUBLE), 9) + 0.0 AS q_term
-       |FROM ds LEFT JOIN lin ON ds.label = lin.label, mm
-       |ORDER BY community""".stripMargin
-  }
-
   val sql: Map[String, String] = Map(
 
     "ml_lasso_cd" -> lassoCdSql,
-
-    "graph_modularity" -> modularitySql,
 
 
 
@@ -3401,8 +2839,6 @@ object R10 {
 
 
     "stream_sgd_online" -> shared("ml_sgd_online").oracle,
-
-    "graph_label_propagation" -> lpaSql,
 
     "ml_kmeans_lloyd" -> kmeansLloydSql,
 
@@ -3458,51 +2894,6 @@ object R10 {
 
 
 
-
-    "graph_mst_boruvka" -> mstBoruvkaSql,
-
-    /** Compact-forward replay with the wedge CENTER carried through;
-      * per-node triangle count by a 3-way UNION ALL of the corners. */
-    "graph_local_clustering" ->
-      """WITH b AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |edges AS MATERIALIZED (
-        |  SELECT b1.p AS pa, b2.p AS pb
-        |  FROM b b1 JOIN b b2 ON b1.o = b2.o AND b1.p < b2.p
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |deg AS MATERIALIZED (
-        |  SELECT node, count(*)::BIGINT AS deg FROM (
-        |    SELECT pa AS node FROM edges
-        |    UNION ALL SELECT pb FROM edges)
-        |  GROUP BY node),
-        |oriented AS MATERIALIZED (
-        |  SELECT
-        |    CASE WHEN d1.deg < d2.deg OR (d1.deg = d2.deg AND pa < pb)
-        |      THEN pa ELSE pb END AS u,
-        |    CASE WHEN d1.deg < d2.deg OR (d1.deg = d2.deg AND pa < pb)
-        |      THEN pb ELSE pa END AS v,
-        |    CASE WHEN d1.deg < d2.deg OR (d1.deg = d2.deg AND pa < pb)
-        |      THEN d2.deg ELSE d1.deg END AS dv
-        |  FROM edges
-        |  JOIN deg d1 ON edges.pa = d1.node
-        |  JOIN deg d2 ON edges.pb = d2.node),
-        |wedges AS MATERIALIZED (
-        |  SELECT w1.u AS c, w1.v AS a, w2.v AS b
-        |  FROM oriented w1 JOIN oriented w2 ON w1.u = w2.u
-        |   AND (w1.dv < w2.dv OR (w1.dv = w2.dv AND w1.v < w2.v))),
-        |tris AS MATERIALIZED (
-        |  SELECT c, a, b
-        |  FROM wedges JOIN oriented o ON wedges.a = o.u AND wedges.b = o.v),
-        |pernode AS (
-        |  SELECT node, count(*)::BIGINT AS n_tri FROM (
-        |    SELECT c AS node FROM tris
-        |    UNION ALL SELECT a FROM tris
-        |    UNION ALL SELECT b FROM tris) z
-        |  GROUP BY node)
-        |SELECT d.node, d.deg, coalesce(p.n_tri, 0)::BIGINT AS n_tri,
-        |  round(2.0 * coalesce(p.n_tri, 0) / (d.deg * (d.deg - 1)), 6) AS lcc
-        |FROM deg d LEFT JOIN pernode p ON d.node = p.node
-        |WHERE d.deg >= 2
-        |ORDER BY lcc DESC, d.node LIMIT 50""".stripMargin,
 
     /** DBSCAN twin: the exact ε-disk over an n² candidate join (the
       * oracle needs correctness, not the cell index), components by the

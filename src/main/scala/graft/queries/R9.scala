@@ -651,92 +651,6 @@ object R9 {
         .orderBy("event_type", "dow")
     }),
 
-    /** HITS (Kleinberg's hubs-and-authorities) over the DIRECTED
-      * customer→supplier trade graph — the link-analysis sibling
-      * `graph_pagerank` leaves open: customers score as HUBS (they buy
-      * from good suppliers), suppliers as AUTHORITIES (they are bought
-      * by good hubs), by 4 rounds of mutual reinforcement with L1
-      * normalization. Each half-round is ONE equi-join + ONE keyed
-      * aggregation over the cached edge frame; score vectors ride the
-      * GraphLayout broadcast gate like pagerank's ranks; every score
-      * re-rounds to the 1e-9 grid and per-node sums of grid values ride
-      * DECIMAL, so the DuckDB twin's unrolled-iteration CTE chain (the
-      * `graph_pagerank` oracle trick) replays the fixpoint bit-exactly.
-      * Output: top-10 hubs and top-10 authorities. */
-    "graph_hits" -> ((s, d) => {
-      val iters = 4
-      // Tagged-long node ids (the `graph_pagerank` r16 rewrite, guide
-      // §2.3): every half-round join and keyed DECIMAL aggregation keys
-      // on a long instead of a ~10-char string — a bijection, so groups,
-      // sums and normalizations are unchanged; the display string is
-      // derived just before the top-10 selects, which keep their
-      // tie-break order on the string form exactly as before.
-      val edges = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-        .distinct()
-        .repartition(col("src"))
-        .cache()
-      try {
-        val nNodes = edges.select(countDistinct("src")).head().getLong(0)
-        var hubs = edges.select(col("src").as("node")).distinct()
-          .select(col("node"), lit(1.0).as("h"))
-        var auths: DataFrame = null
-        // superseded half-round checkpoints are released as soon as the
-        // next checkpoint materializes (guide §5): only the final
-        // aRaw/hRaw pair must stay resident for the top-10 selects
-        var lastA: DataFrame = null
-        var lastH: DataFrame = null
-        for (i <- 1 to iters) {
-          val aRaw = edges
-            .join(graft.operators.GraphLayout.nodeSide(hubs, nNodes),
-              edges("src") === hubs("node"))
-            .groupBy(col("dst"))
-            .agg(sum(col("h").cast("decimal(28,9)")).as("araw"))
-            .localCheckpoint()
-          if (lastH != null) graft.plans.Blocks.free(lastH)
-          if (lastA != null) graft.plans.Blocks.free(lastA)
-          // the L1 total rides as a BROADCAST 1-row cross join instead of
-          // a driver `.head()` collect (r17): the normalization stays a
-          // lazy narrow projection over the just-checkpointed raw frame
-          // (the r16 form), and the per-half-round blocking round-trip is
-          // gone — 2 driver actions per iteration (the two checkpoints)
-          // instead of 4. Arithmetic unchanged: sum(decimal(28,9)) cast
-          // to double is exactly the old getDecimal.doubleValue scalar.
-          auths = aRaw
-            .crossJoin(broadcast(aRaw.agg(sum("araw").as("atot"))))
-            .select(col("dst").as("node"),
-              round(col("araw").cast("double") / col("atot").cast("double"), 9)
-                .as("a"))
-          val hRaw = edges
-            .join(graft.operators.GraphLayout.nodeSide(auths, nNodes),
-              edges("dst") === auths("node"))
-            .groupBy(col("src"))
-            .agg(sum(col("a").cast("decimal(28,9)")).as("hraw"))
-            .localCheckpoint()
-          hubs = hRaw
-            .crossJoin(broadcast(hRaw.agg(sum("hraw").as("htot"))))
-            .select(col("src").as("node"),
-              round(col("hraw").cast("double") / col("htot").cast("double"), 9)
-                .as("h"))
-          lastA = aRaw
-          lastH = hRaw
-        }
-        def asName(c: Column): Column =
-          when(c % 2 === 0, concat(lit("c"), (c / 2).cast("long")))
-            .otherwise(concat(lit("s"), ((c - 1) / 2).cast("long")))
-        val topH = hubs.select(asName(col("node")).as("node"), col("h"))
-          .orderBy(col("h").desc, col("node")).limit(10)
-          .select(lit("hub").as("role"), col("node"), col("h").as("score"))
-        val topA = auths.select(asName(col("node")).as("node"), col("a"))
-          .orderBy(col("a").desc, col("node")).limit(10)
-          .select(lit("authority").as("role"), col("node"),
-            col("a").as("score"))
-        topH.unionAll(topA).orderBy("role", "node")
-      } finally { edges.unpersist(); () }
-    }),
-
     /** SAX SYMBOLIZATION (Lin/Keogh Symbolic Aggregate approXimation) —
       * the discretization that turns series into text so motif/index
       * machinery applies (the indexing companion to
@@ -884,75 +798,6 @@ object R9 {
         }
         .toDF("event_type", "position", "rn", "y")
         .orderBy("event_type", "position")
-    }),
-
-    /** DETERMINISTIC RANDOM WALKS over the trade graph — the walk
-      * corpus node2vec/DeepWalk embeddings train on, generated the way
-      * a 100 TB graph must: the edge frame carries each neighbor's
-      * per-source INDEX and the source degree (one window pass, cached
-      * pre-partitioned on the join key), and every step is ONE
-      * equi-join — the walk frontier joins its current nodes and picks
-      * neighbor index md5(walk, step, node) % degree. The house md5 is
-      * the RNG (mergeable, replayable — no RNG state, the
-      * `ml_bootstrap_ci` trick on a graph), so the DuckDB twin replays
-      * every walk exactly through a recursive CTE. 64 highest-degree
-      * starts × 4 walks × 6 steps; output is the visit census the
-      * embedding sampler consumes. The walk frame rides the GraphLayout
-      * gate: bounded here, node-scale walk sets flip to the
-      * shuffled-hash join like pagerank's rank vector. */
-    "graph_random_walks" -> ((s, d) => {
-      val steps = 6
-      // distinct on LONG key pairs, strings built once per distinct pair
-      // (r16, guide §2.3); everything downstream keeps the STRING ids —
-      // they are md5-RNG inputs (`pick`) and must stay bit-identical
-      val pairs = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
-        .distinct()
-        .select(concat(lit("c"), col("ck")).as("cn"),
-          concat(lit("s"), col("sk")).as("sn"))
-      val edges0 = pairs.select(col("cn").as("src"), col("sn").as("dst"))
-        .unionAll(pairs.select(col("sn").as("src"), col("cn").as("dst")))
-      val iw = Window.partitionBy("src").orderBy("dst")
-      val edges = edges0
-        .withColumn("idx", row_number().over(iw) - 1)
-        .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
-        .repartition(col("src"))
-        .cache()
-      try {
-        val starts = edges.groupBy("src").agg(max("deg").as("deg"))
-          .orderBy(col("deg").desc, col("src")).limit(64)
-          .select(col("src").as("start"))
-        var walks = starts
-          .crossJoin(broadcast(
-            edges.sparkSession.range(4).select(col("id").as("w"))))
-          .select(concat(col("start"), lit("#"), col("w")).as("walk_id"),
-            col("start").as("cur"))
-          .localCheckpoint()
-        val nWalks = walks.count()
-        var visits = walks.select(col("cur").as("node"),
-          lit(0).as("step"))
-        for (st <- 1 to steps) {
-          val pick = expr(s"CAST(conv(substring(md5(concat(walk_id, ':', " +
-            s"$st, ':', cur)), 1, 8), 16, 10) AS BIGINT)")
-          // every step checkpoints: the walk frame is start-set-sized
-          // (cheap to materialize), each frame is consumed TWICE (next
-          // step + the visit union), and an un-truncated final lineage
-          // would recompute against the by-then-unpersisted edge cache
-          // at action time (the BENCH_TRIAGE_r09 checkpoint lesson)
-          walks = edges
-            .join(graft.operators.GraphLayout.nodeSide(
-                walks.withColumn("h", pick), nWalks),
-              col("src") === col("cur") && col("idx") === col("h") % col("deg"))
-            .select(col("walk_id"), col("dst").as("cur"))
-            .localCheckpoint()
-          visits = visits.unionAll(
-            walks.select(col("cur").as("node"), lit(st).as("step")))
-        }
-        visits.groupBy("node").agg(count(lit(1)).as("n_visits"),
-            countDistinct("step").as("n_steps_seen"))
-          .orderBy(col("n_visits").desc, col("node")).limit(25)
-      } finally { edges.unpersist(); () }
     }),
 
     /** GRID-BLOCKED SPATIAL SELF-JOIN — the ε-radius pair search every
@@ -1304,50 +1149,6 @@ object R9 {
   private val tokedSqlR9 =
     "WITH t AS (SELECT *, string_split(text, ' ') AS toks FROM documents)\n"
 
-  /** The HITS fixpoint unrolled (the `graph_pagerank` oracle trick):
-    * four rounds × two phases as chained CTEs, per-node sums of grid
-    * scores in DECIMAL, L1 totals as exact DECIMAL sums cast to DOUBLE
-    * for the one rounded division per phase. */
-  private def hitsSql: String = {
-    val iters = 4
-    val rounds = (1 to iters).map { i =>
-      val hPrev = if (i == 1) "h0" else s"h${i - 1}"
-      // every per-round CTE is MATERIALIZED: a{i}raw/h{i}raw each have
-      // two consumers (tot + normalize), so plain CTEs re-expand the
-      // whole prior-round chain per reference — 2^rounds evaluation,
-      // measured 4.8 GB / 9.7 s vs 71 MB / 0.08 s materialized
-      // (identical result; part of the r11 driver map-exhaustion class)
-      s"""a${i}raw AS MATERIALIZED (
-         |  SELECT e.dst, sum(CAST(p.h AS DECIMAL(28,9))) AS araw
-         |  FROM e JOIN $hPrev p ON e.src = p.node GROUP BY e.dst),
-         |a${i}tot AS MATERIALIZED (SELECT sum(araw) AS t FROM a${i}raw),
-         |a$i AS MATERIALIZED (
-         |  SELECT dst AS node,
-         |    round(CAST(araw AS DOUBLE) / CAST(t AS DOUBLE), 9) AS a
-         |  FROM a${i}raw CROSS JOIN a${i}tot),
-         |h${i}raw AS MATERIALIZED (
-         |  SELECT e.src, sum(CAST(p.a AS DECIMAL(28,9))) AS hraw
-         |  FROM e JOIN a$i p ON e.dst = p.node GROUP BY e.src),
-         |h${i}tot AS MATERIALIZED (SELECT sum(hraw) AS t FROM h${i}raw),
-         |h$i AS MATERIALIZED (
-         |  SELECT src AS node,
-         |    round(CAST(hraw AS DOUBLE) / CAST(t AS DOUBLE), 9) AS h
-         |  FROM h${i}raw CROSS JOIN h${i}tot)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS MATERIALIZED (
-       |  SELECT DISTINCT 'c' || o_custkey AS src, 's' || l_suppkey AS dst
-       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-       |h0 AS (SELECT DISTINCT src AS node, CAST(1.0 AS DOUBLE) AS h FROM e),
-       |$rounds
-       |SELECT role, node, score FROM (
-       |  SELECT 'hub' AS role, node, h AS score,
-       |    row_number() OVER (ORDER BY h DESC, node) AS rk FROM h$iters
-       |  UNION ALL
-       |  SELECT 'authority' AS role, node, a AS score,
-       |    row_number() OVER (ORDER BY a DESC, node) AS rk FROM a$iters) u
-       |WHERE rk <= 10 ORDER BY role, node""".stripMargin
-  }
-
   /** Shared twin for the batch AND streaming irregular EWMA. `s` is
     * MATERIALIZED: every recursive step joins it, and DuckDB would
     * otherwise re-run its `row_number()` window per step. */
@@ -1692,8 +1493,6 @@ object R9 {
         |FROM pnl GROUP BY 1, 2 ORDER BY series_a, series_b""".stripMargin,
 
 
-    "graph_hits" -> hitsSql,
-
     /** Signed-rank replay: identical midranks (rank + tie counts), the
       * per-row (t²−1) trick sums to Σ(t³−t) exactly, W⁺ DECIMAL. */
     "stat_wilcoxon_signed_rank" ->
@@ -1877,40 +1676,6 @@ object R9 {
         |  UNION ALL
         |  SELECT g, 99 AS position, rn, px AS y FROM s WHERE rn = n) u
         |ORDER BY event_type, position""".stripMargin,
-
-    /** Every walk replayed exactly: identical neighbor indexing
-      * (row_number over the dst order), the same md5 pick per step,
-      * recursion over (walk, step). */
-    "graph_random_walks" ->
-      """WITH RECURSIVE pr AS MATERIALIZED (
-        |  SELECT DISTINCT 'c' || o_custkey AS cn, 's' || l_suppkey AS sn
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |e0 AS (SELECT cn AS src, sn AS dst FROM pr
-        |  UNION ALL SELECT sn AS src, cn AS dst FROM pr),
-        |edges AS MATERIALIZED (
-        |  SELECT src, dst,
-        |    row_number() OVER (PARTITION BY src ORDER BY dst) - 1 AS idx,
-        |    count(*) OVER (PARTITION BY src) AS deg
-        |  FROM e0),
-        |starts AS (
-        |  SELECT src AS start FROM (
-        |    SELECT src, max(deg) AS deg FROM edges GROUP BY src
-        |    ORDER BY deg DESC, src LIMIT 64) t),
-        |wk AS (
-        |  SELECT start || '#' || w AS walk_id, start AS cur
-        |  FROM starts CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS w) ws),
-        |rec(walk_id, step, cur) AS (
-        |  SELECT walk_id, 0 AS step, cur FROM wk
-        |  UNION ALL
-        |  SELECT r.walk_id, r.step + 1, e.dst
-        |  FROM rec r JOIN edges e ON e.src = r.cur
-        |    AND e.idx = (('0x' || substr(md5(r.walk_id || ':'
-        |      || (r.step + 1) || ':' || r.cur), 1, 8))::BIGINT % e.deg)
-        |  WHERE r.step < 6)
-        |SELECT cur AS node, count(*)::BIGINT AS n_visits,
-        |  count(DISTINCT step)::BIGINT AS n_steps_seen
-        |FROM rec GROUP BY cur
-        |ORDER BY n_visits DESC, node LIMIT 25""".stripMargin,
 
     /** The grid-blocked spatial join replayed: identical normalization
       * (1-row min/max attach), identical cell math, the same 9-way

@@ -687,234 +687,6 @@ object Rel {
         .orderBy(col("cosine").desc, col("pa"), col("pb")).limit(25)
     }),
 
-    /** PAGERANK on the customer↔supplier trade graph — the canonical
-      * iterative-distributed-joins algorithm (the shape GraphX/Pregel
-      * formalize, expressed directly in the DataFrame API so Catalyst
-      * plans every step): nodes = customers and suppliers that traded,
-      * undirected edges = distinct (customer, supplier) pairs from
-      * lineitem⋈orders, 8 damped (0.85) power iterations from uniform.
-      * Each iteration is ONE join + ONE keyed aggregation; the edge
-      * frame is computed once, cached, and reused — at 100 TB it is
-      * hash-partitioned once on src and every iteration co-locates on
-      * that layout. Ranks are re-rounded to the 1e-9 grid every
-      * iteration so both engines accumulate IDENTICAL operands (float
-      * sum-order drift cannot compound); the degree division is by an
-      * exact integer. Top-25 by rank, deterministic tiebreak. */
-    "graph_pagerank" -> ((s, d) => {
-      val damping = 0.85
-      val iters = 8
-      // Node ids ride a TAGGED LONG (custkey·2 / suppkey·2+1) through the
-      // whole derivation and every iteration (r16, guide §2.3 "narrower
-      // types"): the distinct, the degree/rank aggregations and the
-      // per-round join previously hashed/compared/shuffled ~10-char UTF8
-      // strings — the tag bit is a bijection, so every group and join
-      // match is unchanged, and the display string is derived only in the
-      // final top-25 select (which also keeps the tie-break ORDER on the
-      // string form, exactly as before). Measured 7.1 → 3.8 s at sf0.1,
-      // bit-identical output at all SFs.
-      val pairs = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("cn"),
-          (col("l_suppkey") * 2 + 1).as("sn"))
-        .distinct()
-      val edges0 = pairs.select(col("cn").as("src"), col("sn").as("dst"))
-        .unionAll(pairs.select(col("sn").as("src"), col("cn").as("dst")))
-        .cache()
-      // ONE cached edge frame carrying the out-degree (the structure is
-      // static across iterations — join it once, not once per round),
-      // hash-partitioned UP FRONT by the key its per-iteration consumer
-      // needs. Broadcast mode (nodes fit a broadcast): partition by dst —
-      // the broadcast rank join preserves the child's partitioning, so
-      // the dst-keyed inflow aggregation runs with NO per-iteration
-      // exchange; eight shuffles collapse into this single one. Shuffle
-      // mode (past GraphLayout.broadcastNodeLimit, where a per-iteration
-      // full broadcast of a 10⁸-row rank vector dies at the driver):
-      // partition by src — the shuffled-hash rank join then exchanges
-      // ONLY the node-sized rank frame per round, and the dst aggregation
-      // exchanges map-side-combined partials (node-bounded per task),
-      // never the raw edge frame.
-      // the degree frame doubles as the node census: its row count IS the
-      // node count the GraphLayout gate needs (no separate countDistinct
-      // pass) and it seeds the uniform rank vector for free
-      val deg = edges0.groupBy("src").agg(count(lit(1)).as("deg"))
-        .localCheckpoint()
-      val n = deg.count()
-      val useB = graft.operators.GraphLayout.useBroadcast(n)
-      val edgesDeg = edges0
-        .join(deg, "src")
-        .repartition(if (useB) col("dst") else col("src"))
-        .cache()
-      try {
-        var ranks = deg
-          .select(col("src").as("node"), round(lit(1.0) / n, 9).as("rank"))
-        // superseded every-2nd-round checkpoints are released once the
-        // next one materializes (guide §5): only the latest checkpoint
-        // must stay resident for the remaining rounds / the final select
-        var lastCp: DataFrame = null
-        for (i <- 1 to iters) {
-          // rank frame is node-sized → gated side of the join (see the
-          // layout note above); the edge scan stays in place. Eager
-          // localCheckpoint truncates the lineage so the plan stays
-          // shallow (an 8-deep nested join tree sends Catalyst
-          // re-analysis superlinear — the same reason GraphX/ALS
-          // checkpoint iteratively) — but materializing EVERY iteration
-          // pays one extra distributed job per round, so checkpoint every
-          // second round: plans stay ≤ 2 joins deep and half the
-          // materialization jobs disappear (A/B-measured ~15 % off the
-          // query's wall time at sf0.1, before the pre-partitioning above
-          // removed the per-iteration exchange).
-          val contrib = edgesDeg
-            .join(graft.operators.GraphLayout.nodeSide(ranks, n),
-              edgesDeg("src") === ranks("node"))
-            .groupBy(col("dst"))
-            .agg(sum(col("rank") / col("deg")).as("inflow"))
-          val next = contrib.select(col("dst").as("node"),
-            round(lit((1 - damping) / n) + lit(damping) * col("inflow"), 9).as("rank"))
-          // the FINAL round is always checkpointed on the default path —
-          // the caches this plan reads are unpersisted on return, so an
-          // un-truncated final lineage would force the caller's action to
-          // recompute the whole edge pipeline (measured ~1.6× on the
-          // query). Under GraphLayout.keepFinalPlan (PlanAuditSpec's
-          // probe) the last join stays visible instead.
-          ranks = if (i % 2 == 0 &&
-              !(i == iters && graft.operators.GraphLayout.keepFinalPlan)) {
-            val cp = next.localCheckpoint()
-            if (lastCp != null) graft.plans.Blocks.free(lastCp)
-            lastCp = cp
-            cp
-          } else next
-        }
-        ranks.select(
-            when(col("node") % 2 === 0,
-              concat(lit("c"), (col("node") / 2).cast("long")))
-              .otherwise(concat(lit("s"), ((col("node") - 1) / 2).cast("long")))
-              .as("node"),
-            round(col("rank"), 9).as("rank"))
-          .orderBy(col("rank").desc, col("node")).limit(25)
-      } finally { edgesDeg.unpersist(); edges0.unpersist(); () }
-    }),
-
-    /** TRIANGLE COUNT + global clustering coefficient of the co-purchase
-      * graph (parts appearing together in ≥ 2 distinct orders — the
-      * support threshold that separates signal pairs from one-off basket
-      * noise, as in `mba_frequent_pairs`). The algorithm is the
-      * degree-ordered compact-forward method (Latapy 2008 / the
-      * Suri–Vassilvitskii MR formulation): orient every edge from the
-      * (degree, id)-smaller endpoint to the larger, enumerate wedges by
-      * self-joining oriented edges on their SOURCE, and close them
-      * against the oriented edge set with an equi-join — per-node wedge
-      * fan-out is bounded by O(√m), so the shuffle never sees the
-      * quadratic hub blow-up a naive id-ordering admits at 100 TB.
-      * Everything is integer-exact; the clustering coefficient
-      * 3·T / Σ C(deg,2) gets the one rounded division. */
-    "graph_triangles" -> ((s, d) => {
-      import s.implicits._
-      val b = Tables.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-      val edges = b.as("b1").join(b.hint("shuffle_hash").as("b2"),
-          col("b1.o") === col("b2.o") && col("b1.p") < col("b2.p"))
-        .groupBy(col("b1.p").as("pa"), col("b2.p").as("pb"))
-        .agg(count(lit(1)).as("c")).filter(col("c") >= 2)
-        .select("pa", "pb")
-      val deg = edges.select(col("pa").as("node"))
-        .unionAll(edges.select(col("pb").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-      // attach both endpoint degrees (broadcast — the degree frame is
-      // node-sized), then orient by the total (deg, id) order
-      val withDeg = edges
-        .join(broadcast(deg.select(col("node").as("pa"), col("deg").as("da"))), "pa")
-        .join(broadcast(deg.select(col("node").as("pb"), col("deg").as("db"))), "pb")
-      val aFirst = col("da") < col("db") ||
-        (col("da") === col("db") && col("pa") < col("pb"))
-      val oriented = withDeg.select(
-        when(aFirst, col("pa")).otherwise(col("pb")).as("u"),
-        when(aFirst, col("pb")).otherwise(col("pa")).as("v"),
-        when(aFirst, col("db")).otherwise(col("da")).as("dv"))
-      val vFirst = col("w1.dv") < col("w2.dv") ||
-        (col("w1.dv") === col("w2.dv") && col("w1.v") < col("w2.v"))
-      val wedges = oriented.as("w1").join(oriented.hint("shuffle_hash").as("w2"),
-          col("w1.u") === col("w2.u") && vFirst)
-        .select(col("w1.v").as("u"), col("w2.v").as("v"))
-      val tri = wedges.join(oriented.select("u", "v"), Seq("u", "v"))
-        .agg(count(lit(1)).as("n_triangles"))
-      val totals = deg.agg(count(lit(1)).as("n_nodes"),
-        (sum(col("deg")) / 2).cast("long").as("n_edges"),
-        sum(col("deg") * (col("deg") - 1) / 2).cast("long").as("n_wedges"))
-      totals.crossJoin(broadcast(tri))
-        .select(col("n_nodes"), col("n_edges"), col("n_wedges"),
-          col("n_triangles"),
-          round(lit(3.0) * col("n_triangles") / col("n_wedges"), 6)
-            .as("clustering"))
-    }),
-
-    /** SINGLE-SOURCE BFS over the customer↔supplier trade graph — the
-      * other canonical iterative-joins primitive next to
-      * `graph_pagerank` (reachability / hop-distance; the Pregel
-      * textbook example). Frontier expansion: each round joins the
-      * (node-sized, broadcast) frontier against the one cached,
-      * dst-pre-partitioned edge frame and anti-joins the visited set —
-      * so every round is one co-located join plus one keyed dedup, and
-      * the edge scan never re-shuffles (the pagerank layout). The
-      * source is the smallest customer node (deterministic); 6 rounds
-      * covers the diameter of the dense bipartite trade graph. Output
-      * is the hop-distance histogram; the oracle replays the expansion
-      * as a recursive CTE with UNION-dedup (textbook SQL BFS). */
-    "graph_bfs_distance" -> ((s, d) => {
-      import s.implicits._
-      val maxHops = 6
-      // Tagged-long node ids (the `graph_pagerank` r16 rewrite, guide
-      // §2.3): the frontier joins, the distinct dedup and the visited
-      // anti-join all key on a long instead of a ~10-char string — a
-      // bijection, so the reachable sets and the output histogram are
-      // unchanged (node ids never appear in the output at all).
-      val pairs = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-        .select((col("o_custkey") * 2).as("cn"),
-          (col("l_suppkey") * 2 + 1).as("sn"))
-        .distinct()
-      val edges = pairs.select(col("cn").as("src"), col("sn").as("dst"))
-        .unionAll(pairs.select(col("sn").as("src"), col("cn").as("dst")))
-        .repartition(col("src"))
-        .cache()
-      try {
-        // min over the (even-tagged) customer side = 2 · min custkey —
-        // the same source node the string form picked
-        val src0 = pairs.agg(min(col("cn"))).head().getLong(0)
-        var visited = Seq((src0, 0)).toDF("node", "dist")
-        var frontier = visited
-        // The frontier can reach O(nodes) at the middle hop of a dense
-        // graph, so its join side is gated per round on the measured
-        // frontier size (GraphLayout): broadcast while it fits, else a
-        // shuffled-hash join that — edges being pre-partitioned by src,
-        // the join key — exchanges only the frontier frame. The count is
-        // free: it doubles as the loop's emptiness check and reads the
-        // just-checkpointed frame.
-        var frontierN = 1L
-        var hop = 0
-        while (hop < maxHops && frontierN > 0) {
-          hop += 1
-          val next = edges
-            .join(graft.operators.GraphLayout.nodeSide(frontier, frontierN),
-              edges("src") === frontier("node"))
-            .select(col("dst").as("node")).distinct()
-            .join(visited.select(col("node").as("vn")), col("node") === col("vn"), "left_anti")
-            .select(col("node"), lit(hop).as("dist"))
-            .localCheckpoint()
-          val grown = visited.unionAll(next).localCheckpoint()
-          // prior visited/frontier checkpoints are dead once `next` and
-          // `grown` are materialized (localCheckpoint is eager) — release
-          // their blocks now (guide §5; no-op on the unpersisted seed)
-          graft.plans.Blocks.free(visited)
-          if (!(frontier eq visited)) graft.plans.Blocks.free(frontier)
-          visited = grown
-          frontier = next
-          frontierN = next.count()
-        }
-        visited.groupBy("dist").agg(count(lit(1)).as("n_nodes"))
-          .orderBy("dist")
-      } finally { edges.unpersist(); () }
-    }),
-
     /** SCD TYPE-2 HISTORY — the slowly-changing-dimension build every
       * warehouse runs on entity-attribute streams (Kimball): from the
       * per-user event stream, emit one VERSION row per value CHANGE with
@@ -2360,92 +2132,6 @@ object Rel {
       """SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber, l_quantity,
         |       l_extendedprice, l_discount, l_tax
         |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "graph_pagerank" -> {
-      val iterCtes = (1 to 8).map { i =>
-        s"""r$i AS MATERIALIZED (
-           |  SELECT e.dst AS node,
-           |    round(0.15 / nn.n + 0.85 * sum(r.rank / d.deg), 9) AS rank
-           |  FROM edges e
-           |  JOIN deg d ON e.src = d.src
-           |  JOIN r${i - 1} r ON e.src = r.node, nn
-           |  GROUP BY e.dst, nn.n)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH pairs AS MATERIALIZED (
-         |  SELECT DISTINCT 'c' || o_custkey AS cn, 's' || l_suppkey AS sn
-         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         |edges AS MATERIALIZED (
-         |  SELECT cn AS src, sn AS dst FROM pairs
-         |  UNION ALL SELECT sn AS src, cn AS dst FROM pairs),
-         |deg AS MATERIALIZED (SELECT src, count(*)::BIGINT AS deg FROM edges GROUP BY src),
-         |nn AS MATERIALIZED (SELECT count(*)::BIGINT AS n FROM deg),
-         |r0 AS MATERIALIZED (SELECT src AS node, round(1.0 / n, 9) AS rank FROM deg, nn),
-         |$iterCtes
-         |SELECT node, round(rank, 9) AS rank FROM r8
-         |ORDER BY rank DESC, node LIMIT 25""".stripMargin
-    },
-
-    /** Degree-ordered compact-forward replay — identical orientation,
-      * wedge, and closing joins; all counts integer-exact. */
-    "graph_triangles" ->
-      """WITH b AS MATERIALIZED (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |edges AS MATERIALIZED (
-        |  SELECT b1.p AS pa, b2.p AS pb
-        |  FROM b b1 JOIN b b2 ON b1.o = b2.o AND b1.p < b2.p
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |deg AS MATERIALIZED (
-        |  SELECT node, count(*)::BIGINT AS deg FROM (
-        |    SELECT pa AS node FROM edges
-        |    UNION ALL SELECT pb FROM edges)
-        |  GROUP BY node),
-        |oriented AS MATERIALIZED (
-        |  SELECT
-        |    CASE WHEN d1.deg < d2.deg OR (d1.deg = d2.deg AND pa < pb)
-        |      THEN pa ELSE pb END AS u,
-        |    CASE WHEN d1.deg < d2.deg OR (d1.deg = d2.deg AND pa < pb)
-        |      THEN pb ELSE pa END AS v,
-        |    CASE WHEN d1.deg < d2.deg OR (d1.deg = d2.deg AND pa < pb)
-        |      THEN d2.deg ELSE d1.deg END AS dv
-        |  FROM edges
-        |  JOIN deg d1 ON edges.pa = d1.node
-        |  JOIN deg d2 ON edges.pb = d2.node),
-        |wedges AS MATERIALIZED (
-        |  SELECT w1.v AS u, w2.v AS v
-        |  FROM oriented w1 JOIN oriented w2 ON w1.u = w2.u
-        |   AND (w1.dv < w2.dv OR (w1.dv = w2.dv AND w1.v < w2.v))),
-        |tri AS (
-        |  SELECT count(*)::BIGINT AS n_triangles
-        |  FROM wedges JOIN oriented o ON wedges.u = o.u AND wedges.v = o.v),
-        |tot AS (
-        |  SELECT count(*)::BIGINT AS n_nodes,
-        |    (sum(deg) / 2)::BIGINT AS n_edges,
-        |    (sum(deg * (deg - 1) / 2))::BIGINT AS n_wedges
-        |  FROM deg)
-        |SELECT n_nodes, n_edges, n_wedges, n_triangles,
-        |  round(3.0 * n_triangles / n_wedges, 6) AS clustering
-        |FROM tot, tri""".stripMargin,
-
-    /** Textbook SQL BFS: recursive CTE with UNION dedup over (node,
-      * dist) pairs, hop-capped at 6; min(dist) per node is the BFS
-      * distance (a node re-reached deeper contributes a dominated
-      * row). */
-    "graph_bfs_distance" ->
-      """WITH RECURSIVE pairs AS (
-        |  SELECT DISTINCT 'c' || o_custkey AS cn, 's' || l_suppkey AS sn
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |edges AS (
-        |  SELECT cn AS src, sn AS dst FROM pairs
-        |  UNION ALL SELECT sn AS src, cn AS dst FROM pairs),
-        |walk(node, dist) AS (
-        |  SELECT 'c' || CAST(min(CAST(substr(cn, 2) AS BIGINT)) AS VARCHAR), 0
-        |  FROM pairs
-        |  UNION
-        |  SELECT e.dst, w.dist + 1
-        |  FROM walk w JOIN edges e ON e.src = w.node
-        |  WHERE w.dist < 6),
-        |best AS (SELECT node, min(dist) AS dist FROM walk GROUP BY node)
-        |SELECT dist, count(*)::BIGINT AS n_nodes FROM best
-        |GROUP BY dist ORDER BY dist""".stripMargin,
 
     /** Same disjoint-interval semantics: each click matches at most one
       * version of its user's value chain. */

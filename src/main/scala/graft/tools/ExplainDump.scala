@@ -10,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   * execute driver actions while BUILDING their frame; the dump therefore
   * shows the FINAL returned frame's plan, which is also what Bench's
   * `count()` executes last. The per-round inner plans of the iterative
-  * family are pinned structurally in PlanAuditSpec instead.
+  * graph family are pinned in PlanAuditSpec, which reads them from a
+  * `QueryExecutionListener`: each round's `localCheckpoint` is an action,
+  * so its executed plan reaches the listener.
   *
   * Usage: `runMain graft.tools.ExplainDump <outDir> <suffix> <keys comma-sep>`
   * (data dir from SPARK_GRAFT_SF_DIR, cores from SPARK_GRAFT_CPUS).

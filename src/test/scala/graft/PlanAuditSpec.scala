@@ -1,5 +1,15 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.BusDrain
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, ShuffledHashJoinExec}
+import org.apache.spark.sql.util.QueryExecutionListener
+
 /** Structural audit of every registered query's physical plan at
   * sf0.001 — the automated version of the "would this survive 100 TB"
   * plan review: no accidental cartesian products, nested-loop joins only
@@ -220,87 +230,111 @@ class PlanAuditSpec extends SparkSpec {
       s"expected the in-row dot fold in the projection:\n$p")
   }
 
-  test("iterative graph joins: broadcast under the node gate, shuffled-hash past it") {
-    // GraphLayout's contract (VERDICT r8 What's-wrong #2): the node-sized
-    // rank/estimate/frontier frame broadcasts per round ONLY while the
-    // node count fits a broadcast; past the limit the same queries must
-    // plan a shuffled-hash join (edge cache pre-partitioned on the join
-    // key → only the node frame exchanges). Both modes are pinned here by
-    // flipping the sys-prop gate on tiny data; the shuffle mode also
-    // disables Catalyst's auto-broadcast so the size estimator cannot
-    // sneak the refused broadcast back in — which is exactly what the
-    // explicit shuffle_hash hint prevents in production.
-    def executed(q: String): String = {
-      val df = SparkEntry.queries(q)(spark, dir)
-      df.collect()
-      df.queryExecution.executedPlan.toString
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  /** A node-sized frame as its join sees it: the edge side's join key,
+    * and the columns the node side may output (column pruning can drop
+    * its value column, e.g. BFS's frontier distance). */
+  private case class NodeFrame(edgeKey: String, cols: Set[String])
+
+  /** How each join of an edge-side `edgeKey` against a node frame plans:
+    * "BroadcastHashJoin" or "ShuffledHashJoin" when the node frame is the
+    * build side; anything else names the join and says the node frame is
+    * not its build side. Other joins (lineitem ⋈ orders, the co-purchase
+    * self-join, BFS's visited anti-join) are not counted, however they
+    * plan. */
+  private def nodeJoins(p: SparkPlan, frames: Seq[NodeFrame]): Seq[String] = {
+    def names(keys: Seq[Expression]) = keys.collect { case a: Attribute => a.name }
+    def isFrame(side: SparkPlan, otherKeys: Seq[Expression]) = frames.exists { f =>
+      names(otherKeys) == Seq(f.edgeKey) && side.output.map(_.name).toSet.subsetOf(f.cols)
     }
-    // BFS's final plan is a groupBy over checkpointed union leaves (its
-    // termination check forces the per-round checkpoint), so it is pinned
-    // by result mode-invariance below; pagerank/k-core expose the gated
-    // join structurally under the keepFinalPlan probe (the default/bench
-    // path checkpoints the final round, which truncates the lineage).
-    val structural = Seq("graph_pagerank", "graph_k_core")
-    val rowsBcast = Seq("graph_pagerank", "graph_bfs_distance")
-      .map(q => q -> SparkEntry.queries(q)(spark, dir).collect().map(_.toString).toSeq)
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    sys.props("graft.graph.keepFinalPlan") = "true"
-    try {
-      for (q <- structural)
-        assert(executed(q).contains("BroadcastHashJoin"),
-          s"$q should broadcast the node frame under the gate")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-      sys.props("graft.graph.broadcastNodeLimit") = "0"
-      for (q <- structural) {
-        val p = executed(q)
-        assert(p.contains("ShuffledHashJoin"),
-          s"$q must plan a shuffled-hash node join past the gate:\n$p")
+    Aqe.collect(p) {
+      case j: BaseJoinExec if isFrame(j.right, j.leftKeys) || isFrame(j.left, j.rightKeys) =>
+        val side = if (isFrame(j.right, j.leftKeys)) BuildRight else BuildLeft
+        j match {
+          case b: BroadcastHashJoinExec if b.buildSide == side => "BroadcastHashJoin"
+          case h: ShuffledHashJoinExec if h.buildSide == side => "ShuffledHashJoin"
+          case _ => s"${j.nodeName} (node frame not the build side)"
+        }
+    }
+  }
+
+  /** Runs `q` and returns how its node-frame joins planned, and its rows.
+    * The plans are every executed plan the session reported meanwhile,
+    * read from a `QueryExecutionListener`: one per action, so each
+    * round's `localCheckpoint` hands over that round's plan (the returned
+    * frame's own lineage starts at the last checkpoint). */
+  private def graphRun(q: String, frames: Seq[NodeFrame]): (Seq[String], Seq[String]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = {
+        plans.add(qe.executedPlan); ()
       }
-      // and the results must be mode-invariant (same fixpoint either path)
-      for ((q, want) <- rowsBcast) {
-        val got = SparkEntry.queries(q)(spark, dir).collect().map(_.toString).toSeq
-        assert(got == want, s"$q results must not depend on the join mode")
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    BusDrain.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val rows = SparkEntry.queries(q)(spark, dir).collect().map(_.toString).toSeq
+      BusDrain.drain(spark.sparkContext)
+      (plans.asScala.toSeq.flatMap(nodeJoins(_, frames)), rows)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Pins `GraphLayout`'s contract on the node-frame joins of `keys`:
+    * broadcast under the gate; past it (the sys-prop limit at 0, and
+    * Catalyst's auto-broadcast off so the size estimator cannot sneak the
+    * refused broadcast back in — which is exactly what the explicit
+    * shuffle_hash hint prevents in production) a shuffled-hash join;
+    * results identical either way. */
+  private def assertGated(keys: Map[String, Seq[NodeFrame]], what: String): Unit = {
+    val under = keys.map { case (q, frames) => q -> graphRun(q, frames) }
+    for ((q, (joins, _)) <- under)
+      assert(joins.nonEmpty && joins.forall(_ == "BroadcastHashJoin"),
+        s"$q should broadcast the $what under the gate: $joins")
+    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    sys.props("graft.graph.broadcastNodeLimit") = "0"
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
+      for ((q, frames) <- keys) {
+        val (joins, rows) = graphRun(q, frames)
+        assert(joins.nonEmpty && joins.forall(_ == "ShuffledHashJoin"),
+          s"$q must plan a shuffled-hash $what join past the gate: $joins")
+        assert(rows == under(q)._2, s"$q results must not depend on the join mode")
       }
     } finally {
-      sys.props.remove("graft.graph.keepFinalPlan")
       sys.props.remove("graft.graph.broadcastNodeLimit")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
     }
   }
 
+  test("iterative graph joins: broadcast under the node gate, shuffled-hash past it") {
+    // GraphLayout's contract (VERDICT r8 What's-wrong #2): the node-sized
+    // rank/estimate/frontier frame broadcasts per round ONLY while the
+    // node count fits a broadcast; past the limit the same queries must
+    // plan a shuffled-hash join (edge cache pre-partitioned on the join
+    // key → only the node frame exchanges). Every round's join is read
+    // from the plan its checkpoint executes.
+    assertGated(Map(
+      "graph_pagerank" -> Seq(NodeFrame("src", Set("node", "rank"))),
+      "graph_k_core" -> Seq(NodeFrame("dst", Set("dst", "nv"))),
+      "graph_bfs_distance" -> Seq(NodeFrame("src", Set("node", "dist")))),
+      "node frame")
+  }
+
   test("one-shot degree attaches ride the GraphLayout gate (VERDICT r12 #2)") {
-    // graph_local_clustering / graph_common_neighbors / graph_assortativity
-    // attach a NODE-sized degree frame to an edge-sized frame. r12 shipped
-    // these as unconditional broadcast(deg) — an executor OOM at the 10⁸-node
-    // design point. They now ride GraphLayout.nodeSide like the iterative
-    // family: broadcast under the measured node gate, shuffled-hash past it,
-    // results identical either way.
-    val qs = Seq("graph_local_clustering", "graph_common_neighbors",
-      "graph_assortativity")
-    def executed(q: String): (String, Seq[String]) = {
-      val df = SparkEntry.queries(q)(spark, dir)
-      val rows = df.collect().map(_.toString).toSeq
-      (df.queryExecution.executedPlan.toString, rows)
-    }
-    val under = qs.map(q => q -> executed(q)).toMap
-    for ((q, (p, _)) <- under)
-      assert(p.contains("BroadcastHashJoin"),
-        s"$q should broadcast the node-sized degree frame under the gate:\n$p")
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    sys.props("graft.graph.broadcastNodeLimit") = "0"
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-      for (q <- qs) {
-        val (p, rows) = executed(q)
-        assert(p.contains("ShuffledHashJoin"),
-          s"$q must plan a shuffled-hash degree join past the gate:\n$p")
-        assert(rows == under(q)._2,
-          s"$q results must not depend on the degree-join mode")
-      }
-    } finally {
-      sys.props.remove("graft.graph.broadcastNodeLimit")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
-    }
+    // These keys attach a NODE-sized degree frame to an edge-sized frame.
+    // r12 shipped them as unconditional broadcast(deg) — an executor OOM
+    // at the 10⁸-node design point. They ride GraphLayout.nodeSide like
+    // the iterative family: broadcast under the measured node gate,
+    // shuffled-hash past it, results identical either way.
+    def attach(a: (String, String), b: (String, String)) =
+      Seq(NodeFrame(a._1, Set(a._1, a._2)), NodeFrame(b._1, Set(b._1, b._2)))
+    assertGated(Map(
+      "graph_local_clustering" -> attach("pa" -> "da", "pb" -> "db"),
+      "graph_triangles" -> attach("pa" -> "da", "pb" -> "db"),
+      "graph_common_neighbors" -> attach("u" -> "deg_u", "v" -> "deg_v"),
+      "graph_assortativity" -> attach("src" -> "du", "dst" -> "dv")), "degree")
   }
 
   test("containment dedup candidates come from a shingle-keyed equi-join") {

@@ -70,6 +70,17 @@ class VerifySpec extends SparkSpec {
     val (h2, _) = Verify.canonicalHash(df2)
     assert(h1 == h2, "struct field order must not change the canonical hash")
   }
+
+  test("the hash mirror root: system property, then env, then the working directory") {
+    val cwd = Map("user.dir" -> "/work/checkout")
+    assert(Verify.mirrorRoot(cwd, Map.empty) == "/work/checkout")
+    assert(Verify.mirrorRoot(cwd, Map("GRAFT_REPO_ROOT" -> "/env")) == "/env")
+    assert(Verify.mirrorRoot(cwd + ("graft.repo.root" -> "/prop"),
+      Map("GRAFT_REPO_ROOT" -> "/env")) == "/prop")
+    // no override: a run mirrors into the checkout it was started from
+    assert(Verify.mirrorRoot(sys.props.toMap - "graft.repo.root", Map.empty) ==
+      sys.props("user.dir"))
+  }
 }
 
 /** Minimal schema-carrying Row for the render test (mirrors Catalyst's
