@@ -31,12 +31,13 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     read(spark, s"$dir/$name.parquet")
 
-  /** One parquet file (a path, or a glob whose first match is read) as
-    * a DataFrame, its schema taken from the file's footer
-    * ([[footerSchema]]) — Spark's inference would run a one-task job to
-    * read the same footer. A path that is not a plain file (a directory
-    * of part files, or nothing) goes to Spark's own reader, with its
-    * partition discovery and its errors. */
+  /** A parquet table as a DataFrame: `file` is a path, or a glob whose
+    * matches are all read. The schema comes from the footer of the first
+    * match ([[footerSchema]]) — Spark's inference would run a one-task job
+    * to read the same footer — and the rows from every match. A path
+    * whose first match is not a plain file (a directory of part files,
+    * or nothing) goes to Spark's own reader, with its partition
+    * discovery and its errors. */
   def read(spark: SparkSession, file: String): DataFrame =
     footerSchema(spark, file) match {
       case Some(schema) => spark.read.schema(schema).parquet(file)
@@ -49,7 +50,7 @@ object Tables {
     * first match is not a plain file or nothing matches. Only the
     * footer's schema is parsed: `SKIP_ROW_GROUPS` leaves out the
     * row-group list, as Spark's own inference tasks do. */
-  private def footerSchema(spark: SparkSession, pattern: String): Option[StructType] = {
+  private[graft] def footerSchema(spark: SparkSession, pattern: String): Option[StructType] = {
     val conf = spark.sessionState.newHadoopConf()
     val path = new Path(pattern)
     val first = Try(Option(path.getFileSystem(conf).globStatus(path))).toOption.flatten

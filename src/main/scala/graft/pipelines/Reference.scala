@@ -23,13 +23,14 @@ object Reference {
     *
     * The fit and the latest feature row are memoized together
     * (`Ensemble.servingCached`, keyed on the files under `dir`). A miss
-    * lists `dir`, reads the day-grain frame with ONE collect and fits
-    * on a local frame of those rows — no further job on the driver-fit
-    * path. A hit lists `dir` and
-    * runs no Spark job: the members predict the memoized row on the
-    * driver and the result is a local one-row frame. Only MLlib-backed
-    * members (a frame past `Forest.driverFitLimit`) score the row with a
-    * job, through `withMemberPredictions` on a one-row local frame.
+    * lists `dir` and runs 2 Spark jobs, both in building the day-grain
+    * frame (`ModelingFrame.assembled`: one aggregate with one shuffle).
+    * That frame is local, so the driver-path fit and the latest-row
+    * lookup on it run no job. A hit lists `dir` and runs no Spark job:
+    * the members predict the memoized row on the driver and the result
+    * is a local one-row frame. Only MLlib-backed members (a frame past
+    * `Forest.driverFitLimit`) fit and score with jobs, the score through
+    * `withMemberPredictions` on a one-row local frame.
     *
     * @param threshold     signal gate (deployed default 0.6, `app.py:218`)
     * @param minConfidence R² gate (deployed default 0.6, `app.py:224`)
@@ -41,14 +42,14 @@ object Reference {
     val (fitted, x) = Ensemble.servingCached(spark, dir, ModelingFrame.Target) {
       val frame = ModelingFrame.assembled(spark, dir)
         .select(col("date_id"), col(Models.FeaturesCol), col(ModelingFrame.Target))
-      val rows = frame.collect()
+      val rows = frame.collect() // a local frame: no job
       require(rows.nonEmpty,
         s"serving_signal: the modeling frame of $dir has no rows " +
           "(every day lacks an event type or a next-day click mean)")
       // default input = latest feature row (`app.py:242` last_row_lookup)
       val latest = rows.maxBy(_.getInt(0))
         .getAs[org.apache.spark.ml.linalg.Vector](1).toArray
-      (spark.createDataFrame(rows.toSeq.asJava, frame.schema), latest)
+      (frame, latest)
     }
     // driver-path fit: all members predict on the driver (bit-identical
     // to the column/map scoring — Ensemble.Scorer.predictLocal)

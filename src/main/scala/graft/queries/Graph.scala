@@ -514,7 +514,8 @@ object Graph {
       * from good suppliers), suppliers as AUTHORITIES (they are bought
       * by good hubs), by 4 rounds of mutual reinforcement with L1
       * normalization. Each half-round is ONE equi-join + ONE keyed
-      * aggregation over the cached edge frame; score vectors ride the
+      * aggregation over the cached edge frame (the first, whose hub
+      * weights are all 1.0, needs no join); score vectors ride the
       * GraphLayout broadcast gate like pagerank's ranks; every score
       * re-rounds to the 1e-9 grid and per-node sums of grid values ride
       * DECIMAL, so the DuckDB twin's unrolled-iteration CTE chain (the
@@ -530,9 +531,13 @@ object Graph {
         .repartition(col("src"))
         .cache()
       try {
-        val nNodes = edges.select(countDistinct("src")).head().getLong(0)
-        var hubs = edges.select(col("src").as("node")).distinct()
-          .select(col("node"), lit(1.0).as("h"))
+        // hubs are customers and authorities suppliers: each score frame
+        // rides the gate on its own node count, both from one aggregate
+        val counts = edges.agg(countDistinct("src"), countDistinct("dst")).head()
+        val (nHubs, nAuths) = (counts.getLong(0), counts.getLong(1))
+        // round 1 weighs every hub 1.0, so it joins no hub frame: each
+        // authority's raw score is its in-degree
+        var hubs: DataFrame = null
         var auths: DataFrame = null
         // superseded half-round checkpoints are released as soon as the
         // next checkpoint materializes (guide §5): only the final
@@ -540,9 +545,10 @@ object Graph {
         var lastA: DataFrame = null
         var lastH: DataFrame = null
         for (i <- 1 to iters) {
-          val aRaw = edges
-            .join(GraphLayout.nodeSide(hubs, nNodes),
-              edges("src") === hubs("node"))
+          val weighted =
+            if (hubs == null) edges.select(col("dst"), lit(1.0).as("h"))
+            else edges.join(GraphLayout.nodeSide(hubs, nHubs), edges("src") === hubs("node"))
+          val aRaw = weighted
             .groupBy(col("dst"))
             .agg(sum(col("h").cast("decimal(28,9)")).as("araw"))
             .localCheckpoint()
@@ -561,7 +567,7 @@ object Graph {
               round(col("araw").cast("double") / col("atot").cast("double"), 9)
                 .as("a"))
           val hRaw = edges
-            .join(GraphLayout.nodeSide(auths, nNodes),
+            .join(GraphLayout.nodeSide(auths, nAuths),
               edges("dst") === auths("node"))
             .groupBy(col("src"))
             .agg(sum(col("a").cast("decimal(28,9)")).as("hraw"))

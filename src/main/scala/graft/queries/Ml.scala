@@ -21,16 +21,19 @@ object Ml {
     cols.foldLeft(df)((acc, c) => acc.withColumn(c, round(col(c), 6)))
 
   /** Every fit re-scans its training frame several times (WLS/tree passes
-    * + metric aggregates); the events→daily pivot would re-run per pass.
-    * Cache the tiny assembled frame for the query's duration.
+    * + metric aggregates). Cache the tiny assembled frame for the query's
+    * duration.
     *
-    * `coalesce(1)`: the day-level frame is a few hundred rows at any SF,
-    * but it inherits 32 shuffle partitions from the pivot — and iterative
-    * fits (GBT ≈ maxIter·depth sequential jobs, OWL-QN up to maxIter
-    * treeAggregates) then pay 32-task scheduling overhead PER PASS for
-    * zero parallelism gain. One partition makes each pass one task. The
-    * heavy distributed work (the events scan + pivot) happens upstream of
-    * the coalesce and keeps full parallelism. */
+    * `coalesce(1)`: the day-level frame is a local frame of a few dozen
+    * rows (`ModelingFrame` finishes it on the driver), but a local scan
+    * still splits its rows into up to `defaultParallelism` partitions.
+    * MLlib's sums combine per partition, so another split would add the
+    * same rows in another order, and iterative fits (GBT ≈ maxIter·depth
+    * sequential jobs, OWL-QN up to maxIter treeAggregates) would pay
+    * per-task scheduling overhead PER PASS for zero parallelism gain. One
+    * partition makes each pass one task over the rows in `date_id` order.
+    * The fine frame below comes out of a shuffle and is coalesced for the
+    * same reason. */
   private def withFrame[A](s: SparkSession, d: String)(f: DataFrame => A): A = {
     val frame = ModelingFrame.assembled(s, d).coalesce(1).cache()
     try f(frame) finally { frame.unpersist(); () }

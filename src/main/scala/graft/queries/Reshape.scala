@@ -38,7 +38,8 @@ object Reshape {
 
     /** pandas `melt(id_vars=date_id)` — the inverse reshape, wide daily
       * frame → long (date_id, variable, value). `unpivot` is a narrow
-      * expand over the aggregated frame: no shuffle beyond the pivot's. */
+      * expand over the day frame, which is local: no shuffle beyond the
+      * day frame's own aggregate. */
     "unpivot_melt" -> ((s, d) =>
       round6(
         ModelingFrame.daily(s, d)

@@ -58,21 +58,25 @@ object EventStream {
     * batch loader (`ts_ns` long + µs `ts`). The stream source needs a
     * declared schema, and `ts`'s at-rest type differs across harness
     * generations — the footer of the first matching file pins it
-    * (`Tables.read`, no job), then `Tables.normalizeEventTs` applies the
-    * same contract as the batch loader.
+    * (`Tables.footerSchema`, no job, and no batch read of the glob: that
+    * one makes Spark probe the glob for a sink metadata directory and log
+    * a stack trace), then `Tables.normalizeEventTs` applies the same
+    * contract as the batch loader.
     * @param maxFilesPerTrigger bound files per micro-batch (None = all
     *                           available files in one batch) */
   def readEvents(spark: SparkSession, dir: String,
                  maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val glob = s"$dir/events*.parquet"
-    // An empty watched directory is a NORMAL cold-start state for a file
-    // stream source: the eager probe throws AnalysisException ("unable to
+    // A first match that is not a plain file keeps Spark's inference. An
+    // empty watched directory is a NORMAL cold-start state for a file
+    // stream source: inference throws AnalysisException ("unable to
     // infer schema") when the glob matches nothing, so fall back to the
     // historical nanos-as-long schema and let the stream start empty.
     val atRestTs = scala.util.Try(
-      graft.Tables.read(spark, glob).schema("ts").dataType
-    ).getOrElse(org.apache.spark.sql.types.LongType)
+      graft.Tables.footerSchema(spark, glob)
+        .getOrElse(spark.read.parquet(glob).schema)("ts").dataType
+    ).getOrElse(LongType)
     val reader = spark.readStream.schema(eventsSchema(atRestTs))
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     graft.Tables.normalizeEventTs(reader

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, ShuffledHashJoinExec}
+import org.apache.spark.sql.functions.{col, countDistinct}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Structural audit of every registered query's physical plan at
@@ -320,6 +321,32 @@ class PlanAuditSpec extends SparkSpec {
       "graph_k_core" -> Seq(NodeFrame("dst", Set("dst", "nv"))),
       "graph_bfs_distance" -> Seq(NodeFrame("src", Set("node", "dist")))),
       "node frame")
+  }
+
+  test("graph_hits gates hubs on the customer count and authorities on the supplier count") {
+    // the directed trade graph has far fewer suppliers than customers: a
+    // limit between the two counts broadcasts the authority frame and
+    // shuffles the hub frame
+    val counts = Tables.lineitem(spark, dir)
+      .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
+      .agg(countDistinct("o_custkey"), countDistinct("l_suppkey")).head()
+    val (customers, suppliers) = (counts.getLong(0), counts.getLong(1))
+    assert(suppliers < customers)
+    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    sys.props("graft.graph.broadcastNodeLimit") = suppliers.toString
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
+      val (joins, _) = graphRun("graph_hits",
+        Seq(NodeFrame("src", Set("node", "h")), NodeFrame("dst", Set("node", "a"))))
+      // 4 rounds: 4 authority-frame joins, and 3 hub-frame joins (round
+      // 1 weighs every hub 1.0 and joins no hub frame)
+      assert(joins.groupBy(identity).view.mapValues(_.size).toMap ==
+        Map("BroadcastHashJoin" -> 4, "ShuffledHashJoin" -> 3),
+        s"$suppliers authorities broadcast, $customers hubs shuffle: $joins")
+    } finally {
+      sys.props.remove("graft.graph.broadcastNodeLimit")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
+    }
   }
 
   test("one-shot degree attaches ride the GraphLayout gate (VERDICT r12 #2)") {

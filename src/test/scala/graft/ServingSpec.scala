@@ -1,13 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.Using
 
-import org.apache.spark.BusDrain
 import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -49,19 +46,6 @@ class ServingSpec extends SparkSpec {
     Files.delete(staging)
   }
 
-  /** Spark jobs started while `f` runs, counted once the bus has drained. */
-  private def jobsDuring[A](f: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    BusDrain.drain(sc)
-    sc.addSparkListener(listener)
-    try { val a = f; BusDrain.drain(sc); (a, jobs.get) }
-    finally sc.removeSparkListener(listener)
-  }
-
   /** The latest feature row of `dir`'s day-grain frame, looked up on Spark. */
   private def latestRow(dir: String): (Int, Array[Double]) = {
     val r = ModelingFrame.assembled(spark, dir).orderBy(desc("date_id")).limit(1)
@@ -84,7 +68,8 @@ class ServingSpec extends SparkSpec {
     withCopy { dir =>
       val (first, missJobs) = jobsDuring(Reference.servingSignal(spark, dir).collect())
       assert(first.length == 1)
-      assert(missJobs > 0)
+      // the frame's one aggregate; the fit and the latest row are driver-side
+      assert(missJobs == 2, s"a re-fit ran $missJobs Spark jobs")
       val (repeat, hitJobs) = jobsDuring(Reference.servingSignal(spark, dir).collect())
       assert(hitJobs == 0, s"a memo hit ran $hitJobs Spark jobs")
       assert(repeat.toSeq == first.toSeq)
@@ -154,7 +139,7 @@ class ServingSpec extends SparkSpec {
 
   test("a one-day events file is an IllegalArgumentException naming the dir") {
     withCopy { dir =>
-      // one day leaves no next-day target, so na.drop empties the frame
+      // one day leaves no next-day target, so the frame has no row
       rewriteEvents(dir) { ev =>
         val firstDay = ev.agg(min(to_date(col("ts")))).head().getDate(0)
         ev.filter(to_date(col("ts")) === lit(firstDay))

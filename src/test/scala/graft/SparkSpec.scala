@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.BusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -41,4 +45,17 @@ abstract class SparkSpec extends AnyFunSuite {
   }
 
   def approx(a: Double, b: Double, tol: Double = 1e-9): Boolean = math.abs(a - b) <= tol
+
+  /** Spark jobs started while `f` runs, counted once the bus has drained. */
+  def jobsDuring[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    BusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try { val a = f; BusDrain.drain(sc); (a, jobs.get) }
+    finally sc.removeSparkListener(listener)
+  }
 }

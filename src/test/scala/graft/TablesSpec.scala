@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.Using
 
@@ -9,8 +8,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.BusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.streaming.EventStream
@@ -34,19 +31,6 @@ class TablesSpec extends SparkSpec {
   private def deleteTree(p: Path): Unit = {
     if (Files.isDirectory(p)) Using.resource(Files.list(p))(_.forEach(deleteTree))
     Files.delete(p)
-  }
-
-  /** Spark jobs started while `f` runs, counted once the bus has drained. */
-  private def jobsDuring[A](f: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    BusDrain.drain(sc)
-    sc.addSparkListener(listener)
-    try { val a = f; BusDrain.drain(sc); (a, jobs.get) }
-    finally sc.removeSparkListener(listener)
   }
 
   /** Writes the sf0.001 events to `file` with `ts` stored as parquet
