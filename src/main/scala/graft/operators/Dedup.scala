@@ -310,8 +310,10 @@ object Dedup {
     *
     * Distributed min-label propagation: every node starts labeled with
     * its own id; each round a node takes the min of its label and its
-    * neighbors' labels. Labels are monotonically non-increasing, so
-    * `sum(label)` is a cheap exact convergence test. Rounds needed =
+    * neighbors' labels. Labels are monotonically non-increasing, so the
+    * count of changed labels is an exact convergence test for any
+    * orderable id type (numeric ids, or the string component ids of
+    * Borůvka's merge step). Rounds needed =
     * graph diameter — near-dup components are shallow (stars/short
     * chains), so this converges in a handful of fully-distributed rounds
     * at any corpus size; `localCheckpoint` truncates the iterative
@@ -322,13 +324,8 @@ object Dedup {
     val adj = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .cache()
-    // sum over an EMPTY frame is null — coalesce so a clean corpus (zero
-    // near-dup pairs) yields an empty result instead of an NPE
-    def labelSum(df: DataFrame): Long =
-      df.agg(coalesce(sum("component"), lit(0L))).head().getLong(0)
     var labels = adj.select(col("src").as("id")).distinct()
       .withColumn("component", col("id")).localCheckpoint()
-    var prevSum = labelSum(labels)
     var it = 0
     var converged = labels.isEmpty // empty input: already at fixpoint
     while (!converged && it < maxIter) {
@@ -337,7 +334,7 @@ object Dedup {
         .groupBy("src").agg(min("ncomp").as("nmin"))
       val half = labels
         .join(nbrMin.select(col("src").as("id"), col("nmin")), Seq("id"), "left")
-        .select(col("id"),
+        .select(col("id"), col("component").as("old"),
           least(col("component"), coalesce(col("nmin"), col("component"))).as("component"))
         .localCheckpoint()
       // Pointer-jump from round 9 on (r16, gate raised r17): follow each
@@ -359,12 +356,13 @@ object Dedup {
       val next = if (it < 8) half else half.as("l")
         .join(half.select(col("id").as("cid"), col("component").as("cc")).as("r"),
           col("l.component") === col("cid"), "left")
-        .select(col("l.id").as("id"),
+        .select(col("l.id").as("id"), col("l.old").as("old"),
           least(col("l.component"), coalesce(col("cc"), col("l.component")))
             .as("component"))
         .localCheckpoint()
-      val s = labelSum(next)
-      converged = s == prevSum
+      // the round's old label rides the checkpointed frame, so finding a
+      // changed label scans materialized rows instead of another join
+      converged = next.filter(col("component") =!= col("old")).isEmpty
       // the superseded round's checkpoints are dead once `next` is
       // materialized (localCheckpoint is eager) — release their blocks
       // NOW instead of letting one frame per round pile up in the block
@@ -372,8 +370,7 @@ object Dedup {
       // .unpersist is a no-op for checkpoints, see graft.plans.Blocks)
       if (!(next eq half)) graft.plans.Blocks.free(half)
       graft.plans.Blocks.free(labels)
-      prevSum = s
-      labels = next
+      labels = next.select("id", "component")
       it += 1
     }
     adj.unpersist()

@@ -2062,13 +2062,11 @@ object Docs {
       val xy = meanDist(0, 1, strict = false)
       val xx = meanDist(0, 0, strict = true)
       val yy = meanDist(1, 1, strict = true)
-      def r6(x: Double): Double =
-        BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
       val eStat = 2.0 * xy.getDouble(0) - xx.getDouble(0) - yy.getDouble(0)
       import s.implicits._
       Seq((xy.getLong(1), xx.getLong(1), yy.getLong(1),
-          r6(xy.getDouble(0)), r6(xx.getDouble(0)), r6(yy.getDouble(0)),
-          r6(eStat)))
+          Grid.r6z(xy.getDouble(0)), Grid.r6z(xx.getDouble(0)), Grid.r6z(yy.getDouble(0)),
+          Grid.r6z(eStat)))
         .toDF("n_xy_pairs", "n_xx_pairs", "n_yy_pairs",
           "mean_dist_xy", "mean_dist_xx", "mean_dist_yy", "energy_distance")
     }),
@@ -2095,10 +2093,6 @@ object Docs {
         .groupByKey(_._1)
         .flatMapGroups { (qid, it) =>
           val cs = it.toArray.sortBy(_._2)
-          def r9(x: Double): Double =
-            BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
-          def r6(x: Double): Double =
-            BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
           // the exact sequential fold list_dot_product/DotProductExpr use
           def cos(a: Seq[Double], b: Seq[Double]): Double = {
             var dv = 0.0; var na = 0.0; var nb = 0.0; var j = 0
@@ -2110,7 +2104,7 @@ object Docs {
           val n = cs.length
           val relv = cs.map(_._3)
           val pcos = Array.tabulate(n, n)((i, j) =>
-            if (i == j) 0.0 else r9(cos(cs(i)._4, cs(j)._4)))
+            if (i == j) 0.0 else Grid.r9(cos(cs(i)._4, cs(j)._4)))
           val selected = scala.collection.mutable.ArrayBuffer.empty[Int]
           val out = scala.collection.mutable.ArrayBuffer
             .empty[(Long, Int, Long, Double, Double, Double)]
@@ -2119,12 +2113,12 @@ object Docs {
               val ms = if (selected.isEmpty) 0.0
                 else selected.map(jv => pcos(i)(jv)).max
               val sc = if (selected.isEmpty) relv(i)
-                else r9(0.7 * relv(i) - 0.3 * ms)
+                else Grid.r9(0.7 * relv(i) - 0.3 * ms)
               (i, ms, sc)
             }
             val best = scored.sortBy { case (i, _, sc) => (-sc, cs(i)._2) }.head
-            out += ((qid, step, cs(best._1)._2, r6(relv(best._1)),
-              r6(best._2), r6(best._3)))
+            out += ((qid, step, cs(best._1)._2, Grid.r6z(relv(best._1)),
+              Grid.r6z(best._2), Grid.r6z(best._3)))
             selected += best._1
           }
           out.iterator

@@ -529,10 +529,6 @@ object Feat {
        |ORDER BY round(d2, 6) DESC, user_id LIMIT 10""".stripMargin
   }
 
-  /** HALF_UP 1e-9 rounding — matches SQL `round(x, 9)` in both engines
-    * (math.rint would be half-even). */
-  private def r9(x: Double): Double =
-    BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Shared DuckDB twin for BOTH the batch RANGE-window burst query and
     * its streaming CEP twin — streaming ≡ batch is the contract. */
@@ -1169,10 +1165,10 @@ object Feat {
             val gain =
               if (i == 0) { level = y; p = 1.0; 1.0 }
               else {
-                val pp = r9(p + 0.01)
-                val kg = r9(pp / (pp + 1.0))
-                level = r9(level + kg * (y - level))
-                p = r9((1.0 - kg) * pp)
+                val pp = Grid.r9(p + 0.01)
+                val kg = Grid.r9(pp / (pp + 1.0))
+                level = Grid.r9(level + kg * (y - level))
+                p = Grid.r9((1.0 - kg) * pp)
                 kg
               }
             (g, bucket, y, level, gain)

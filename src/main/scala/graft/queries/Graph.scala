@@ -180,7 +180,7 @@ object Graph {
       * GraphLayout gate. Deterministic global top-20 by (common desc,
       * pair). */
     "graph_common_neighbors" -> ((s, d) => {
-      val edges = coPurchase(s, d)
+      val edges = coPurchase(s, d).localCheckpoint()
       val und = bothWays(edges, "pa", "pb")
       val (deg, nNodes) = census(und, "src", "deg")
       val cand = und.as("e1").join(und.hint("shuffle_hash").as("e2"),
@@ -279,7 +279,7 @@ object Graph {
       * exact operands. The sign is the one-number summary the degree
       * histogram (`graph_degree_distribution`) cannot give. */
     "graph_assortativity" -> ((s, d) => {
-      val und = bothWays(coPurchase(s, d), "pa", "pb")
+      val und = bothWays(coPurchase(s, d).localCheckpoint(), "pa", "pb")
       val (deg, nNodes) = census(und, "src", "deg")
       und
         .join(GraphLayout.nodeSide(
@@ -346,7 +346,7 @@ object Graph {
       * COVERAGE doctrine); ordering on identical doubles with integer
       * tiebreak. Top-50 by lcc. */
     "graph_local_clustering" -> ((s, d) => {
-      val edges = coPurchase(s, d)
+      val edges = coPurchase(s, d).localCheckpoint()
       val (deg, nNodes) = census(endpoints(edges, "pa", "pb"), "node", "deg")
       val oriented = orient(edges, deg, nNodes)
       val perNode = wedges(oriented)
@@ -856,18 +856,15 @@ object Graph {
     * path-compressed min-label union-find in one job (replacing the
     * distributed fixpoint's ~4 jobs × O(log diameter) rounds); past the
     * gate (the 10⁸-node first rounds of a 100 TB graph) the distributed
-    * pointer-jumped [[ccStrings]] runs instead. Both produce the same
+    * `Dedup.connectedComponents` runs instead. Both produce the same
     * fixpoint — each id maps to the lexicographic MIN label of its merged
     * group (ASCII labels, so Scala's String order matches Spark's
     * UTF8String order) — so the result is bit-identical either way.
     * Returns the map and its row count (the downstream relabel join rides
     * the same gate). */
   private def boruvkaMerge(s: SparkSession, pairs: DataFrame): (DataFrame, Long) = {
-    val n = pairs.count()
-    if (n > mstMergeDriverLimit) {
-      val inner = ccStrings(pairs)
-      val cc = inner.localCheckpoint()
-      graft.plans.Blocks.free(inner) // the outer copy supersedes it
+    if (pairs.count() > mstMergeDriverLimit) {
+      val cc = graft.operators.Dedup.connectedComponents(pairs, "ca", "cb")
       (cc, cc.count())
     } else {
       val parent = scala.collection.mutable.HashMap.empty[String, String]
@@ -888,59 +885,6 @@ object Graph {
       val out = ids.toSeq.map(id => (id, find(id)))
       (out.toDF("id", "component"), out.size.toLong)
     }
-  }
-
-  /** Min-label connected components over STRING node ids — the
-    * `Dedup.connectedComponents` loop with a type-agnostic convergence
-    * check (count of changed labels instead of the numeric label sum;
-    * one extra keyed join per round, same O(diameter) round count).
-    * Used by the Borůvka merge step, whose component ids are node
-    * strings — a numeric surrogate would either risk hash collisions
-    * (silently merging components) or need a global row_number. */
-  private def ccStrings(pairs: DataFrame): DataFrame = {
-    val adj = pairs.toDF("x", "y")
-      .unionAll(pairs.toDF("y0", "x0").select(col("x0").as("x"), col("y0").as("y")))
-      .cache()
-    var labels = adj.select(col("x").as("id")).distinct()
-      .withColumn("component", col("id")).localCheckpoint()
-    var changed = if (labels.isEmpty) 0L else 1L
-    var it = 0
-    while (changed > 0 && it < 50) {
-      // min-label propagation PLUS pointer jumping: each round a node
-      // takes min(own, min neighbor label, label-of-its-label). The
-      // shortcut term doubles the distance the component minimum has
-      // travelled per round, so chains — Borůvka's worst merge shape —
-      // close in O(log diameter) rounds instead of O(diameter)
-      // (Shiloach–Vishkin 1982 shortcutting; same fixpoint, the
-      // component-min label, so results are bit-identical to the plain
-      // propagation this replaces). Labels only ever decrease and only
-      // to ids inside the component, so the fixpoint check is exact.
-      val nbrMin = adj
-        .join(labels.select(col("id").as("y"), col("component").as("nc")), "y")
-        .groupBy("x").agg(min("nc").as("nmin"))
-      val hop = labels.select(col("component").as("hid"), col("id"))
-        .join(labels.select(col("id").as("hid"), col("component").as("hc")), "hid")
-        .select(col("id"), col("hc"))
-      val next = labels
-        .join(nbrMin.select(col("x").as("id"), col("nmin")), Seq("id"), "left")
-        .join(hop, Seq("id"), "left")
-        .select(col("id"), col("component").as("old"),
-          least(col("component"),
-            least(coalesce(col("nmin"), col("component")),
-              coalesce(col("hc"), col("component")))).as("component"))
-        .localCheckpoint()
-      // the old label rides the checkpointed frame — the change count is
-      // a scan of materialized rows, not another keyed join
-      changed = next.filter(col("component") =!= col("old")).count()
-      // the superseded round's checkpoint is dead once `next` is
-      // materialized — release its blocks (guide §5)
-      graft.plans.Blocks.free(labels)
-      labels = next.select("id", "component")
-      it += 1
-    }
-    require(changed == 0, "ccStrings did not converge in 50 rounds")
-    adj.unpersist()
-    labels
   }
 
   // ---- DuckDB oracle twins -------------------------------------------------

@@ -230,12 +230,10 @@ object Ml {
         sao = sao.add(IrlsCore.d9(math.abs(y - IrlsCore.pred(bOls, x))))
       }
       val n = rows.length.toDouble
-      def r6(v: Double) =
-        BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
       val names = "__intercept" +: feats
       val out = names.zipWithIndex.map { case (nm, i) =>
-        (nm, r6(b(i)), r6(bOls(i)))
-      } :+ (("__mae", r6(sah.doubleValue / n), r6(sao.doubleValue / n)))
+        (nm, Grid.r6z(b(i)), Grid.r6z(bOls(i)))
+      } :+ (("__mae", Grid.r6z(sah.doubleValue / n), Grid.r6z(sao.doubleValue / n)))
       out.toDF("feature", "huber", "ols").orderBy("feature")
     }),
 
@@ -1047,10 +1045,8 @@ object Ml {
       val syy = r.getAs[java.math.BigDecimal]("syy").doubleValue
       val sae = r.getAs[java.math.BigDecimal]("sae").doubleValue
       val sse = r.getAs[java.math.BigDecimal]("sse").doubleValue
-      def r6(v: Double) =
-        BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      Seq((r.getAs[Long]("n"), nBlocks, r6(sae / n), r6(math.sqrt(sse / n)),
-          r6(1.0 - sse / (syy - sy * sy / n)) + 0.0))
+      Seq((r.getAs[Long]("n"), nBlocks, Grid.r6(sae / n), Grid.r6(math.sqrt(sse / n)),
+          Grid.r6(1.0 - sse / (syy - sy * sy / n)) + 0.0))
         .toDF("n", "n_blocks", "mae", "rmse", "r2")
     }),
 
@@ -1399,8 +1395,6 @@ object Ml {
       val nTot = perDow.values.map(_._1).sum
       val sTot = perDow.values.map(_._2).sum
       def r9bd(v: Double) = BigDecimal(v).setScale(9, BigDecimal.RoundingMode.HALF_UP)
-      def r6(v: Double) =
-        BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
       // deviance & log-lik terms over the contingency: each term is a
       // function of identical doubles in both engines, gridded to 1e-9
       // and summed exactly (order-free) — ln-factorial is the ascending
@@ -1424,14 +1418,14 @@ object Ml {
       val coefRows = (1 to 7).map { k =>
         val cf = if (k == 1) math.log(mu(1)) else math.log(mu(k)) - math.log(mu(1))
         val term = if (k == 1) "intercept" else s"dow_$k"
-        (term, r6(cf), Some(r6(math.exp(cf))))
+        (term, Grid.r6z(cf), Some(Grid.r6z(math.exp(cf))))
       }
       val sumRows = Seq(
-        ("deviance", r6(dev), None),
-        ("aic", r6(aic), None),
+        ("deviance", Grid.r6z(dev), None),
+        ("aic", Grid.r6z(aic), None),
         ("n_obs", nTot.toDouble, None),
-        ("mean_observed", r6(sTot.toDouble / nTot), None),
-        ("mean_fitted", r6(meanFit), None))
+        ("mean_observed", Grid.r6z(sTot.toDouble / nTot), None),
+        ("mean_fitted", Grid.r6z(meanFit), None))
       (coefRows ++ sumRows).toDF("term", "estimate", "rate_ratio")
         .orderBy("term")
     }),

@@ -399,8 +399,6 @@ object R9 {
     "ts_ewma_irregular" -> ((s, d) => {
       import s.implicits._
       val tauUs = 21600000000.0
-      def r9d(x: Double): Double =
-        BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
       Tables.events(s, d)
         .select(col("event_type"), col("event_id"),
           expr("unix_micros(ts)").as("t"), round(col("value"), 6).as("v"))
@@ -414,8 +412,8 @@ object R9 {
             val alpha =
               if (i == 0) { ewma = v; tPrev = t; 1.0 }
               else {
-                val a = r9d(1.0 - math.exp(-(t - tPrev).toDouble / tauUs))
-                ewma = r9d(ewma + a * (v - ewma))
+                val a = Grid.r9(1.0 - math.exp(-(t - tPrev).toDouble / tauUs))
+                ewma = Grid.r9(ewma + a * (v - ewma))
                 tPrev = t
                 a
               }
@@ -480,10 +478,6 @@ object R9 {
       * shape, as `fin_var_backtest_kupiec`). */
     "fin_pairs_backtest" -> ((s, d) => {
       import s.implicits._
-      def r9d(x: Double): Double =
-        BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
-      def r6d(x: Double): Double =
-        BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
       val bars = Tables.events(s, d)
         .withColumn("bucket", expr("ts_ns div 1800000000000L"))
         .groupBy("event_type", "bucket")
@@ -542,7 +536,7 @@ object R9 {
           var prevSpread = 0.0
           pts.zipWithIndex.foreach { case ((_, _, _, sp, z, _, _), i) =>
             if (i > 0) {
-              val p = BigDecimal(r9d(pos * (sp - prevSpread)))
+              val p = BigDecimal(Grid.r9(pos * (sp - prevSpread)))
               pnl += p
               if (p > 0) win += 1 else if (p < 0) lose += 1
             }
@@ -556,8 +550,8 @@ object R9 {
             prevSpread = sp
           }
           val hit = if (win + lose == 0) 0.0
-            else r6d(win.toDouble / (win + lose))
-          (ga, gb, pts.length.toLong, trades, r6d(pnl.toDouble), hit)
+            else Grid.r6z(win.toDouble / (win + lose))
+          (ga, gb, pts.length.toLong, trades, Grid.r6z(pnl.toDouble), hit)
         }
         .toDF("series_a", "series_b", "n_bars", "n_trades", "total_pnl",
           "hit_rate")
@@ -749,8 +743,6 @@ object R9 {
     "ts_lttb_downsample" -> ((s, d) => {
       import s.implicits._
       val target = 100
-      def r9d(x: Double): Double =
-        BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
       Tables.events(s, d)
         .withColumn("bucket", expr("ts_ns div 1800000000000L"))
         .groupBy("event_type", "bucket")
@@ -784,7 +776,7 @@ object R9 {
             var bestRn = -1
             var bestArea = -1.0
             for (r <- lo(b) to hi(b)) {
-              val a = r9d(math.abs((xp - ax) * (pts(r - 1) - yp) -
+              val a = Grid.r9(math.abs((xp - ax) * (pts(r - 1) - yp) -
                 (xp - r.toDouble) * (ay - yp)))
               if (a > bestArea || (a == bestArea && (bestRn < 0 || r < bestRn))) {
                 bestArea = a; bestRn = r
@@ -1002,8 +994,6 @@ object R9 {
       // driver greedy — the exact arithmetic of the oracle's CTE chain:
       // ar = exact-DECIMAL sum of round(mi, 9) over selected, / (k-1);
       // score = round(mi - ar, 9); argmax with the feature-name tiebreak
-      def r9d(x: Double, sc: Int = 9): Double =
-        BigDecimal(x).setScale(sc, BigDecimal.RoundingMode.HALF_UP).toDouble
       val selected = scala.collection.mutable.ArrayBuffer.empty[
         (Int, String, Double, Double, Double)]
       val remaining = scala.collection.mutable.SortedSet(mrmrFeats: _*)
@@ -1011,18 +1001,17 @@ object R9 {
         val scored = remaining.toSeq.map { f =>
           val ar =
             if (step == 1) 0.0
-            else selected.map(sp => BigDecimal(r9d(red((f, sp._2)))))
+            else selected.map(sp => BigDecimal(Grid.r9(red((f, sp._2)))))
               .sum.toDouble / (step - 1).toDouble
-          val score = if (step == 1) rel(f) else r9d(rel(f) - ar)
+          val score = if (step == 1) rel(f) else Grid.r9(rel(f) - ar)
           (f, rel(f), ar, score)
         }
         val best = scored.sortBy { case (f, _, _, sc) => (-sc, f) }.head
         selected += ((step, best._1, best._2, best._3, best._4))
         remaining -= best._1
       }
-      def r6(x: Double): Double = r9d(x, 6) + 0.0
       selected.toSeq.map { case (st, f, relv, ar, sc) =>
-        (st, f, r6(relv), r6(ar), r6(sc)) }
+        (st, f, Grid.r6z(relv), Grid.r6z(ar), Grid.r6z(sc)) }
         .toDF("step", "feature", "relevance", "redundancy", "score")
     }),
 

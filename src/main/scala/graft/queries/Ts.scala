@@ -887,14 +887,10 @@ object Ts {
         if (row == 0) if (i == j) 1.0 else 0.0
         else trans.getOrElse((states(i), states(j)), 0L).toDouble / row
       }
-      def r9(v: Double): Double =
-        BigDecimal(v).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
-      var pi = Array.fill(k)(r9(1.0 / k))
+      var pi = Array.fill(k)(Grid.r9(1.0 / k))
       for (_ <- 1 to 100)
-        pi = Array.tabulate(k)(j => r9((0 until k).map(i => pi(i) * p(i)(j)).sum))
-      def r6(v: Double): Double =
-        BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
-      states.indices.map(i => (states(i), r6(pi(i))))
+        pi = Array.tabulate(k)(j => Grid.r9((0 until k).map(i => pi(i) * p(i)(j)).sum))
+      states.indices.map(i => (states(i), Grid.r6z(pi(i))))
         .toDF("state", "stationary_p").orderBy("state")
     }),
 

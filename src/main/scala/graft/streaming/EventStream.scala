@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.queries.Dialect
+import graft.queries.{Dialect, Grid}
 
 /** Structured Streaming over the `events` table (SURVEY.md §2.10: the
   * reference has no streams; this implements its future-work "monitoring
@@ -45,6 +46,29 @@ object EventStream {
     }
   }
 
+  /** The one run-to-completion step behind every `run*Once` entry: start
+    * `writer` under `Trigger.AvailableNow` (every file available at start,
+    * in as many micro-batches as the source's limits ask for, then stop),
+    * block until it finishes, and return the finished query. Production
+    * binds the same writer to a long-running trigger instead. */
+  private def runAvailableNow(spark: SparkSession,
+                              writer: DataStreamWriter[Row]): StreamingQuery =
+    withDisposableCheckpointIo(spark) {
+      val q = writer.trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      q
+    }
+
+  /** Streaming parquet scan of `glob` under a declared schema (the file
+    * stream source needs one). `maxFilesPerTrigger` bounds the files per
+    * micro-batch; None reads every available file in one batch. */
+  private def fileStream(spark: SparkSession, schema: StructType, glob: String,
+                         maxFilesPerTrigger: Option[Int]): DataFrame = {
+    val reader = spark.readStream.schema(schema)
+    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
+    reader.parquet(glob)
+  }
+
   /** `events.parquet` physical schema with `ts` at its historical
     * nanos-as-long encoding (see graft.Tables — the harness has shipped
     * both TIMESTAMP(NANOS) and TIMESTAMP(MICROS) generations). */
@@ -77,12 +101,10 @@ object EventStream {
       graft.Tables.footerSchema(spark, glob)
         .getOrElse(spark.read.parquet(glob).schema)("ts").dataType
     ).getOrElse(LongType)
-    val reader = spark.readStream.schema(eventsSchema(atRestTs))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    graft.Tables.normalizeEventTs(reader
-      // glob, not a bare file path: the file stream source requires its
-      // basePath to be a directory (here: the SF dir)
-      .parquet(glob))
+    // glob, not a bare file path: the file stream source requires its
+    // basePath to be a directory (here: the SF dir)
+    graft.Tables.normalizeEventTs(
+      fileStream(spark, eventsSchema(atRestTs), glob, maxFilesPerTrigger))
   }
 
   /** Tumbling-window aggregation with watermark — the streaming twin of
@@ -98,27 +120,48 @@ object EventStream {
       .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
         col("event_type"), col("n"), col("sum_value"))
 
-  /** Shared run-to-completion harness: AvailableNow into a named memory
-    * sink, block, return the materialized table. Production binds
-    * `.writeStream` to a real sink instead; every `run*Once` entry below
-    * differs only in source plan and output mode. */
-  private def runToMemory(df: DataFrame, queryName: String,
-                          mode: OutputMode): DataFrame = {
-    withDisposableCheckpointIo(df.sparkSession) {
-      val q = df.writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode(mode)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+  /** Run `df` to completion into a named memory sink and return the
+    * finished query with the materialized table. Every memory-sink
+    * `run*Once` entry differs only in source plan and output mode. */
+  private def runToMemoryQuery(df: DataFrame, queryName: String,
+                               mode: OutputMode): (StreamingQuery, DataFrame) = {
+    val q = runAvailableNow(df.sparkSession,
+      df.writeStream.format("memory").queryName(queryName).outputMode(mode))
     val out = df.sparkSession.table(queryName) // analyzed eagerly: the plan
     // binds to the sink's rows, so the catalog entry can go — otherwise
     // every invocation pins a full materialized result on the driver for
     // the session's lifetime (verify/bench run each query repeatedly)
     df.sparkSession.catalog.dropTempView(queryName)
-    out
+    (q, out)
+  }
+
+  private def runToMemory(df: DataFrame, queryName: String,
+                          mode: OutputMode): DataFrame =
+    runToMemoryQuery(df, queryName, mode)._2
+
+  /** The batch-id sink: run `stream` to completion through `foreachBatch`,
+    * where `emit` gets each micro-batch, its id and the write for that
+    * batch's rows, then read back every batch's rows under `out`.
+    * Exactly-once per micro-batch: each batch owns the batch-id-named
+    * subdirectory `out/bid=<id>`, written with OVERWRITE, so a retried or
+    * replayed micro-batch replaces its own partial output instead of
+    * appending duplicate rows into the hash-checked final read. An entry
+    * that registers a per-batch temp view calls the write inside the
+    * view's scope. */
+  private def runBatchIdSink(stream: DataFrame, out: String, what: String,
+                             dir: String)(
+      emit: (DataFrame, Long, DataFrame => Unit) => Unit): DataFrame = {
+    val spark = stream.sparkSession
+    val wroteAny = new java.util.concurrent.atomic.AtomicBoolean(false)
+    runAvailableNow(spark, stream.writeStream.foreachBatch {
+      (batch: Dataset[Row], bid: Long) =>
+        emit(batch, bid, _.write.mode("overwrite").parquet(s"$out/bid=$bid"))
+        wroteAny.set(true)
+    })
+    // a source glob matching zero files yields zero micro-batches
+    require(wroteAny.get(),
+      s"$what produced no micro-batches — no input matched under $dir")
+    spark.read.parquet(out)
   }
 
   /** Harness/test entry: the REAL streaming windowed aggregation run to
@@ -151,27 +194,17 @@ object EventStream {
     * the materialized output. */
   def runObservedAuditOnce(spark: SparkSession, dir: String,
                            queryName: String): DataFrame = {
-    val df = windowedAggObserved(readEvents(spark, dir))
-    val q = withDisposableCheckpointIo(spark) {
-      val q0 = df.writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode(OutputMode.Complete())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q0.awaitTermination()
-      q0
-    }
+    val (q, table) = runToMemoryQuery(windowedAggObserved(readEvents(spark, dir)),
+      queryName, OutputMode.Complete())
     val (nIn, massIn) = q.recentProgress.toSeq
       .flatMap(p => Option(p.observedMetrics.get("graft_input")))
       .map(r => (r.getAs[Long]("n_in"),
         Option(r.getAs[java.math.BigDecimal]("mass_in"))
           .map(_.doubleValue()).getOrElse(0.0)))
       .foldLeft((0L, 0.0)) { case ((a, b), (c, e)) => (a + c, b + e) }
-    val out = spark.table(queryName)
+    val out = table
       .agg(count(lit(1)).as("n_groups"), sum(col("n")).as("n_out"),
         sum(col("sum_value")).as("mass_out")).head()
-    spark.catalog.dropTempView(queryName)
     import spark.implicits._
     def r2(v: Double) = math.rint(v * 100) / 100
     Seq((nIn, out.getAs[Long]("n_out"), out.getAs[Long]("n_groups"),
@@ -288,7 +321,14 @@ object EventStream {
     * derive from ONE source stream (a self-join); at 100 TB each side
     * binds to its own Kafka topic and nothing else changes. */
   def attributionJoin(events: DataFrame, horizon: String = "6 hours",
-                      watermark: String = "1 day"): DataFrame = {
+                      watermark: String = "1 day"): DataFrame =
+    clickViewJoin(events, horizon, watermark, "inner")
+
+  /** The click/view interval join both attribution entries share:
+    * watermarked click and view sides of one event stream, joined on the
+    * same user with view_ts ∈ [click_ts − horizon, click_ts]. */
+  private def clickViewJoin(events: DataFrame, horizon: String,
+                            watermark: String, joinType: String): DataFrame = {
     val clicks = events.filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id").as("click_user"),
         col("ts").as("click_ts"))
@@ -300,7 +340,8 @@ object EventStream {
     clicks.join(views,
       col("click_user") === col("view_user") &&
         col("view_ts") >= col("click_ts") - expr(s"INTERVAL $horizon") &&
-        col("view_ts") <= col("click_ts"))
+        col("view_ts") <= col("click_ts"),
+      joinType)
       .select(col("click_user").as("user_id"), col("click_id"), col("view_id"))
   }
 
@@ -346,22 +387,8 @@ object EventStream {
     * no-data-batch flush that publishes the last advance are pinned in
     * StreamingSpec via MemoryStream. */
   def leftOuterAttribution(events: DataFrame, horizon: String = "6 hours",
-                           watermark: String = "1 day"): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("click_user"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", watermark)
-    val views = events.filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("view_user"),
-        col("ts").as("view_ts"))
-      .withWatermark("view_ts", watermark)
-    clicks.join(views,
-      col("click_user") === col("view_user") &&
-        col("view_ts") >= col("click_ts") - expr(s"INTERVAL $horizon") &&
-        col("view_ts") <= col("click_ts"),
-      "left_outer")
-      .select(col("click_user").as("user_id"), col("click_id"), col("view_id"))
-  }
+                           watermark: String = "1 day"): DataFrame =
+    clickViewJoin(events, horizon, watermark, "left_outer")
 
   /** Harness entry: the left-outer attribution join run to completion;
     * per-user matched-pair and evicted-unmatched-click counts (the
@@ -501,24 +528,31 @@ object EventStream {
       }
   }
 
-  /** Read side of the sessionizer's emission contract: final sessions are
-    * append-only facts; non-final rows are whole-picture snapshots where
-    * only each user's highest (life_id, version) stamp is current (ids
-    * are not stable across snapshots, so per-row MAX-merge would leave
-    * ghost sessions). */
-  def mergeSessionEmissions(emitted: DataFrame): DataFrame = {
+  /** Read side of the sessionizer's emission contract ([[currentStamped]]
+    * per user: ids are not stable across snapshots, so per-row MAX-merge
+    * would leave ghost sessions). */
+  def mergeSessionEmissions(emitted: DataFrame): DataFrame =
+    currentStamped(emitted, "user_id", "session_id")
+      .select("user_id", "session_id", "n_events", "dur_us")
+
+  /** The stamped-snapshot read rule of every buffered-recompute stream
+    * (sessions, SCD2, bursts, EWMA): `finalized` rows are append-only
+    * facts; the non-final rows keep only each `key`'s highest
+    * (life_id, version) snapshot; sentinel rows (negative `sentinel`
+    * column) drop. */
+  private def currentStamped(emitted: DataFrame, key: String,
+                             sentinel: String): DataFrame = {
     val finals = emitted.filter(col("finalized"))
     val opens = emitted.filter(!col("finalized"))
-    val latest = opens.groupBy(col("user_id").as("u"))
+    val latest = opens.groupBy(col(key).as("__key"))
       .agg(max(struct(col("life_id"), col("version"))).as("cur"))
     finals.union(
         opens.join(latest,
-          col("user_id") === col("u") &&
+          col(key) === col("__key") &&
             col("life_id") === col("cur.life_id") &&
             col("version") === col("cur.version"))
           .select(finals.columns.map(col): _*))
-      .filter(col("session_id") >= 0L)
-      .select("user_id", "session_id", "n_events", "dur_us")
+      .filter(col(sentinel) >= 0L)
   }
 
   /** Harness/test entry: run the sessionizer over existing files to
@@ -634,23 +668,10 @@ object EventStream {
       }
   }
 
-  /** Read side of the SCD2 emission contract (the [[mergeSessionEmissions]]
-    * rule): finalized versions are append-only facts; snapshot rows keep
-    * only each user's highest (life_id, version) stamp; sentinels drop. */
-  def mergeScdEmissions(emitted: DataFrame): DataFrame = {
-    val finals = emitted.filter(col("finalized"))
-    val opens = emitted.filter(!col("finalized"))
-    val latest = opens.groupBy(col("user_id").as("u"))
-      .agg(max(struct(col("life_id"), col("version"))).as("cur"))
-    finals.union(
-        opens.join(latest,
-          col("user_id") === col("u") &&
-            col("life_id") === col("cur.life_id") &&
-            col("version") === col("cur.version"))
-          .select(finals.columns.map(col): _*))
-      .filter(col("valid_from_us") >= 0L)
+  /** Read side of the SCD2 emission contract ([[currentStamped]] per user). */
+  def mergeScdEmissions(emitted: DataFrame): DataFrame =
+    currentStamped(emitted, "user_id", "valid_from_us")
       .select("user_id", "value", "valid_from_us", "valid_to_us", "is_current")
-  }
 
   /** Harness entry: the REAL streaming SCD2 run to completion over the
     * purchase stream; same wide-watermark convention (and rationale) as
@@ -709,23 +730,17 @@ object EventStream {
     val events = readEvents(spark, dir, maxFilesPerTrigger)
       .select("user_id", "event_id", "ts_ns", "event_type", "value")
     val lastVersion = new java.util.concurrent.atomic.AtomicLong(-1L)
-    withDisposableCheckpointIo(spark) {
-      val q = events.writeStream
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          val s = batch.sparkSession
-          val winners = latestPerUser(batch.toDF())
-          val prev = lastVersion.get()
-          val merged =
-            if (prev < 0) winners
-            else latestPerUser(s.read.parquet(s"$scratch/v$prev").unionByName(winners))
-          merged.write.mode("overwrite").parquet(s"$scratch/v$batchId")
-          lastVersion.set(batchId)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    runAvailableNow(spark, events.writeStream.foreachBatch {
+      (batch: Dataset[Row], batchId: Long) =>
+        val s = batch.sparkSession
+        val winners = latestPerUser(batch.toDF())
+        val prev = lastVersion.get()
+        val merged =
+          if (prev < 0) winners
+          else latestPerUser(s.read.parquet(s"$scratch/v$prev").unionByName(winners))
+        merged.write.mode("overwrite").parquet(s"$scratch/v$batchId")
+        lastVersion.set(batchId)
+    })
     // A source glob matching zero files yields zero micro-batches; surface
     // that as an explicit contract failure instead of a parquet path error.
     require(lastVersion.get() >= 0,
@@ -744,11 +759,9 @@ object EventStream {
 
   /** Streaming scan of a documents directory. */
   def readDocuments(spark: SparkSession, dir: String,
-                    maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val reader = spark.readStream.schema(documentsSchema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(s"$dir/documents*.parquet")
-  }
+                    maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    fileStream(spark, documentsSchema, s"$dir/documents*.parquet",
+      maxFilesPerTrigger)
 
   /** STREAMING DEDUP ADMISSION (`stream_dedup_incremental`) — the
     * `dedup_incremental_batch` nightly shape run LIVE, in the
@@ -776,41 +789,36 @@ object EventStream {
         graft.Tables.documents(spark, dir).filter(!newFlag),
         "doc_id", "text", numHashes),
       "doc_id", numHashes, numBands).localCheckpoint()
-    val wroteAny = new java.util.concurrent.atomic.AtomicBoolean(false)
     try {
-      withDisposableCheckpointIo(spark) {
-        val q = readDocuments(spark, dir, maxFilesPerTrigger)
-          .filter(newFlag)
-          .writeStream
-          .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-            val newBanded = Dedup.bandExplode(
-              Dedup.lshSignatures(batch.toDF(), "doc_id", "text", numHashes),
-              "doc_id", numHashes, numBands)
-            // exactly-once per micro-batch (ADVICE r14 / VERDICT r14 #3):
-            // each batch owns a batch-id-named subdirectory written with
-            // OVERWRITE, so a retried/replayed micro-batch replaces its own
-            // partial output instead of appending duplicate admission rows
-            // into the hash-checked final read — the same pattern as the
-            // serving (:855) and index (:924) sinks
-            Dedup.admitAgainst(newBanded, corpusBanded,
-                batch.select(col("doc_id")), "doc_id", threshold)
-              .write.mode("overwrite").parquet(s"$scratch/admissions/bid=$bid")
-            wroteAny.set(true)
-            ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+      runBatchIdSink(readDocuments(spark, dir, maxFilesPerTrigger).filter(newFlag),
+          s"$scratch/admissions", "dedup admission", dir) { (batch, _, write) =>
+        val newBanded = Dedup.bandExplode(
+          Dedup.lshSignatures(batch, "doc_id", "text", numHashes),
+          "doc_id", numHashes, numBands)
+        write(Dedup.admitAgainst(newBanded, corpusBanded,
+          batch.select(col("doc_id")), "doc_id", threshold))
       }
-      require(wroteAny.get(),
-        s"dedup admission produced no micro-batches — no input matched under $dir")
-      spark.read.parquet(s"$scratch/admissions")
         .select("doc_id", "is_duplicate", "dup_of", "jaccard")
         .orderBy("doc_id")
     } finally graft.plans.Blocks.free(corpusBanded)
   }
 
   // ---- streaming ANN serving (IVF index as deploy-time state) ----------
+
+  /** A [[runBatchIdSink]] emitter that registers each micro-batch as the
+    * scope's temp view `q<bid>`, runs `sql(view)` and writes its rows
+    * before the view drops. The batch frame is bound to the stream's
+    * cloned session, so the view registers and the SQL runs there (the
+    * clone carries the scope's index views, copied at `.start()`). */
+  private def writeThroughView(sc: graft.plans.StepChain.Scope,
+                               sql: String => String)(
+      batch: DataFrame, bid: Long, write: DataFrame => Unit): Unit = {
+    val bs = batch.sparkSession
+    val qv = sc.ref(s"q$bid")
+    batch.createOrReplaceTempView(qv)
+    try write(bs.sql(sql(qv)))
+    finally { bs.catalog.dropTempView(qv); () }
+  }
 
   /** `embeddings.parquet` physical schema for the stream source. */
   def embeddingsSchema: StructType = StructType(Seq(
@@ -820,11 +828,9 @@ object EventStream {
 
   /** Streaming scan of an embeddings directory. */
   def readEmbeddings(spark: SparkSession, dir: String,
-                     maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val reader = spark.readStream.schema(embeddingsSchema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(s"$dir/embeddings*.parquet")
-  }
+                     maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    fileStream(spark, embeddingsSchema, s"$dir/embeddings*.parquet",
+      maxFilesPerTrigger)
 
   /** STREAMING ANN SERVING (`stream_ann_serving`, 24th live entry) — the
     * `similarity_ivf_probe` serving scan run the way a deployed vector
@@ -867,37 +873,12 @@ object EventStream {
         spark.sql(graft.queries.Docs.ivfSampSql(corpus, nlist)))
       val assign = sc.checkpoint("assign",
         spark.sql(graft.queries.Docs.ivfAssignSql(corpus, samp, Dialect.Spark)))
-      val wroteAny = new java.util.concurrent.atomic.AtomicBoolean(false)
-      withDisposableCheckpointIo(spark) {
-        val q = readEmbeddings(spark, dir, maxFilesPerTrigger)
-          .filter(col("vec_id") % 50 === 0)
-          .writeStream
-          .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-            // the batch frame is bound to the stream's cloned session — the
-            // query view must register there, and the serve SQL must run
-            // there (the clone carries the index views, copied at .start())
-            val bs = batch.sparkSession
-            val qv = sc.ref(s"q$bid")
-            batch.createOrReplaceTempView(qv)
-            // exactly-once per micro-batch (ADVICE r13): each batch owns a
-            // batch-id-named subdirectory written with OVERWRITE, so a
-            // retried/replayed batch replaces its own partial output
-            // instead of appending duplicate rows into the hash-checked
-            // final read
-            try bs.sql(graft.queries.Docs.ivfServeSql(qv, samp, assign,
-                corpus, Dialect.Spark, nprobe))
-              .write.mode("overwrite").parquet(s"$scratch/served/bid=$bid")
-            finally { bs.catalog.dropTempView(qv); () }
-            wroteAny.set(true)
-            ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+      runBatchIdSink(
+          readEmbeddings(spark, dir, maxFilesPerTrigger).filter(col("vec_id") % 50 === 0),
+          s"$scratch/served", "ANN serving", dir) {
+        writeThroughView(sc, qv => graft.queries.Docs.ivfServeSql(qv, samp, assign,
+          corpus, Dialect.Spark, nprobe))
       }
-      require(wroteAny.get(),
-        s"ANN serving produced no micro-batches — no input matched under $dir")
-      spark.read.parquet(s"$scratch/served")
         .select("query_id", "neighbor_id", "rank", "cos")
         .orderBy("query_id", "rank")
     }
@@ -931,28 +912,12 @@ object EventStream {
       val corpus = sc.checkpoint("corpus", graft.Tables.embeddings(spark, dir))
       val samp = sc.checkpoint("samp",
         spark.sql(graft.queries.Docs.pqSampSql(corpus)))
-      val wroteAny = new java.util.concurrent.atomic.AtomicBoolean(false)
-      withDisposableCheckpointIo(spark) {
-        val q = readEmbeddings(spark, dir, maxFilesPerTrigger)
-          .writeStream
-          .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-            val bs = batch.sparkSession
-            val qv = sc.ref(s"q$bid")
-            batch.createOrReplaceTempView(qv)
-            try bs.sql(graft.queries.Docs.pqIndexSql(qv, samp, Dialect.Spark))
-              .write.mode("overwrite").parquet(s"$scratch/index/bid=$bid")
-            finally { bs.catalog.dropTempView(qv); () }
-            wroteAny.set(true)
-            ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+      val landed = runBatchIdSink(readEmbeddings(spark, dir, maxFilesPerTrigger),
+          s"$scratch/index", "PQ index write", dir) {
+        writeThroughView(sc, qv => graft.queries.Docs.pqIndexSql(qv, samp, Dialect.Spark))
       }
-      require(wroteAny.get(),
-        s"PQ index write produced no micro-batches — no input under $dir")
-      val idx = sc.checkpoint("pidx", spark.read.parquet(s"$scratch/index")
-        .select("vec_id", "label", "sv", "c", "dist", "dj", "x"))
+      val idx = sc.checkpoint("pidx",
+        landed.select("vec_id", "label", "sv", "c", "dist", "dj", "x"))
       // collected now: the audit must not read the scope's views after
       // they drop
       sc.collect(spark.sql(s"WITH ${graft.queries.Docs.pqAuditSql(idx, Dialect.Spark)}"))
@@ -1048,28 +1013,16 @@ object EventStream {
       }
   }
 
-  /** Read side of the burst emission contract (the
-    * [[mergeSessionEmissions]] rule), collapsed to the per-user audit the
-    * batch twin emits: episode count, qualifying-row count, first/last
-    * qualifying time in ns. */
-  def mergeBurstEmissions(emitted: DataFrame): DataFrame = {
-    val finals = emitted.filter(col("finalized"))
-    val opens = emitted.filter(!col("finalized"))
-    val latest = opens.groupBy(col("user_id").as("u"))
-      .agg(max(struct(col("life_id"), col("version"))).as("cur"))
-    finals.union(
-        opens.join(latest,
-          col("user_id") === col("u") &&
-            col("life_id") === col("cur.life_id") &&
-            col("version") === col("cur.version"))
-          .select(finals.columns.map(col): _*))
-      .filter(col("start_us") >= 0L)
+  /** Read side of the burst emission contract ([[currentStamped]] per
+    * user), collapsed to the per-user audit the batch twin emits: episode
+    * count, qualifying-row count, first/last qualifying time in ns. */
+  def mergeBurstEmissions(emitted: DataFrame): DataFrame =
+    currentStamped(emitted, "user_id", "start_us")
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_bursts"),
         sum("n_rows").as("n_burst_rows"),
         (min("start_us") * 1000L).as("first_burst_ns"),
         (max("end_us") * 1000L).as("last_burst_ns"))
-  }
 
   // ---- streaming irregular-time EWMA ----------------------------------
 
@@ -1102,8 +1055,6 @@ object EventStream {
                  watermark: String = "1 hour"): Dataset[EwmaOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    def r9(x: Double): Double =
-      BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
     events
       .withWatermark("ts", watermark)
       .select(col("event_type"), col("event_id"), col("ts_us"), col("ts"),
@@ -1125,8 +1076,8 @@ object EventStream {
             val alpha =
               if (first) { ew = x; tPrev = t; first = false; 1.0 }
               else {
-                val a = r9(1.0 - math.exp(-(t - tPrev).toDouble / tauUs))
-                ew = r9(ew + a * (x - ew)); tPrev = t; a
+                val a = Grid.r9(1.0 - math.exp(-(t - tPrev).toDouble / tauUs))
+                ew = Grid.r9(ew + a * (x - ew)); tPrev = t; a
               }
             EwmaOut(g, t, id, x, alpha, ew, t < wmUs, prev.life_id, v)
           }
@@ -1153,23 +1104,11 @@ object EventStream {
       }
   }
 
-  /** Read side of the EWMA emission contract: finalized rows are
-    * append-only facts; snapshot rows keep only each series' highest
-    * (life_id, version) stamp; sentinels drop. */
-  def mergeEwmaEmissions(emitted: DataFrame): DataFrame = {
-    val finals = emitted.filter(col("finalized"))
-    val opens = emitted.filter(!col("finalized"))
-    val latest = opens.groupBy(col("event_type").as("g"))
-      .agg(max(struct(col("life_id"), col("version"))).as("cur"))
-    finals.union(
-        opens.join(latest,
-          col("event_type") === col("g") &&
-            col("life_id") === col("cur.life_id") &&
-            col("version") === col("cur.version"))
-          .select(finals.columns.map(col): _*))
-      .filter(col("t") >= 0L)
+  /** Read side of the EWMA emission contract ([[currentStamped]] per
+    * series). */
+  def mergeEwmaEmissions(emitted: DataFrame): DataFrame =
+    currentStamped(emitted, "event_type", "t")
       .select("event_type", "t", "event_id", "v", "alpha", "ewma")
-  }
 
   /** Harness entry: the REAL streaming irregular EWMA run to completion;
     * wide-watermark convention as [[runSessionizeOnce]]. Output matches
@@ -1250,10 +1189,19 @@ object EventStream {
   }
 
   /** Read side: keep the highest-version snapshot only. */
-  def mergeHwEmissions(emitted: DataFrame): DataFrame = {
-    val latest = emitted.agg(max(col("version")).as("v"))
-    emitted.join(broadcast(latest), col("version") === col("v"))
+  def mergeHwEmissions(emitted: DataFrame): DataFrame =
+    latestVersion(emitted)
       .select("n_obs", "level", "trend", "forecast_1", "forecast_1day", "rmse")
+
+  /** The read rule of the full-snapshot streams (Holt–Winters, SGD,
+    * Page–Hinkley): keep the highest-version snapshot per `keys` (the
+    * whole stream when none). */
+  private def latestVersion(emitted: DataFrame, keys: String*): DataFrame = {
+    val latest = emitted.groupBy(keys.map(k => col(k).as(s"__$k")): _*)
+      .agg(max(col("version")).as("__version"))
+    emitted.join(broadcast(latest),
+      keys.map(k => col(k) === col(s"__$k"))
+        .foldLeft(col("version") === col("__version"))(_ && _))
   }
 
   /** Harness entry: the REAL streaming Holt–Winters filter run to
@@ -1335,11 +1283,8 @@ object EventStream {
   }
 
   /** Read side: keep the highest-version snapshot only. */
-  def mergeSgdEmissions(emitted: DataFrame): DataFrame = {
-    val latest = emitted.agg(max(col("version")).as("vv"))
-    emitted.join(broadcast(latest), col("version") === col("vv"))
-      .select("n_steps", "w0", "w1", "rmse")
-  }
+  def mergeSgdEmissions(emitted: DataFrame): DataFrame =
+    latestVersion(emitted).select("n_steps", "w0", "w1", "rmse")
 
   /** Harness entry: the REAL streaming online-SGD learner run to
     * completion; wide-watermark convention as [[runHwOnce]]. The merged
@@ -1413,14 +1358,10 @@ object EventStream {
   }
 
   /** Read side: keep each series' highest-version snapshot. */
-  def mergePhEmissions(emitted: DataFrame): DataFrame = {
-    val latest = emitted.groupBy(col("series").as("g"))
-      .agg(max(col("version")).as("vv"))
-    emitted.join(broadcast(latest),
-        col("series") === col("g") && col("version") === col("vv"))
+  def mergePhEmissions(emitted: DataFrame): DataFrame =
+    latestVersion(emitted, "series")
       .select("series", "n_returns", "ph_max_up", "ph_max_down", "lambda",
         "alarm_up_bucket", "alarm_down_bucket", "alarmed")
-  }
 
   /** Harness entry: the REAL streaming Page–Hinkley monitor run to
     * completion; wide-watermark convention as [[runSgdOnce]]. The merged
@@ -1482,10 +1423,19 @@ object EventStream {
     cur.withColumn("bin", graft.queries.Ts.psiBin(cuts))
       .groupBy("bin").agg(count(lit(1)).as("n_cur"))
 
-  /** Update-mode emissions carry the monotone cumulative count per bin,
-    * so the final snapshot is max-per-bin across emissions. */
   def mergePsiEmissions(emitted: DataFrame): DataFrame =
-    emitted.groupBy("bin").agg(max("n_cur").as("n_cur"))
+    maxPerKey(emitted, Seq("bin"), "n_cur")
+
+  /** The read rule of the order-free Update-mode aggregates (counts, sums
+    * of non-negative increments, maxima): each emission carries the
+    * monotone running value per key, so the final snapshot is the max of
+    * every `cols` value across a key's emissions (`keys` empty: one
+    * global row). */
+  private def maxPerKey(emitted: DataFrame, keys: Seq[String],
+                        cols: String*): DataFrame = {
+    val maxima = cols.map(c => max(c).as(c))
+    emitted.groupBy(keys.map(col): _*).agg(maxima.head, maxima.tail: _*)
+  }
 
   def runPsiOnce(spark: SparkSession, dir: String,
                  queryName: String): DataFrame = {
@@ -1529,10 +1479,8 @@ object EventStream {
   def ksCounts(cur: DataFrame): DataFrame =
     cur.groupBy("v").agg(count(lit(1)).as("c2"))
 
-  /** Update-mode emissions carry the monotone cumulative count per
-    * value, so the final snapshot is max-per-value across emissions. */
   def mergeKsEmissions(emitted: DataFrame): DataFrame =
-    emitted.groupBy("v").agg(max("c2").as("c2"))
+    maxPerKey(emitted, Seq("v"), "c2")
 
   def runKsOnce(spark: SparkSession, dir: String,
                 queryName: String,
@@ -1575,9 +1523,8 @@ object EventStream {
     val perType = readEvents(spark, dir, maxFilesPerTrigger)
       .groupBy("event_type")
       .agg(max(col("ts_ns")).as("last_ts_ns"), count(lit(1)).as("n_events"))
-    val fin = runToMemory(perType, queryName, OutputMode.Update())
-      .groupBy("event_type")
-      .agg(max("last_ts_ns").as("last_ts_ns"), max("n_events").as("n_events"))
+    val fin = maxPerKey(runToMemory(perType, queryName, OutputMode.Update()),
+      Seq("event_type"), "last_ts_ns", "n_events")
     graft.queries.Feat.freshnessAssemble(fin)
   }
 
@@ -1598,10 +1545,8 @@ object EventStream {
   def volumeCounts(ev: DataFrame): DataFrame =
     ev.groupBy("day").agg(count(lit(1)).as("n"))
 
-  /** Update-mode emissions carry the monotone cumulative count per day,
-    * so the final snapshot is max-per-day across emissions. */
   def mergeVolumeEmissions(emitted: DataFrame): DataFrame =
-    emitted.groupBy("day").agg(max("n").as("n"))
+    maxPerKey(emitted, Seq("day"), "n")
 
   def runVolumeOnce(spark: SparkSession, dir: String,
                     queryName: String,
@@ -1717,11 +1662,9 @@ object EventStream {
         sum(when(col("c_custkey").isNull, 1L).otherwise(0L)).as("v_fk"),
         sum(when(expr("unix_micros(ts)").between(tsLo, tsHi), 0L)
           .otherwise(1L)).as("v_ts"))
-    val rulesFinal = runToMemory(ruleSums, queryName + "_rules",
-        OutputMode.Update())
-      .agg(max("n").as("n"), max("v_nullvalue").as("v_nullvalue"),
-        max("v_type").as("v_type"), max("v_value").as("v_value"),
-        max("v_fk").as("v_fk"), max("v_ts").as("v_ts"))
+    val rulesFinal = maxPerKey(
+      runToMemory(ruleSums, queryName + "_rules", OutputMode.Update()),
+      Nil, "n", "v_nullvalue", "v_type", "v_value", "v_fk", "v_ts")
     val nDistinct = runToMemory(
         ev.select(col("event_id")).dropDuplicates("event_id"),
         queryName + "_uniq", OutputMode.Append())

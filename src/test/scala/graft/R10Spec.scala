@@ -734,13 +734,13 @@ class R10Spec extends SparkSpec {
 
   test("boruvka mst: distributed merge path (past the gate) is bit-identical") {
     // the per-round merge map rides the GraphLayout gate: driver
-    // union-find under it, distributed pointer-jumped ccStrings past it.
+    // union-find under it, distributed Dedup.connectedComponents past it.
     // Forcing the limit to 1 exercises the distributed path end-to-end;
     // both modes must close each round's merge pairs to the same
     // min-label fixpoint, so the MST must match exactly.
     val gated = SparkEntry.queries("graph_mst_boruvka")(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-    // force BOTH scale paths: the distributed ccStrings merge (its own
+    // force BOTH scale paths: the distributed connected-components merge (its own
     // driver-collect budget) and the shuffle-hinted relabel joins
     System.setProperty("graft.graph.mstMergeDriverLimit", "1")
     System.setProperty("graft.graph.broadcastNodeLimit", "1")

@@ -430,6 +430,18 @@ class StreamingSpec extends SparkSpec {
     assert(new java.io.File(scratch).listFiles().count(_.getName.startsWith("v")) > 1)
   }
 
+  test("incremental CDC upsert over a dir with no events files fails naming the dir") {
+    // an empty watched dir starts a stream that runs no micro-batch, so
+    // no state version exists to read back
+    val src = java.nio.file.Files.createTempDirectory("cdc_empty_src").toString
+    val scratch = java.nio.file.Files.createTempDirectory("cdc_empty_state").toString
+    val e = intercept[IllegalArgumentException] {
+      EventStream.runIncrementalUpsertOnce(spark, src, scratch)
+    }
+    assert(e.getMessage.contains("produced no micro-batches") &&
+      e.getMessage.contains(src), e.getMessage)
+  }
+
   test("streaming burst detector equals the batch RANGE-window query (availableNow, sf0.001)") {
     val got = EventStream.runBurstOnce(spark, dir, "burst_eq")
       .orderBy("user_id").collect().map(_.toSeq)
