@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -88,6 +90,16 @@ object Verify {
     (hash, rows.length.toLong)
   }
 
+  /** Log level WARN, but ERROR for two warnings logged by design: the
+    * global windows over calendar-bounded frames, and "Disabling AQE" on
+    * every stateful stream whatever the session's AQE setting. */
+  def quietLogs(spark: SparkSession): Unit = {
+    spark.sparkContext.setLogLevel("WARN")
+    Seq("org.apache.spark.sql.execution.window.WindowExec",
+      "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution")
+      .foreach(Configurator.setLevel(_, Level.ERROR))
+  }
+
   /** The checkout a full run mirrors its hashes into: the
     * `graft.repo.root` system property, else `GRAFT_REPO_ROOT`, else the
     * working directory — the checkout the run was started from. */
@@ -108,7 +120,7 @@ object Verify {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    quietLogs(spark)
     graft.plans.GraftExtensions.register(spark)
     new java.io.File(outDir).mkdirs()
     // 4 concurrent dumps: a Spark session schedules jobs from multiple

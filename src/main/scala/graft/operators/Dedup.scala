@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
+import graft.plans.StepChain
 
 /** Document deduplication operators for the training-data pipeline.
   * No reference analog (the reference's only dedup is row-level
@@ -316,27 +317,28 @@ object Dedup {
     * Borůvka's merge step). Rounds needed =
     * graph diameter — near-dup components are shallow (stars/short
     * chains), so this converges in a handful of fully-distributed rounds
-    * at any corpus size; `localCheckpoint` truncates the iterative
-    * lineage each round. Output: (id, component = min id in component).
+    * at any corpus size; a checkpoint in the caller's scope `sc`
+    * truncates the iterative lineage each round, and the superseded
+    * round is released at once. The adjacency cache and the returned
+    * labels' checkpoint stay held by `sc`. Output: (id, component = min
+    * id in component).
     */
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 50): DataFrame = {
-    val adj = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .cache()
-    var labels = adj.select(col("src").as("id")).distinct()
-      .withColumn("component", col("id")).localCheckpoint()
+  def connectedComponents(sc: StepChain.Scope, pairs: DataFrame, aCol: String,
+                          bCol: String, maxIter: Int = 50): DataFrame = {
+    val adj = sc.cache(pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+      .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst"))))
+    var labels = sc.checkpoint(adj.select(col("src").as("id")).distinct()
+      .withColumn("component", col("id")))
     var it = 0
     var converged = labels.isEmpty // empty input: already at fixpoint
     while (!converged && it < maxIter) {
       val nbrMin = adj
         .join(labels.select(col("id").as("dst"), col("component").as("ncomp")), "dst")
         .groupBy("src").agg(min("ncomp").as("nmin"))
-      val half = labels
+      val half = sc.checkpoint(labels
         .join(nbrMin.select(col("src").as("id"), col("nmin")), Seq("id"), "left")
         .select(col("id"), col("component").as("old"),
-          least(col("component"), coalesce(col("nmin"), col("component"))).as("component"))
-        .localCheckpoint()
+          least(col("component"), coalesce(col("nmin"), col("component"))).as("component")))
       // Pointer-jump from round 9 on (r16, gate raised r17): follow each
       // label to ITS current label — label(v) ← min(label(v),
       // label(label(v))). Labels stay node ids and monotonically
@@ -353,27 +355,25 @@ object Dedup {
       // ~60+ plain rounds) reach round 9 still unconverged, and for
       // them 8 plain + O(log d) jumped rounds still beats O(d): the
       // worst case drops from ~60 rounds to ~8 + log2(60) ≈ 14.
-      val next = if (it < 8) half else half.as("l")
-        .join(half.select(col("id").as("cid"), col("component").as("cc")).as("r"),
-          col("l.component") === col("cid"), "left")
-        .select(col("l.id").as("id"), col("l.old").as("old"),
-          least(col("l.component"), coalesce(col("cc"), col("l.component")))
-            .as("component"))
-        .localCheckpoint()
+      val next = if (it < 8) half else {
+        val jumped = sc.checkpoint(half.as("l")
+          .join(half.select(col("id").as("cid"), col("component").as("cc")).as("r"),
+            col("l.component") === col("cid"), "left")
+          .select(col("l.id").as("id"), col("l.old").as("old"),
+            least(col("l.component"), coalesce(col("cc"), col("l.component")))
+              .as("component")))
+        sc.release(half)
+        jumped
+      }
       // the round's old label rides the checkpointed frame, so finding a
       // changed label scans materialized rows instead of another join
       converged = next.filter(col("component") =!= col("old")).isEmpty
-      // the superseded round's checkpoints are dead once `next` is
-      // materialized (localCheckpoint is eager) — release their blocks
-      // NOW instead of letting one frame per round pile up in the block
-      // manager for the query's whole lifetime (guide §5; Dataset
-      // .unpersist is a no-op for checkpoints, see graft.plans.Blocks)
-      if (!(next eq half)) graft.plans.Blocks.free(half)
-      graft.plans.Blocks.free(labels)
+      // the superseded round is dead once `next` is materialized: one
+      // round's labels stay resident, not one frame per round
+      sc.release(labels)
       labels = next.select("id", "component")
       it += 1
     }
-    adj.unpersist()
     // silent partial convergence would split true components into several
     // groups with no signal — refuse instead (diameter > maxIter rounds)
     require(converged,

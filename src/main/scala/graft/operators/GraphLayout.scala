@@ -24,7 +24,10 @@ import org.apache.spark.sql.functions.broadcast
   * queries flip to a shuffled-hash join: the edge cache is then
   * pre-partitioned by the JOIN key, so the shuffle exchanges only the
   * node-sized frame (pagerank/BFS) or the Pregel-minimal per-edge message
-  * frame (k-core's gather has no smaller exchange).
+  * frame (k-core's gather has no smaller exchange). The edge cache and
+  * the round checkpoints belong to the key's `StepChain.Scope`, which
+  * releases each superseded round and, on return, all but what the
+  * result reads.
   *
   * The limit is a system property so tests can force either mode on tiny
   * data: `PlanAuditSpec` pins both plans structurally, on the per-round

@@ -2,10 +2,10 @@ package graft.plans
 
 import java.util.concurrent.atomic.AtomicLong
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
 import graft.queries.Dialect
@@ -34,7 +34,12 @@ import graft.queries.Dialect
   * appends it to the step chain — nest its helpers as subqueries or make
   * them steps. Inputs that are not
   * steps (an events view, an embeddings table) are plain strings that
-  * the function assembling the chain captures. */
+  * the function assembling the chain captures.
+  *
+  * The run's [[StepChain.Scope]] also holds every iterative loop's
+  * caches and round checkpoints: a loop releases each superseded round
+  * at once and returns a lazy frame, and the scope keeps on exit only
+  * the checkpoints that frame reads. */
 final case class StepChain(steps: Seq[StepChain.Step], tail: StepChain.Sql) {
 
   /** The whole chain as one `WITH` text in `dl` — on DuckDB each step
@@ -62,39 +67,66 @@ object StepChain {
 
   final case class Step(name: String, sql: Sql)
 
-  /** The checkpoint-view lifecycle of one run: names under a unique tag,
-    * every view dropped and every checkpoint RDD unpersisted when the
-    * enclosing [[scoped]] block exits (`Dataset.unpersist` would be a
-    * no-op here — see [[Blocks]]). */
+  /** The one owner of the blocks a Spark run persists: the step views,
+    * and the edge caches and round checkpoints of the iterative loops. A
+    * loop hands each superseded round to [[release]]. When [[scoped]]
+    * exits, every view drops and every held block is released except the
+    * checkpoints the returned frame reads (none if the body threw). A
+    * checkpoint is released through its RDD: `Dataset.unpersist` only
+    * consults the CacheManager, which never saw a local checkpoint. */
   final class Scope private[StepChain] (val session: SparkSession, tag: String) {
-    private val held = ArrayBuffer.empty[(String, RDD[_])]
+    private val views = mutable.ArrayBuffer.empty[String]
+    private val checkpoints = mutable.Map.empty[Int, RDD[_]]
+    private val caches = mutable.ArrayBuffer.empty[DataFrame]
 
     def ref(name: String): String = s"${tag}_$name"
 
-    /** Checkpoints `df` into the view `ref(name)` and returns that name.
-      * The checkpoint RDD is registered for release BEFORE its job runs:
-      * an eager `localCheckpoint` persists the RDD first and only then
-      * runs the job, so a step that failed mid-job would leave its
-      * persisted RDD behind with no handle to free it. */
-    def checkpoint(name: String, df: DataFrame): String = {
-      val v = ref(name)
+    /** `df` locally checkpointed and held. The checkpoint RDD is
+      * registered for release BEFORE its job runs: an eager
+      * `localCheckpoint` persists the RDD first and only then runs the
+      * job, so a round that failed mid-job would leave its persisted RDD
+      * behind with no handle to free it. */
+    def checkpoint(df: DataFrame): DataFrame = {
       val cp = df.localCheckpoint(eager = false)
       val rdd = cp.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
-      held += v -> rdd
-      cp.createOrReplaceTempView(v)
+      checkpoints(rdd.id) = rdd
       rdd.count() // the one job an eager checkpoint runs
-      v
+      cp
     }
 
+    /** Checkpoints `df` into the view `ref(name)` and returns that name. */
+    def checkpoint(name: String, df: DataFrame): String = {
+      views += ref(name)
+      checkpoint(df).createOrReplaceTempView(ref(name))
+      ref(name)
+    }
+
+    /** `df.cache()`, held until the scope exits. */
+    def cache(df: DataFrame): DataFrame = { caches += df.cache(); df }
+
+    /** Releases now every held checkpoint among `df`'s `LogicalRDD`
+      * leaves: `df`'s round is superseded. */
+    def release(df: DataFrame): Unit =
+      reads(df).foreach(checkpoints.remove(_).foreach(unpersist))
+
     /** Collects `df` now and rebuilds it driver-side, so the result no
-      * longer reads any view of this scope. Aggregate-sized results only. */
+      * longer reads any view or checkpoint of this scope. Aggregate-sized
+      * results only. */
     def collect(df: DataFrame): DataFrame =
       session.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
-    private[StepChain] def close(): Unit = held.foreach { case (v, rdd) =>
-      // release must never mask the run's own outcome
-      try { session.catalog.dropTempView(v); () } catch { case _: Throwable => () }
-      try { rdd.unpersist(blocking = false); () } catch { case _: Throwable => () }
+    private def reads(df: Dataset[_]): Set[Int] =
+      df.queryExecution.analyzed.collectWithSubqueries { case l: LogicalRDD => l.rdd.id }.toSet
+
+    // release must never mask the run's own outcome
+    private def quietly(f: => Any): Unit = try { f; () } catch { case _: Throwable => () }
+    private def unpersist(rdd: RDD[_]): Unit = quietly(rdd.unpersist(blocking = false))
+
+    private[StepChain] def close(result: Option[Any]): Unit = {
+      val keep = result.collect { case df: Dataset[_] => reads(df) }.getOrElse(Set.empty)
+      views.foreach(v => quietly(session.catalog.dropTempView(v)))
+      caches.foreach(df => quietly(df.unpersist()))
+      checkpoints.foreach { case (id, rdd) => if (!keep(id)) unpersist(rdd) }
     }
   }
 
@@ -102,6 +134,8 @@ object StepChain {
 
   def scoped[T](s: SparkSession)(body: Scope => T): T = {
     val sc = new Scope(s, s"chain_v${runs.incrementAndGet()}")
-    try body(sc) finally sc.close()
+    val out = try body(sc) catch { case t: Throwable => sc.close(None); throw t }
+    sc.close(Some(out))
+    out
   }
 }

@@ -1367,21 +1367,22 @@ object Docs {
     /** Pairwise near-dups → dedup groups (`Dedup.connectedComponents`,
       * distributed min-label propagation): the output a pipeline actually
       * consumes — keep `doc_id == component`, drop the rest. */
-    "dedup_clusters_cc" -> ((s, d) =>
-      Dedup.connectedComponents(
+    "dedup_clusters_cc" -> ((s, d) => StepChain.scoped(s) { sc =>
+      Dedup.connectedComponents(sc,
           Dedup.minhashLshPairs(Tables.documents(s, d), "doc_id", "text",
             numHashes = 16, numBands = 4, threshold = 0.5),
           "id_a", "id_b")
         .select(col("id").as("doc_id"), col("component"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id")
+    }),
 
     /** The dedup pipeline's FINAL output — the corpus a training run
       * consumes: drop every doc that sits in a near-dup component but is
       * not its representative (min id). Left-anti join against the
       * non-representative set; docs in no pair survive untouched. */
-    "dedup_corpus_kept" -> ((s, d) => {
+    "dedup_corpus_kept" -> ((s, d) => StepChain.scoped(s) { sc =>
       val docs = Tables.documents(s, d)
-      val dropIds = Dedup.connectedComponents(
+      val dropIds = Dedup.connectedComponents(sc,
           Dedup.minhashLshPairs(docs, "doc_id", "text",
             numHashes = 16, numBands = 4, threshold = 0.5),
           "id_a", "id_b")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 
 import graft.Tables
 import graft.operators.GraphLayout
-import graft.plans.Blocks
+import graft.plans.StepChain
 
 /** The graph family — every `graph_*` registry key, its DuckDB twin, and
   * the edge builders they share. Two graphs underlie all thirteen:
@@ -30,6 +30,10 @@ import graft.plans.Blocks
 object Graph {
 
   type Q = (SparkSession, String) => DataFrame
+
+  /** A key that caches or checkpoints, run in one [[StepChain.Scope]]. */
+  private def scoped(body: (SparkSession, String, StepChain.Scope) => DataFrame): Q =
+    (s, d) => StepChain.scoped(s)(body(s, d, _))
 
   // ---- edge builders ------------------------------------------------------
 
@@ -88,8 +92,9 @@ object Graph {
   /** The node census: the degree frame (`key`, `name` = count of rows per
     * key), checkpointed, and its row count — the node count the
     * GraphLayout gate reads, with no separate countDistinct pass. */
-  private def census(ends: DataFrame, key: String, name: String): (DataFrame, Long) = {
-    val deg = ends.groupBy(key).agg(count(lit(1)).as(name)).localCheckpoint()
+  private def census(sc: StepChain.Scope, ends: DataFrame, key: String,
+                     name: String): (DataFrame, Long) = {
+    val deg = sc.checkpoint(ends.groupBy(key).agg(count(lit(1)).as(name)))
     (deg, deg.count())
   }
 
@@ -127,13 +132,13 @@ object Graph {
     * bipartite oscillation), partitioned by src under the broadcast gate
     * (the broadcast label join keeps it, so the argmax runs without an
     * exchange) and by dst past it (the join key). */
-  private def labelGraph(pairs: DataFrame): (DataFrame, Long, DataFrame) = {
-    val nodes = endpoints(pairs, "cn", "sn").distinct().localCheckpoint()
+  private def labelGraph(sc: StepChain.Scope,
+                         pairs: DataFrame): (DataFrame, Long, DataFrame) = {
+    val nodes = sc.checkpoint(endpoints(pairs, "cn", "sn").distinct())
     val n = nodes.count()
-    val edges = bothWays(pairs, "cn", "sn")
+    val edges = sc.cache(bothWays(pairs, "cn", "sn")
       .unionAll(nodes.select(col("node").as("src"), col("node").as("dst")))
-      .repartition(if (GraphLayout.useBroadcast(n)) col("src") else col("dst"))
-      .cache()
+      .repartition(if (GraphLayout.useBroadcast(n)) col("src") else col("dst")))
     (nodes, n, edges)
   }
 
@@ -179,10 +184,10 @@ object Graph {
       * edges removed by an anti-join, degrees attached through the
       * GraphLayout gate. Deterministic global top-20 by (common desc,
       * pair). */
-    "graph_common_neighbors" -> ((s, d) => {
-      val edges = coPurchase(s, d).localCheckpoint()
+    "graph_common_neighbors" -> scoped { (s, d, sc) =>
+      val edges = sc.checkpoint(coPurchase(s, d))
       val und = bothWays(edges, "pa", "pb")
-      val (deg, nNodes) = census(und, "src", "deg")
+      val (deg, nNodes) = census(sc, und, "src", "deg")
       val cand = und.as("e1").join(und.hint("shuffle_hash").as("e2"),
           col("e1.src") === col("e2.src") && col("e1.dst") < col("e2.dst"))
         .groupBy(col("e1.dst").as("u"), col("e2.dst").as("v"))
@@ -197,7 +202,7 @@ object Graph {
           round(col("common") / (col("deg_u") + col("deg_v") - col("common")), 6)
             .as("jaccard"))
         .orderBy(col("common").desc, col("u"), col("v")).limit(20)
-    }),
+    },
 
     /** K-CORE DECOMPOSITION — coreness per node of the co-purchase
       * graph via the distributed H-INDEX fixpoint (Lü et al. 2016:
@@ -208,13 +213,13 @@ object Graph {
       * Each round is ONE edge-keyed join + ONE per-node window rank
       * (h = max over desc-ranked neighbor values of min(rank, value)),
       * the same cached pre-partitioned edge layout as
-      * `graph_pagerank`; convergence is a driver-checked integer sum
-      * (exact — no float tolerance), localCheckpoint per round keeps
-      * the plan shallow. Output: the coreness histogram. The DuckDB
-      * twin unrolls the fixpoint 30× ([[kCoreSql]]); FeatSpec also pins
-      * equality with driver-side exact peeling. */
-    "graph_k_core" -> ((s, d) => {
-      val und0 = bothWays(coPurchase(s, d), "pa", "pb").cache()
+      * `graph_pagerank`; convergence is "no estimate changed" (exact —
+      * no float tolerance), scanned on each round's checkpoint, which
+      * also keeps the plan shallow. Output: the coreness histogram. The
+      * DuckDB twin unrolls the fixpoint 30× ([[kCoreSql]]); FeatSpec
+      * also pins equality with driver-side exact peeling. */
+    "graph_k_core" -> scoped { (s, d, sc) =>
+      val und0 = sc.cache(bothWays(coPurchase(s, d), "pa", "pb"))
       // Gated layout (GraphLayout): while the node-sized estimate frame
       // fits a broadcast, partition the edge cache by src — the broadcast
       // dst-keyed lookup preserves that partitioning, so the per-node
@@ -226,50 +231,46 @@ object Graph {
       // Pregel-minimal volume for an h-index gather, which has no smaller
       // exchange than its messages. The census degree frame seeds the
       // h-index fixpoint.
-      val (deg, nNodes) = census(und0, "src", "est")
-      val und = und0.repartition(
-        if (GraphLayout.useBroadcast(nNodes)) col("src") else col("dst")).cache()
-      try {
-        val hw = Window.partitionBy("src").orderBy(col("nv").desc, col("dst"))
-        var est = deg
-        var prevSum = -1L
-        var curSum = est.agg(sum("est")).head().getLong(0)
-        var rounds = 0
-        while (curSum != prevSum && rounds < 30) {
-          // every round checkpoints: one execution, and the convergence
-          // sum reads the checkpointed frame
-          val next = und
-            .join(GraphLayout.nodeSide(
-                est.select(col("src").as("dst"), col("est").as("nv")), nNodes),
-              "dst")
-            .withColumn("rk", row_number().over(hw))
-            .groupBy("src")
-            .agg(max(least(col("rk").cast("long"), col("nv"))).as("h"))
-            .join(est, "src")
-            .select(col("src"), least(col("est"), col("h")).as("est"))
-            .localCheckpoint()
-          prevSum = curSum
-          curSum = next.agg(sum("est")).head().getLong(0)
-          rounds += 1
-          // the superseded round's checkpoint (incl. the deg seed) is
-          // dead once `next` is materialized — release its blocks (guide §5)
-          Blocks.free(est)
-          est = next
-        }
-        if (curSum != prevSum)
-          // The h-index sequence is non-increasing and integer, so it
-          // converges in ≤ max-degree rounds — but a stringier graph than
-          // the test pins could need more than the cap, and returning the
-          // partial estimates silently would hand back UPPER BOUNDS, not
-          // core numbers.
-          org.slf4j.LoggerFactory.getLogger("graft.graph_k_core").warn(
-            s"h-index fixpoint NOT converged after $rounds rounds " +
-              s"(sum moved $prevSum -> $curSum); returned values are upper bounds")
-        est.groupBy(col("est").as("coreness"))
-          .agg(count(lit(1)).as("n_nodes"))
-          .orderBy("coreness")
-      } finally { und.unpersist(); und0.unpersist(); () }
-    }),
+      val (deg, nNodes) = census(sc, und0, "src", "est")
+      val und = sc.cache(und0.repartition(
+        if (GraphLayout.useBroadcast(nNodes)) col("src") else col("dst")))
+      val hw = Window.partitionBy("src").orderBy(col("nv").desc, col("dst"))
+      var est = deg
+      var converged = false
+      var rounds = 0
+      while (!converged && rounds < 30) {
+        // every round checkpoints its new estimate beside the one it
+        // replaced, so the convergence test scans materialized rows
+        val next = sc.checkpoint(und
+          .join(GraphLayout.nodeSide(
+              est.select(col("src").as("dst"), col("est").as("nv")), nNodes),
+            "dst")
+          .withColumn("rk", row_number().over(hw))
+          .groupBy("src")
+          .agg(max(least(col("rk").cast("long"), col("nv"))).as("h"))
+          .join(est, "src")
+          .select(col("src"), col("est").as("old"),
+            least(col("est"), col("h")).as("est")))
+        // estimates never increase, so the fixpoint is the first round
+        // that changes none
+        converged = next.filter(col("est") =!= col("old")).isEmpty
+        rounds += 1
+        sc.release(est) // the superseded round, the deg seed included
+        est = next
+      }
+      if (!converged)
+        // The h-index sequence is non-increasing and integer, so it
+        // converges in ≤ max-degree rounds — but a stringier graph than
+        // the test pins could need more than the cap, and returning the
+        // partial estimates silently would hand back UPPER BOUNDS, not
+        // core numbers.
+        org.slf4j.LoggerFactory.getLogger("graft.graph_k_core").warn(
+          s"h-index fixpoint NOT converged after $rounds rounds; " +
+            "returned values are upper bounds")
+      est.groupBy(col("est").as("coreness"))
+        .agg(count(lit(1)).as("n_nodes"))
+        .orderBy("coreness")
+    },
 
     /** DEGREE ASSORTATIVITY (Newman 2002) — do high-degree parts
       * co-purchase with high-degree parts? Pearson correlation of
@@ -278,9 +279,9 @@ object Graph {
       * + one aggregation of exact integer sums; the correlation divides
       * exact operands. The sign is the one-number summary the degree
       * histogram (`graph_degree_distribution`) cannot give. */
-    "graph_assortativity" -> ((s, d) => {
-      val und = bothWays(coPurchase(s, d).localCheckpoint(), "pa", "pb")
-      val (deg, nNodes) = census(und, "src", "deg")
+    "graph_assortativity" -> scoped { (s, d, sc) =>
+      val und = bothWays(sc.checkpoint(coPurchase(s, d)), "pa", "pb")
+      val (deg, nNodes) = census(sc, und, "src", "deg")
       und
         .join(GraphLayout.nodeSide(
           deg.select(col("src"), col("deg").as("du")), nNodes), "src")
@@ -298,7 +299,7 @@ object Graph {
               sqrt(col("svv").cast("double") / col("m") -
                 (col("sv").cast("double") / col("m")) * (col("sv").cast("double") / col("m")))), 6)
             .as("assortativity"))
-    }),
+    },
 
     /** TRIANGLE COUNT + global clustering coefficient of the co-purchase
       * graph (parts appearing together in ≥ 2 distinct orders — the
@@ -313,12 +314,12 @@ object Graph {
       * quadratic hub blow-up a naive id-ordering admits at 100 TB.
       * Everything is integer-exact; the clustering coefficient
       * 3·T / Σ C(deg,2) gets the one rounded division. */
-    "graph_triangles" -> ((s, d) => {
+    "graph_triangles" -> scoped { (s, d, sc) =>
       // the gate needs the node count before the final plan is built, so
       // the edges are checkpointed once: otherwise the census job and the
       // final plan would each run the co-purchase self-join
-      val edges = coPurchase(s, d).localCheckpoint()
-      val (deg, nNodes) = census(endpoints(edges, "pa", "pb"), "node", "deg")
+      val edges = sc.checkpoint(coPurchase(s, d))
+      val (deg, nNodes) = census(sc, endpoints(edges, "pa", "pb"), "node", "deg")
       val oriented = orient(edges, deg, nNodes)
       val tri = wedges(oriented).select(col("w1.v").as("u"), col("w2.v").as("v"))
         .join(oriented.select("u", "v"), Seq("u", "v"))
@@ -331,7 +332,7 @@ object Graph {
           col("n_triangles"),
           round(lit(3.0) * col("n_triangles") / col("n_wedges"), 6)
             .as("clustering"))
-    }),
+    },
 
     /** PER-NODE local clustering coefficient (Watts–Strogatz 1998) over
       * the same ≥2-order co-purchase graph as `graph_triangles` — the
@@ -345,9 +346,9 @@ object Graph {
       * single rounded division is output-only (no decision rides it —
       * COVERAGE doctrine); ordering on identical doubles with integer
       * tiebreak. Top-50 by lcc. */
-    "graph_local_clustering" -> ((s, d) => {
-      val edges = coPurchase(s, d).localCheckpoint()
-      val (deg, nNodes) = census(endpoints(edges, "pa", "pb"), "node", "deg")
+    "graph_local_clustering" -> scoped { (s, d, sc) =>
+      val edges = sc.checkpoint(coPurchase(s, d))
+      val (deg, nNodes) = census(sc, endpoints(edges, "pa", "pb"), "node", "deg")
       val oriented = orient(edges, deg, nNodes)
       val perNode = wedges(oriented)
         .select(col("w1.u").as("c"), col("w1.v").as("a"), col("w2.v").as("b"))
@@ -361,7 +362,7 @@ object Graph {
         .withColumn("lcc", round(
           lit(2.0) * col("n_tri") / (col("deg") * (col("deg") - 1)), 6))
         .orderBy(col("lcc").desc, col("node")).limit(50)
-    }),
+    },
 
     /** PAGERANK on the customer↔supplier trade graph — the canonical
       * iterative-distributed-joins algorithm (the shape GraphX/Pregel
@@ -376,15 +377,15 @@ object Graph {
       * iteration so both engines accumulate IDENTICAL operands (float
       * sum-order drift cannot compound); the degree division is by an
       * exact integer. Top-25 by rank, deterministic tiebreak. */
-    "graph_pagerank" -> ((s, d) => {
+    "graph_pagerank" -> scoped { (s, d, sc) =>
       val damping = 0.85
       val iters = 8
       // Node ids ride the tagged long through the whole derivation and
       // every iteration (r16: measured 7.1 → 3.8 s at sf0.1, bit-identical
       // output at all SFs); the display string is derived only in the
       // final top-25 select.
-      val edges0 = bothWays(tradePairs(s, d)(custId.as("cn"), suppId.as("sn")),
-        "cn", "sn").cache()
+      val edges0 = sc.cache(bothWays(tradePairs(s, d)(custId.as("cn"), suppId.as("sn")),
+        "cn", "sn"))
       // ONE cached edge frame carrying the out-degree (the structure is
       // static across iterations — join it once, not once per round),
       // hash-partitioned UP FRONT by the key its per-iteration consumer
@@ -399,53 +400,47 @@ object Graph {
       // exchanges map-side-combined partials (node-bounded per task),
       // never the raw edge frame. The census degree frame also seeds the
       // uniform rank vector.
-      val (deg, n) = census(edges0, "src", "deg")
-      val edgesDeg = edges0
+      val (deg, n) = census(sc, edges0, "src", "deg")
+      val edgesDeg = sc.cache(edges0
         .join(deg, "src")
-        .repartition(if (GraphLayout.useBroadcast(n)) col("dst") else col("src"))
-        .cache()
-      try {
-        var ranks = deg
-          .select(col("src").as("node"), round(lit(1.0) / n, 9).as("rank"))
-        // superseded every-2nd-round checkpoints are released once the
-        // next one materializes (guide §5): only the latest checkpoint
-        // must stay resident for the remaining rounds / the final select
-        var lastCp: DataFrame = null
-        for (i <- 1 to iters) {
-          // rank frame is node-sized → gated side of the join (see the
-          // layout note above); the edge scan stays in place. Eager
-          // localCheckpoint truncates the lineage so the plan stays
-          // shallow (an 8-deep nested join tree sends Catalyst
-          // re-analysis superlinear — the same reason GraphX/ALS
-          // checkpoint iteratively) — but materializing EVERY iteration
-          // pays one extra distributed job per round, so checkpoint every
-          // second round: plans stay ≤ 2 joins deep and half the
-          // materialization jobs disappear (A/B-measured ~15 % off the
-          // query's wall time at sf0.1, before the pre-partitioning above
-          // removed the per-iteration exchange). The final round is
-          // always checkpointed: the caches this plan reads are
-          // unpersisted on return, so an un-truncated final lineage would
-          // force the caller's action to recompute the whole edge
-          // pipeline (measured ~1.6× on the query).
-          val contrib = edgesDeg
-            .join(GraphLayout.nodeSide(ranks, n),
-              edgesDeg("src") === ranks("node"))
-            .groupBy(col("dst"))
-            .agg(sum(col("rank") / col("deg")).as("inflow"))
-          val next = contrib.select(col("dst").as("node"),
-            round(lit((1 - damping) / n) + lit(damping) * col("inflow"), 9).as("rank"))
-          ranks = if (i % 2 == 0) {
-            val cp = next.localCheckpoint()
-            if (lastCp != null) Blocks.free(lastCp)
-            lastCp = cp
-            cp
-          } else next
-        }
-        ranks.select(tagName(col("node")).as("node"),
-            round(col("rank"), 9).as("rank"))
-          .orderBy(col("rank").desc, col("node")).limit(25)
-      } finally { edgesDeg.unpersist(); edges0.unpersist(); () }
-    }),
+        .repartition(if (GraphLayout.useBroadcast(n)) col("dst") else col("src")))
+      // One power iteration. The rank frame is node-sized → gated side of
+      // the join (see the layout note above); the edge scan stays in place.
+      def step(ranks: DataFrame): DataFrame = {
+        val contrib = edgesDeg
+          .join(GraphLayout.nodeSide(ranks, n),
+            edgesDeg("src") === ranks("node"))
+          .groupBy(col("dst"))
+          .agg(sum(col("rank") / col("deg")).as("inflow"))
+        contrib.select(col("dst").as("node"),
+          round(lit((1 - damping) / n) + lit(damping) * col("inflow"), 9).as("rank"))
+      }
+      // A checkpoint truncates the lineage so the plan stays shallow (an
+      // 8-deep nested join tree sends Catalyst re-analysis superlinear —
+      // the same reason GraphX/ALS checkpoint iteratively) — but
+      // materializing EVERY iteration pays one extra distributed job per
+      // round, so checkpoint every second round: plans stay ≤ 2 joins
+      // deep and half the materialization jobs disappear (A/B-measured
+      // ~15 % off the query's wall time at sf0.1, before the
+      // pre-partitioning above removed the per-iteration exchange). The
+      // final round is always checkpointed: the caches this plan reads
+      // are released on return, so an un-truncated final lineage would
+      // force the caller's action to recompute the whole edge pipeline
+      // (measured ~1.6× on the query). Only the latest checkpoint stays
+      // resident; the seed reads `deg`, which stays with the edge cache.
+      // The seed divides in Scala: on an empty graph (n = 0) Spark's ANSI
+      // division would throw while constant folding.
+      var ranks = sc.checkpoint(step(step(deg
+        .select(col("src").as("node"), round(lit(1.0 / n), 9).as("rank")))))
+      for (_ <- 2 to iters / 2) {
+        val next = sc.checkpoint(step(step(ranks)))
+        sc.release(ranks)
+        ranks = next
+      }
+      ranks.select(tagName(col("node")).as("node"),
+          round(col("rank"), 9).as("rank"))
+        .orderBy(col("rank").desc, col("node")).limit(25)
+    },
 
     /** SINGLE-SOURCE BFS over the customer↔supplier trade graph — the
       * other canonical iterative-joins primitive next to
@@ -459,54 +454,50 @@ object Graph {
       * covers the diameter of the dense bipartite trade graph. Output
       * is the hop-distance histogram; the oracle replays the expansion
       * as a recursive CTE with UNION-dedup (textbook SQL BFS). */
-    "graph_bfs_distance" -> ((s, d) => {
+    "graph_bfs_distance" -> scoped { (s, d, sc) =>
       import s.implicits._
       val maxHops = 6
       // Tagged-long node ids: the frontier joins, the distinct dedup and
       // the visited anti-join all key on a long (node ids never appear
       // in the output at all).
       val pairs = tradePairs(s, d)(custId.as("cn"), suppId.as("sn"))
-      val edges = bothWays(pairs, "cn", "sn")
-        .repartition(col("src"))
-        .cache()
-      try {
-        // min over the (even-tagged) customer side = 2 · min custkey —
-        // the same source node the string form picked
-        val src0 = pairs.agg(min(col("cn"))).head().getLong(0)
-        var visited = Seq((src0, 0)).toDF("node", "dist")
-        var frontier = visited
-        // The frontier can reach O(nodes) at the middle hop of a dense
-        // graph, so its join side is gated per round on the measured
-        // frontier size (GraphLayout): broadcast while it fits, else a
-        // shuffled-hash join that — edges being pre-partitioned by src,
-        // the join key — exchanges only the frontier frame. The count is
-        // free: it doubles as the loop's emptiness check and reads the
-        // just-checkpointed frame.
-        var frontierN = 1L
-        var hop = 0
-        while (hop < maxHops && frontierN > 0) {
-          hop += 1
-          val next = edges
-            .join(GraphLayout.nodeSide(frontier, frontierN),
-              edges("src") === frontier("node"))
-            .select(col("dst").as("node")).distinct()
-            .join(visited.select(col("node").as("vn")), col("node") === col("vn"), "left_anti")
-            .select(col("node"), lit(hop).as("dist"))
-            .localCheckpoint()
-          val grown = visited.unionAll(next).localCheckpoint()
-          // prior visited/frontier checkpoints are dead once `next` and
-          // `grown` are materialized (localCheckpoint is eager) — release
-          // their blocks now (guide §5; no-op on the unpersisted seed)
-          Blocks.free(visited)
-          if (!(frontier eq visited)) Blocks.free(frontier)
-          visited = grown
-          frontier = next
-          frontierN = next.count()
-        }
-        visited.groupBy("dist").agg(count(lit(1)).as("n_nodes"))
-          .orderBy("dist")
-      } finally { edges.unpersist(); () }
-    }),
+      val edges = sc.cache(bothWays(pairs, "cn", "sn").repartition(col("src")))
+      // min over the (even-tagged) customer side = 2 · min custkey —
+      // the same source node the string form picked; none on an empty
+      // graph, whose histogram is then empty
+      val src0 = Option(pairs.agg(min(col("cn"))).head().getAs[java.lang.Long](0))
+        .map(_.longValue)
+      var visited = src0.map((_, 0)).toSeq.toDF("node", "dist")
+      var frontier = visited
+      // The frontier can reach O(nodes) at the middle hop of a dense
+      // graph, so its join side is gated per round on the measured
+      // frontier size (GraphLayout): broadcast while it fits, else a
+      // shuffled-hash join that — edges being pre-partitioned by src,
+      // the join key — exchanges only the frontier frame. The count is
+      // free: it doubles as the loop's emptiness check and reads the
+      // just-checkpointed frame.
+      var frontierN = src0.size.toLong
+      var hop = 0
+      while (hop < maxHops && frontierN > 0) {
+        hop += 1
+        val next = sc.checkpoint(edges
+          .join(GraphLayout.nodeSide(frontier, frontierN),
+            edges("src") === frontier("node"))
+          .select(col("dst").as("node")).distinct()
+          .join(visited.select(col("node").as("vn")), col("node") === col("vn"), "left_anti")
+          .select(col("node"), lit(hop).as("dist")))
+        val grown = sc.checkpoint(visited.unionAll(next))
+        // the prior visited/frontier checkpoints are superseded once
+        // `next` and `grown` are materialized
+        sc.release(visited)
+        sc.release(frontier)
+        visited = grown
+        frontier = next
+        frontierN = next.count()
+      }
+      visited.groupBy("dist").agg(count(lit(1)).as("n_nodes"))
+        .orderBy("dist")
+    },
 
     /** HITS (Kleinberg's hubs-and-authorities) over the DIRECTED
       * customer→supplier trade graph — the link-analysis sibling
@@ -521,75 +512,64 @@ object Graph {
       * DECIMAL, so the DuckDB twin's unrolled-iteration CTE chain (the
       * `graph_pagerank` oracle trick) replays the fixpoint bit-exactly.
       * Output: top-10 hubs and top-10 authorities. */
-    "graph_hits" -> ((s, d) => {
+    "graph_hits" -> scoped { (s, d, sc) =>
       val iters = 4
       // Tagged-long node ids: every half-round join and keyed DECIMAL
       // aggregation keys on a long; the display string is derived just
       // before the top-10 selects, which keep their tie-break order on
       // the string form.
-      val edges = tradePairs(s, d)(custId.as("src"), suppId.as("dst"))
-        .repartition(col("src"))
-        .cache()
-      try {
-        // hubs are customers and authorities suppliers: each score frame
-        // rides the gate on its own node count, both from one aggregate
-        val counts = edges.agg(countDistinct("src"), countDistinct("dst")).head()
-        val (nHubs, nAuths) = (counts.getLong(0), counts.getLong(1))
-        // round 1 weighs every hub 1.0, so it joins no hub frame: each
-        // authority's raw score is its in-degree
-        var hubs: DataFrame = null
-        var auths: DataFrame = null
-        // superseded half-round checkpoints are released as soon as the
-        // next checkpoint materializes (guide §5): only the final
-        // aRaw/hRaw pair must stay resident for the top-10 selects
-        var lastA: DataFrame = null
-        var lastH: DataFrame = null
-        for (i <- 1 to iters) {
-          val weighted =
-            if (hubs == null) edges.select(col("dst"), lit(1.0).as("h"))
-            else edges.join(GraphLayout.nodeSide(hubs, nHubs), edges("src") === hubs("node"))
-          val aRaw = weighted
-            .groupBy(col("dst"))
-            .agg(sum(col("h").cast("decimal(28,9)")).as("araw"))
-            .localCheckpoint()
-          if (lastH != null) Blocks.free(lastH)
-          if (lastA != null) Blocks.free(lastA)
-          // the L1 total rides as a BROADCAST 1-row cross join instead of
-          // a driver `.head()` collect (r17): the normalization stays a
-          // lazy narrow projection over the just-checkpointed raw frame
-          // (the r16 form), and the per-half-round blocking round-trip is
-          // gone — 2 driver actions per iteration (the two checkpoints)
-          // instead of 4. Arithmetic unchanged: sum(decimal(28,9)) cast
-          // to double is exactly the old getDecimal.doubleValue scalar.
-          auths = aRaw
-            .crossJoin(broadcast(aRaw.agg(sum("araw").as("atot"))))
-            .select(col("dst").as("node"),
-              round(col("araw").cast("double") / col("atot").cast("double"), 9)
-                .as("a"))
-          val hRaw = edges
-            .join(GraphLayout.nodeSide(auths, nAuths),
-              edges("dst") === auths("node"))
-            .groupBy(col("src"))
-            .agg(sum(col("a").cast("decimal(28,9)")).as("hraw"))
-            .localCheckpoint()
-          hubs = hRaw
-            .crossJoin(broadcast(hRaw.agg(sum("hraw").as("htot"))))
-            .select(col("src").as("node"),
-              round(col("hraw").cast("double") / col("htot").cast("double"), 9)
-                .as("h"))
-          lastA = aRaw
-          lastH = hRaw
-        }
-        val topH = hubs.select(tagName(col("node")).as("node"), col("h"))
-          .orderBy(col("h").desc, col("node")).limit(10)
-          .select(lit("hub").as("role"), col("node"), col("h").as("score"))
-        val topA = auths.select(tagName(col("node")).as("node"), col("a"))
-          .orderBy(col("a").desc, col("node")).limit(10)
-          .select(lit("authority").as("role"), col("node"),
-            col("a").as("score"))
-        topH.unionAll(topA).orderBy("role", "node")
-      } finally { edges.unpersist(); () }
-    }),
+      val edges = sc.cache(tradePairs(s, d)(custId.as("src"), suppId.as("dst"))
+        .repartition(col("src")))
+      // hubs are customers and authorities suppliers: each score frame
+      // rides the gate on its own node count, both from one aggregate
+      val counts = edges.agg(countDistinct("src"), countDistinct("dst")).head()
+      val (nHubs, nAuths) = (counts.getLong(0), counts.getLong(1))
+      // round 1 weighs every hub 1.0, so it joins no hub frame: each
+      // authority's raw score is its in-degree
+      var hubs: DataFrame = null
+      var auths: DataFrame = null
+      for (i <- 1 to iters) {
+        val weighted =
+          if (hubs == null) edges.select(col("dst"), lit(1.0).as("h"))
+          else edges.join(GraphLayout.nodeSide(hubs, nHubs), edges("src") === hubs("node"))
+        val aRaw = sc.checkpoint(weighted
+          .groupBy(col("dst"))
+          .agg(sum(col("h").cast("decimal(28,9)")).as("araw")))
+        // the previous round's score checkpoints are superseded once this
+        // one materializes: only the final pair stays for the top-10s
+        if (i > 1) { sc.release(hubs); sc.release(auths) }
+        // the L1 total rides as a BROADCAST 1-row cross join instead of
+        // a driver `.head()` collect (r17): the normalization stays a
+        // lazy narrow projection over the just-checkpointed raw frame
+        // (the r16 form), and the per-half-round blocking round-trip is
+        // gone — 2 driver actions per iteration (the two checkpoints)
+        // instead of 4. Arithmetic unchanged: sum(decimal(28,9)) cast
+        // to double is exactly the old getDecimal.doubleValue scalar.
+        auths = aRaw
+          .crossJoin(broadcast(aRaw.agg(sum("araw").as("atot"))))
+          .select(col("dst").as("node"),
+            round(col("araw").cast("double") / col("atot").cast("double"), 9)
+              .as("a"))
+        val hRaw = sc.checkpoint(edges
+          .join(GraphLayout.nodeSide(auths, nAuths),
+            edges("dst") === auths("node"))
+          .groupBy(col("src"))
+          .agg(sum(col("a").cast("decimal(28,9)")).as("hraw")))
+        hubs = hRaw
+          .crossJoin(broadcast(hRaw.agg(sum("hraw").as("htot"))))
+          .select(col("src").as("node"),
+            round(col("hraw").cast("double") / col("htot").cast("double"), 9)
+              .as("h"))
+      }
+      val topH = hubs.select(tagName(col("node")).as("node"), col("h"))
+        .orderBy(col("h").desc, col("node")).limit(10)
+        .select(lit("hub").as("role"), col("node"), col("h").as("score"))
+      val topA = auths.select(tagName(col("node")).as("node"), col("a"))
+        .orderBy(col("a").desc, col("node")).limit(10)
+        .select(lit("authority").as("role"), col("node"),
+          col("a").as("score"))
+      topH.unionAll(topA).orderBy("role", "node")
+    },
 
     /** DETERMINISTIC RANDOM WALKS over the trade graph — the walk
       * corpus node2vec/DeepWalk embeddings train on, generated the way
@@ -605,49 +585,44 @@ object Graph {
       * embedding sampler consumes. The walk frame rides the GraphLayout
       * gate: bounded here, node-scale walk sets flip to the
       * shuffled-hash join like pagerank's rank vector. */
-    "graph_random_walks" -> ((s, d) => {
+    "graph_random_walks" -> scoped { (s, d, sc) =>
       val steps = 6
       // string ids throughout — they are md5-RNG inputs (`pick`) and
       // must stay bit-identical
       val iw = Window.partitionBy("src").orderBy("dst")
-      val edges = bothWays(namedPairs(s, d), "cn", "sn")
+      val edges = sc.cache(bothWays(namedPairs(s, d), "cn", "sn")
         .withColumn("idx", row_number().over(iw) - 1)
         .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
-        .repartition(col("src"))
-        .cache()
-      try {
-        val starts = edges.groupBy("src").agg(max("deg").as("deg"))
-          .orderBy(col("deg").desc, col("src")).limit(64)
-          .select(col("src").as("start"))
-        var walks = starts
-          .crossJoin(broadcast(s.range(4).select(col("id").as("w"))))
-          .select(concat(col("start"), lit("#"), col("w")).as("walk_id"),
-            col("start").as("cur"))
-          .localCheckpoint()
-        val nWalks = walks.count()
-        var visits = walks.select(col("cur").as("node"),
-          lit(0).as("step"))
-        for (st <- 1 to steps) {
-          val pick = expr(s"CAST(conv(substring(md5(concat(walk_id, ':', " +
-            s"$st, ':', cur)), 1, 8), 16, 10) AS BIGINT)")
-          // every step checkpoints: the walk frame is start-set-sized
-          // (cheap to materialize), each frame is consumed TWICE (next
-          // step + the visit union), and an un-truncated final lineage
-          // would recompute against the by-then-unpersisted edge cache
-          // at action time (the BENCH_TRIAGE_r09 checkpoint lesson)
-          walks = edges
-            .join(GraphLayout.nodeSide(walks.withColumn("h", pick), nWalks),
-              col("src") === col("cur") && col("idx") === col("h") % col("deg"))
-            .select(col("walk_id"), col("dst").as("cur"))
-            .localCheckpoint()
-          visits = visits.unionAll(
-            walks.select(col("cur").as("node"), lit(st).as("step")))
-        }
-        visits.groupBy("node").agg(count(lit(1)).as("n_visits"),
-            countDistinct("step").as("n_steps_seen"))
-          .orderBy(col("n_visits").desc, col("node")).limit(25)
-      } finally { edges.unpersist(); () }
-    }),
+        .repartition(col("src")))
+      val starts = edges.groupBy("src").agg(max("deg").as("deg"))
+        .orderBy(col("deg").desc, col("src")).limit(64)
+        .select(col("src").as("start"))
+      var walks = sc.checkpoint(starts
+        .crossJoin(broadcast(s.range(4).select(col("id").as("w"))))
+        .select(concat(col("start"), lit("#"), col("w")).as("walk_id"),
+          col("start").as("cur")))
+      val nWalks = walks.count()
+      var visits = walks.select(col("cur").as("node"),
+        lit(0).as("step"))
+      for (st <- 1 to steps) {
+        val pick = expr(s"CAST(conv(substring(md5(concat(walk_id, ':', " +
+          s"$st, ':', cur)), 1, 8), 16, 10) AS BIGINT)")
+        // every step checkpoints: the walk frame is start-set-sized
+        // (cheap to materialize), each frame is consumed TWICE (next
+        // step + the visit union), and an un-truncated final lineage
+        // would recompute against the by-then-released edge cache
+        // at action time (the BENCH_TRIAGE_r09 checkpoint lesson)
+        walks = sc.checkpoint(edges
+          .join(GraphLayout.nodeSide(walks.withColumn("h", pick), nWalks),
+            col("src") === col("cur") && col("idx") === col("h") % col("deg"))
+          .select(col("walk_id"), col("dst").as("cur")))
+        visits = visits.unionAll(
+          walks.select(col("cur").as("node"), lit(st).as("step")))
+      }
+      visits.groupBy("node").agg(count(lit(1)).as("n_visits"),
+          countDistinct("step").as("n_steps_seen"))
+        .orderBy(col("n_visits").desc, col("node")).limit(25)
+    },
 
     /** LABEL PROPAGATION community detection (Raghavan et al. 2007) on
       * the customer↔supplier trade graph — the distributed community
@@ -666,24 +641,22 @@ object Graph {
       * graph LPA collapses 1500 → 9 → 4 → 1 at sf0.01; the trajectory
       * is the informative object, and is what a mixture-balance pipeline
       * actually monitors). */
-    "graph_label_propagation" -> ((s, d) => {
+    "graph_label_propagation" -> scoped { (s, d, sc) =>
       val iters = 4
       // labels stay strings: the per-round argmax tie-break compares
       // label strings and must keep doing so bit-for-bit
-      val (nodes, n, edges) = labelGraph(namedPairs(s, d))
-      try {
-        var labels = nodes.select(col("node"), col("node").as("label"))
-        val perRound = (1 to iters).map { i =>
-          labels = lpaRound(edges, labels, n).localCheckpoint()
-          labels.withColumn("iter", lit(i))
-        }
-        perRound.reduce(_ unionAll _)
-          .groupBy("iter", "label").agg(count(lit(1)).as("cnt"))
-          .groupBy("iter").agg(count(lit(1)).as("n_communities"),
-            max(col("cnt")).as("largest_size"))
-          .orderBy("iter")
-      } finally { edges.unpersist(); () }
-    }),
+      val (nodes, n, edges) = labelGraph(sc, namedPairs(s, d))
+      var labels = nodes.select(col("node"), col("node").as("label"))
+      val perRound = (1 to iters).map { i =>
+        labels = sc.checkpoint(lpaRound(edges, labels, n))
+        labels.withColumn("iter", lit(i))
+      }
+      perRound.reduce(_ unionAll _)
+        .groupBy("iter", "label").agg(count(lit(1)).as("cnt"))
+        .groupBy("iter").agg(count(lit(1)).as("n_communities"),
+          max(col("cnt")).as("largest_size"))
+        .orderBy("iter")
+    },
 
     /** MODULARITY of the 2-round label-propagation partition — the
       * QUALITY measure community detection is incomplete without
@@ -699,46 +672,40 @@ object Graph {
       * 1-internal-edge community's q_term can round to ±0). Same
       * propagation discipline as LPA: cached pre-partitioned edges,
       * per-round checkpoint. */
-    "graph_modularity" -> ((s, d) => {
+    "graph_modularity" -> scoped { (s, d, sc) =>
       // read by m, degrees, and the two-sided label join
-      val pairs = namedPairs(s, d).localCheckpoint()
-      val (nodes, n, edges) = labelGraph(pairs)
+      val pairs = sc.checkpoint(namedPairs(s, d))
+      val (nodes, n, edges) = labelGraph(sc, pairs)
       val m = pairs.count()
-      try {
-        var labels = nodes.select(col("node"), col("node").as("label"))
-        for (r <- 1 to 2) {
-          val prev = labels
-          labels = lpaRound(edges, labels, n).localCheckpoint()
-          // round ≥ 2 only: round 1's prev is a projection over the
-          // shared `nodes` checkpoint, which the edge cache still needs
-          if (r > 1) Blocks.free(prev)
-        }
-        val deg = endpoints(pairs, "cn", "sn")
-          .groupBy("node").agg(count(lit(1)).as("deg"))
-        val la = GraphLayout.nodeSide(
-          labels.select(col("node").as("cn"), col("label").as("lab_a")), n)
-        val lb = GraphLayout.nodeSide(
-          labels.select(col("node").as("sn"), col("label").as("lab_b")), n)
-        val lin = pairs.join(la, "cn").join(lb, "sn")
-          .filter(col("lab_a") === col("lab_b"))
-          .groupBy(col("lab_a")).agg(count(lit(1)).as("internal_edges"))
-          .withColumnRenamed("lab_a", "label")
-        val dsum = labels.join(GraphLayout.nodeSide(deg, n)
-            .withColumnRenamed("node", "dnode"),
-            col("node") === col("dnode"))
-          .groupBy(col("label"))
-          .agg(count(lit(1)).as("n_nodes"), sum(col("deg")).as("degree_sum"))
-        dsum.join(lin, Seq("label"), "left")
-          .select(col("label").as("community"), col("n_nodes"),
-            coalesce(col("internal_edges"), lit(0L)).as("internal_edges"),
-            col("degree_sum"))
-          .withColumn("q_term", round(
-            (lit(4L) * lit(m) * col("internal_edges")
-              - col("degree_sum") * col("degree_sum")).cast("double")
-              / lit(4L * m * m).cast("double"), 9) + lit(0.0))
-          .orderBy("community")
-      } finally { edges.unpersist(); () }
-    }),
+      val round1 = sc.checkpoint(
+        lpaRound(edges, nodes.select(col("node"), col("node").as("label")), n))
+      val labels = sc.checkpoint(lpaRound(edges, round1, n))
+      sc.release(round1)
+      val deg = endpoints(pairs, "cn", "sn")
+        .groupBy("node").agg(count(lit(1)).as("deg"))
+      val la = GraphLayout.nodeSide(
+        labels.select(col("node").as("cn"), col("label").as("lab_a")), n)
+      val lb = GraphLayout.nodeSide(
+        labels.select(col("node").as("sn"), col("label").as("lab_b")), n)
+      val lin = pairs.join(la, "cn").join(lb, "sn")
+        .filter(col("lab_a") === col("lab_b"))
+        .groupBy(col("lab_a")).agg(count(lit(1)).as("internal_edges"))
+        .withColumnRenamed("lab_a", "label")
+      val dsum = labels.join(GraphLayout.nodeSide(deg, n)
+          .withColumnRenamed("node", "dnode"),
+          col("node") === col("dnode"))
+        .groupBy(col("label"))
+        .agg(count(lit(1)).as("n_nodes"), sum(col("deg")).as("degree_sum"))
+      dsum.join(lin, Seq("label"), "left")
+        .select(col("label").as("community"), col("n_nodes"),
+          coalesce(col("internal_edges"), lit(0L)).as("internal_edges"),
+          col("degree_sum"))
+        .withColumn("q_term", round(
+          (lit(4L) * lit(m) * col("internal_edges")
+            - col("degree_sum") * col("degree_sum")).cast("double")
+            / lit(4L * m * m).cast("double"), 9) + lit(0.0))
+        .orderBy("community")
+    },
 
     /** MINIMUM SPANNING FOREST by distributed Borůvka — the graph
       * suite's first OPTIMIZATION operator (everything else measures or
@@ -754,29 +721,28 @@ object Graph {
       * (12 unrolled Borůvka rounds, per-round closure CTEs) is exact
       * with NO numeric grid at all. Output: the forest edge list.
       * R10Spec cross-checks against a driver Kruskal. */
-    "graph_mst_boruvka" -> ((s, d) => {
+    "graph_mst_boruvka" -> scoped { (s, d, sc) =>
       // the 600k-row weight aggregation groups by LONG keys and builds
       // the endpoint strings once per GROUP (r16, guide §2.3) — the key
       // pair is in bijection with the string pair, so the groups, the
       // DECIMAL weight sums, and everything downstream (including the
       // (w, a, b) string tie-break) are unchanged
-      val we = trade(s, d)
+      val we = sc.checkpoint(trade(s, d)
         .groupBy(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
         // exact integer cents: distinct real-valued weights, no grid
         .agg((sum(col("l_extendedprice").cast("decimal(18,2)")) * 100)
           .cast("long").as("w"))
         .select(concat(lit("c"), col("ck")).as("a"),
-          concat(lit("s"), col("sk")).as("b"), col("w"))
-        .localCheckpoint()
+          concat(lit("s"), col("sk")).as("b"), col("w")))
       // The MST output needs only ORIGINAL endpoints, so no node→component
       // map is ever maintained: current component labels ride the edge
       // frame itself, which SHRINKS every round as intra-component edges
       // drop (labels only merge, so a dropped edge can never come back).
       // This replaces the old per-round relabel of the FULL original edge
       // set through two node-sized joins + a node-sized map update.
-      var edges = we.select(col("a"), col("b"), col("w"),
-        col("a").as("ca"), col("b").as("cb")).localCheckpoint()
-      Blocks.free(we) // superseded by the labeled copy
+      var edges = sc.checkpoint(we.select(col("a"), col("b"), col("w"),
+        col("a").as("ca"), col("b").as("cb")))
+      sc.release(we) // superseded by the labeled copy
       var mst = s.createDataFrame(new java.util.ArrayList[Row](),
         StructType(Seq(StructField("a", StringType),
           StructField("b", StringType), StructField("w", LongType))))
@@ -791,41 +757,40 @@ object Graph {
               col("w"), col("ca"), col("cb"))
             .unionAll(edges.select(col("cb").as("cpick"), col("a"), col("b"),
               col("w"), col("ca"), col("cb")))
-          val chosen = cand.withColumn("rn", row_number().over(wMin))
+          // `chosen` stays held: the lazy MST union reads every round's
+          // picks at the final action
+          val chosen = sc.checkpoint(cand.withColumn("rn", row_number().over(wMin))
             .filter(col("rn") === 1)
             .select(col("a"), col("b"), col("w"), col("ca"), col("cb"))
-            .distinct()
-            .localCheckpoint()
+            .distinct())
           mst = mst.unionAll(chosen.select("a", "b", "w"))
           // merge map is COMPONENT-sized (≤ one chosen pair per live
-          // component) — gated driver union-find / distributed CC
-          val (merge, nMerge) =
-            boruvkaMerge(s, chosen.select(col("ca"), col("cb")).distinct())
-          val prevEdges = edges
-          edges = edges
-            .join(GraphLayout.nodeSide(
-              merge.select(col("id").as("ca"), col("component").as("na")),
-              nMerge), Seq("ca"), "left")
-            .join(GraphLayout.nodeSide(
-              merge.select(col("id").as("cb"), col("component").as("nb")),
-              nMerge), Seq("cb"), "left")
-            .select(col("a"), col("b"), col("w"),
-              coalesce(col("na"), col("ca")).as("ca"),
-              coalesce(col("nb"), col("cb")).as("cb"))
-            .filter(col("ca") =!= col("cb"))
-            .localCheckpoint()
-          // the previous round's edge checkpoint and the (checkpointed
-          // or driver-local) merge map are dead once the relabeled edge
-          // frame is materialized; `chosen` stays — the lazy MST union
-          // reads every round's picks at the final action (guide §5)
-          Blocks.free(prevEdges)
-          Blocks.free(merge)
+          // component) — gated driver union-find / distributed CC. It
+          // lives in the round's own scope, released once the relabeled
+          // edge frame (held by the key's scope) is materialized.
+          val relabeled = StepChain.scoped(s) { merging =>
+            val (merge, nMerge) =
+              boruvkaMerge(merging, chosen.select(col("ca"), col("cb")).distinct())
+            sc.checkpoint(edges
+              .join(GraphLayout.nodeSide(
+                merge.select(col("id").as("ca"), col("component").as("na")),
+                nMerge), Seq("ca"), "left")
+              .join(GraphLayout.nodeSide(
+                merge.select(col("id").as("cb"), col("component").as("nb")),
+                nMerge), Seq("cb"), "left")
+              .select(col("a"), col("b"), col("w"),
+                coalesce(col("na"), col("ca")).as("ca"),
+                coalesce(col("nb"), col("cb")).as("cb"))
+              .filter(col("ca") =!= col("cb")))
+          }
+          sc.release(edges) // the previous round's edges
+          edges = relabeled
           round += 1
         }
       }
       require(done, s"Borůvka did not converge in 20 rounds")
       mst.select(col("a"), col("b"), col("w").as("weight")).orderBy("a", "b")
-    })
+    }
   )
 
   // ---- Borůvka merge step ---------------------------------------------------
@@ -862,9 +827,9 @@ object Graph {
     * UTF8String order) — so the result is bit-identical either way.
     * Returns the map and its row count (the downstream relabel join rides
     * the same gate). */
-  private def boruvkaMerge(s: SparkSession, pairs: DataFrame): (DataFrame, Long) = {
+  private def boruvkaMerge(sc: StepChain.Scope, pairs: DataFrame): (DataFrame, Long) = {
     if (pairs.count() > mstMergeDriverLimit) {
-      val cc = graft.operators.Dedup.connectedComponents(pairs, "ca", "cb")
+      val cc = graft.operators.Dedup.connectedComponents(sc, pairs, "ca", "cb")
       (cc, cc.count())
     } else {
       val parent = scala.collection.mutable.HashMap.empty[String, String]
@@ -881,7 +846,7 @@ object Graph {
         if (rx != ry) { if (rx < ry) parent(ry) = rx else parent(rx) = ry }
       }
       val ids = parent.keySet.toSet ++ parent.valuesIterator
-      import s.implicits._
+      import sc.session.implicits._
       val out = ids.toSeq.map(id => (id, find(id)))
       (out.toDF("id", "component"), out.size.toLong)
     }

@@ -1909,10 +1909,11 @@ object R10 {
       * rows (`ml_kmeans`/`ml_kmeans_lloyd`) assume convex equal-variance
       * blobs; this is the arbitrary-shape/noise-tolerant counterpart a
       * clustering suite needs. */
-    "ml_dbscan_grid" -> ((s, d) => {
+    "ml_dbscan_grid" -> ((s, d) => StepChain.scoped(s) { sc =>
       val eps = 3.0
       val minPts = 5
-      val pts = Tables.events(s, d)
+      // scanned by probes, candidates, and the audit
+      val pts = sc.checkpoint(Tables.events(s, d)
         .filter(col("event_type").isin("click", "purchase"))
         .withColumn("bucket", expr("ts_ns div 1800000000000L"))
         .groupBy("bucket")
@@ -1920,8 +1921,7 @@ object R10 {
           Grid.mean6(when(col("event_type") === "purchase", col("value"))).as("y"))
         .filter(col("x").isNotNull && col("y").isNotNull)
         .withColumn("cx", floor(col("x") / eps).cast("long"))
-        .withColumn("cy", floor(col("y") / eps).cast("long"))
-        .localCheckpoint() // scanned by probes, candidates, and the audit
+        .withColumn("cy", floor(col("y") / eps).cast("long")))
       val probes = pts
         .select(col("bucket").as("ab"), col("x").as("xa"), col("y").as("ya"),
           col("cx").as("ca"), col("cy").as("cya"))
@@ -1929,22 +1929,21 @@ object R10 {
         .withColumn("p", explode(expr("array(-1L, 0L, 1L)")))
         .select(col("ab"), col("xa"), col("ya"),
           (col("ca") + col("o")).as("tx"), (col("cya") + col("p")).as("ty"))
-      val nbrs = probes
+      // reused: core census, core edges, border vote
+      val nbrs = sc.checkpoint(probes
         .join(pts, probes("tx") === pts("cx") && probes("ty") === pts("cy"))
         .filter((col("xa") - col("x")) * (col("xa") - col("x")) +
           (col("ya") - col("y")) * (col("ya") - col("y")) <= eps * eps)
-        .select(col("ab"), col("bucket").as("cb"))
-        .localCheckpoint() // reused: core census, core edges, border vote
-      val core = nbrs.groupBy("ab").agg(count(lit(1)).as("nc"))
+        .select(col("ab"), col("bucket").as("cb")))
+      val core = sc.checkpoint(nbrs.groupBy("ab").agg(count(lit(1)).as("nc"))
         .filter(col("nc") >= minPts)
-        .select(col("ab").as("bucket"))
-        .localCheckpoint()
+        .select(col("ab").as("bucket")))
       val coreEdges = nbrs
         .join(core.select(col("bucket").as("ab")), "ab")
         .join(core.select(col("bucket").as("cb")), "cb")
         .filter(col("ab") < col("cb"))
         .select(col("ab").as("a"), col("cb").as("b"))
-      val cc = graft.operators.Dedup.connectedComponents(coreEdges, "a", "b")
+      val cc = graft.operators.Dedup.connectedComponents(sc, coreEdges, "a", "b")
       // an isolated core point (no core neighbor) is its own cluster
       val coreLab = core
         .join(cc.withColumnRenamed("id", "bucket"), Seq("bucket"), "left")
@@ -2153,33 +2152,37 @@ object R10 {
       * that loses every point drops out identically on both engines.
       * Output: final centroids, sizes, and exact-DECIMAL WCSS. The
       * seeded MLlib `ml_kmeans` stays as the library surface. */
-    "ml_kmeans_lloyd" -> ((s, d) => {
+    "ml_kmeans_lloyd" -> ((s, d) => StepChain.scoped(s) { sc =>
       val k = 4
       val iters = 10
-      val pts = Tables.events(s, d)
+      // scanned 11×: once per round + the final audit
+      val pts = sc.checkpoint(Tables.events(s, d)
         .filter(col("event_type").isin("click", "purchase"))
         .withColumn("bucket", expr("ts_ns div 1800000000000L"))
         .groupBy("bucket")
         .agg(Grid.mean6(when(col("event_type") === "click", col("value"))).as("x"),
           Grid.mean6(when(col("event_type") === "purchase", col("value"))).as("y"))
-        .filter(col("x").isNotNull && col("y").isNotNull)
-        .localCheckpoint() // scanned 11×: once per round + the final audit
+        .filter(col("x").isNotNull && col("y").isNotNull))
       val wSeed = Window.orderBy(md5(col("bucket").cast("string")), col("bucket"))
       val wAsg = Window.partitionBy("bucket").orderBy(col("d"), col("cid"))
       def dist(cx: org.apache.spark.sql.Column, cy: org.apache.spark.sql.Column) =
         round((col("x") - cx) * (col("x") - cx) +
           (col("y") - cy) * (col("y") - cy), 9)
-      var cents = pts
+      def lloyd(cents: DataFrame): DataFrame = sc.checkpoint(pts.crossJoin(broadcast(cents))
+        .withColumn("d", dist(col("cx"), col("cy")))
+        .withColumn("rn", row_number().over(wAsg))
+        .filter(col("rn") === 1)
+        .groupBy("cid")
+        .agg(Grid.mean6(col("x")).as("cx"), Grid.mean6(col("y")).as("cy")))
+      // the seed reads `pts`, so only rounds from the second on supersede
+      // a round of their own
+      var cents = lloyd(pts
         .select(row_number().over(wSeed).as("cid"), col("x").as("cx"), col("y").as("cy"))
-        .filter(col("cid") <= k)
-      for (_ <- 1 to iters) {
-        cents = pts.crossJoin(broadcast(cents))
-          .withColumn("d", dist(col("cx"), col("cy")))
-          .withColumn("rn", row_number().over(wAsg))
-          .filter(col("rn") === 1)
-          .groupBy("cid")
-          .agg(Grid.mean6(col("x")).as("cx"), Grid.mean6(col("y")).as("cy"))
-          .localCheckpoint()
+        .filter(col("cid") <= k))
+      for (_ <- 2 to iters) {
+        val next = lloyd(cents)
+        sc.release(cents)
+        cents = next
       }
       pts.crossJoin(broadcast(cents))
         .withColumn("d", dist(col("cx"), col("cy")))

@@ -33,30 +33,39 @@ object EventStream {
     * session. Results are unaffected either way — the checksum only
     * guards checkpoint files against corruption. */
   private val ChecksumKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+  /** Off while a run starts, or the query logs that streaming does not
+    * support AQE; its stateless micro-batches then run without AQE too. */
+  private val AqeKey = "spark.sql.adaptive.enabled"
   private def withDisposableCheckpointIo[A](spark: SparkSession)(body: => A): A = {
     // save/restore (ADVICE r16): the harness shares the caller's session,
     // and a later streaming query with a DURABLE checkpoint must keep its
     // corruption protection — the disable is scoped to this run only
-    val prev = spark.conf.getOption(ChecksumKey)
-    spark.conf.set(ChecksumKey, "false")
+    val prev = Seq(ChecksumKey, AqeKey).map(k => k -> spark.conf.getOption(k))
+    prev.foreach { case (k, _) => spark.conf.set(k, "false") }
     try body
-    finally prev match {
-      case Some(v) => spark.conf.set(ChecksumKey, v)
-      case None => spark.conf.unset(ChecksumKey)
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 
   /** The one run-to-completion step behind every `run*Once` entry: start
     * `writer` under `Trigger.AvailableNow` (every file available at start,
     * in as many micro-batches as the source's limits ask for, then stop),
-    * block until it finishes, and return the finished query. Production
-    * binds the same writer to a long-running trigger instead. */
+    * block until it finishes, and return the finished query. The query
+    * checkpoints into a directory of its own, deleted when it returns or
+    * fails. Production binds the same writer to a long-running trigger
+    * and a durable checkpoint instead. */
   private def runAvailableNow(spark: SparkSession,
                               writer: DataStreamWriter[Row]): StreamingQuery =
     withDisposableCheckpointIo(spark) {
-      val q = writer.trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      q
+      val cp = java.nio.file.Files.createTempDirectory("graft-stream-").toFile
+      try {
+        val q = writer.option("checkpointLocation", cp.getPath)
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        q
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(cp)
     }
 
   /** Streaming parquet scan of `glob` under a declared schema (the file
@@ -784,12 +793,12 @@ object EventStream {
     import graft.operators.Dedup
     val (numHashes, numBands, threshold) = (16, 4, 0.5)
     val newFlag = Dedup.nightlyNewFlag("doc_id")
-    val corpusBanded = Dedup.bandExplode(
-      Dedup.lshSignatures(
-        graft.Tables.documents(spark, dir).filter(!newFlag),
-        "doc_id", "text", numHashes),
-      "doc_id", numHashes, numBands).localCheckpoint()
-    try {
+    graft.plans.StepChain.scoped(spark) { sc =>
+      val corpusBanded = sc.checkpoint(Dedup.bandExplode(
+        Dedup.lshSignatures(
+          graft.Tables.documents(spark, dir).filter(!newFlag),
+          "doc_id", "text", numHashes),
+        "doc_id", numHashes, numBands))
       runBatchIdSink(readDocuments(spark, dir, maxFilesPerTrigger).filter(newFlag),
           s"$scratch/admissions", "dedup admission", dir) { (batch, _, write) =>
         val newBanded = Dedup.bandExplode(
@@ -800,7 +809,7 @@ object EventStream {
       }
         .select("doc_id", "is_duplicate", "dup_of", "jaccard")
         .orderBy("doc_id")
-    } finally graft.plans.Blocks.free(corpusBanded)
+    }
   }
 
   // ---- streaming ANN serving (IVF index as deploy-time state) ----------

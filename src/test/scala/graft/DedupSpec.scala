@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
+import graft.plans.StepChain
 
 case class Doc(doc_id: Long, text: String, lang: String, source: String)
 
@@ -136,7 +137,8 @@ class DedupSpec extends SparkSpec {
 
   test("connectedComponents on an empty pair list returns empty (no NPE)") {
     val empty = df(Seq.empty[(Long, Long)]).toDF("id_a", "id_b")
-    assert(Dedup.connectedComponents(empty, "id_a", "id_b").count() == 0L)
+    assert(StepChain.scoped(spark)(
+      Dedup.connectedComponents(_, empty, "id_a", "id_b").count()) == 0L)
   }
 
   test("connectedComponents resolves chains and stars to min-id groups") {
@@ -147,8 +149,8 @@ class DedupSpec extends SparkSpec {
       (20L, 21L), (20L, 22L), (20L, 23L),                          // star
       (30L, 31L)))                                                 // pair
       .toDF("id_a", "id_b")
-    val out = Dedup.connectedComponents(pairs, "id_a", "id_b")
-      .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("component")).toMap
+    val out = StepChain.scoped(spark)(Dedup.connectedComponents(_, pairs, "id_a", "id_b")
+      .collect()).map(r => r.getAs[Long]("id") -> r.getAs[Long]("component")).toMap
     assert((10L to 15L).forall(out(_) == 10L), s"path: $out")
     assert((20L to 23L).forall(out(_) == 20L))
     assert(out(30L) == 30L && out(31L) == 30L)

@@ -136,8 +136,9 @@ class PropertySpec extends AnyFunSuite {
     val edges = samples(Gen.zip(Gen.chooseNum(0L, 15L), Gen.chooseNum(0L, 15L)), 20)
       .filter { case (a, b) => a != b }
     def comps(es: Seq[(Long, Long)]): Map[Long, Long] =
-      graft.operators.Dedup.connectedComponents(es.toDF("a", "b"), "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      graft.plans.StepChain.scoped(spark)(
+        graft.operators.Dedup.connectedComponents(_, es.toDF("a", "b"), "a", "b").collect())
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val base = comps(edges)
     assert(base == comps(edges.reverse.map { case (a, b) => (b, a) }))
   }

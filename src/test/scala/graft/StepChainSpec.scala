@@ -1,10 +1,13 @@
 package graft
 
+import org.apache.spark.sql.functions._
+
 import graft.plans.StepChain
 import graft.plans.StepChain.Step
 
 /** The two renderings of [[StepChain]]: the oracle text's shape, and the
-  * Spark run's view/block hygiene on success and on failure. */
+  * Spark run's view/block hygiene on success and on failure — for a step
+  * chain and for an iterative loop held by one scope. */
 class StepChainSpec extends SparkSpec {
 
   // ids, not a count: the registry holds its RDDs weakly, so an
@@ -57,6 +60,47 @@ class StepChainSpec extends SparkSpec {
     (seen :+ seen.head.stripSuffix("_a") + "_b").foreach(v =>
       assert(!spark.catalog.tableExists(v), s"view $v left behind"))
     assert((persisted -- before).isEmpty, "a failed run must release every checkpoint")
+  }
+
+  test("a scoped loop keeps only the checkpoints its returned frame reads") {
+    val before = persisted
+    val out = StepChain.scoped(spark) { sc =>
+      val edges = sc.cache(spark.range(20).toDF("x"))
+      var cur = sc.checkpoint(edges.select((col("x") + 1).as("x")))
+      for (_ <- 1 to 3) {
+        val next = sc.checkpoint(cur.select((col("x") * 2).as("x")))
+        sc.release(cur)
+        cur = next
+      }
+      // an unread checkpoint, held until the scope exits
+      sc.checkpoint(edges.select(col("x")))
+      cur.agg(sum("x"))
+    }
+    val left = persisted -- before
+    assert(left.size == 1, s"only the last round stays: $left")
+    assert(out.head().getLong(0) == (1L to 20L).sum * 8)
+  }
+
+  test("a scoped loop whose round fails inside its checkpoint job releases every block") {
+    val before = persisted
+    var rounds = 0
+    intercept[Exception] {
+      StepChain.scoped(spark) { sc =>
+        val edges = sc.cache(spark.range(20).toDF("x"))
+        var cur = sc.checkpoint(edges.select(col("x")))
+        for (r <- 1 to 3) {
+          rounds = r
+          // round 3 fails inside the checkpoint job, after its RDD is persisted
+          val next = sc.checkpoint(cur.select(
+            (if (r == 3) assert_true(col("x") < 0).cast("long") else col("x") + 1).as("x")))
+          sc.release(cur)
+          cur = next
+        }
+        cur
+      }
+    }
+    assert(rounds == 3)
+    assert((persisted -- before).isEmpty, "a failed loop must release every block")
   }
 
   test("gbt stumps: no split candidate (one distinct x) returns only iteration 0") {
