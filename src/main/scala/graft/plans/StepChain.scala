@@ -96,9 +96,10 @@ object StepChain {
 
     /** Checkpoints `df` into the view `ref(name)` and returns that name. */
     def checkpoint(name: String, df: DataFrame): String = {
-      views += ref(name)
-      checkpoint(df).createOrReplaceTempView(ref(name))
-      ref(name)
+      val v = ref(name)
+      views += v
+      checkpoint(df).createOrReplaceTempView(v)
+      v
     }
 
     /** `df.cache()`, held until the scope exits. */
